@@ -10,7 +10,8 @@ import java.nio.file.{Files, Paths}
   * into one degenerate micro-batch (the output rows are identical; only
   * the incremental state exercise is lost) — this audit fails loudly on
   * exactly that: fewer data batches than recorded, or a streaming plan
-  * that lost a stateful operator.
+  * that lost a stateful operator, or a baselined gate that no longer
+  * runs at all.
   *
   * Usage (mirrors [[PlanAudit]]):
   *   runMain graft.StreamAudit            — audit against the baseline
@@ -75,6 +76,13 @@ object StreamAudit {
               " — re-record to pin")
           case _ => ()
         }
+      }
+      // a baselined gate that dropped out of SparkEntry.queries would
+      // otherwise pass silently: nothing above iterates it
+      baseline.keys.filterNot(names.contains).toSeq.sorted.foreach { n =>
+        failed += 1
+        println(s"[stream-audit] MISSING $n — in $baselinePath but no" +
+          " longer runs")
       }
       println(s"[stream-audit] ${stats.size} gates, $failed regressed")
       if (failed > 0) sys.exit(1)

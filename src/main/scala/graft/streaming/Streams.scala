@@ -1,5 +1,6 @@
 package graft.streaming
 
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
 import graft.config.Checkpoints.CutSyntax
@@ -43,30 +44,6 @@ object Streams {
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n_events"), col("sum_value"))
 
-  /** Drive a streaming transform of the events table END TO END — file
-    * source → the transform's streaming state → `foreachBatch` parquet
-    * sink, `Trigger.AvailableNow` — and return the final answer read
-    * back from the sink. This is the production deployment shape (a
-    * bounded catch-up run of the always-on pipeline) driven to
-    * completion in one call, which makes the STREAMING path itself
-    * checkable against a batch SQL oracle: every micro-batch goes
-    * through real streaming state.
-    *
-    * The input is staged as one µs-timestamp file per event-time
-    * quartile (the raw events parquet is NANOS, which the file stream
-    * source can't read directly) with modification times pinned to
-    * event-time order, so the files replay in event-time order — the
-    * arrival order a live pipeline sees, and the order under which
-    * watermark-driven state eviction provably drops no joinable/
-    * aggregable row. `maxFilesPerTrigger=1` then yields `chunks` real
-    * incremental micro-batches, not one degenerate one.
-    *
-    * `complete` mode overwrites the sink each batch (the last batch is
-    * the full aggregate — itself idempotent); `append` mode writes each
-    * batch's finalized rows through [[idempotentBatchWriter]], the
-    * production exactly-once sink, so a retried micro-batch replaces
-    * its own partition instead of double-appending.
-    */
   /** Staging-dir key for a source table: path PLUS the source parquet's
     * (mtime, size) fingerprint, so a regenerated test dataset at the
     * same path can never be served a stale staged replay (staging is
@@ -89,27 +66,41 @@ object Streams {
     loop(new java.io.File(p))
   }
 
-  /** Write `df` as the single staged replay file `in/name` with the given
-    * pinned modification time (see the replay-order note in
-    * [[runEventsAvailableNow]]).
+  /** The ONE replay stager behind every streaming gate: writes each
+    * `(name, frame)` chunk as a single parquet file in
+    * `target/stream_stage/<dirTag>_<stageKey>_x<shape>` with a strictly
+    * ascending pinned modification time, then marks the dir `_STAGED`.
+    * The file stream source replays files in modtime order, and a plain
+    * write leaves modtimes in task-FINISH order — which can replay a
+    * later time range first, making whole earlier ranges arrive behind
+    * the watermark and be dropped as late (observed: 12 of 33 join
+    * matches lost). Explicit modtimes pin the replay to chunk order.
+    * Staging is a pure function of the key, so a staged dir is reused
+    * across calls and `chunks` (which may run Spark jobs) is only
+    * evaluated when the dir is not yet staged.
     */
-  private def writeChunk(in: String, df: DataFrame, name: String,
-                         modTime: Long): Unit = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_chunk").toString
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.endsWith(".parquet")).get
-    val dest = new java.io.File(in, name)
-    java.nio.file.Files.move(part.toPath, dest.toPath)
-    dest.setLastModified(modTime): Unit
-    rmTree(tmp)
+  private def stageReplay(sfDir: String, table: String, dirTag: String,
+                          shape: String)
+                         (chunks: => Seq[(String, DataFrame)]): String = {
+    val in = s"target/stream_stage/${dirTag}_${stageKey(sfDir, table)}_x$shape"
+    if (!new java.io.File(s"$in/_STAGED").exists()) {
+      rmTree(in); new java.io.File(in).mkdirs(): Unit
+      val base = System.currentTimeMillis() - 3600L * 1000
+      chunks.zipWithIndex.foreach { case ((name, df), i) =>
+        val tmp = Files.createTempDirectory("graft_chunk").toString
+        df.coalesce(1).write.mode("overwrite").parquet(tmp)
+        val part = new java.io.File(tmp).listFiles()
+          .find(f => f.getName.endsWith(".parquet")).get
+        val dest = new java.io.File(in, name)
+        Files.move(part.toPath, dest.toPath)
+        dest.setLastModified(base + i * 60000L): Unit
+        rmTree(tmp)
+      }
+      Files.writeString(Paths.get(s"$in/_STAGED"), "ok"): Unit
+    }
+    in
   }
 
-  /** Run `build`'s streaming transform over an already-staged replay dir
-    * with `Trigger.AvailableNow` and a `foreachBatch` parquet sink;
-    * returns the sink read back. The stream's schema is the staged
-    * parquet's own. See [[runEventsAvailableNow]] for the semantics.
-    */
   /** Sink/checkpoint temp dirs created by [[runStagedAvailableNow]],
     * removed by a JVM shutdown hook: the sink must outlive the call (it
     * backs the returned frame), so per-call deletion is impossible, but
@@ -121,7 +112,7 @@ object Streams {
       tempDirs.forEach(rmTree(_))))
   }
   private def tempDir(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix).toString
+    val d = Files.createTempDirectory(prefix).toString
     tempDirs.add(d): Unit
     d
   }
@@ -145,8 +136,7 @@ object Streams {
   private def ckptDir(prefix: String): String = {
     val shm = new java.io.File("/dev/shm")
     if (shm.isDirectory && shm.canWrite) {
-      val d = java.nio.file.Files.createTempDirectory(
-        shm.toPath, prefix).toString
+      val d = Files.createTempDirectory(shm.toPath, prefix).toString
       tempDirs.add(d): Unit
       d
     } else tempDir(prefix)
@@ -159,16 +149,47 @@ object Streams {
     * cannot tell an incremental replay from a degenerate one-batch run
     * (both produce the same rows), so a harness regression that
     * collapses the replay would silently stop exercising streaming
-    * state without this gate.
+    * state without this gate. `None` while a run is in flight or after
+    * one threw.
     */
   case class RunStats(batches: Int, dataBatches: Int, statefulOps: Int,
                       stateRowsTotal: Long)
   @volatile var lastRunStats: Option[RunStats] = None
 
-  def runStagedAvailableNow(spark: SparkSession, in: String, mode: String,
-                            partitions: Int,
-                            refireBatchId: Option[Long] = None)
-                           (build: DataFrame => DataFrame): DataFrame = {
+  /** The ONE AvailableNow runner behind every streaming gate: file
+    * source over the staged replay dir `in` (`maxFilesPerTrigger=1`, so
+    * each staged chunk is one real incremental micro-batch) →
+    * `transform`'s streaming state → `foreachBatch` → parquet sink under
+    * `Trigger.AvailableNow`, returning the sink read back through
+    * `readBack`. This is the production deployment shape (a bounded
+    * catch-up run of the always-on pipeline) driven to completion in
+    * one call, which makes the STREAMING path itself checkable against a
+    * batch SQL oracle.
+    *
+    * `complete` mode overwrites the sink each batch (the last batch is
+    * the full aggregate — itself idempotent); `append` mode writes each
+    * batch through [[idempotentBatchWriter]], the production
+    * exactly-once sink, so a retried micro-batch replaces its own
+    * partition instead of double-appending. `body` runs once per
+    * micro-batch with that sink; a fold gate passes its own body so it
+    * can order its writes against the state it releases. `body` must
+    * write inside its call: a foreachBatch frame is only readable
+    * during it.
+    *
+    * `refireBatchId` simulates a sink retry: that batch id's sink fires
+    * a second time — the shape a post-failure restart produces (the
+    * checkpoint commits AFTER the sink, so a crash between them re-runs
+    * the micro-batch with an identical batch id). A gate using it must
+    * still hash-match its unchanged oracle: a plain append sink would
+    * double the batch's rows and fail the hash.
+    */
+  private def runStagedAvailableNow(
+      spark: SparkSession, in: String, mode: String, partitions: Int,
+      refireBatchId: Option[Long] = None,
+      readBack: DataFrame => DataFrame = _.drop("batch_id"))(
+      transform: DataFrame => DataFrame = identity,
+      body: (DataFrame, Long, (DataFrame, Long) => Unit) => Unit =
+        (batch, id, sink) => sink(batch, id)): DataFrame = {
     // reset BEFORE the run: a run that throws must not leave the
     // previous gate's stats behind for a caller to misattribute
     lastRunStats = None
@@ -180,44 +201,31 @@ object Streams {
     // staged chunk count (a deployment sizes it to its state volume; the
     // partition count is pinned into the checkpoint either way), and
     // restore the session's settings afterwards (the idempotent sink
-    // flips partitionOverwriteMode).
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevOverwrite =
-      spark.conf.get("spark.sql.sources.partitionOverwriteMode")
+    // flips partitionOverwriteMode on its frame's session — the
+    // caller's, for a fold gate's driver-built snapshot frames).
+    val saved = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.sources.partitionOverwriteMode").map(k => k -> spark.conf.get(k))
     spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
-    var outSchema: org.apache.spark.sql.types.StructType = null
+    var outSchema: StructType = null
     try {
-      val stream = spark.readStream
+      val built = transform(spark.readStream
         .schema(spark.read.parquet(in).schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(in)
-      val built = build(stream)
+        .parquet(in))
       outSchema = built.schema
-      // complete mode: overwrite-per-batch IS idempotent (the last batch
-      // is the whole answer). Append mode uses the PRODUCTION sink —
-      // idempotentBatchWriter's per-batch_id dynamic partition overwrite
-      // — so a retried micro-batch replaces its own partition instead of
-      // double-appending: the gate runs the same exactly-once machinery
-      // a deployment would.
-      val sink: (DataFrame, Long) => Unit =
+      val write: (DataFrame, Long) => Unit =
         if (mode == "complete")
           (batch, _) => batch.write.mode("overwrite").parquet(out)
         else idempotentBatchWriter(out)
+      val sink: (DataFrame, Long) => Unit = (batch, id) => {
+        write(batch, id)
+        if (refireBatchId.contains(id)) write(batch, id)
+      }
       val q = built
         .writeStream
         .outputMode(mode)
         .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-          sink(batch.toDF(), id)
-          // Simulated sink retry: fire the SAME batch id a second time —
-          // the shape a post-failure restart produces (the checkpoint
-          // commits AFTER the sink, so a crash between them re-runs the
-          // micro-batch with an identical batch id). The gate using this
-          // must still hash-match the unchanged oracle: that drives the
-          // idempotent sink's defining property END TO END — a plain
-          // append sink would double this batch's rows and fail the hash.
-          if (refireBatchId.contains(id)) sink(batch.toDF(), id)
-        }
+        .foreachBatch { (batch: DataFrame, id: Long) => body(batch, id, sink) }
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
@@ -230,8 +238,7 @@ object Streams {
         stateRowsTotal = prog.lastOption
           .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(0L)))
     } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", prevOverwrite)
+      saved.foreach { case (k, v) => spark.conf.set(k, v) }
       // the checkpoint is garbage whether the stream succeeded or threw;
       // the staged input is keyed for reuse, and only `out` (shutdown-
       // hook-cleaned) backs the returned frame
@@ -245,30 +252,37 @@ object Streams {
         else f.getName.endsWith(".parquet")
       walk(new java.io.File(out))
     }
-    if (hasData) spark.read.parquet(out).drop("batch_id")
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema)
+    readBack(
+      if (hasData) spark.read.parquet(out)
+      else spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema))
   }
 
-  def runEventsAvailableNow(spark: SparkSession, sfDir: String,
-                            mode: String, chunks: Int = 4,
-                            flushHorizonMs: Option[Long] = None)
-                           (build: DataFrame => DataFrame): DataFrame = {
-    import java.nio.file.Files
-    // Stage each event-time quartile as its own file with a controlled,
-    // strictly ascending modification time: the file stream source
-    // replays files in modtime order, and a repartitionByRange write
-    // leaves modtimes in task-FINISH order — which can replay a later
-    // time range first, making whole earlier ranges arrive behind the
-    // watermark and be dropped as late (observed: 12 of 33 join matches
-    // lost). Explicit modtimes pin the replay to event-time order.
-    // The staging is a pure function of (sfDir, chunks), so it is keyed
-    // and reused across calls — every streaming query over the same
-    // table replays the identical staged input.
+  /** `readBack` of the fold gates ([[kmvSketchAvailableNow]],
+    * [[benfordAvailableNow]]): every micro-batch publishes the running
+    * snapshot, so the answer is the highest `batch_id` partition.
+    */
+  private def lastSnapshot(all: DataFrame): DataFrame = {
+    // partition-column type is inference-dependent (int when it fits) —
+    // pin to long before the max/filter
+    val last = all.agg(max(col("batch_id").cast("long"))).first().getLong(0)
+    all.filter(col("batch_id").cast("long") === last).drop("batch_id")
+  }
+
+  /** Drive a streaming transform of the events table end to end through
+    * [[runStagedAvailableNow]]. The input is staged as one µs-timestamp
+    * file per event-time quantile (the raw events parquet is NANOS,
+    * which the file stream source can't read directly), so the files
+    * replay in event-time order — the arrival order a live pipeline
+    * sees, and the order under which watermark-driven state eviction
+    * provably drops no joinable/aggregable row.
+    */
+  private def runEventsAvailableNow(spark: SparkSession, sfDir: String,
+                                    mode: String, chunks: Int = 4,
+                                    flushHorizonMs: Option[Long] = None)
+                                   (build: DataFrame => DataFrame): DataFrame = {
     val flushTag = flushHorizonMs.map(h => s"_flush$h").getOrElse("")
-    val in = s"target/stream_stage/v2_${stageKey(sfDir, "events")}_x$chunks$flushTag"
-    if (!new java.io.File(s"$in/_STAGED").exists()) {
-      rmTree(in); new java.io.File(in).mkdirs(): Unit
+    val in = stageReplay(sfDir, "events", "v2", s"$chunks$flushTag") {
       val e = graft.Tables(spark, sfDir, "events")
       val probs = (1 until chunks).map(_.toDouble / chunks).toArray
       // Boundaries are ms-ALIGNED ((us div 1000)*1000 - 1, i.e. between
@@ -280,14 +294,11 @@ object Streams {
       val bounds = e.select(expr("unix_micros(ts)").as("us"))
         .stat.approxQuantile("us", probs, 0.001)
         .map(b => (b.toLong / 1000L) * 1000L - 1L)
-      val base = System.currentTimeMillis() - 3600L * 1000
-      (0 until chunks).foreach { i =>
+      val quantiles = (0 until chunks).map { i =>
         val lo = if (i == 0) Long.MinValue else bounds(i - 1)
         val hi = if (i == chunks - 1) Long.MaxValue else bounds(i)
-        writeChunk(in,
-          e.filter(expr("unix_micros(ts)") > lo &&
-            expr("unix_micros(ts)") <= hi),
-          f"chunk-$i%02d.parquet", base + i * 60000L)
+        f"chunk-$i%02d.parquet" -> e.filter(expr("unix_micros(ts)") > lo &&
+          expr("unix_micros(ts)") <= hi)
       }
       // Watermark-flush sentinel: stateful append-mode operators
       // (sessionize) hold their LAST window per key in state forever if
@@ -298,35 +309,20 @@ object Streams {
       // staged as the final file so the closing no-data micro-batch
       // fires every pending event-time timeout. The sentinel's own
       // user_id is -1 — the consumer filters it out.
-      flushHorizonMs.foreach { h =>
+      quantiles ++ flushHorizonMs.map { h =>
         val maxUs = e.agg(max(expr("unix_micros(ts)"))).first().getLong(0)
-        writeChunk(in,
-          spark.range(1).select(
-            lit(-1L).as("event_id"),
-            expr(s"timestamp_micros(${maxUs + h * 1000L}L)").as("ts"),
-            lit(-1L).as("user_id"),
-            lit("flush").as("event_type"),
-            lit(0.0).as("value"),
-            lit(null).cast("string").as("props")),
-          "chunk-99-flush.parquet", base + chunks * 60000L)
+        "chunk-99-flush.parquet" -> spark.range(1).select(
+          lit(-1L).as("event_id"),
+          expr(s"timestamp_micros(${maxUs + h * 1000L}L)").as("ts"),
+          lit(-1L).as("user_id"),
+          lit("flush").as("event_type"),
+          lit(0.0).as("value"),
+          lit(null).cast("string").as("props"))
       }
-      Files.writeString(java.nio.file.Paths.get(s"$in/_STAGED"), "ok"): Unit
     }
     runStagedAvailableNow(spark, in, mode, chunks)(build)
   }
 
-  /** [[lshCandidatesStream]] (streaming MinHash-LSH candidate
-    * generation) through the AvailableNow harness over the DOCUMENTS
-    * table — oracle-gated as `stream_lsh_candidates` against the batch
-    * MinHash candidate SQL. Documents have no event time, so arrival
-    * order is synthesized deterministically (ts = doc_id ms, ms-aligned
-    * by construction) and the horizon covers the whole replay — the
-    * batch-equivalence regime the operator documents (within the
-    * horizon, the streaming bucket state proposes exactly the batch
-    * pairs). A pair colliding in several bands is emitted once per
-    * band; the gate collapses them with distinct(), exactly as the
-    * batch composition does.
-    */
   /** Stage the documents table for replay with a synthesized
     * deterministic arrival order (ts = doc_id ms, chunked by doc_id
     * range) — documents have no event time of their own. Returns the
@@ -343,25 +339,22 @@ object Streams {
       _.withColumn("ts",
         expr("timestamp_micros(86400000000 + doc_id * 1000)")))
 
-  /** The ONE table-replay stager behind [[stageDocsReplay]] and
-    * [[stageEmbReplay]]: id-range chunks, each sorted by id and written
-    * as a single file with a pinned modification time so the file
-    * source replays them in id order. `prep` adds any per-table columns
-    * (the documents replay's synthetic event time). The sort matters:
-    * sorting before writeChunk's coalesce(1) preserves the total order
-    * (coalesce concatenates parent partitions in order) — without it,
-    * within-chunk arrival order would be the source parquet's PHYSICAL
-    * row order, and first-seen semantics would match the min-id oracles
-    * only by accident of how the test data happens to be written.
+  /** The id-range chunking behind [[stageDocsReplay]] and
+    * [[stageEmbReplay]]: chunks of the id range, each sorted by id, so
+    * the file source replays them in id order. `prep` adds any per-table
+    * columns (the documents replay's synthetic event time). The sort
+    * matters: sorting before the stager's coalesce(1) preserves the
+    * total order (coalesce concatenates parent partitions in order) —
+    * without it, within-chunk arrival order would be the source
+    * parquet's PHYSICAL row order, and first-seen semantics would match
+    * the min-id oracles only by accident of how the test data happens
+    * to be written.
     */
   private def stageTableReplay(spark: SparkSession, sfDir: String,
                                table: String, idCol: String, chunks: Int,
                                dirTag: String)
-                              (prep: DataFrame => DataFrame): String = {
-    import java.nio.file.Files
-    val in = s"target/stream_stage/${dirTag}_${stageKey(sfDir, table)}_x$chunks"
-    if (!new java.io.File(s"$in/_STAGED").exists()) {
-      rmTree(in); new java.io.File(in).mkdirs(): Unit
+                              (prep: DataFrame => DataFrame): String =
+    stageReplay(sfDir, table, dirTag, chunks.toString) {
       val d = prep(graft.Tables(spark, sfDir, table))
       val maxIdRow = d.agg(max(col(idCol))).first()
       // legible failure, not an NPE from getLong(null): an empty table
@@ -369,19 +362,14 @@ object Streams {
       require(!maxIdRow.isNullAt(0),
         s"stageTableReplay: $sfDir/$table is empty — nothing to replay")
       val maxId = maxIdRow.getLong(0)
-      val base = System.currentTimeMillis() - 3600L * 1000
-      (0 until chunks).foreach { i =>
+      (0 until chunks).map { i =>
         val lo = maxId * i / chunks
         val hi = if (i == chunks - 1) maxId else maxId * (i + 1) / chunks
-        writeChunk(in,
+        f"chunk-$i%02d.parquet" ->
           d.filter((if (i == 0) lit(true) else col(idCol) > lo) &&
-            col(idCol) <= hi).orderBy(col(idCol)),
-          f"chunk-$i%02d.parquet", base + i * 60000L)
+            col(idCol) <= hi).orderBy(col(idCol))
       }
-      Files.writeString(java.nio.file.Paths.get(s"$in/_STAGED"), "ok"): Unit
     }
-    in
-  }
 
   /** [[dedupDocsNormalized]] (streaming content dedup) through the
     * AvailableNow harness — oracle-gated as `stream_dedup_docs` against
@@ -421,33 +409,22 @@ object Streams {
   }
 
   /** Stage EXPLICIT crawl batches for replay: chunk i is `batches(i)`
-    * (tag column riding along, rows sorted by `idCol`) with a pinned
-    * ascending modification time, so the file source replays the
-    * batches in sequence — unlike [[stageTableReplay]]'s id-range
-    * chunking, the batch COMPOSITION here is the caller's (a hash
-    * split), which is what lets a streaming gate share a batch
-    * pipeline's rebuild-from-scratch oracle verbatim.
+    * (tag column riding along, rows sorted by `idCol`) — unlike
+    * [[stageTableReplay]]'s id-range chunking, the batch COMPOSITION
+    * here is the caller's (a hash split), which is what lets a
+    * streaming gate share a batch pipeline's rebuild-from-scratch
+    * oracle verbatim.
     */
   def stageBatchesReplay(spark: SparkSession, sfDir: String, dirTag: String,
                          batches: Seq[(String, DataFrame)],
                          idCol: String = "doc_id",
-                         textCol: String = "text"): String = {
-    import java.nio.file.Files
-    val in = s"target/stream_stage/${dirTag}_${stageKey(sfDir, "documents")}" +
-      s"_x${batches.size}"
-    if (!new java.io.File(s"$in/_STAGED").exists()) {
-      rmTree(in); new java.io.File(in).mkdirs(): Unit
-      val base = System.currentTimeMillis() - 3600L * 1000
-      batches.zipWithIndex.foreach { case ((tag, df), i) =>
-        writeChunk(in,
-          df.select(col(idCol), col(textCol))
-            .withColumn("batch", lit(tag)).orderBy(col(idCol)),
-          f"chunk-$i%02d.parquet", base + i * 60000L)
+                         textCol: String = "text"): String =
+    stageReplay(sfDir, "documents", dirTag, batches.size.toString) {
+      batches.zipWithIndex.map { case ((tag, df), i) =>
+        f"chunk-$i%02d.parquet" -> df.select(col(idCol), col(textCol))
+          .withColumn("batch", lit(tag)).orderBy(col(idCol))
       }
-      Files.writeString(java.nio.file.Paths.get(s"$in/_STAGED"), "ok"): Unit
     }
-    in
-  }
 
   /** The D45 index-maintenance cycle AS A STREAM (VERDICT-r13 item 6):
     * a crawl-ingest pipeline where each arriving micro-batch is
@@ -477,87 +454,52 @@ object Streams {
                                    idCol: String = "doc_id",
                                    textCol: String = "text"): DataFrame = {
     import graft.dedup.Dedup
-    lastRunStats = None
-    val out = tempDir("graft_stream_out")
-    val ckpt = ckptDir("graft_stream_ckpt")
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevOverwrite =
-      spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.shuffle.partitions", chunks.toString)
-    try {
-      var corp = corpus.select(col(idCol), col(textCol))
-      var idx = index
-      var dataSeen = 0
-      val sink = idempotentBatchWriter(out)
-      val stream = spark.readStream
-        .schema(spark.read.parquet(in).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in)
-      val q = stream.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-          // ONE aggregate job doubles as the emptiness probe and the tag
-          // read (r15): min over an empty micro-batch is null, so the
-          // former `!batch.isEmpty` guard — its own take(1) Spark job on
-          // EVERY micro-batch, data or not, ahead of this read — folds
-          // into the aggregate the data path already paid. The tag
-          // column is constant per chunk (bounded 1-row read); the
-          // flags carry it so the output matches the batch loop's
-          // per-batch tagging.
-          val tag = batch.select(min(col("batch"))).first().getString(0)
-          if (tag != null) {
-            dataSeen += 1
-            if (dataSeen == chunks) {
-              // FINAL data batch of the bounded replay — the batch
-              // loop's final-batch discipline (r16): nothing after this
-              // call consumes the merged index, the kept docs, or the
-              // grown corpus, so the step's merge (an index-sized
-              // union+distinct), its kept/bands cuts, and the flags
-              // checkpoint are all dead work. Screen only, straight
-              // into the sink (the write runs DURING the call, so the
-              // lazy flags never outlive the readable batch frame). A
-              // live pipeline has no last batch and keeps stepping —
-              // this is the bounded-gate shape, exactly as in
-              // Dedup.incrementalLoopFrom.
-              sink(Dedup.incrementalFromIndex(corp, idx,
-                batch.drop("batch"), idCol, textCol)
-                .withColumn("batch", lit(tag)), id)
-              Dedup.releaseIndex(idx)
-            } else {
-              val (flags, kept, merged) = Dedup.incrementalStep(
-                corp, idx, batch.drop("batch"), idCol, textCol)
-              // a foreachBatch frame is only readable DURING its call —
-              // the growing corpus must hold a materialized copy of the
-              // kept docs, not a lazy view over this micro-batch
-              val keptM = kept.cutLineage()
-              // drop the step's hidden merge-hash column before the sink
-              // (the gate's output schema is the screen flags + batch tag)
-              sink(flags.drop("__content_hash").withColumn("batch", lit(tag)), id)
-              Dedup.releaseIndex(idx)
-              idx = merged
-              corp = corp.union(keptM)
-            }
+    var corp = corpus.select(col(idCol), col(textCol))
+    var idx = index
+    var dataSeen = 0
+    val flagged = runStagedAvailableNow(spark, in, "append", chunks)(
+      body = { (batch, id, sink) =>
+        // ONE aggregate job doubles as the emptiness probe and the tag
+        // read: min over an empty micro-batch is null. The tag column
+        // is constant per chunk; the flags carry it so the output
+        // matches the batch loop's per-batch tagging.
+        val tag = batch.select(min(col("batch"))).first().getString(0)
+        if (tag != null) {
+          dataSeen += 1
+          if (dataSeen == chunks) {
+            // FINAL data batch of the bounded replay — the batch
+            // loop's final-batch discipline (r16): nothing after this
+            // call consumes the merged index, the kept docs, or the
+            // grown corpus, so the step's merge (an index-sized
+            // union+distinct), its kept/bands cuts, and the flags
+            // checkpoint are all dead work. Screen only, straight
+            // into the sink (the write runs DURING the call, so the
+            // lazy flags never outlive the readable batch frame or the
+            // index they read). A live pipeline has no last batch and
+            // keeps stepping — this is the bounded-gate shape, exactly
+            // as in Dedup.incrementalLoopFrom.
+            sink(Dedup.incrementalFromIndex(corp, idx,
+              batch.drop("batch"), idCol, textCol)
+              .withColumn("batch", lit(tag)), id)
+            Dedup.releaseIndex(idx)
+          } else {
+            val (flags, kept, merged) = Dedup.incrementalStep(
+              corp, idx, batch.drop("batch"), idCol, textCol)
+            // a foreachBatch frame is only readable DURING its call —
+            // the growing corpus must hold a materialized copy of the
+            // kept docs, not a lazy view over this micro-batch
+            val keptM = kept.cutLineage()
+            // drop the step's hidden merge-hash column before the sink
+            // (the gate's output schema is the screen flags + batch tag)
+            sink(flags.drop("__content_hash").withColumn("batch", lit(tag)), id)
+            Dedup.releaseIndex(idx)
+            idx = merged
+            corp = corp.union(keptM)
           }
         }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val prog = q.recentProgress
-      lastRunStats = Some(RunStats(
-        batches = prog.length,
-        dataBatches = prog.count(_.numInputRows > 0),
-        statefulOps = prog.map(_.stateOperators.length)
-          .foldLeft(0)(math.max),
-        stateRowsTotal = prog.lastOption
-          .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(0L)))
-      Dedup.releaseIndex(idx)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", prevOverwrite)
-      rmTree(ckpt)
-    }
-    spark.read.parquet(out).drop("batch_id")
+      })
+    Dedup.releaseIndex(idx)
+    flagged
   }
 
   /** LIVE KMV distinct sketch over the staged documents replay — the
@@ -569,84 +511,45 @@ object Streams {
     * unbounded-state n_hashes column). Every micro-batch writes the
     * running snapshot through the idempotent sink (replayed batches
     * overwrite their own partition); the gate reads back the LAST
-    * snapshot. State lives in a cut frame across foreachBatch calls,
+    * snapshot. State lives in the driver across foreachBatch calls,
     * exactly like the incremental-dedup loop's corpus/index pair.
     */
   def kmvSketchAvailableNow(spark: SparkSession, sfDir: String,
                             k: Int = 64, chunks: Int = 4): DataFrame = {
     import graft.analytics.Sketch
-    lastRunStats = None
+    import spark.implicits._
+    // Kept-set state is ≤ k longs PER GROUP (the sketch's whole
+    // selling point) — the class-(a) bounded regime, so the fold
+    // lives in the DRIVER: each micro-batch's per-group k-smallest
+    // distinct fingerprints are computed distributed
+    // (Sketch.batchKept — the 100 TB-shaped aggregate), collected
+    // (≤ k·|groups| rows), and merged locally with the identical
+    // union+distinct+take-k algebra over exact longs: 3 Spark jobs per
+    // micro-batch (emptiness probe, kept collect, snapshot write).
+    // Published columns are publishSketch's arithmetic: n_kept as int,
+    // kth_min = max kept, est = (k−1)·M / kth_min in one double division.
+    var state = Map.empty[String, Vector[Long]]
     val in = stageDocsReplay(spark, sfDir, chunks)
-    val out = tempDir("graft_stream_out")
-    val ckpt = ckptDir("graft_stream_ckpt")
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevOverwrite =
-      spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.shuffle.partitions", chunks.toString)
-    try {
-      // Kept-set state is ≤ k longs PER GROUP (the sketch's whole
-      // selling point) — the class-(a) bounded regime, so the fold
-      // lives in the DRIVER: each micro-batch's per-group k-smallest
-      // distinct fingerprints are computed distributed
-      // (Sketch.batchKept — the 100 TB-shaped aggregate), collected
-      // (≤ k·|groups| rows), and merged locally with the identical
-      // union+distinct+take-k algebra over exact longs. The r15 shape
-      // checkpointed the merged state frame and re-ran publishSketch's
-      // group-agg per batch — ~8 Spark jobs per micro-batch for a
-      // bounded state; this is 3 (emptiness probe, kept collect,
-      // snapshot write). Published columns are the same arithmetic:
-      // n_kept as int, kth_min = max kept, est = (k−1)·M / kth_min in
-      // one double division.
-      var state = Map.empty[String, Vector[Long]]
-      val sink = idempotentBatchWriter(out)
-      val stream = spark.readStream
-        .schema(spark.read.parquet(in).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in)
-      val q = stream.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-          if (!batch.isEmpty) {
-            Sketch.batchKept(batch.select("source", "text"),
-              "source", "text", k).collect()
-              .groupBy(_.getString(0)).foreach { case (g, rows) =>
-                val merged = (state.getOrElse(g, Vector.empty) ++
-                  rows.map(_.getLong(1))).distinct.sorted.take(k)
-                state = state.updated(g, merged)
-              }
-            val snap = state.toSeq.map { case (g, hs) =>
-              val est =
-                if (hs.size < k) hs.size.toDouble
-                else Sketch.estNumerator(k) / hs.last.toDouble
-              (g, hs.size, hs.last, est)
-            }
-            import spark.implicits._
-            sink(snap.toDF("source", "n_kept", "kth_min", "est_distinct")
-              .coalesce(1), id)
+    runStagedAvailableNow(spark, in, "append", chunks,
+      readBack = lastSnapshot)(body = { (batch, id, sink) =>
+      if (!batch.isEmpty) {
+        Sketch.batchKept(batch.select("source", "text"),
+          "source", "text", k).collect()
+          .groupBy(_.getString(0)).foreach { case (g, rows) =>
+            val merged = (state.getOrElse(g, Vector.empty) ++
+              rows.map(_.getLong(1))).distinct.sorted.take(k)
+            state = state.updated(g, merged)
           }
+        val snap = state.toSeq.map { case (g, hs) =>
+          val est =
+            if (hs.size < k) hs.size.toDouble
+            else Sketch.estNumerator(k) / hs.last.toDouble
+          (g, hs.size, hs.last, est)
         }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val prog = q.recentProgress
-      lastRunStats = Some(RunStats(
-        batches = prog.length,
-        dataBatches = prog.count(_.numInputRows > 0),
-        statefulOps = prog.map(_.stateOperators.length)
-          .foldLeft(0)(math.max),
-        stateRowsTotal = prog.lastOption
-          .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(0L)))
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", prevOverwrite)
-      rmTree(ckpt)
-    }
-    val all = spark.read.parquet(out)
-    // partition-column type is inference-dependent (int when it fits) —
-    // pin to long before the max/filter
-    val last = all.agg(max(col("batch_id").cast("long"))).first().getLong(0)
-    all.filter(col("batch_id").cast("long") === last).drop("batch_id")
+        sink(snap.toDF("source", "n_kept", "kth_min", "est_distinct")
+          .coalesce(1), id)
+      }
+    })
   }
 
   /** LIVE Benford digit audit over the staged documents replay — the
@@ -659,82 +562,56 @@ object Streams {
     * and the gate's oracle IS the batch SQL (merge==rebuild, the
     * [[kmvSketchAvailableNow]] class). Snapshot published through the
     * idempotent sink each batch; the gate reads the LAST snapshot.
-    * State is a cut ≤9-row frame, not runtime state: statefulOps = 0.
+    * State is a driver-side map, not runtime state: statefulOps = 0.
     */
   def benfordAvailableNow(spark: SparkSession, sfDir: String,
                           chunks: Int = 4): DataFrame = {
     import graft.qa.Qa
-    lastRunStats = None
+    import spark.implicits._
+    // Digit-count state is ≤ 10 (digit, n) longs — the class-(a)
+    // bounded-frame regime, so the fold lives in the DRIVER: the
+    // per-batch digit aggregate stays distributed (the 100 TB-shaped
+    // work), its ≤10-row result merges into a map — 3 Spark jobs per
+    // micro-batch (emptiness probe, counts collect, snapshot write).
+    // The published rows are benfordPublish's integer arithmetic
+    // (`n·10⁶ div total` = Long division for non-negative operands,
+    // driver-side exp literals, zero-filled digits 1-9).
+    var state = Map.empty[Int, Long]
     val in = stageDocsReplay(spark, sfDir, chunks)
-    val out = tempDir("graft_stream_out")
-    val ckpt = ckptDir("graft_stream_ckpt")
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevOverwrite =
-      spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.shuffle.partitions", chunks.toString)
-    try {
-      // Digit-count state is ≤ 10 (digit, n) longs — the class-(a)
-      // bounded-frame regime (vocab counts, 1-row fingerprints), so the
-      // fold lives in the DRIVER: the per-batch digit aggregate stays
-      // distributed (that is the 100 TB-shaped work), but its ≤10-row
-      // result collects and merges into a map instead of a carried
-      // DataFrame. The r15 shape checkpointed the merged state and ran
-      // benfordPublish's total-agg + join PER BATCH — ~8 Spark jobs per
-      // micro-batch for ≤10 rows of state; this is 3 (emptiness probe,
-      // counts collect, snapshot write). The published rows are the
-      // identical integer arithmetic (benfordPublish's micro-division
-      // `n·10⁶ div total` = Long division for non-negative operands,
-      // driver-side exp literals, zero-filled digits 1-9).
-      var state = Map.empty[Int, Long]
-      val sink = idempotentBatchWriter(out)
-      val stream = spark.readStream
-        .schema(spark.read.parquet(in).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in)
-      val q = stream.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-          if (!batch.isEmpty) {
-            Qa.benfordCounts(batch, "n_chars").collect().foreach { r =>
-              val d = r.getInt(0)
-              state = state.updated(d, state.getOrElse(d, 0L) + r.getLong(1))
-            }
-            // total over ALL state rows (digit-0 rows count toward the
-            // denominator exactly as benfordPublish's sum does)
-            val total = state.valuesIterator.sum
-            val snap = (1 to 9).map { d =>
-              val n = state.getOrElse(d, 0L)
-              val obs = if (total > 0) n * 1000000L / total else 0L
-              val e = Qa.benfordExpMicro(d)
-              (d, n, obs, e, obs - e)
-            }
-            import spark.implicits._
-            sink(snap.toDF("digit", "n", "obs_micro", "exp_micro",
-              "dev_micro").coalesce(1), id)
-          }
+    runStagedAvailableNow(spark, in, "append", chunks,
+      readBack = lastSnapshot)(body = { (batch, id, sink) =>
+      if (!batch.isEmpty) {
+        Qa.benfordCounts(batch, "n_chars").collect().foreach { r =>
+          val d = r.getInt(0)
+          state = state.updated(d, state.getOrElse(d, 0L) + r.getLong(1))
         }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val prog = q.recentProgress
-      lastRunStats = Some(RunStats(
-        batches = prog.length,
-        dataBatches = prog.count(_.numInputRows > 0),
-        statefulOps = prog.map(_.stateOperators.length)
-          .foldLeft(0)(math.max),
-        stateRowsTotal = prog.lastOption
-          .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(0L)))
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", prevOverwrite)
-      rmTree(ckpt)
-    }
-    val all = spark.read.parquet(out)
-    val last = all.agg(max(col("batch_id").cast("long"))).first().getLong(0)
-    all.filter(col("batch_id").cast("long") === last).drop("batch_id")
+        // total over ALL state rows (digit-0 rows count toward the
+        // denominator exactly as benfordPublish's sum does)
+        val total = state.valuesIterator.sum
+        val snap = (1 to 9).map { d =>
+          val n = state.getOrElse(d, 0L)
+          val obs = if (total > 0) n * 1000000L / total else 0L
+          val e = Qa.benfordExpMicro(d)
+          (d, n, obs, e, obs - e)
+        }
+        sink(snap.toDF("digit", "n", "obs_micro", "exp_micro",
+          "dev_micro").coalesce(1), id)
+      }
+    })
   }
 
+  /** [[lshCandidatesStream]] (streaming MinHash-LSH candidate
+    * generation) through the AvailableNow harness over the DOCUMENTS
+    * table — oracle-gated as `stream_lsh_candidates` against the batch
+    * MinHash candidate SQL. Documents have no event time, so arrival
+    * order is synthesized deterministically (ts = doc_id ms, ms-aligned
+    * by construction) and the horizon covers the whole replay — the
+    * batch-equivalence regime the operator documents (within the
+    * horizon, the streaming bucket state proposes exactly the batch
+    * pairs). A pair colliding in several bands is emitted once per
+    * band; the gate collapses them with distinct(), exactly as the
+    * batch composition does.
+    */
   def lshCandidatesAvailableNow(spark: SparkSession, sfDir: String,
                                 chunks: Int = 4): DataFrame = {
     val in = stageDocsReplay(spark, sfDir, chunks)

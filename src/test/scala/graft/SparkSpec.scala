@@ -31,7 +31,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     tempDirs.synchronized { tempDirs += d }
     d
   }
-  private def rmTree(f: java.io.File): Unit = {
+  def rmTree(f: java.io.File): Unit = {
     if (f.isDirectory)
       Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)
     f.delete(): Unit

@@ -477,4 +477,116 @@ class StreamingSpec extends SparkSpec {
     assert(streamed == batch,
       s"stream≠batch: ${(streamed diff batch).take(3)} vs ${(batch diff streamed).take(3)}")
   }
+
+  test("a stateful stream restarted from its checkpoint gives the batch answer") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.streaming.Trigger
+    val events = Tables(spark, sfDir, "events")
+    // (window, type) -> (n_events, sum_value): sums compared to 1e-6,
+    // since partial sums may merge in a different order
+    def rollup(rows: Array[org.apache.spark.sql.Row]) = rows.map(r =>
+      (r.get(0), r.get(1)) -> ((r.getLong(2), r.getDouble(3)))).toMap
+    def same(a: Map[(Any, Any), (Long, Double)],
+             b: Map[(Any, Any), (Long, Double)]): Boolean =
+      a.keySet == b.keySet && a.forall { case (k, (n, s)) =>
+        b(k)._1 == n && math.abs(b(k)._2 - s) < 1e-6 }
+    val batch = rollup(Streams.hourlyRollup(events).collect())
+    // three event-time-ordered chunks, one parquet file each
+    val chunked = events.withColumn("__c",
+      ntile(3).over(Window.orderBy(col("ts"), col("event_id"))))
+    val chunkFiles = (1 to 3).map { c =>
+      val d = tempDir("graft_restart_chunk")
+      chunked.filter(col("__c") === c).drop("__c")
+        .coalesce(1).write.mode("overwrite").parquet(d)
+      new java.io.File(d).listFiles().find(_.getName.endsWith(".parquet")).get
+    }
+    val base = System.currentTimeMillis() - 3600L * 1000
+    val in = tempDir("graft_restart_in")
+    def copyIn(c: Int): Unit = {
+      val dest = new java.io.File(in, s"chunk-$c.parquet")
+      java.nio.file.Files.copy(chunkFiles(c).toPath, dest.toPath)
+      dest.setLastModified(base + c * 60000L): Unit
+    }
+    def run(ckpt: String, name: String) = {
+      val q = Streams.hourlyRollup(spark.readStream.schema(events.schema)
+        .option("maxFilesPerTrigger", 1).parquet(in))
+        .writeStream.format("memory").queryName(name)
+        .outputMode("complete").option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      rollup(spark.table(name).collect())
+    }
+    val ckpt = tempDir("graft_restart_ckpt")
+    copyIn(0); copyIn(1)
+    assert(!same(run(ckpt, "restart_first"), batch))
+    // the processed chunks leave the input, as an archiving source
+    // moves them: after the restart only the checkpoint's state store
+    // remembers them
+    new java.io.File(in).listFiles().foreach(_.delete())
+    copyIn(2)
+    assert(same(run(ckpt, "restart_resumed"), batch))
+    // the spec bites: the same second run from a fresh checkpoint sees
+    // only the last chunk
+    assert(!same(run(tempDir("graft_restart_fresh"), "restart_fresh"), batch))
+  }
+
+  test("a gate that throws mid-replay restores the session confs, " +
+    "drops its checkpoint and leaves no RunStats") {
+    import org.apache.spark.sql.streaming.{StreamingQueryException,
+      StreamingQueryListener}
+    // documents whose highest doc_id (the last staged chunk) carries a
+    // corrupt length: under ANSI arithmetic the Benford fold's digit
+    // extraction overflows in the final micro-batch, after the earlier
+    // snapshots went through the idempotent sink — which flips the
+    // CALLER's partitionOverwriteMode, since a fold gate builds its
+    // snapshot frames on the caller's session
+    val docs = Tables(spark, sfDir, "documents")
+    val lastDoc = docs.agg(max(col("doc_id"))).first().getLong(0)
+    val badSf = tempDir("graft_bad_sf")
+    docs.withColumn("n_chars", when(col("doc_id") === lastDoc,
+      lit(Long.MaxValue)).otherwise(col("n_chars")))
+      .write.parquet(s"$badSf/documents.parquet")
+    // the run's own checkpoint is the one whose metadata file records
+    // its query id (other processes may hold checkpoints of their own)
+    var queryId = ""
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent)
+          : Unit = queryId = e.id.toString
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent)
+          : Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent)
+          : Unit = ()
+    }
+    def ownCkpts = Seq("/dev/shm", System.getProperty("java.io.tmpdir"))
+      .flatMap(d => Option(new java.io.File(d).listFiles()).getOrElse(Array.empty))
+      .filter(_.getName.startsWith("graft_stream_ckpt")).filter { d =>
+        val m = new java.io.File(d, "metadata")
+        m.isFile && java.nio.file.Files.readString(m.toPath).contains(queryId)
+      }
+    val stage = new java.io.File("target/stream_stage")
+    def staged: Set[String] = Option(stage.list()).map(_.toSet).getOrElse(Set.empty)
+    val stagedBefore = staged
+    val confs = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.sources.partitionOverwriteMode")
+    val prev = (confs :+ "spark.sql.ansi.enabled").map(k => k -> spark.conf.get(k))
+    // differs from the gate's chunk count, so a missed restore shows
+    spark.conf.set(confs.head, "7")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try {
+      val before = confs.map(spark.conf.get)
+      Streams.lastRunStats = Some(Streams.RunStats(1, 1, 1, 1L))
+      spark.streams.addListener(listener)
+      intercept[StreamingQueryException] {
+        Streams.benfordAvailableNow(spark, badSf)
+      }
+      assert(confs.map(spark.conf.get) == before)
+      assert(queryId.nonEmpty && ownCkpts.isEmpty,
+        s"query $queryId left ${ownCkpts.toSeq}")
+      assert(Streams.lastRunStats.isEmpty)
+    } finally {
+      spark.streams.removeListener(listener)
+      prev.foreach { case (k, v) => spark.conf.set(k, v) }
+      (staged -- stagedBefore).foreach(d => rmTree(new java.io.File(stage, d)))
+    }
+  }
 }
