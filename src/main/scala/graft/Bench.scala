@@ -99,24 +99,11 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }.min
 
-  /** Session builder shared by [[main]] and [[BenchSubset]]. */
-  def session(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .withExtensions(graft.functions.GraftFunctions.register)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = session(cpus)
+    val spark = Tables.session("graft-bench", cpus.toInt)
+    spark.sparkContext.setLogLevel("WARN")
     // Sorted-key order BOTH for warmup and timing: SparkEntry.queries is
     // an unordered Map, so adding a key used to reshuffle execution order
     // every round and neighbor effects (GC/ContextCleaner pressure from a
@@ -140,28 +127,15 @@ object Bench {
     // Warmup: run every query once at the smallest SF so JIT/codegen/
     // parquet-reader init doesn't land on whichever timed query runs
     // first. Timed numbers below then measure the queries, not the JVM.
-    // clearCache() drops only CacheManager entries — localCheckpoint()
-    // blocks (used by every "materialize the bounded frame once"
-    // operator) are plain persistent RDDs and survive it. Over 100
-    // queries × 3 runs they accumulate in storage memory, squeezing
-    // unified execution memory until the heaviest queries spill: r6's
-    // driver bench showed text_repetition at 3.88 s where a clean JVM
-    // measures 1.2-1.5 s. Unpersisting them (plus one GC per query so
+    // Tables.release between queries (plus one GC per query so
     // ContextCleaner can drain broadcast remnants) happens OUTSIDE the
     // timed window, so it costs bench wall-clock, not query numbers.
-    def dropResidentBlocks(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-    }
     ordered.foreach { case (_, fn) =>
-      // clearCache here too: operators that cache intermediates (LSH
+      // release here too: operators that cache intermediates (LSH
       // signatures, candidate pairs) must not leave warm blocks behind —
       // a later query with the same sub-plan would silently reuse them
       // ("Asked to cache already cached data") and warm up unevenly.
-      // (dropResidentBlocks, not clearCache: localCheckpoint blocks
-      // from sf0.001 warmups accumulate the same way)
-      dropResidentBlocks()
+      Tables.release(spark)
       try fn(spark, "/root/testdata/sf0.001").write
         .format("noop").mode("overwrite").save()
       catch { case _: Throwable => () }
@@ -205,7 +179,7 @@ object Bench {
       val times = (1 to reps).map { _ =>
         // each rep starts with an empty cache: timings measure the query,
         // not leftover cached blocks from whatever ran before it
-        dropResidentBlocks()
+        Tables.release(spark)
         val t0 = System.nanoTime()
         // noop sink forces full materialization of every output column
         // (count() would let Catalyst skip projected expressions entirely).

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Diagnostic: time individual SparkEntry queries cold, N repetitions
   * each, cache cleared between runs. Usage:
@@ -13,14 +12,7 @@ object BenchOne {
     val reps = args(1).toInt
     val names = args.drop(2).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(graft.functions.GraftFunctions.register)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Tables.session("graft-bench-one", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // the same machine-state sentinel as Bench: a BenchOne attribution
     // is only as good as the box it ran on (clean ~0.22 s at 32 threads).
@@ -55,11 +47,7 @@ object BenchOne {
       System.gc()
       val snaps = new scala.collection.mutable.ArrayBuffer[String]
       val times = (1 to reps).map { _ =>
-        // same hygiene as Bench: localCheckpoint blocks are persistent
-        // RDDs that clearCache() alone does not remove
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
+        Tables.release(spark)
         snaps += stateSnapshot()
         val t0 = System.nanoTime()
         SparkEntry.queries(name)(spark, sfDir).write

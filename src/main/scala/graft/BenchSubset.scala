@@ -45,7 +45,8 @@ object BenchSubset {
     val missing = names.filterNot(SparkEntry.queries.contains)
     require(missing.isEmpty, s"unknown queries: ${missing.mkString(", ")}")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Bench.session(cpus)
+    val spark = Tables.session("graft-bench-subset", cpus.toInt)
+    spark.sparkContext.setLogLevel("WARN")
     val ordered = names.sorted.map(n => n -> SparkEntry.queries(n))
     Bench.runSuite(spark, ordered, sfDir, reps = reps, cpus = cpus,
       outPath = "bench_out_sf1.json")

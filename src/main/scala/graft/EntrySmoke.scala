@@ -2,7 +2,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    // Mimic the DRIVER's session: NO graft extensions registered.
+    // Its own builder, not Tables.session: this smoke test exists to run
+    // the entry point WITHOUT the graft extensions registered.
     val spark = SparkSession.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")

@@ -8,7 +8,8 @@ package graft
   * (MinHash signatures, bm25 postings) RUN that sub-job at plan
   * construction and print its subtree as a lineage-truncated
   * `Scan ExistingRDD` — audit those subtrees through their builder
-  * functions (and through PlanProbe, which reports the EXECUTED plan).
+  * functions (and through [[PlanAudit]], which counts scans and
+  * exchanges in the EXECUTED plan).
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -20,7 +21,7 @@ object Explain {
         "dedup_exact_normalized", "q_interval_join", "q_asof_join",
         "dedup_corpus_clean", "split_assign",
         // r4/r5 additions (stream_* excluded: constructing them RUNS
-        // the streaming job; use PlanProbe/BenchOne for those)
+        // the streaming job; use StreamAudit/BenchOne for those)
         "text_repetition", "text_bm25", "text_corpus_filter",
         "emb_group_centroids")
     val spark = Tables.session("graft-explain", cores = 4)

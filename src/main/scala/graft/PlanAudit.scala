@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
 /** Plan-shape regression gate: runs every batch query and compares the
   * FINALIZED adaptive plan's structural node counts (parquet scans,
   * exchanges) against the checked-in baseline `plan_baseline.tsv`.
@@ -21,6 +19,24 @@ import java.nio.file.{Files, Paths}
   */
 object PlanAudit {
   val baselinePath = "plan_baseline.tsv"
+
+  /** Scan and exchange counts plus pushed-filter presence; a row fails
+    * when either count grows or pushed filters disappear.
+    */
+  val audit = Baseline.Audit[(String, Int, Int, Boolean)](
+    tag = "plan-audit", path = baselinePath, noun = "queries",
+    name = _._1,
+    fields = { case (_, s, e, p) => Seq(s.toString, e.toString, p.toString) },
+    show = { case (_, s, e, _) => s"scans=$s exchanges=$e" },
+    judge = { case ((_, s, e, p), b) =>
+      val (bs, be, bp) = (b(0).toInt, b(1).toInt, b(2).toBoolean)
+      if (s > bs || e > be || (bp && !p))
+        Baseline.Regressed(s"scans=$s (was $bs) exchanges=$e (was $be) " +
+          s"pushedFilters=$p (was $bp)")
+      else if (s < bs || e < be)
+        Baseline.Improved(s"scans=$s (was $bs) exchanges=$e (was $be)")
+      else Baseline.Same
+    })
 
   def main(args: Array[String]): Unit = {
     val record = args.contains("--record")
@@ -43,44 +59,11 @@ object PlanAudit {
       // non-empty PushedFilters on any scan: a pushdown regression
       // (filter evaluated after a full read) is a classic scale killer
       val pushed = "PushedFilters: \\[[^\\]]".r.findFirstIn(plan).isDefined
-      // drop localCheckpoint RDDs too, not just CacheManager entries:
-      // 100+ queries of accumulated blocks shift memory stats enough to
-      // flip AQE plan choices for later queries (qa_drift_psi flapped
-      // 6/7 exchanges from this before the audit adopted Bench's hygiene)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      Tables.release(spark)
       (n, scans, exchanges, pushed)
     }
-    if (record) {
-      val out = shapes.map { case (n, s, e, p) => s"$n\t$s\t$e\t$p" }
-        .mkString("", "\n", "\n")
-      Files.writeString(Paths.get(baselinePath), out)
-      println(s"[plan-audit] recorded ${shapes.size} shapes to $baselinePath")
-    } else {
-      val baseline = Files.readAllLines(Paths.get(baselinePath))
-        .toArray(Array.empty[String]).filter(_.nonEmpty)
-        .map(_.split("\t"))
-        .map(a => a(0) -> ((a(1).toInt, a(2).toInt, a(3).toBoolean)))
-        .toMap
-      var failed = 0
-      shapes.foreach { case (n, s, e, p) =>
-        baseline.get(n) match {
-          case None => println(s"[plan-audit] NEW $n scans=$s exchanges=$e" +
-            " (not in baseline — rerun with --record)")
-          case Some((bs, be, bp)) if s > bs || e > be || (bp && !p) =>
-            failed += 1
-            println(s"[plan-audit] REGRESSED $n scans=$s (was $bs) " +
-              s"exchanges=$e (was $be) pushedFilters=$p (was $bp)")
-          case Some((bs, be, _)) if s < bs || e < be =>
-            println(s"[plan-audit] improved $n scans=$s (was $bs) " +
-              s"exchanges=$e (was $be) — re-record to pin")
-          case _ => ()
-        }
-      }
-      println(s"[plan-audit] ${shapes.size} queries, $failed regressed")
-      if (failed > 0) sys.exit(1)
-    }
+    val status = Baseline.run(audit, record, shapes)
     spark.stop()
+    if (status != 0) sys.exit(status)
   }
 }

@@ -103,12 +103,8 @@ object ScaleCheck {
       SparkEntry.queries(name)(spark, dir).write.format("noop")
         .mode("overwrite").save()
       val secs = (System.nanoTime() - t) / 1e9
-      // Bench's hygiene: drop cached AND localCheckpoint blocks between
-      // queries — accumulated blocks shift memory stats enough to flip
-      // AQE choices and inflate later timings (outside the timed window)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      // outside the timed window
+      Tables.release(spark)
       secs
     }
     // warm both paths once

@@ -210,9 +210,7 @@ object ScaleCheckDocs {
         .write.format("noop").mode("overwrite").save()
       val secs = (System.nanoTime() - t) / 1e9
       val rows = obs.get("rows").asInstanceOf[Long]
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      Tables.release(spark)
       (secs, rows)
     }
     // warm BOTH dirs: first-touch costs (file listing, parquet footers,
@@ -252,9 +250,7 @@ object ScaleCheckDocs {
         val c = graft.similarity.Similarity
           .cosineNearDup(Tables(spark, dir, "embeddings"), threshold = 0.9)
           .count()
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
+        Tables.release(spark)
         ((System.nanoTime() - t) / 1e9, c)
       }
       timeHi(src) // warm

@@ -1,9 +1,9 @@
 package graft
 
-import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted}
 
 /** Shuffle-VOLUME regression gate: the bytes-level companion to
   * [[PlanAudit]]. PlanAudit pins plan STRUCTURE (scan/exchange counts);
@@ -41,13 +41,19 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
   */
 object ShuffleAudit {
 
-  /** Sums stage-completed task metrics; snapshot/delta per query. */
+  /** Sums stage-completed task metrics and counts started jobs;
+    * snapshot/delta per query. Jobs are printed per query, not gated:
+    * at interactive scale a query's cost is mostly its job count.
+    */
   final class MetricsListener extends SparkListener {
     val shuffleBytes = new AtomicLong
     val shuffleRows = new AtomicLong
     val inputBytes = new AtomicLong
     val inputRows = new AtomicLong
     val stages = new AtomicLong
+    val jobs = new AtomicLong
+    override def onJobStart(ev: SparkListenerJobStart): Unit =
+      jobs.incrementAndGet(): Unit
     override def onStageCompleted(ev: SparkListenerStageCompleted): Unit = {
       val m = ev.stageInfo.taskMetrics
       if (m != null) {
@@ -59,13 +65,13 @@ object ShuffleAudit {
       }: Unit
     }
     def snapshot: Vector[Long] = Vector(shuffleBytes.get, shuffleRows.get,
-      inputBytes.get, inputRows.get, stages.get)
+      inputBytes.get, inputRows.get, stages.get, jobs.get)
   }
 
-  /** Listener delivery is async; poll until the stage count has been
-    * stable for two consecutive 100 ms windows (max 5 s). The audit
-    * measures bytes, not time, so a fixed settle wait costs accuracy
-    * nothing.
+  /** Listener delivery is async; poll until the stage and job counts
+    * have been stable for two consecutive 100 ms windows (max 5 s). The
+    * audit measures bytes, not time, so a fixed settle wait costs
+    * accuracy nothing.
     */
   def settle(l: MetricsListener): Unit = {
     var last = -1L
@@ -74,13 +80,31 @@ object ShuffleAudit {
     while (stable < 2 && waited < 50) {
       Thread.sleep(100)
       waited += 1
-      val cur = l.stages.get
+      val cur = l.stages.get + l.jobs.get
       if (cur == last) stable += 1 else { stable = 0; last = cur }
     }
   }
 
   case class Row(name: String, shuffleMb: Double, shuffleRows: Long,
-                 inputMb: Double, inputRows: Long, stages: Long)
+                 inputMb: Double, inputRows: Long, stages: Long, jobs: Long)
+
+  /** A row fails when its shuffle bytes grow past the baseline by more
+    * than 25% + 8 MB; the other columns are informational.
+    */
+  def audit(baselinePath: String): Baseline.Audit[Row] = Baseline.Audit[Row](
+    tag = "shuffle-audit", path = baselinePath, noun = "queries",
+    name = _.name,
+    fields = r => Seq(f"${r.shuffleMb}%.3f", r.shuffleRows.toString,
+      f"${r.inputMb}%.3f", r.inputRows.toString, r.stages.toString),
+    show = r => f"shuffle ${r.shuffleMb}%.2f MB",
+    judge = { (r, b) =>
+      val mb = b(0).toDouble
+      if (r.shuffleMb > mb * 1.25 + 8.0)
+        Baseline.Regressed(f"${r.shuffleMb}%.2f MB shuffled (baseline $mb%.2f)")
+      else if (mb > r.shuffleMb * 1.25 + 8.0)
+        Baseline.Improved(f"${r.shuffleMb}%.2f MB (was $mb%.2f)")
+      else Baseline.Same
+    })
 
   def main(args: Array[String]): Unit = {
     val record = args.contains("--record")
@@ -102,46 +126,15 @@ object ShuffleAudit {
         .format("noop").mode("overwrite").save()
       settle(listener)
       val d = listener.snapshot.zip(before).map { case (a, b) => a - b }
-      // same block hygiene as Bench/PlanAudit: localCheckpoint RDDs
-      // accumulate across 140 queries otherwise
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      val r = Row(n, d(0) / 1e6, d(1), d(2) / 1e6, d(3), d(4))
+      Tables.release(spark)
+      val r = Row(n, d(0) / 1e6, d(1), d(2) / 1e6, d(3), d(4), d(5))
       println(f"[shuffle-audit] ${r.name}%-36s shuffle ${r.shuffleMb}%9.2f MB" +
         f" (${r.shuffleRows}%9d rows)  input ${r.inputMb}%9.2f MB  " +
-        f"stages ${r.stages}%3d")
+        f"stages ${r.stages}%3d  jobs ${r.jobs}%3d")
       r
     }
-
-    if (record) {
-      val out = rows.map(r => f"${r.name}\t${r.shuffleMb}%.3f\t" +
-          f"${r.shuffleRows}\t${r.inputMb}%.3f\t${r.inputRows}\t${r.stages}")
-        .mkString("", "\n", "\n")
-      Files.writeString(Paths.get(baselinePath), out)
-      println(s"[shuffle-audit] recorded ${rows.size} rows to $baselinePath")
-    } else {
-      val baseline = Files.readAllLines(Paths.get(baselinePath))
-        .toArray(Array.empty[String]).filter(_.nonEmpty).map(_.split("\t"))
-        .map(a => a(0) -> a(1).toDouble).toMap
-      var failed = 0
-      rows.foreach { r =>
-        baseline.get(r.name) match {
-          case None =>
-            println(s"[shuffle-audit] NEW ${r.name} — rerun with --record")
-          case Some(b) if r.shuffleMb > b * 1.25 + 8.0 =>
-            failed += 1
-            println(f"[shuffle-audit] REGRESSED ${r.name}: " +
-              f"${r.shuffleMb}%.2f MB shuffled (baseline $b%.2f)")
-          case Some(b) if b > r.shuffleMb * 1.25 + 8.0 =>
-            println(f"[shuffle-audit] improved ${r.name}: " +
-              f"${r.shuffleMb}%.2f MB (was $b%.2f) — re-record to pin")
-          case _ => ()
-        }
-      }
-      println(s"[shuffle-audit] ${rows.size} queries, $failed regressed")
-      if (failed > 0) sys.exit(1)
-    }
+    val status = Baseline.run(audit(baselinePath), record, rows)
     spark.stop()
+    if (status != 0) sys.exit(status)
   }
 }

@@ -1028,7 +1028,7 @@ object SparkEntry {
       // skips, and it grows with corpus size while load cost grows
       // only with index size (~1/40th). The pure-loop floor with
       // corpus prestaged too is the LoopVarianceProbe prestage arm
-      // (3.9-4.0 s ±2%).
+      // (3.9-4.0 s ±2%; the probe is deleted, source at commit d5abd67).
       Dedup.incrementalLoopFrom(part("corpus"),
         // §5 cluster-loss contract: the index lives in parquet (class
         // (c)); the cut only pins the loaded snapshot for this run

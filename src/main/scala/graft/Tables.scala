@@ -18,8 +18,8 @@ object Tables {
     val df = spark.read.parquet(s"$dir/$name.parquet")
     // Normalize events.ts to session-tz TIMESTAMP regardless of how the
     // generator encoded it: parquet TIMESTAMP(NANOS) arrives as a
-    // nanosecond long (spark.sql.legacy.parquet.nanosAsLong, set in
-    // Verify/Bench/session builders); plain timestamp[us] with
+    // nanosecond long (spark.sql.legacy.parquet.nanosAsLong, set by
+    // [[session]]); plain timestamp[us] with
     // isAdjustedToUTC=false arrives as TIMESTAMP_NTZ. Sessions run in
     // UTC, so the NTZ→LTZ cast is value-preserving.
     import org.apache.spark.sql.types.{LongType, TimestampNTZType}
@@ -34,8 +34,11 @@ object Tables {
     }
   }
 
-  /** Local session with scale-appropriate defaults. Shuffle partitions are
-    * sized to cores (the driver/bench set their own); AQE coalesces further.
+  /** The one session builder for graft's mains and specs: graft
+    * extensions, UTC, nanos-as-long parquet, no UI. A fresh session gets
+    * `local[cores]` with shuffle partitions sized to cores (AQE coalesces
+    * further); an already-active session keeps its master and partition
+    * count. `EntrySmoke` alone builds its own, extension-free session.
     */
   def session(appName: String = "graft", cores: Int = 32): SparkSession = {
     val b = SparkSession.builder()
@@ -50,5 +53,18 @@ object Tables {
         .config("spark.sql.shuffle.partitions", cores.toString)
       else b
     withMaster.getOrCreate()
+  }
+
+  /** Between-query release: drops CacheManager entries AND every
+    * persistent RDD. `clearCache()` alone leaves `localCheckpoint()`
+    * blocks resident; over a 100+-query sweep they squeeze execution
+    * memory until heavy queries spill (r6: text_repetition 3.88 s vs
+    * 1.2-1.5 s in a clean JVM) and shift AQE plan choices for later
+    * queries (qa_drift_psi flapped 6/7 exchanges in PlanAudit).
+    */
+  def release(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,14 +10,7 @@ object Verify {
     // not a stale contract
     SparkEntry.noteRunDir(sfDir)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(graft.functions.GraftFunctions.register)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Tables.session("graft-verify", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Remove any previous output for the query BEFORE running it: a query
@@ -48,11 +40,8 @@ object Verify {
       }
       // operators cache intermediates (LSH signatures, candidate pairs)
       // for their own plan; drop them between queries so a 100+-query run
-      // doesn't accumulate dead cached blocks — including localCheckpoint
-      // RDDs, which clearCache alone leaves resident (Bench's hygiene)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      // doesn't accumulate dead cached blocks
+      Tables.release(spark)
     }
     // Failure marker: check.py (and any human) can see at a glance which
     // queries produced no output this run.

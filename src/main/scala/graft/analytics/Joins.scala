@@ -57,9 +57,10 @@ object Joins {
     * and row set (spec-proven equal to the window form; oracle-gated vs
     * DuckDB ASOF as `q_asof_join_fused`), but each side shuffles with
     * its OWN schema instead of the widened union schema — see the
-    * measured comparison in AsofProfile. Requires the session to carry
-    * GraftFunctions.register (the planner strategy); probe/build key
-    * and ts columns must have matching types.
+    * measured comparison in the `plans/AsofJoin.scala` header (taken
+    * with AsofProfile, deleted; source at commit d5abd67). Requires the
+    * session to carry GraftFunctions.register (the planner strategy);
+    * probe/build key and ts columns must have matching types.
     */
   def asofFused(probe: DataFrame, build: DataFrame, key: String, ts: String,
                 buildCols: Seq[String] = Nil,

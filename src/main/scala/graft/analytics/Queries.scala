@@ -206,8 +206,9 @@ object Queries {
     * gated against the same DuckDB ASOF oracle. Probe and build are
     * separate filtered reads (the two-dataset shape the fused operator
     * exists for; the window form above instead exploits that both
-    * sides share one events scan). See AsofProfile for the measured
-    * comparison of the two shapes at 1× and 10×.
+    * sides share one events scan). The measured comparison of the two
+    * shapes is in the `plans/AsofJoin.scala` header (AsofProfile,
+    * deleted; source at commit d5abd67).
     */
   def asofJoinFused(spark: SparkSession, dir: String): DataFrame = {
     val (e, probe) = asofEventsProbe(spark, dir)

@@ -22,8 +22,8 @@ import org.apache.spark.sql.types.DataType
   * every build row ships `null` probe columns) and then shuffles + sorts
   * the widened union as ONE dataset. The fused form shuffles each side
   * with its OWN schema and streams a per-partition merge, so
-  *   - shuffled bytes drop (AsofProfile on the purchase/click shape,
-  *     50× events: 38.5 → 33.2 MB at 3 payload cols, 62.8 → 56.8 at
+  *   - shuffled bytes drop (AsofProfile, deleted; source at commit
+  *     d5abd67 — on the purchase/click shape, 50× events: 38.5 → 33.2 MB at 3 payload cols, 62.8 → 56.8 at
   *     9; wall 1.03 → 0.80 s / 0.88 → 0.69 s, stable at 10×/50×).
   *     Measured honestly: the RELATIVE byte gap stays ~1.1–1.2× and
   *     does NOT grow with payload width — lz4 compresses the union

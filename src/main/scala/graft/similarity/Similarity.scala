@@ -1224,8 +1224,8 @@ object Similarity {
     * optionally a rotation) was paying one write job + one read+collect
     * job PER model for frames of a few KB each, and those four-to-six
     * driver-side jobs were the measured bulk of the gate's frame-
-    * construction time (GateSplitProbe: 1.2-1.9 s construct vs 0.6-0.9 s
-    * execute). One bundle table keeps the identical production contract
+    * construction time (GateSplitProbe, deleted, source at commit
+    * d5abd67: 1.2-1.9 s construct vs 0.6-0.9 s execute). One bundle table keeps the identical production contract
     * — train once, persist, every query job reloads bit-exact parquet
     * doubles — at a single round trip. Layout: (model, i, j, centroid)
     * with each model a [i][j][*] cube; 2-D models (IVF centroids, the

@@ -200,12 +200,10 @@ object Streams {
     // that fixed cost dwarfs the data. Size the streaming shuffle to the
     // staged chunk count (a deployment sizes it to its state volume; the
     // partition count is pinned into the checkpoint either way), and
-    // restore the session's settings afterwards (the idempotent sink
-    // flips partitionOverwriteMode on its frame's session — the
-    // caller's, for a fold gate's driver-built snapshot frames).
-    val saved = Seq("spark.sql.shuffle.partitions",
-      "spark.sql.sources.partitionOverwriteMode").map(k => k -> spark.conf.get(k))
-    spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+    // restore the session's setting afterwards.
+    val partitionsKey = "spark.sql.shuffle.partitions"
+    val savedPartitions = spark.conf.get(partitionsKey)
+    spark.conf.set(partitionsKey, partitions.toString)
     var outSchema: StructType = null
     try {
       val built = transform(spark.readStream
@@ -238,7 +236,7 @@ object Streams {
         stateRowsTotal = prog.lastOption
           .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(0L)))
     } finally {
-      saved.foreach { case (k, v) => spark.conf.set(k, v) }
+      spark.conf.set(partitionsKey, savedPartitions)
       // the checkpoint is garbage whether the stream succeeded or threw;
       // the staged input is keyed for reuse, and only `out` (shutdown-
       // hook-cleaned) backs the returned frame
@@ -1088,13 +1086,14 @@ object Streams {
     * so a replayed batch (post-failure restart) overwrites its own
     * partition instead of appending duplicates. Pair with the streaming
     * checkpoint for end-to-end exactly-once on an at-least-once source.
+    * The overwrite mode is a per-write option, so the session's own
+    * `partitionOverwriteMode` is never touched.
     */
   def idempotentBatchWriter(basePath: String): (DataFrame, Long) => Unit =
     (batch: DataFrame, batchId: Long) => {
-      batch.sparkSession.conf
-        .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
       batch.withColumn("batch_id", lit(batchId))
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("batch_id")
         .parquet(basePath)
     }

@@ -494,7 +494,18 @@ class PropertySpec extends SparkSpec {
       assert(b2(0) - b1(0) > 0L)
       // and the scans' input bytes were observed at all
       assert(b1(2) - b0(2) > 0L)
+      // each write ran at least one job, and the listener counted it
+      assert(b1(5) - b0(5) >= 1L && b2(5) - b1(5) >= 1L)
     } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("Tables.release drops cached and localCheckpoint blocks") {
+    val cached = spark.range(100).toDF("id").cache()
+    cached.count(): Unit
+    spark.range(100).toDF("id").localCheckpoint(eager = true): Unit
+    assert(spark.sparkContext.getPersistentRDDs.size >= 2)
+    Tables.release(spark)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
 
   test("jaccard output is bounded, ordered, and self-consistent") {

@@ -4,19 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** Shared local session for specs: small core count, deterministic UTC,
-  * nanos-tolerant parquet reads (events table).
+/** Shared local session for specs: [[Tables.session]] at a small core
+  * count (deterministic UTC, nanos-tolerant parquet reads).
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .withExtensions(graft.functions.GraftFunctions.register)
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Tables.session("graft-test", cores = 4)
 
   val sfDir = "/root/testdata/sf0.001"
 

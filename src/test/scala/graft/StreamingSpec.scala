@@ -306,6 +306,9 @@ class StreamingSpec extends SparkSpec {
     writer(Seq((3L, "c")).toDF("id", "v"), 1L)
     // simulate a post-failure replay of batch 1 with different task output
     writer(Seq((3L, "c")).toDF("id", "v"), 1L)
+    // dynamic overwrite is a per-write option: the session keeps its own
+    assert(spark.conf.get("spark.sql.sources.partitionOverwriteMode")
+      .equalsIgnoreCase("static"))
     val back = spark.read.parquet(dir)
     assert(back.count() == 3)
     assert(back.select("id").collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L))
