@@ -77,13 +77,16 @@ object Streams {
     * matches lost). Explicit modtimes pin the replay to chunk order.
     * Staging is a pure function of the key, so a staged dir is reused
     * across calls and `chunks` (which may run Spark jobs) is only
-    * evaluated when the dir is not yet staged.
+    * evaluated when the dir is not yet staged. The marker's content is
+    * the staged files' schema, inferred once here so that no replay of
+    * the dir runs a schema-inference job; a marker without one means
+    * the dir is not staged.
     */
-  private def stageReplay(sfDir: String, table: String, dirTag: String,
-                          shape: String)
+  private def stageReplay(spark: SparkSession, sfDir: String, table: String,
+                          dirTag: String, shape: String)
                          (chunks: => Seq[(String, DataFrame)]): String = {
     val in = s"target/stream_stage/${dirTag}_${stageKey(sfDir, table)}_x$shape"
-    if (!new java.io.File(s"$in/_STAGED").exists()) {
+    if (stagedSchema(in).isEmpty) {
       rmTree(in); new java.io.File(in).mkdirs(): Unit
       val base = System.currentTimeMillis() - 3600L * 1000
       chunks.zipWithIndex.foreach { case ((name, df), i) =>
@@ -96,9 +99,18 @@ object Streams {
         dest.setLastModified(base + i * 60000L): Unit
         rmTree(tmp)
       }
-      Files.writeString(Paths.get(s"$in/_STAGED"), "ok"): Unit
+      Files.writeString(Paths.get(s"$in/_STAGED"),
+        spark.read.parquet(in).schema.json): Unit
     }
     in
+  }
+
+  /** The schema a staged dir's `_STAGED` marker records, if any. */
+  private def stagedSchema(in: String): Option[StructType] = {
+    val marker = Paths.get(s"$in/_STAGED")
+    if (!Files.isRegularFile(marker)) None
+    else scala.util.Try(DataType.fromJson(Files.readString(marker)))
+      .toOption.collect { case s: StructType => s }
   }
 
   /** Sink/checkpoint temp dirs created by [[runStagedAvailableNow]],
@@ -128,10 +140,15 @@ object Streams {
     * durable shared storage instead — this harness's runs are bounded
     * and self-contained). Measured here: ~10% off the 8-gate total
     * (largest on the state-heaviest gates: follow_within 4.6 → 3.8 s,
-    * hourly_rollup 2.4 → 2.0 s; the rest of the floor is query startup
-    * and per-micro-batch planning, not checkpoint IO). The SINK stays
-    * on the regular temp FS — it backs the returned frame and is the
-    * run's real output.
+    * hourly_rollup 2.4 → 2.0 s). Most of what tmpfs could not remove
+    * was process forks, not IO: without libhadoop, Hadoop's local file
+    * system forked `chmod` per created file and `readlink` four times
+    * per rename, 570 child processes per warm `stream_asof_enrich`
+    * call and 175 per `stream_benford` call (JFR `jdk.ProcessStart`,
+    * graftbench inputs). The runner writes the checkpoint through
+    * [[SpawnFreeLocalFs]], which leaves 88 and 40, all `chmod` from
+    * the sink's parquet writes. The SINK stays on the regular temp FS
+    * — it backs the returned frame and is the run's real output.
     */
   private def ckptDir(prefix: String): String = {
     val shm = new java.io.File("/dev/shm")
@@ -160,11 +177,10 @@ object Streams {
     * source over the staged replay dir `in` (`maxFilesPerTrigger=1`, so
     * each staged chunk is one real incremental micro-batch) →
     * `transform`'s streaming state → `foreachBatch` → parquet sink under
-    * `Trigger.AvailableNow`, returning the sink read back through
-    * `readBack`. This is the production deployment shape (a bounded
-    * catch-up run of the always-on pipeline) driven to completion in
-    * one call, which makes the STREAMING path itself checkable against a
-    * batch SQL oracle.
+    * `Trigger.AvailableNow`, returning the sink read back. This is the
+    * production deployment shape (a bounded catch-up run of the
+    * always-on pipeline) driven to completion in one call, which makes
+    * the STREAMING path itself checkable against a batch SQL oracle.
     *
     * `complete` mode overwrites the sink each batch (the last batch is
     * the full aggregate — itself idempotent); `append` mode writes each
@@ -174,7 +190,9 @@ object Streams {
     * micro-batch with that sink; a fold gate passes its own body so it
     * can order its writes against the state it releases. `body` must
     * write inside its call: a foreachBatch frame is only readable
-    * during it.
+    * during it. `lastBatchOnly` reads back only the partition of the
+    * last batch the sink wrote: a fold gate publishes its running
+    * snapshot every batch, so that one is the answer.
     *
     * `refireBatchId` simulates a sink retry: that batch id's sink fires
     * a second time — the shape a post-failure restart produces (the
@@ -182,11 +200,15 @@ object Streams {
     * the micro-batch with an identical batch id). A gate using it must
     * still hash-match its unchanged oracle: a plain append sink would
     * double the batch's rows and fail the hash.
+    *
+    * No schema is inferred: the input's comes from the `_STAGED` marker
+    * and the sink's from the first frame it wrote. The checkpoint is
+    * written through [[SpawnFreeLocalFs]], so its files land without a
+    * forked process each.
     */
   private def runStagedAvailableNow(
       spark: SparkSession, in: String, mode: String, partitions: Int,
-      refireBatchId: Option[Long] = None,
-      readBack: DataFrame => DataFrame = _.drop("batch_id"))(
+      refireBatchId: Option[Long] = None, lastBatchOnly: Boolean = false)(
       transform: DataFrame => DataFrame = identity,
       body: (DataFrame, Long, (DataFrame, Long) => Unit) => Unit =
         (batch, id, sink) => sink(batch, id)): DataFrame = {
@@ -195,19 +217,26 @@ object Streams {
     lastRunStats = None
     val out = tempDir("graft_stream_out")
     val ckpt = ckptDir("graft_stream_ckpt")
-    // Stateful streaming operators allocate one state store per shuffle
-    // partition PER SIDE per micro-batch — at a bounded catch-up scale
-    // that fixed cost dwarfs the data. Size the streaming shuffle to the
-    // staged chunk count (a deployment sizes it to its state volume; the
-    // partition count is pinned into the checkpoint either way), and
-    // restore the session's setting afterwards.
-    val partitionsKey = "spark.sql.shuffle.partitions"
-    val savedPartitions = spark.conf.get(partitionsKey)
-    spark.conf.set(partitionsKey, partitions.toString)
+    // Session confs for the run, restored afterwards. Stateful streaming
+    // operators allocate one state store per shuffle partition PER SIDE
+    // per micro-batch — at a bounded catch-up scale that fixed cost
+    // dwarfs the data, so the streaming shuffle is sized to the staged
+    // chunk count (a deployment sizes it to its state volume; the
+    // partition count is pinned into the checkpoint either way). The
+    // stream's cloned session carries the FileContext binding of
+    // `file:` into the Hadoop conf its checkpoint file manager and
+    // state stores open their files with.
+    val runConfs = Seq(
+      "spark.sql.shuffle.partitions" -> partitions.toString,
+      "fs.AbstractFileSystem.file.impl" -> classOf[SpawnFreeLocalFs].getName)
+    val saved = runConfs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    runConfs.foreach { case (k, v) => spark.conf.set(k, v) }
     var outSchema: StructType = null
+    var sinkSchema: StructType = null
+    var lastWritten = -1L
     try {
       val built = transform(spark.readStream
-        .schema(spark.read.parquet(in).schema)
+        .schema(stagedSchema(in).getOrElse(spark.read.parquet(in).schema))
         .option("maxFilesPerTrigger", 1)
         .parquet(in))
       outSchema = built.schema
@@ -216,8 +245,12 @@ object Streams {
           (batch, _) => batch.write.mode("overwrite").parquet(out)
         else idempotentBatchWriter(out)
       val sink: (DataFrame, Long) => Unit = (batch, id) => {
+        if (sinkSchema == null) sinkSchema =
+          if (mode == "complete") batch.schema
+          else batch.schema.add("batch_id", LongType)
         write(batch, id)
         if (refireBatchId.contains(id)) write(batch, id)
+        lastWritten = id
       }
       val q = built
         .writeStream
@@ -236,7 +269,7 @@ object Streams {
         stateRowsTotal = prog.lastOption
           .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(0L)))
     } finally {
-      spark.conf.set(partitionsKey, savedPartitions)
+      saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
       // the checkpoint is garbage whether the stream succeeded or threw;
       // the staged input is keyed for reuse, and only `out` (shutdown-
       // hook-cleaned) backs the returned frame
@@ -250,21 +283,13 @@ object Streams {
         else f.getName.endsWith(".parquet")
       walk(new java.io.File(out))
     }
-    readBack(
-      if (hasData) spark.read.parquet(out)
+    val all =
+      if (hasData) spark.read.schema(sinkSchema).parquet(out)
       else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema))
-  }
-
-  /** `readBack` of the fold gates ([[kmvSketchAvailableNow]],
-    * [[benfordAvailableNow]]): every micro-batch publishes the running
-    * snapshot, so the answer is the highest `batch_id` partition.
-    */
-  private def lastSnapshot(all: DataFrame): DataFrame = {
-    // partition-column type is inference-dependent (int when it fits) —
-    // pin to long before the max/filter
-    val last = all.agg(max(col("batch_id").cast("long"))).first().getLong(0)
-    all.filter(col("batch_id").cast("long") === last).drop("batch_id")
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        Option(sinkSchema).getOrElse(outSchema))
+    (if (lastBatchOnly && hasData) all.filter(col("batch_id") === lastWritten)
+     else all).drop("batch_id")
   }
 
   /** Drive a streaming transform of the events table end to end through
@@ -280,7 +305,7 @@ object Streams {
                                     flushHorizonMs: Option[Long] = None)
                                    (build: DataFrame => DataFrame): DataFrame = {
     val flushTag = flushHorizonMs.map(h => s"_flush$h").getOrElse("")
-    val in = stageReplay(sfDir, "events", "v2", s"$chunks$flushTag") {
+    val in = stageReplay(spark, sfDir, "events", "v2", s"$chunks$flushTag") {
       val e = graft.Tables(spark, sfDir, "events")
       val probs = (1 until chunks).map(_.toDouble / chunks).toArray
       // Boundaries are ms-ALIGNED ((us div 1000)*1000 - 1, i.e. between
@@ -352,7 +377,7 @@ object Streams {
                                table: String, idCol: String, chunks: Int,
                                dirTag: String)
                               (prep: DataFrame => DataFrame): String =
-    stageReplay(sfDir, table, dirTag, chunks.toString) {
+    stageReplay(spark, sfDir, table, dirTag, chunks.toString) {
       val d = prep(graft.Tables(spark, sfDir, table))
       val maxIdRow = d.agg(max(col(idCol))).first()
       // legible failure, not an NPE from getLong(null): an empty table
@@ -417,7 +442,7 @@ object Streams {
                          batches: Seq[(String, DataFrame)],
                          idCol: String = "doc_id",
                          textCol: String = "text"): String =
-    stageReplay(sfDir, "documents", dirTag, batches.size.toString) {
+    stageReplay(spark, sfDir, "documents", dirTag, batches.size.toString) {
       batches.zipWithIndex.map { case ((tag, df), i) =>
         f"chunk-$i%02d.parquet" -> df.select(col(idCol), col(textCol))
           .withColumn("batch", lit(tag)).orderBy(col(idCol))
@@ -522,22 +547,24 @@ object Streams {
     // distinct fingerprints are computed distributed
     // (Sketch.batchKept — the 100 TB-shaped aggregate), collected
     // (≤ k·|groups| rows), and merged locally with the identical
-    // union+distinct+take-k algebra over exact longs: 3 Spark jobs per
-    // micro-batch (emptiness probe, kept collect, snapshot write).
+    // union+distinct+take-k algebra over exact longs. A data
+    // micro-batch runs the kept collect and the snapshot write; only an
+    // empty collect pays the emptiness probe, since a non-empty one
+    // implies a non-empty batch.
     // Published columns are publishSketch's arithmetic: n_kept as int,
     // kth_min = max kept, est = (k−1)·M / kth_min in one double division.
     var state = Map.empty[String, Vector[Long]]
     val in = stageDocsReplay(spark, sfDir, chunks)
     runStagedAvailableNow(spark, in, "append", chunks,
-      readBack = lastSnapshot)(body = { (batch, id, sink) =>
-      if (!batch.isEmpty) {
-        Sketch.batchKept(batch.select("source", "text"),
-          "source", "text", k).collect()
-          .groupBy(_.getString(0)).foreach { case (g, rows) =>
-            val merged = (state.getOrElse(g, Vector.empty) ++
-              rows.map(_.getLong(1))).distinct.sorted.take(k)
-            state = state.updated(g, merged)
-          }
+      lastBatchOnly = true)(body = { (batch, id, sink) =>
+      val kept = Sketch.batchKept(batch.select("source", "text"),
+        "source", "text", k).collect()
+      if (kept.nonEmpty || !batch.isEmpty) {
+        kept.groupBy(_.getString(0)).foreach { case (g, rows) =>
+          val merged = (state.getOrElse(g, Vector.empty) ++
+            rows.map(_.getLong(1))).distinct.sorted.take(k)
+          state = state.updated(g, merged)
+        }
         val snap = state.toSeq.map { case (g, hs) =>
           val est =
             if (hs.size < k) hs.size.toDouble
@@ -569,17 +596,19 @@ object Streams {
     // Digit-count state is ≤ 10 (digit, n) longs — the class-(a)
     // bounded-frame regime, so the fold lives in the DRIVER: the
     // per-batch digit aggregate stays distributed (the 100 TB-shaped
-    // work), its ≤10-row result merges into a map — 3 Spark jobs per
-    // micro-batch (emptiness probe, counts collect, snapshot write).
+    // work), its ≤10-row result merges into a map. A data micro-batch
+    // runs the counts collect and the snapshot write; only an empty
+    // collect pays the emptiness probe.
     // The published rows are benfordPublish's integer arithmetic
     // (`n·10⁶ div total` = Long division for non-negative operands,
     // driver-side exp literals, zero-filled digits 1-9).
     var state = Map.empty[Int, Long]
     val in = stageDocsReplay(spark, sfDir, chunks)
     runStagedAvailableNow(spark, in, "append", chunks,
-      readBack = lastSnapshot)(body = { (batch, id, sink) =>
-      if (!batch.isEmpty) {
-        Qa.benfordCounts(batch, "n_chars").collect().foreach { r =>
+      lastBatchOnly = true)(body = { (batch, id, sink) =>
+      val counts = Qa.benfordCounts(batch, "n_chars").collect()
+      if (counts.nonEmpty || !batch.isEmpty) {
+        counts.foreach { r =>
           val d = r.getInt(0)
           state = state.updated(d, state.getOrElse(d, 0L) + r.getLong(1))
         }

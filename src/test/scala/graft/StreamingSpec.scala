@@ -2,10 +2,11 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.hadoop.fs.FileContext
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.streaming.Streams
+import graft.streaming.{SpawnFreeLocalFs, Streams}
 
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
@@ -446,6 +447,25 @@ class StreamingSpec extends SparkSpec {
     assert(stats.dataBatches == 4 && stats.statefulOps == 0, stats.toString)
   }
 
+  test("a Benford replay over a staged dir runs a pinned number of Spark jobs") {
+    // the first call stages the replay; only the second is counted
+    Streams.benfordAvailableNow(spark, sfDir)
+    val l = new ShuffleAudit.MetricsListener
+    spark.sparkContext.addSparkListener(l)
+    try {
+      ShuffleAudit.settle(l)
+      val before = l.jobs.get
+      Streams.benfordAvailableNow(spark, sfDir)
+      ShuffleAudit.settle(l)
+      // four data micro-batches of three jobs each: the digit-count
+      // collect (a map-stage job and a result job) and the snapshot
+      // write; no schema inference, emptiness probe or read-back
+      // aggregate
+      val jobs = l.jobs.get - before
+      assert(jobs == 12L, s"$jobs jobs")
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
   test("live KMV sketch: streamed kept-set state equals the one-pass " +
     "batch sketch, with zero streaming state operators") {
     import graft.analytics.Sketch
@@ -504,33 +524,47 @@ class StreamingSpec extends SparkSpec {
       new java.io.File(d).listFiles().find(_.getName.endsWith(".parquet")).get
     }
     val base = System.currentTimeMillis() - 3600L * 1000
-    val in = tempDir("graft_restart_in")
-    def copyIn(c: Int): Unit = {
+    def copyIn(in: String, c: Int): Unit = {
       val dest = new java.io.File(in, s"chunk-$c.parquet")
       java.nio.file.Files.copy(chunkFiles(c).toPath, dest.toPath)
       dest.setLastModified(base + c * 60000L): Unit
     }
-    def run(ckpt: String, name: String) = {
-      val q = Streams.hourlyRollup(spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1).parquet(in))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete").option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      rollup(spark.table(name).collect())
+    // the runner's checkpoint file system, switched per run: its files
+    // must be the ones stock Hadoop reads and writes
+    val fsKey = "fs.AbstractFileSystem.file.impl"
+    def run(in: String, ckpt: String, name: String, spawnFree: Boolean) = {
+      if (spawnFree) spark.conf.set(fsKey, classOf[SpawnFreeLocalFs].getName)
+      try {
+        assert(FileContext.getFileContext(spark.sessionState.newHadoopConf())
+          .getDefaultFileSystem.isInstanceOf[SpawnFreeLocalFs] == spawnFree)
+        val q = Streams.hourlyRollup(spark.readStream.schema(events.schema)
+          .option("maxFilesPerTrigger", 1).parquet(in))
+          .writeStream.format("memory").queryName(name)
+          .outputMode("complete").option("checkpointLocation", ckpt)
+          .trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination()
+        rollup(spark.table(name).collect())
+      } finally spark.conf.unset(fsKey)
     }
-    val ckpt = tempDir("graft_restart_ckpt")
-    copyIn(0); copyIn(1)
-    assert(!same(run(ckpt, "restart_first"), batch))
-    // the processed chunks leave the input, as an archiving source
-    // moves them: after the restart only the checkpoint's state store
-    // remembers them
-    new java.io.File(in).listFiles().foreach(_.delete())
-    copyIn(2)
-    assert(same(run(ckpt, "restart_resumed"), batch))
-    // the spec bites: the same second run from a fresh checkpoint sees
-    // only the last chunk
-    assert(!same(run(tempDir("graft_restart_fresh"), "restart_fresh"), batch))
+    // written with the spawn-free file system and resumed with stock
+    // Hadoop, then the reverse
+    for ((writer, resumer) <- Seq(true -> false, false -> true)) {
+      val in = tempDir("graft_restart_in")
+      val ckpt = tempDir("graft_restart_ckpt")
+      copyIn(in, 0); copyIn(in, 1)
+      assert(!same(run(in, ckpt, s"restart_first_$writer", writer), batch))
+      // the processed chunks leave the input, as an archiving source
+      // moves them: after the restart only the checkpoint's state store
+      // remembers them
+      new java.io.File(in).listFiles().foreach(_.delete())
+      copyIn(in, 2)
+      assert(same(run(in, ckpt, s"restart_resumed_$resumer", resumer), batch),
+        s"written spawn-free=$writer, resumed spawn-free=$resumer")
+      // the spec bites: the same second run from a fresh checkpoint sees
+      // only the last chunk
+      assert(!same(run(in, tempDir("graft_restart_fresh"),
+        s"restart_fresh_$resumer", resumer), batch))
+    }
   }
 
   test("a gate that throws mid-replay restores the session confs, " +
@@ -540,9 +574,9 @@ class StreamingSpec extends SparkSpec {
     // documents whose highest doc_id (the last staged chunk) carries a
     // corrupt length: under ANSI arithmetic the Benford fold's digit
     // extraction overflows in the final micro-batch, after the earlier
-    // snapshots went through the idempotent sink — which flips the
-    // CALLER's partitionOverwriteMode, since a fold gate builds its
-    // snapshot frames on the caller's session
+    // snapshots went through the idempotent sink. A fold gate builds its
+    // snapshot frames on the caller's session, so any session conf the
+    // run sets or its sink flipped would leak to the caller
     val docs = Tables(spark, sfDir, "documents")
     val lastDoc = docs.agg(max(col("doc_id"))).first().getLong(0)
     val badSf = tempDir("graft_bad_sf")
@@ -569,26 +603,30 @@ class StreamingSpec extends SparkSpec {
     val stage = new java.io.File("target/stream_stage")
     def staged: Set[String] = Option(stage.list()).map(_.toSet).getOrElse(Set.empty)
     val stagedBefore = staged
+    // the checkpoint file system's key is unset by default, so every
+    // conf is read as an Option
     val confs = Seq("spark.sql.shuffle.partitions",
-      "spark.sql.sources.partitionOverwriteMode")
-    val prev = (confs :+ "spark.sql.ansi.enabled").map(k => k -> spark.conf.get(k))
+      "spark.sql.sources.partitionOverwriteMode",
+      "fs.AbstractFileSystem.file.impl")
+    val prev = (confs :+ "spark.sql.ansi.enabled").map(k => k -> spark.conf.getOption(k))
     // differs from the gate's chunk count, so a missed restore shows
     spark.conf.set(confs.head, "7")
     spark.conf.set("spark.sql.ansi.enabled", "true")
     try {
-      val before = confs.map(spark.conf.get)
+      val before = confs.map(spark.conf.getOption)
+      assert(before.last.isEmpty)
       Streams.lastRunStats = Some(Streams.RunStats(1, 1, 1, 1L))
       spark.streams.addListener(listener)
       intercept[StreamingQueryException] {
         Streams.benfordAvailableNow(spark, badSf)
       }
-      assert(confs.map(spark.conf.get) == before)
+      assert(confs.map(spark.conf.getOption) == before)
       assert(queryId.nonEmpty && ownCkpts.isEmpty,
         s"query $queryId left ${ownCkpts.toSeq}")
       assert(Streams.lastRunStats.isEmpty)
     } finally {
       spark.streams.removeListener(listener)
-      prev.foreach { case (k, v) => spark.conf.set(k, v) }
+      prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
       (staged -- stagedBefore).foreach(d => rmTree(new java.io.File(stage, d)))
     }
   }
