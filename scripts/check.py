@@ -30,7 +30,7 @@ for t in ["region", "nation", "customer", "supplier", "part", "orders",
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
 
 oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-fails, passes, skips = [], [], []
+fails, passes = [], []
 
 # Verify writes a FAILED.txt marker listing queries that threw this run —
 # treat each as FAIL even if a stale output dir somehow survives.
@@ -57,8 +57,10 @@ for name in sorted(os.listdir(out_dir)):
     if not files:
         fails.append((name, "no output parquet")); continue
     mine = pd.read_parquet(files[0])
+    # every gate has an oracle (a trained gate's comes from its run), so
+    # an output dir without one fails
     if name not in oracle:
-        skips.append((name, len(mine))); continue
+        fails.append((name, "no oracle entry in oracle_sql.json")); continue
     try:
         ref = con.execute(oracle[name]).fetchdf()
     except Exception as e:
@@ -87,12 +89,11 @@ for name in sorted(os.listdir(out_dir)):
         fails.append((name, "value mismatch: " + str(e).split("\n")[-2][:200]))
 
 for n, c in passes: print(f"PASS  {n} ({c} rows)")
-for n, c in skips: print(f"SKIP  {n} ({c} rows, no oracle)")
 for n, msg in fails: print(f"FAIL  {n}: {msg}")
-print(f"\n{len(passes)} pass, {len(skips)} rows-only, {len(fails)} fail")
+print(f"\n{len(passes)} pass, {len(fails)} fail")
 # a filter that matches NOTHING must not read as a green sweep (a
 # transposed regex would otherwise record success while comparing 0)
-if name_re is not None and not (passes or skips or fails):
+if name_re is not None and not (passes or fails):
     print(f"FAIL  name_regex {name_re.pattern!r} matched no output dirs")
     sys.exit(1)
 sys.exit(1 if fails else 0)

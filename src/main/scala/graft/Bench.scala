@@ -104,15 +104,13 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Tables.session("graft-bench", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
-    // Sorted-key order BOTH for warmup and timing: SparkEntry.queries is
-    // an unordered Map, so adding a key used to reshuffle execution order
-    // every round and neighbor effects (GC/ContextCleaner pressure from a
-    // heavy query) landed on different victims each time — r4 saw two
-    // untouched queries regress 6-7× purely from order noise. Sorted
-    // order makes per-query numbers comparable round-over-round.
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-    runSuite(spark, ordered, sfDir, reps = 2, cpus = cpus,
-      outPath = "bench_out.json")
+    // Sorted-key order (the registry's) BOTH for warmup and timing, so
+    // adding a key does not reshuffle which query runs after which:
+    // neighbor effects (GC/ContextCleaner pressure from a heavy query)
+    // then land on the same victims every round — r4 saw two untouched
+    // queries regress 6-7× purely from order noise under hash order.
+    runSuite(spark, SparkEntry.gates.values.toSeq, sfDir, reps = 2,
+      cpus = cpus, outPath = "bench_out.json")
     spark.stop()
   }
 
@@ -121,8 +119,7 @@ object Bench {
     * loader discipline on the write side like scripts/bench_diff.load
     * on the read side.
     */
-  def runSuite(spark: SparkSession, ordered: Seq[(String,
-      (SparkSession, String) => org.apache.spark.sql.DataFrame)],
+  def runSuite(spark: SparkSession, ordered: Seq[Gate],
       sfDir: String, reps: Int, cpus: String, outPath: String): Unit = {
     // Warmup: run every query once at the smallest SF so JIT/codegen/
     // parquet-reader init doesn't land on whichever timed query runs
@@ -130,13 +127,13 @@ object Bench {
     // Tables.release between queries (plus one GC per query so
     // ContextCleaner can drain broadcast remnants) happens OUTSIDE the
     // timed window, so it costs bench wall-clock, not query numbers.
-    ordered.foreach { case (_, fn) =>
+    ordered.foreach { g =>
       // release here too: operators that cache intermediates (LSH
       // signatures, candidate pairs) must not leave warm blocks behind —
       // a later query with the same sub-plan would silently reuse them
       // ("Asked to cache already cached data") and warm up unevenly.
       Tables.release(spark)
-      try fn(spark, "/root/testdata/sf0.001").write
+      try g.build(spark, "/root/testdata/sf0.001").frame.write
         .format("noop").mode("overwrite").save()
       catch { case _: Throwable => () }
     }
@@ -170,7 +167,8 @@ object Bench {
     // (the audit folds the worst decile into the graded CPU band)
     val decileEvery = math.max(1, ordered.size / 10)
     val decileCalib = new scala.collection.mutable.ArrayBuffer[Double]
-    val allTimes = ordered.zipWithIndex.map { case ((name, fn), qi) =>
+    val allTimes = ordered.zipWithIndex.map { case (g, qi) =>
+      val name = g.key
       System.gc()
       val streamGate = name.startsWith("stream_")
       val (ioPre, schedPre) =
@@ -183,7 +181,8 @@ object Bench {
         val t0 = System.nanoTime()
         // noop sink forces full materialization of every output column
         // (count() would let Catalyst skip projected expressions entirely).
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        try g.build(spark, sfDir).frame.write.format("noop").mode("overwrite")
+          .save()
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
         }

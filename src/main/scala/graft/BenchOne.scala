@@ -24,7 +24,7 @@ object BenchOne {
     println(f"[benchone] calib-cold               ${Bench.calibrate(spark)}%.2f")
     // same JIT/codegen warmup as Bench
     names.foreach { n =>
-      try SparkEntry.queries(n)(spark, "/root/testdata/sf0.001").write
+      try SparkEntry.gates(n).build(spark, "/root/testdata/sf0.001").frame.write
         .format("noop").mode("overwrite").save()
       catch { case _: Throwable => () }
     }
@@ -50,7 +50,7 @@ object BenchOne {
         Tables.release(spark)
         snaps += stateSnapshot()
         val t0 = System.nanoTime()
-        SparkEntry.queries(name)(spark, sfDir).write
+        SparkEntry.gates(name).build(spark, sfDir).frame.write
           .format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
       }

@@ -42,14 +42,13 @@ object BenchSubset {
     val sfDir = if (args.nonEmpty) args(0) else "target/sf1"
     val reps = if (args.length > 1) args(1).toInt else 3
     val names = if (args.length > 2) args.drop(2).toSeq else DefaultQueries
-    val missing = names.filterNot(SparkEntry.queries.contains)
+    val missing = names.filterNot(SparkEntry.gates.contains)
     require(missing.isEmpty, s"unknown queries: ${missing.mkString(", ")}")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Tables.session("graft-bench-subset", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
-    val ordered = names.sorted.map(n => n -> SparkEntry.queries(n))
-    Bench.runSuite(spark, ordered, sfDir, reps = reps, cpus = cpus,
-      outPath = "bench_out_sf1.json")
+    Bench.runSuite(spark, names.sorted.map(SparkEntry.gates), sfDir,
+      reps = reps, cpus = cpus, outPath = "bench_out_sf1.json")
     spark.stop()
   }
 }

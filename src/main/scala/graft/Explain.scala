@@ -28,7 +28,7 @@ object Explain {
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n=================== $n ===================")
-      SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      SparkEntry.gates(n).build(spark, sfDir).frame.explain("formatted")
     }
     spark.stop()
   }

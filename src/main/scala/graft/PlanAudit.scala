@@ -44,10 +44,11 @@ object PlanAudit {
       .getOrElse("/root/testdata/sf0.001")
     val spark = Tables.session("graft-plan-audit", cores = 4)
     spark.sparkContext.setLogLevel("ERROR")
-    val names = SparkEntry.queries.keys.filterNot(_.startsWith("stream_"))
-      .toSeq.sorted
-    val shapes = names.map { n =>
-      val df = SparkEntry.queries(n)(spark, sfDir)
+    val batch = SparkEntry.gates.values.toSeq
+      .filterNot(_.key.startsWith("stream_"))
+    val shapes = batch.map { g =>
+      val n = g.key
+      val df = g.build(spark, sfDir).frame
       // execute THIS QueryExecution so the counted plan is the
       // finalized adaptive plan; count in the Final Plan section only
       df.queryExecution.toRdd.count(): Unit

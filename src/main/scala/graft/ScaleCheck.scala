@@ -100,7 +100,7 @@ object ScaleCheck {
     val names = if (only.nonEmpty) allNames.filter(only.contains) else allNames
     def time(dir: String, name: String): Double = {
       val t = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir).write.format("noop")
+      SparkEntry.gates(name).build(spark, dir).frame.write.format("noop")
         .mode("overwrite").save()
       val secs = (System.nanoTime() - t) / 1e9
       // outside the timed window

@@ -205,7 +205,7 @@ object ScaleCheckDocs {
       // the row count (a separate count() would re-run the whole query)
       val obs = new org.apache.spark.sql.Observation()
       val t = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir)
+      SparkEntry.gates(name).build(spark, dir).frame
         .observe(obs, count(lit(1)).as("rows"))
         .write.format("noop").mode("overwrite").save()
       val secs = (System.nanoTime() - t) / 1e9

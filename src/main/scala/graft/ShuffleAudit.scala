@@ -118,11 +118,11 @@ object ShuffleAudit {
     val listener = new MetricsListener
     spark.sparkContext.addSparkListener(listener)
 
-    val names = SparkEntry.queries.keys.toSeq.sorted
-    val rows = names.map { n =>
+    val rows = SparkEntry.gates.values.toSeq.map { g =>
+      val n = g.key
       settle(listener)
       val before = listener.snapshot
-      SparkEntry.queries(n)(spark, sfDir).write
+      g.build(spark, sfDir).frame.write
         .format("noop").mode("overwrite").save()
       settle(listener)
       val d = listener.snapshot.zip(before).map { case (a, b) => a - b }

@@ -1,20 +1,25 @@
 package graft
 
+import scala.collection.immutable.SortedMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.analytics.{Graph, Queries, Sketch}
 import graft.config.ColumnSpec
+import graft.config.Checkpoints.CutSyntax
 import graft.dedup.{Dedup, MinHashSpec, SimHash}
 import graft.etl.Etl
 import graft.multimodal.Multimodal
 import graft.qa.Qa
 import graft.similarity.Similarity
+import graft.streaming.Streams
 import graft.text.Text
 
 /** Driver contract — see SURVEY.md §2 for the operator inventory each
-  * entry implements. Every `queries` key that is SQL-expressible has a
-  * DuckDB oracle in `oracleSql` with identical column names and types.
+  * gate implements. `gates` is the one registry: each [[Gate]] pairs a
+  * query with its DuckDB oracle, which has identical column names and
+  * types. `queries` and `oracleSql` are views derived from it.
   */
 object SparkEntry {
 
@@ -43,58 +48,26 @@ object SparkEntry {
     ColumnSpec("c_acctbal", "FLOAT"),
     ColumnSpec("c_mktsegment", "VARCHAR(16)"))
 
-  // Trained-quantizer gate plumbing (emb_recall_ivfpq_trained,
-  // sim_ann_ivf): these queries train their quantizers on the SF they
-  // run at, persist + reload them (the production train-once/
-  // load-per-job loop), and stash the trained-literal oracle SQL here
-  // under the query key. Verify dumps `oracleSql` AFTER all queries
-  // run, so the literals are always the ones THIS run trained — the
-  // same driver-literal contract as the LSH plane matrix, except the
-  // literals are data-derived (deterministically: bounded lowest-id
-  // sample, sequential driver Lloyd). A tmp side file per key covers
-  // split local runs (SPARK_GRAFT_ONLY iteration where the oracle dump
-  // happens in a later JVM than the query).
-  private def trainedOracleFile(key: String) = java.nio.file.Paths.get(
-    sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-    s"graft_trained_oracle_$key.sql")
-  // (dir, sql) — the stash is bound to the sfDir the quantizers were
-  // trained on, so a dump for a DIFFERENT dir (split local runs after a
-  // ScaleCheckDocs pass over the staged 10× corpus; concurrent runs at
-  // two SFs) yields the loud-fail sentinel, never a stale contract
-  private val trainedOracles =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-  @volatile private var oracleRunDir: Option[String] = None
-  /** Verify calls this with its sfDir before dumping `oracleSql`, making
-    * the trained-oracle stash reject entries trained on any other dir.
-    */
-  def noteRunDir(dir: String): Unit = oracleRunDir = Some(dir)
-  private def stashTrainedOracle(key: String, dir: String,
-                                 sql: String): Unit = {
-    trainedOracles.put(key, (dir, sql))
-    try {
-      java.nio.file.Files.writeString(trainedOracleFile(key),
-        s"-- sfdir:$dir\n$sql"); ()
-    } catch { case _: java.io.IOException => () } // side file is best-effort
-  }
-  private def dirMatches(dir: String): Boolean =
-    oracleRunDir.forall(_ == dir)
-  private def trainedOracleSql(key: String): String =
-    Option(trainedOracles.get(key)).collect {
-      case (dir, sql) if dirMatches(dir) => sql
-    }.orElse {
-      try
-        if (java.nio.file.Files.exists(trainedOracleFile(key))) {
-          val txt = java.nio.file.Files.readString(trainedOracleFile(key))
-          val (header, sql) = txt.span(_ != '\n')
-          Some((header.stripPrefix("-- sfdir:"), sql.drop(1)))
-            .collect { case (dir, s) if dirMatches(dir) => s }
-        } else None
-      catch { case _: java.io.IOException => None }
-    }.getOrElse(
-      // loud-fail sentinel: an oracle dump without the query having run
-      // against THIS run's dir (this JVM or a prior local one) must
-      // FAIL the compare, not silently pass or emit a stale contract
-      s"SELECT '$key: query has not run for this sf dir' AS error")
+  // The three gate shapes. A batch gate builds a frame. A stream gate
+  // builds an AvailableNow replay, and its RunStats ride with the frame.
+  // A trained gate (emb_recall_ivfpq_trained, sim_ann_ivf, ...) trains
+  // its model on the SF it runs at and returns the oracle that replays
+  // THIS run's trained literals (deterministic: bounded lowest-id
+  // sample, sequential driver Lloyd) — the same driver-literal contract
+  // as the LSH plane matrix, except the literals are data-derived.
+  private def gate(key: String, oracle: => String)
+                  (build: (SparkSession, String) => DataFrame): Gate =
+    new Gate(key, (s, dir) => GateRun(build(s, dir)), Some(oracle))
+  private def streamGate(key: String, oracle: => String)
+                        (build: (SparkSession, String) => Streams.StreamRun)
+      : Gate =
+    new Gate(key, (s, dir) => {
+      val run = build(s, dir)
+      GateRun(run.frame, stream = Some(run.stats))
+    }, Some(oracle))
+  private def trainedGate(key: String)
+                         (build: (SparkSession, String) => GateRun): Gate =
+    new Gate(key, build, None)
 
   // the trained-quantizer gates persist + reload through a temp dir to
   // prove the production save/load loop; the artifacts are per-run
@@ -229,15 +202,15 @@ object SparkEntry {
   // kc=64 entries (the helper takes the dials): train on the corpus
   // carve (deterministic bounded-sample driver Lloyd), persist +
   // RELOAD through the save/load loop (the production
-  // train-once/load-per-job shape; parquet doubles are exact), stash
-  // THIS run's trained-literal oracle under the gate's key, score with
-  // the reloaded quantizers.
+  // train-once/load-per-job shape; parquet doubles are exact), score
+  // with the reloaded quantizers, and return THIS run's trained-literal
+  // oracle with the frame.
   private def trainedRecallGate(s: SparkSession, dir: String,
                                 key: String, m: Int,
                                 kc: Int = 16, nprobe: Int = 8,
                                 refine: Int = 0,
                                 pca: Boolean = false,
-                                kcSqrt: Boolean = false): DataFrame = {
+                                kcSqrt: Boolean = false): GateRun = {
     val e = Tables(s, dir, "embeddings")
     val probes = e.filter(col("vec_id") % 50 === 0)
     val corpus = e.filter(col("vec_id") % 50 =!= 0)
@@ -271,17 +244,16 @@ object SparkEntry {
       val cents = bundle("ivf")(0)
       val cbs = bundle("pq")
       deleteRecursively(new java.io.File(trained))
-      stashTrainedOracle(key, dir,
+      return GateRun(Similarity.recallIvfPq(probes, corpus, topK = 5,
+        nprobe = nprobe, m = m,
+        centroids = Some(cents), codebooks = Some(cbs))
+        .withColumn("kc", lit(kcUsed)), oracle = Some(
         s"""SELECT *, cast($kcUsed as int) AS kc FROM (
            ${Similarity.recallIvfPqTrainedDuckdbSql(
               probeWhere = "vec_id % 50 = 0",
               corpusWhere = "vec_id % 50 <> 0",
               topK = 5, cents, cbs, nprobe = nprobe)}
-           )""")
-      return Similarity.recallIvfPq(probes, corpus, topK = 5,
-        nprobe = nprobe, m = m,
-        centroids = Some(cents), codebooks = Some(cbs))
-        .withColumn("kc", lit(kcUsed))
+           )"""))
     }
     if (pca) {
       // OPQ-lite (VERDICT-r13 item 4): fit the full-rank PCA rotation on
@@ -307,13 +279,12 @@ object SparkEntry {
       val cents = bundle("ivf")(0)
       val cbs = bundle("pq")
       deleteRecursively(new java.io.File(trained))
-      stashTrainedOracle(key, dir,
+      return GateRun(Similarity.recallIvfPqPca(probes, corpus, topK = 5,
+        mean, comps, nprobe = nprobe, m = m,
+        centroids = Some(cents), codebooks = Some(cbs)), oracle = Some(
         Similarity.recallIvfPqPcaTrainedDuckdbSql(
           probeWhere = "vec_id % 50 = 0", corpusWhere = "vec_id % 50 <> 0",
-          topK = 5, mean, comps, cents, cbs, nprobe = nprobe))
-      return Similarity.recallIvfPqPca(probes, corpus, topK = 5,
-        mean, comps, nprobe = nprobe, m = m,
-        centroids = Some(cents), codebooks = Some(cbs))
+          topK = 5, mean, comps, cents, cbs, nprobe = nprobe)))
     }
     val smp = sampleOf(corpus)
     // ONE bundle round trip for both models (r15, see the kcSqrt branch)
@@ -326,1230 +297,20 @@ object SparkEntry {
     val cents = bundle("ivf")(0)
     val cbs = bundle("pq")
     deleteRecursively(new java.io.File(trained))
-    if (refine > 0) {
-      stashTrainedOracle(key, dir,
+    if (refine > 0)
+      GateRun(Similarity.recallIvfPqRefined(probes, corpus, topK = 5, refine,
+        nprobe = nprobe, m = m,
+        centroids = Some(cents), codebooks = Some(cbs)), oracle = Some(
         Similarity.recallIvfPqRefinedTrainedDuckdbSql(
           probeWhere = "vec_id % 50 = 0", corpusWhere = "vec_id % 50 <> 0",
-          topK = 5, refine, cents, cbs, nprobe = nprobe))
-      Similarity.recallIvfPqRefined(probes, corpus, topK = 5, refine,
-        nprobe = nprobe, m = m,
-        centroids = Some(cents), codebooks = Some(cbs))
-    } else {
-      stashTrainedOracle(key, dir,
+          topK = 5, refine, cents, cbs, nprobe = nprobe)))
+    else
+      GateRun(Similarity.recallIvfPq(probes, corpus, topK = 5, nprobe = nprobe,
+        m = m, centroids = Some(cents), codebooks = Some(cbs)), oracle = Some(
         Similarity.recallIvfPqTrainedDuckdbSql(
           probeWhere = "vec_id % 50 = 0", corpusWhere = "vec_id % 50 <> 0",
-          topK = 5, cents, cbs, nprobe = nprobe))
-      Similarity.recallIvfPq(probes, corpus, topK = 5, nprobe = nprobe, m = m,
-        centroids = Some(cents), codebooks = Some(cbs))
-    }
+          topK = 5, cents, cbs, nprobe = nprobe)))
   }
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- A. ETL core ----
-    "etl_load_select" -> ((s, dir) =>
-      Etl.conform(Tables(s, dir, "lineitem"), lineitemVars)
-        .withColumn("l_shipdate", col("l_shipdate").cast("string"))),
-
-    // A10 oracle-visible end to end (was spec-only through r9): the
-    // lineitem table staged once per JVM as tab-separated CSV with a
-    // header row (the reference's BCP-style delimited ingest), loaded
-    // back through loadDelimited's config contract (vars schema,
-    // field_term, first_row=2), and hash-compared per row against the
-    // UNCHANGED parquet oracle — the delimited loader is value-lossless
-    // across the text round-trip (integral-double quantities, ISO
-    // dates, exact shortest-repr doubles)
-    "etl_load_csv_roundtrip" -> ((s, dir) => {
-      val cfg = graft.config.TableConfig(
-        toTable = "lineitem_csv",
-        vars = Seq(
-          ColumnSpec("l_orderkey", "BIGINT"),
-          ColumnSpec("l_linenumber", "INTEGER"),
-          ColumnSpec("l_quantity", "FLOAT"),
-          ColumnSpec("l_returnflag", "VARCHAR(1)"),
-          ColumnSpec("l_shipdate", "DATE")),
-        filePath = Map("overall" -> csvLineitemDir(s, dir)),
-        fieldTerm = Map("overall" -> "\t"),
-        firstRow = 2)
-      graft.sources.Sources.loadDelimited(s, cfg)
-        .withColumn("l_shipdate", col("l_shipdate").cast("string"))
-    }),
-
-    "etl_combine_years" -> { (s, dir) =>
-      val l = Tables(s, dir, "lineitem")
-      val early = l.filter(year(col("l_shipdate")) <= 1997)
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
-      val late = l.filter(year(col("l_shipdate")) > 1997)
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
-          col("l_returnflag"))
-      Etl.combineYears(Seq(early, late))
-    },
-
-    "etl_incremental_load" -> { (s, dir) =>
-      val o = Tables(s, dir, "orders")
-      val archive = o.select(col("o_orderkey"), col("o_orderdate"),
-        col("o_totalprice"), lit("archive").as("src"))
-      val fresh = o.select(col("o_orderkey"), col("o_orderdate"),
-        col("o_totalprice"), lit("fresh").as("src"))
-      Etl.incrementalLoad(archive, fresh, "o_orderdate", lit("1998-01-01"))
-    },
-
-    "etl_create_table" -> { (s, dir) =>
-      val empty = Etl.createTable(s, customerVars)
-      empty.unionByName(Etl.conform(Tables(s, dir, "customer"), customerVars))
-    },
-
-    "etl_copy_into" -> { (s, dir) =>
-      Etl.copyInto(Tables(s, dir, "part"), "batch_0001",
-          idCols = Seq("p_partkey", "p_name"))
-        .select(col("p_partkey"), col("p_name"), col("p_retailprice"),
-          col("etl_batch_id"), col("etl_load_row"))
-    },
-
-    "etl_add_index" -> { (s, dir) =>
-      Etl.clusterBy(Tables(s, dir, "lineitem")
-          .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity")),
-        Seq("l_orderkey", "l_linenumber"))
-    },
-
-    // the multi-column clustering key: Morton interleave of the
-    // (bucketized) dimensions — clusterBy(zkey) then gives min/max
-    // locality on BOTH columns (layout evidence in EtlSpec)
-    "etl_zorder_key" -> { (s, dir) =>
-      val a = expr("user_id % 1024")
-      val b = least(greatest(floor(col("value")), lit(0)), lit(1023))
-      Tables(s, dir, "events").select(col("event_id"),
-        a.cast("long").as("za"), b.cast("long").as("zb"),
-        Etl.zorderKey(Seq(a, b), 10).as("zkey"))
-    },
-
-    "etl_table_duplicate" -> { (s, dir) =>
-      val (copy, qa) = Etl.tableDuplicate(Tables(s, dir, "nation"))
-      copy.crossJoin(broadcast(qa))
-    },
-
-    // the config-driven end-to-end flow gated as ONE query: parquet
-    // source → conform to the declared schema (props dropped by the
-    // config, pruned at the scan) → rule gate with quarantine (one
-    // dropping rule, one passing rule — both audit paths non-vacuous)
-    // → keep-latest dedup per (user, type). Proves the STAGES COMPOSE:
-    // quarantine runs before dedup, so an invalid row can never win
-    // keep-latest (the property the composed oracle encodes).
-    "etl_pipeline_run" -> { (s, dir) =>
-      val cfg = graft.config.TableConfig(toTable = "events_curated",
-        vars = Seq(ColumnSpec("event_id", "bigint"),
-          ColumnSpec("user_id", "bigint"),
-          ColumnSpec("event_type", "varchar(20)"),
-          ColumnSpec("value", "float"),
-          ColumnSpec("ts", "datetime")))
-      graft.etl.Pipeline.run(s, cfg,
-        source = Some(Tables(s, dir, "events")),
-        dedupKeys = Seq("user_id", "event_type"),
-        dedupOrder = Seq("ts", "event_id"),
-        validationRules = Seq(
-          "value_in_range" -> (col("value") <= 400.0),
-          "user_present" -> col("user_id").isNotNull),
-        quarantineInvalid = true)
-        .table
-        .select(col("user_id"), col("event_type"), col("event_id"),
-          expr("unix_micros(ts)").as("ts_us"), col("value"))
-    },
-
-    "etl_table_diff" -> { (s, dir) =>
-      val o = Tables(s, dir, "orders")
-      val a = o.filter(col("o_totalprice") > 100000).select(col("o_orderkey"))
-      val b = o.filter(col("o_totalprice") > 150000 && col("o_orderstatus") === "O")
-        .select(col("o_orderkey"))
-      Etl.tableDiff(a, b)
-    },
-
-    "etl_upsert" -> { (s, dir) =>
-      // load_table_from_sql replace-slice semantics: updates (here: a
-      // repriced slice of orders) replace target rows with the same key
-      val o = Tables(s, dir, "orders")
-      val target = o.select(col("o_orderkey"), col("o_orderdate"),
-        col("o_totalprice"), lit("base").as("src"))
-      // +1000.0, not round(×1.1, 2): a single IEEE add is bit-identical
-      // cross-engine; rounding a derived double is not (SURVEY §8a)
-      val updates = o.filter(col("o_totalprice") > 150000)
-        .select(col("o_orderkey"), col("o_orderdate"),
-          (col("o_totalprice") + 1000.0).as("o_totalprice"),
-          lit("update").as("src"))
-      Etl.upsert(target, updates, Seq("o_orderkey"), Seq("o_orderdate"))
-        .withColumn("o_orderdate", col("o_orderdate").cast("date").cast("string"))
-    },
-
-    // partitioned-layout round trip: events staged partitioned by
-    // event_type (directory-level layout, the warehouse's date/type
-    // partition scheme), read back through a partition filter — the
-    // scan prunes to ONE directory (spec-asserted on the executed
-    // plan), the 100 TB difference between a full scan and one slice
-    "etl_partitioned_load" -> { (s, dir) =>
-      val staged = graft.sources.Sources.stagePartitioned(
-        Tables(s, dir, "events"), dir, "events", "event_type")
-      s.read.parquet(staged)
-        .filter(col("event_type") === "purchase")
-        .groupBy(date_trunc("day", col("ts")).cast("date").cast("string")
-          .as("day"))
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("value")), 4).as("sum_value"))
-    },
-
-    // SCD2 history build over the events change stream: each user's
-    // event_type runs collapsed to validity intervals (µs integer time
-    // per the integer-time rule)
-    "etl_scd2_history" -> { (s, dir) =>
-      val e = Tables(s, dir, "events")
-        .select(col("user_id"), col("event_type"), col("event_id"),
-          expr("unix_micros(ts)").as("us"))
-      Etl.scd2(e, Seq("user_id"), Seq("event_type"), "us", Seq("event_id"))
-        .select(col("user_id"), col("event_type"),
-          col("valid_from").as("valid_from_us"),
-          col("valid_to").as("valid_to_us"), col("is_current"))
-    },
-
-    // point-in-time query over the SCD2 history: state as of Jan 15
-    // (epoch-µs literal shared with the oracle)
-    "etl_scd2_asof" -> { (s, dir) =>
-      val e = Tables(s, dir, "events")
-        .select(col("user_id"), col("event_type"), col("event_id"),
-          expr("unix_micros(ts)").as("us"))
-      Etl.scd2AsOf(
-        Etl.scd2(e, Seq("user_id"), Seq("event_type"), "us", Seq("event_id")),
-        lit(scd2AsOfUs), fromCol = "valid_from", toCol = "valid_to")
-        .select(col("user_id"), col("event_type"),
-          col("valid_from").as("valid_from_us"),
-          col("valid_to").as("valid_to_us"))
-    },
-
-    // the CDC -> SCD2 pattern as a STREAMING stateful operator, driven
-    // end to end and gated against the same change-detection oracle as
-    // the batch twin (open intervals flushed by the harness sentinel)
-    "stream_scd2" -> ((s, dir) =>
-      graft.streaming.Streams.scd2AvailableNow(s, dir)
-        .select(col("user_id"), col("event_type"),
-          col("valid_from_us"), col("valid_to_us"))),
-
-    "etl_dedup_keep_latest" -> { (s, dir) =>
-      // sort-free max_by variant; spec-proven equal to the window version
-      Etl.dedupKeepLatestByMax(
-        Tables(s, dir, "lineitem")
-          .select(col("l_orderkey"), col("l_linenumber"), col("l_shipdate"),
-            col("l_quantity")),
-        Seq("l_orderkey"),
-        Seq("l_shipdate", "l_linenumber", "l_quantity"))
-        .withColumn("l_shipdate", col("l_shipdate").cast("date").cast("string"))
-        .select("l_orderkey", "l_linenumber", "l_shipdate", "l_quantity")
-    },
-
-    // ---- B. QA pipeline ----
-    "qa_missingness" -> { (s, dir) =>
-      val e = Tables(s, dir, "events")
-        .withColumn("period", date_trunc("day", col("ts")).cast("date"))
-      Qa.missingness(e, "period", Seq("event_type", "value", "props"))
-        .withColumn("period", col("period").cast("string"))
-    },
-
-    "qa_continuous" -> { (s, dir) =>
-      val e = Tables(s, dir, "events")
-        .withColumn("period", date_trunc("day", col("ts")).cast("date"))
-      Qa.continuous(e, "period", Seq("value"))
-        .withColumn("period", col("period").cast("string"))
-    },
-
-    "qa_categorical" -> { (s, dir) =>
-      val e = Tables(s, dir, "events")
-        .withColumn("period", date_trunc("day", col("ts")).cast("date"))
-      Qa.categorical(e, "period", Seq("event_type"))
-        .withColumn("period", col("period").cast("string"))
-    },
-
-    "qa_quantiles" -> { (s, dir) =>
-      val e = Tables(s, dir, "events")
-        .withColumn("period", date_trunc("day", col("ts")).cast("date"))
-      Qa.quantiles(e, "period", Seq("value"))
-        .withColumn("period", col("period").cast("string"))
-    },
-
-    // JDBC warehouse round trip (r14, VERDICT-r13 "missing" item 1):
-    // lineitem staged into embedded Derby, read back through the
-    // PARTITIONED spark.read.jdbc path (8 key ranges, one connection
-    // each — the shape a 100 TB warehouse pull needs; the reference's
-    // odbc read is the single-connection degenerate case). Oracle =
-    // the unchanged parquet table: the JDBC write+read is value-lossless.
-    "etl_jdbc_roundtrip" -> ((s, dir) => {
-      val conn = graft.sources.Jdbc.createDbConnection(
-        s"jdbc:derby:${derbyDbDir(s, dir)}/db")
-      graft.sources.Jdbc.loadTableFromSql(s, conn, "lineitem_jdbc",
-        partitionCol = Some("l_orderkey"))
-        .withColumn("l_shipdate", col("l_shipdate").cast("string"))
-    }),
-    // The DATE-keyed variant (VERDICT-r14 item 3): same warehouse
-    // table, split on l_shipdate — a DATE column, no numeric surrogate
-    // key involved — through discovered date bounds. The reference's
-    // truncate_date incremental loads key on exactly this shape
-    // (R/load_table_from_sql.R). Oracle identical to the numeric split:
-    // the partitioning strategy must never change the result.
-    "etl_jdbc_date_split" -> ((s, dir) => {
-      val conn = graft.sources.Jdbc.createDbConnection(
-        s"jdbc:derby:${derbyDbDir(s, dir)}/db")
-      graft.sources.Jdbc.loadTableFromSqlByDate(s, conn, "lineitem_jdbc",
-        partitionCol = "l_shipdate", numPartitions = 8)
-        .withColumn("l_shipdate", col("l_shipdate").cast("string"))
-    }),
-    "etl_checksum" -> ((s, dir) =>
-      Etl.rowChecksum(Tables(s, dir, "nation"),
-        Seq("n_nationkey", "n_name", "n_regionkey"))),
-
-    "qa_dates" -> { (s, dir) =>
-      val o = Tables(s, dir, "orders")
-        .withColumn("period", year(col("o_orderdate")))
-      Qa.dates(o, "period", Seq("o_orderdate"))
-    },
-
-    "qa_compare_periods" -> { (s, dir) =>
-      val e = Tables(s, dir, "events")
-        .withColumn("period", date_trunc("day", col("ts")).cast("date"))
-      Qa.comparePeriods(Qa.continuous(e, "period", Seq("value")), "period")
-        .withColumn("period", col("period").cast("string"))
-    },
-
-    "qa_compare_periods_full" -> { (s, dir) =>
-      val e = Tables(s, dir, "events")
-        .withColumn("period", date_trunc("day", col("ts")).cast("date").cast("string"))
-      Qa.comparePeriodsFull(Qa.continuous(e, "period", Seq("value")), "period")
-    },
-
-    "qa_missingness_change" -> { (s, dir) =>
-      val e = Tables(s, dir, "events")
-        .withColumn("period", date_trunc("day", col("ts")).cast("date").cast("string"))
-      Qa.missingnessChange(
-        Qa.missingness(e, "period", Seq("event_type", "value", "props")), "period")
-    },
-
-    "qa_categorical_top8" -> { (s, dir) =>
-      val l = Tables(s, dir, "lineitem")
-        .withColumn("period", year(col("l_shipdate")))
-        .withColumn("qty", col("l_quantity").cast("int").cast("string"))
-      Qa.categoricalTop8(l, "period", Seq("qty"))
-    },
-
-    "qa_categorical_change" -> { (s, dir) =>
-      val e = Tables(s, dir, "events")
-        .withColumn("period", date_trunc("day", col("ts")).cast("date").cast("string"))
-      Qa.categoricalChange(Qa.categorical(e, "period", Seq("event_type")), "period")
-    },
-
-    // the workbook bundle: every runPipeline family unioned into ONE
-    // long-format frame — gates the whole pipeline composition end-to-end
-    "qa_report" -> { (s, dir) =>
-      val e = Tables(s, dir, "events")
-        .withColumn("period", date_trunc("day", col("ts")).cast("date").cast("string"))
-      Qa.report(Qa.runPipeline(e, "period", Seq("event_type", "value", "props")),
-        "period")
-    },
-
-    // the workbook SHEET view: one column per stat — built directly
-    // from the pipeline's family frames (workbookSheets; the r9
-    // collapse of the long→wide explode+pivot round trip, value-equal
-    // to workbookPivot(report(...)) by spec) — the presentation layer
-    // of the reference's xlsx workbook as a real gated operator
-    "qa_workbook_pivot" -> { (s, dir) =>
-      val e = Tables(s, dir, "events")
-        .withColumn("period", date_trunc("day", col("ts")).cast("date").cast("string"))
-      Qa.workbookSheets(
-        Qa.runPipeline(e, "period", Seq("event_type", "value", "props")),
-        "period")
-    },
-
-    // per-source freshness/latency SLA: last event vs a pinned as-of
-    // instant; the 30-min SLA splits the five event types into both
-    // fresh and stale regimes at sf0.01
-    "qa_freshness" -> ((s, dir) =>
-      Qa.freshness(Tables(s, dir, "events"), "event_type", "ts",
-        asOfUs = freshnessAsOfUs, slaUs = 30L * 60 * 1000000)),
-
-    // rolling volume-anomaly monitor: per-type daily counts vs the
-    // trailing 7 observed days, 3-sigma flag as a pure integer
-    // inequality (no sqrt, no float stats — decimal/HUGEINT
-    // cross-products per the drift_psi overflow rule)
-    "qa_volume_anomaly" -> ((s, dir) =>
-      Qa.volumeAnomaly(Tables(s, dir, "events"), "event_type", "ts")),
-
-    // Pearson correlation between business-column pairs: exact decimal
-    // moments (order-independent sums), one scan, formula in doubles
-    // cast once from the exact sums
-    "qa_correlation" -> ((s, dir) =>
-      Qa.correlation(Tables(s, dir, "lineitem"), corrPairs)),
-    // KS drift monitor: the continuous counterpart of qa_drift_psi —
-    // max ECDF distance per calendar-adjacent transition, argmax over
-    // exact cross-multiplied integers
-    "qa_drift_ks" -> { (s, dir) =>
-      val e = Tables(s, dir, "events")
-        .withColumn("period", date_trunc("day", col("ts")).cast("date").cast("string"))
-      Qa.driftKs(e, "period", "value")
-    },
-
-    // PSI drift monitor: one summary number per (period, categorical
-    // col) transition over the dense grid; integer cross-products +
-    // micro-nat log quantization make the sum engine-exact
-    "qa_drift_psi" -> { (s, dir) =>
-      val e = Tables(s, dir, "events")
-        .withColumn("period", date_trunc("day", col("ts")).cast("date").cast("string"))
-      Qa.driftPsi(Qa.categorical(e, "period", Seq("event_type")), "period")
-    },
-
-    // Tukey-fence outlier screen: within-period tail test on the
-    // integer-quantized value scale (dyadic fence arithmetic — engine-
-    // exact counts; see Qa.outliers)
-    "qa_outliers" -> { (s, dir) =>
-      val e = Tables(s, dir, "events")
-        .withColumn("period", date_trunc("day", col("ts")).cast("date").cast("string"))
-      Qa.outliers(e, "period", Seq("value"))
-    },
-
-    // config-driven row validation (QA-on-load): per-row audit with the
-    // comma-joined failed-rule names in declared order; 'status_known'
-    // and 'date_in_range' catch real rows in this data
-    "etl_validate_rules" -> ((s, dir) =>
-      Etl.validateRows(Tables(s, dir, "orders"), Seq("o_orderkey"),
-        validationRules)),
-
-    // ---- C. Analytics core ----
-    "q1_agg" -> ((s, dir) => Queries.q1Agg(s, dir)),
-    "q_join_star" -> ((s, dir) => Queries.starJoin(s, dir)),
-    "q_join_large" -> ((s, dir) => Queries.joinLarge(s, dir)
-      .withColumn("o_orderdate", col("o_orderdate").cast("date").cast("string"))),
-    // a fact-dim join (orders ⨝ customer per nation) through the
-    // SALTED path (Skew.saltedJoin), gated against the PLAIN join
-    // oracle: the skew lever is value-identical, end to end
-    "q_join_salted" -> ((s, dir) => Queries.joinSalted(s, dir)),
-    "q_window_topn" -> ((s, dir) => Queries.windowTopN(s, dir)),
-    "q_rollup" -> ((s, dir) => Queries.rollupAgg(s, dir)),
-    "q_cube" -> ((s, dir) => Queries.cubeAgg(s, dir)),
-    "q_grouping_sets" -> ((s, dir) => Queries.groupingSetsAgg(s, dir)),
-    "q_moving_avg" -> ((s, dir) => Queries.movingAvg(s, dir)),
-    "q_above_class_avg" -> ((s, dir) => Queries.aboveClassAvg(s, dir)),
-    "q_semi_anti" -> ((s, dir) => Queries.semiAnti(s, dir)),
-    "q_events_window" -> ((s, dir) => Queries.eventsWindow(s, dir)
-      .withColumn("window_start", col("window_start").cast("string"))),
-    // the STREAMING hourly rollup driven end-to-end (file source →
-    // watermark+window state → foreachBatch sink, AvailableNow) and
-    // gated against the SAME batch oracle as q_events_window — the
-    // stream path itself is hash-checked, not just its batch twin
-    "stream_hourly_rollup" -> ((s, dir) =>
-      graft.streaming.Streams.hourlyRollupAvailableNow(s, dir)
-        .withColumn("window_start", col("window_start").cast("string"))),
-    // the stateful sessionizer (flatMapGroupsWithState + event-time
-    // timeout) driven end-to-end, flushed by the watermark sentinel,
-    // gated against the SAME gaps-and-islands oracle as q_sessionize
-    "stream_sessionize" -> ((s, dir) =>
-      graft.streaming.Streams.sessionizeAvailableNow(s, dir, 30)
-        .select(col("user_id"), col("session_start"), col("session_end"),
-          col("n_events"), round(col("sum_value"), 4).as("sum_value"))),
-    // the streaming QA monitor driven end-to-end, gated against the
-    // batch per-hour missingness
-    "stream_qa_missingness" -> ((s, dir) =>
-      graft.streaming.Streams.qaMissingnessAvailableNow(s, dir)
-        .withColumn("window_start", col("window_start").cast("string"))),
-    // the watermarked stream-stream join driven end-to-end the same way,
-    // gated against the batch self-join; timestamps as epoch-µs bigints
-    // (the integer-time rule)
-    "stream_follow_within" -> ((s, dir) =>
-      graft.streaming.Streams.followWithinAvailableNow(s, dir)
-        .select(col("user_id"), col("t_id"), col("f_id"),
-          expr("unix_micros(t_ts)").as("t_us"),
-          expr("unix_micros(f_ts)").as("f_us"), col("f_value"))),
-    // true RANGE frame (time-valued bounds, not row counts): trailing
-    // 1-hour per-user sums on epoch-µs integer time
-    "q_range_window" -> ((s, dir) => Queries.rangeWindow(s, dir)),
-    // DAU + trailing-7-day rolling distinct users (rolling COUNT
-    // DISTINCT doesn't decompose over a window frame — the bounded
-    // day-list range join is the relational shape)
-    "q_rolling_active_users" -> ((s, dir) =>
-      Queries.rollingActiveUsers(s, dir)),
-    // ordered funnel: view -> click -> purchase, each stage strictly
-    // after the user's earliest completion of the previous one
-    "q_funnel" -> ((s, dir) => Queries.funnel(s, dir)),
-    // cohort retention triangle: first-activity week x weeks-since,
-    // integer-µs week offsets
-    "q_retention_cohorts" -> ((s, dir) => Queries.retentionCohorts(s, dir)),
-    // fixed-bin histogram over events.value: data-derived bounds,
-    // integer bin ids, empty bins zero-filled
-    "q_histogram" -> ((s, dir) => Queries.histogram(s, dir)),
-    // schema-on-read JSON extraction: props parsed once to a typed
-    // struct, extracted value aggregated relationally
-    "q_json_extract" -> ((s, dir) => Queries.jsonExtract(s, dir)),
-    // PK uniqueness audit over two candidate keys: the composite key
-    // is unique, the bare orderkey shows real multiplicity — both
-    // regimes of the classic load QA check in one gate
-    "etl_pk_check" -> { (s, dir) =>
-      val l = Tables(s, dir, "lineitem")
-      Etl.pkCheck(l, Seq("l_orderkey", "l_linenumber"),
-          "lineitem(l_orderkey,l_linenumber)")
-        .unionByName(Etl.pkCheck(l, Seq("l_orderkey"),
-          "lineitem(l_orderkey)"))
-    },
-
-    // referential-integrity coverage report over two FKs: orphans one
-    // way, unreferenced dimension rows the other
-    "etl_fk_coverage" -> { (s, dir) =>
-      Etl.fkCoverage(Tables(s, dir, "orders"), Tables(s, dir, "customer"),
-        "o_custkey", "c_custkey", "orders->customer")
-        .unionByName(Etl.fkCoverage(Tables(s, dir, "lineitem"),
-          Tables(s, dir, "orders"), "l_orderkey", "o_orderkey",
-          "lineitem->orders"))
-    },
-    "q_interval_join" -> ((s, dir) => Queries.intervalJoin(s, dir)),
-    "q_asof_join" -> ((s, dir) => Queries.asofJoin(s, dir)),
-    // same query through the tier-(c) fused physical operator
-    // (graft.plans.AsofJoinExec), gated against the same ASOF oracle
-    "q_asof_join_fused" -> ((s, dir) => Queries.asofJoinFused(s, dir)),
-    // the fused operator's carried-PAYLOAD path, tie-deduped build side
-    "q_asof_join_payload" -> ((s, dir) => Queries.asofJoinPayload(s, dir)),
-    // the O(1)-state streaming as-of enrichment driven end-to-end,
-    // gated against the SAME ASOF JOIN oracle as the batch twin
-    "stream_asof_enrich" -> ((s, dir) =>
-      graft.streaming.Streams.asofEnrichAvailableNow(s, dir)
-        .select(col("event_id"), col("ms_since_click"))),
-    // session bounds gated as epoch-µs bigints: cross-engine timestamp
-    // STRING rendering of fractional seconds is not contract-stable,
-    // integer time is (SURVEY §8a integer-time rule)
-    "q_sessionize" -> ((s, dir) =>
-      graft.streaming.Streams.sessionizeBatch(Tables(s, dir, "events"), 30)
-        .withColumn("session_start", expr("unix_micros(session_start)"))
-        .withColumn("session_end", expr("unix_micros(session_end)"))),
-
-    // ---- D. LLM-data-pipeline ----
-    "dedup_exact_docs" -> ((s, dir) => Dedup.exact(Tables(s, dir, "documents"))),
-    // F14 oracle-visible end to end: the sf documents staged once per
-    // JVM as .jsonl.zst shards (the crawl-dump ingest layout), read
-    // back through readJsonl + graft's ZstdCodec, exact dedup over the
-    // zst-read frame vs the UNCHANGED parquet oracle — equality proves
-    // the compressed ingest path is content-lossless
-    "dedup_exact_zst" -> ((s, dir) => {
-      import org.apache.spark.sql.types._
-      Dedup.exact(graft.sources.Sources.readJsonl(s, zstDocsDir(s, dir),
-        StructType(Seq(StructField("doc_id", LongType),
-          StructField("text", StringType)))))
-    }),
-    // cluster-size histogram: the distribution that prices every
-    // pair-emitting dedup stage (pair space is sigma cluster^2)
-    "dedup_cluster_stats" -> ((s, dir) =>
-      Dedup.clusterSizeStats(Tables(s, dir, "documents"))),
-    "dedup_exact_normalized" -> ((s, dir) =>
-      Dedup.exactNormalized(Tables(s, dir, "documents"))),
-    "dedup_corpus_clean" -> ((s, dir) =>
-      Dedup.cleanCorpus(Tables(s, dir, "documents")).select("doc_id", "lang")),
-
-    // the LLM-corpus pipeline gated as ONE composed query:
-    // clean (exact + near dedup, keep-min survivor) → decontaminate
-    // (drop docs sharing an 8-gram with the planted eval set) → quality
-    // screen (corpus_filter's keep rule). Every stage is separately
-    // gated; this proves they COMPOSE — column contracts line up and
-    // each stage's filter is applied to the previous stage's survivors.
-    // Output: the curated corpus manifest (id, source, token count).
-    "corpus_curate" -> ((s, dir) => {
-      val docs = Tables(s, dir, "documents")
-      val bench = docs.filter(expr("doc_id % 50 = 0"))
-      // materialize-once discipline between stages: each survivor frame
-      // has MULTIPLE consumers (the next stage's screens scan it 2-3
-      // times), and without the cut the clean stage's propose-verify
-      // dedup lineage re-runs per consumer (measured: 7 scans / 37
-      // exchanges / 5.2 s → the checkpointed shape below). A deployment
-      // writes each stage's survivor table; the cut is that table
-      // (§5 cluster-loss contract: staged parquet — class (c) — there).
-      val cleaned = Dedup.cleanCorpus(docs).localCheckpoint()
-      val decontam = cleaned.join(
-        Text.contamination(cleaned, bench)
-          .filter(col("contaminated") === 1).select(col("doc_id")),
-        Seq("doc_id"), "left_anti").localCheckpoint()
-      decontam.join(
-        Text.corpusFilter(decontam).filter(col("keep") === 1)
-          .select(col("doc_id")),
-        Seq("doc_id"), "left_semi")
-        .select(col("doc_id"), col("source"),
-          size(Text.tokens(col("text"))).as("n_tokens"))
-    }),
-    "text_pii_scrub" -> ((s, dir) =>
-      Text.piiScrub(Tables(s, dir, "documents"))
-        .select("doc_id", "n_emails", "n_urls", "n_phones",
-          "scrubbed_hash", "scrub_len")),
-    "sample_stratified" -> ((s, dir) =>
-      graft.etl.Sampling.stratifiedHashSample(
-        Tables(s, dir, "documents"), "lang", "doc_id",
-        Map("en" -> 0.25, "de" -> 1.0), defaultRate = 0.5)
-        .select("doc_id", "lang")),
-    "split_assign" -> ((s, dir) =>
-      graft.etl.Sampling.hashSplit(Tables(s, dir, "documents"), "doc_id",
-        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .select("doc_id", "split")),
-    // exact-k per-group deterministic sample (25 docs per language) via
-    // the topk_by bounded-heap aggregate in content-hash order
-    "sample_group_topk" -> ((s, dir) =>
-      graft.etl.Sampling.groupSample(Tables(s, dir, "documents"),
-        "lang", "doc_id", k = 25)),
-    // domain-mix rebalance: downsample sources to a 50/30/20 target mix
-    // (src0 is the bottleneck at rate 1.0; others thinned to match)
-    "sample_mix_rebalance" -> ((s, dir) =>
-      graft.etl.Sampling.mixRebalance(Tables(s, dir, "documents"),
-        "source", "doc_id", mixTargets)
-        .select("doc_id", "source")),
-    // epochs-based upsampling: the complement of mix_rebalance's
-    // no-upsampling contract (repeat scarce sources N times)
-    // deterministic global shuffle: reproducible (shard, pos) training
-    // order from the content hash — stable under reruns and appends
-    "corpus_shuffle" -> ((s, dir) =>
-      graft.etl.Sampling.shuffleShards(
-        Tables(s, dir, "documents").select("doc_id", "source"), "doc_id",
-        nShards = 16)),
-    // source-interleaved training-stream order: sort keys (shard,
-    // rank, src_idx) cycle sources round-robin — no dense global
-    // position (that would be a total-order window at 100 TB)
-    "corpus_interleave" -> ((s, dir) =>
-      graft.etl.Sampling.interleaveSources(
-        Tables(s, dir, "documents").select("doc_id", "source"), "source",
-        "doc_id", nShards = 16)),
-    "sample_mix_upsample" -> ((s, dir) =>
-      graft.etl.Sampling.upsampleEpochs(Tables(s, dir, "documents"),
-        "source", "doc_id", upsampleFactors)
-        .select("doc_id", "source", "epoch")),
-    // token-budget selection: each source contributes at most 800 ws
-    // tokens, docs taken in deterministic hash order
-    "corpus_token_budget" -> ((s, dir) =>
-      graft.etl.Sampling.tokenBudget(Tables(s, dir, "documents"),
-        "source", "doc_id", "text", budget = 800L)
-        .select("doc_id", "source", "n_tokens")),
-    // sequence packing (concat-and-chunk): each doc's place in the
-    // packed 256-token training stream, packed per hash shard
-    "corpus_pack_sequences" -> ((s, dir) =>
-      graft.etl.Sampling.packSequences(Tables(s, dir, "documents"),
-        "doc_id", "text", seqLen = 256, shards = 8)),
-    // per-source composition report (docs / tokens / chars / ppm
-    // shares) — the mixture table every selection stage starts from
-    "corpus_source_stats" -> ((s, dir) =>
-      graft.etl.Sampling.sourceStats(Tables(s, dir, "documents"))),
-    // temperature mixing (α = 0.5 via the correctly-rounded sqrt) over
-    // the SKEWED language mix (en dominates): low-resource languages
-    // keep ~everything, en thins to ~0.54 — the mT5 balancing move
-    // (`source` is deliberately NOT the stratum: it is uniform in this
-    // data, which would make the gate a pass-through)
-    "sample_temperature" -> ((s, dir) =>
-      graft.etl.Sampling.temperatureMix(Tables(s, dir, "documents"),
-        "lang", "doc_id")
-        .select("doc_id", "lang")),
-    // asymmetric containment pairs over the df-capped shingle index —
-    // catches small-doc-inside-big-doc inclusion Jaccard dedup misses
-    "dedup_containment" -> ((s, dir) =>
-      Dedup.containment(Tables(s, dir, "documents"))),
-    "dedup_ngram_jaccard" -> ((s, dir) =>
-      Dedup.ngramJaccard(Tables(s, dir, "documents"), threshold = 0.5)),
-    "dedup_minhash_lsh" -> ((s, dir) =>
-      MinHashSpec.candidatePairs(Tables(s, dir, "documents"))),
-    "dedup_lsh_jaccard" -> ((s, dir) =>
-      Dedup.jaccardOnCandidates(Tables(s, dir, "documents"), threshold = 0.5)),
-    // continuous-crawl dedup: a deterministic 20% "incoming" batch
-    // screened (exact + LSH-near) against the 80% "corpus" side only —
-    // the pair space is incoming-vs-corpus candidates, never corpus²
-    "dedup_incremental" -> ((s, dir) => {
-      val split = graft.etl.Sampling.hashSplit(Tables(s, dir, "documents"),
-        "doc_id", incrementalSplit)
-      Dedup.incremental(
-        split.filter(col("split") === "corpus").drop("split"),
-        split.filter(col("split") === "incoming").drop("split"))
-    }),
-    // the SAME screen via the production BUCKETED-index layout: the
-    // persisted index is staged once per JVM as bucketed tables
-    // (hashes by content_hash, bands by (band, bsig) — the screens'
-    // join keys), re-attached in-session, and screened against — gated
-    // on the identical rebuild oracle as dedup_incremental, so a green
-    // row proves the layout changes the PLAN (no index-side Exchange;
-    // the TextDedupSpec plan test pins it), never the answer
-    "dedup_incremental_bucketed" -> ((s, dir) => {
-      val split = graft.etl.Sampling.hashSplit(Tables(s, dir, "documents"),
-        "doc_id", incrementalSplit)
-      val idxDir = bucketedIndexDir(s, dir)
-      Dedup.incrementalFromIndex(
-        split.filter(col("split") === "corpus").drop("split"),
-        Dedup.loadIndexBucketed(s, idxDir,
-          tablePrefix = bucketedIndexPrefix(dir)),
-        split.filter(col("split") === "incoming").drop("split"))
-    }),
-    // the exact screen with a broadcast Bloom pre-filter: definite-new
-    // docs never reach the verification join; the oracle is plain
-    // membership, so the gate proves fp-verify restores exactness.
-    // Incoming = the 20% split RESUBMITTED against the full corpus with
-    // odd ids salted — the corpora hold no exact dups, so a disjoint
-    // split would gate a constant-zero flag (vacuous); this shape
-    // exercises both flag classes at every SF
-    "dedup_bloom_screen" -> ((s, dir) => {
-      val docs = Tables(s, dir, "documents")
-      val incoming = graft.etl.Sampling.hashSplit(docs, "doc_id", incrementalSplit)
-        .filter(col("split") === "incoming")
-        .select(col("doc_id"),
-          when(col("doc_id") % 2 === 0, col("text"))
-            .otherwise(concat(col("text"), lit(" resubmission salt")))
-            .as("text"))
-      // nShards=4 drives the past-the-cap SHARDED screen end to end
-      // against the plain-membership oracle (production sizes shards as
-      // ⌈n/5e7⌉; the gate forces >1 so the per-row shard probe, not just
-      // the single-filter path, is what the oracle proves exact)
-      Dedup.exactScreenBloom(Dedup.corpusHashes(docs), incoming, nShards = 4)
-    }),
-    // the index-MAINTENANCE loop: batch 1 screened against the corpus
-    // index, kept docs merged in, batch 2 screened against the merged
-    // index — the oracle re-derives corpus 2 from scratch, so equality
-    // proves merge == rebuild
-    "dedup_incremental_loop" -> ((s, dir) => {
-      val split = graft.etl.Sampling.hashSplit(Tables(s, dir, "documents"),
-        "doc_id", incrementalLoopSplit)
-      def part(p: String) = split.filter(col("split") === p).drop("split")
-      Dedup.incrementalLoop(part("corpus"),
-        Seq("b1" -> part("b1"), "b2" -> part("b2")))
-    }),
-    // the SAME loop via the production LOADED-index path: the corpus
-    // index is persisted to parquet out-of-band (once per JVM) and
-    // incrementalLoopFrom starts from the read-back frames — gated
-    // against the identical rebuild-from-scratch oracle, so a green
-    // row proves the loaded index, not just the in-query build, is
-    // oracle-exact (merge == rebuild through a parquet round-trip)
-    "dedup_incremental_prestaged" -> ((s, dir) => {
-      val split = graft.etl.Sampling.hashSplit(Tables(s, dir, "documents"),
-        "doc_id", incrementalLoopSplit)
-      def part(p: String) = split.filter(col("split") === p).drop("split")
-      val idxDir = prestagedLoopIndexDir(s, dir)
-      // load ONCE into resident blocks before looping — the
-      // incrementalLoopFrom contract ("pass per-call checkpoints"):
-      // raw parquet frames would sit as scan leaves in every index
-      // reference inside the loop, re-read and re-planned per use
-      // (measured 6.9-7.1 s both reps before this cut). With the cut,
-      // the healthy-box bench shows the load path's saving live:
-      // 4.77 s vs the in-query-build gate's 5.79 at sf0.1 — the
-      // ~1 s delta IS the corpus signature build the loaded index
-      // skips, and it grows with corpus size while load cost grows
-      // only with index size (~1/40th). The pure-loop floor with
-      // corpus prestaged too is the LoopVarianceProbe prestage arm
-      // (3.9-4.0 s ±2%; the probe is deleted, source at commit d5abd67).
-      Dedup.incrementalLoopFrom(part("corpus"),
-        // §5 cluster-loss contract: the index lives in parquet (class
-        // (c)); the cut only pins the loaded snapshot for this run
-        graft.dedup.DedupIndex(
-          s.read.parquet(s"$idxDir/hashes").localCheckpoint(),
-          s.read.parquet(s"$idxDir/bands").localCheckpoint()),
-        Seq("b1" -> part("b1"), "b2" -> part("b2")))
-    }),
-    // streaming MinHash-LSH candidate generation driven end-to-end over
-    // a synthesized-arrival-order documents replay, gated against the
-    // batch candidate pairs
-    "stream_lsh_candidates" -> ((s, dir) =>
-      graft.streaming.Streams.lshCandidatesAvailableNow(s, dir)),
-    // the index-MAINTENANCE loop as a STREAM (r14): the loop carve's b1
-    // and b2 arrive as micro-batches, each screened against the current
-    // index — initial version = the persisted BUCKETED layout, loaded —
-    // kept docs merged in foreachBatch before the next batch fires.
-    // Gated on dedup_incremental_loop's rebuild-from-scratch oracle
-    // VERBATIM: merge == rebuild through the streaming runtime.
-    "stream_incremental_dedup" -> ((s, dir) => {
-      val split = graft.etl.Sampling.hashSplit(Tables(s, dir, "documents"),
-        "doc_id", incrementalLoopSplit)
-      def part(p: String) = split.filter(col("split") === p).drop("split")
-        .select(col("doc_id"), col("text"))
-      val in = graft.streaming.Streams.stageBatchesReplay(s, dir,
-        "v1_incdedup", Seq("b1" -> part("b1"), "b2" -> part("b2")))
-      val idxDir = bucketedLoopIndexDir(s, dir)
-      graft.streaming.Streams.incrementalDedupAvailableNow(s, in,
-        part("corpus"),
-        Dedup.loadIndexBucketed(s, idxDir,
-          tablePrefix = bucketedLoopIndexPrefix(dir)),
-        chunks = 2)
-    }),
-    // streaming content dedup driven end-to-end: first-seen per
-    // normalized hash over the doc_id-ordered replay == batch keep-min
-    "stream_dedup_docs" -> ((s, dir) =>
-      graft.streaming.Streams.dedupDocsAvailableNow(s, dir)),
-    // the same end-to-end run with the middle micro-batch's sink invoked
-    // TWICE (simulated post-failure retry): the idempotent sink's
-    // exactly-once property gated against the unchanged oracle — an
-    // append sink would double that batch's rows and fail the hash
-    "stream_sink_replay" -> ((s, dir) =>
-      graft.streaming.Streams.dedupDocsSinkReplayAvailableNow(s, dir)),
-    // stateless streaming decontamination: every arriving doc screened
-    // per-row against the broadcast eval-set fingerprints — zero
-    // streaming state (the suite's one statefulOps=0 gate)
-    "stream_contamination" -> ((s, dir) =>
-      graft.streaming.Streams.contaminationAvailableNow(s, dir)),
-    // stateless streaming MODEL INFERENCE: the k-means quantizer
-    // trained out-of-band on the batch corpus, every arriving vector
-    // labeled per-row (the embedding-pipeline twin of the
-    // contamination screen; second statefulOps=0 gate) — gated on the
-    // SAME trained-literal oracle as emb_kmeans, so batch and stream
-    // scoring provably agree
-    "stream_kmeans" -> ((s, dir) => {
-      val cents = Similarity.ivfCentroids(
-        Tables(s, dir, "embeddings"), k = 16, iters = 5)
-      stashTrainedOracle("stream_kmeans", dir,
-        Similarity.kmeansTrainedDuckdbSql(cents))
-      graft.streaming.Streams.kmeansAssignAvailableNow(s, dir, cents)
-    }),
-    // pairs → clusters: transitive closure of the verified near-dup pairs,
-    // every doc labeled with its cluster's min id (singletons label
-    // themselves)
-    "dedup_cc_clusters" -> ((s, dir) => {
-      val docs = Tables(s, dir, "documents")
-      val pairs = Dedup.jaccardOnCandidates(docs, threshold = 0.5)
-      val cc = Dedup.connectedComponents(pairs)
-      docs.join(cc, docs("doc_id") === cc("id"), "left")
-        .select(docs("doc_id"),
-          coalesce(cc("cluster"), docs("doc_id")).as("cluster"))
-    }),
-    // quality-aware survivor selection: keep the BEST-quality member of
-    // each near-dup cluster (cleanCorpus's keep-min-id is the baseline)
-    "dedup_keep_best" -> ((s, dir) =>
-      Dedup.keepBest(Tables(s, dir, "documents"), threshold = 0.5)),
-    "dedup_simhash" -> ((s, dir) =>
-      SimHash.fingerprints(Tables(s, dir, "documents"))),
-    // C4-style span-level dedup: every repeated 10-token span (exact,
-    // global first-occurrence keep) removed, docs re-assembled from the
-    // surviving spans
-    "dedup_spans" -> ((s, dir) =>
-      Dedup.spanDedup(Tables(s, dir, "documents"))),
-    // df-threshold boilerplate removal: spans occurring in >2 distinct
-    // docs are dropped EVERYWHERE (vs dedup_spans' first-occurrence
-    // keep) — the CCNet line-dedup recipe on token spans
-    "dedup_boilerplate" -> ((s, dir) =>
-      Dedup.boilerplateDedup(Tables(s, dir, "documents"))),
-    "sim_cosine_topk" -> ((s, dir) =>
-      Similarity.cosineTopK(Tables(s, dir, "embeddings"), (0L until 10L), 5)),
-    "sim_ann_lsh" -> ((s, dir) =>
-      Similarity.annTopK(Tables(s, dir, "embeddings"), (0L until 10L), 5)),
-    // the TRAINED IVF search path, oracle-gated (upgraded r8 from
-    // rows-only): the quantizer is trained with the bounded-sample
-    // driver Lloyd (deterministic), persisted + RELOADED through the
-    // save/load loop, and replayed by the oracle as
-    // cast('<Double.toString>' as double) literals — training is driver
-    // state, but its OUTPUT is a k×dim literal both engines replay
-    // bit-identically (the emb_recall_ivfpq_trained contract)
-    "sim_ann_ivf" -> ((s, dir) => {
-      val e = Tables(s, dir, "embeddings")
-      val trained = java.nio.file.Files
-        .createTempDirectory("graft_trained_ivf").toString
-      Similarity.saveCentroids(s,
-        Similarity.ivfCentroids(e, k = 16, iters = 5), trained)
-      val cents = Similarity.loadCentroids(s, trained)
-      deleteRecursively(new java.io.File(trained))
-      stashTrainedOracle("sim_ann_ivf", dir,
-        Similarity.ivfTrainedDuckdbSql((0L until 10L), 5, cents))
-      Similarity.ivfTopK(e, (0L until 10L), 5, centroids = Some(cents))
-    }),
-    "sim_ann_ivf_seeded" -> ((s, dir) =>
-      Similarity.ivfTopK(Tables(s, dir, "embeddings"), (0L until 10L), 5,
-        iters = 0)),
-    // threshold 0.4 (not the 0.95 production default): the synthetic
-    // embeddings have no true near-dups (max pairwise cosine ~0.51), and
-    // an empty result would gate nothing — 0.4 exercises blocking,
-    // pair-dedup, scoring and filtering on real output rows
-    "sim_near_dup" -> ((s, dir) =>
-      Similarity.cosineNearDup(Tables(s, dir, "embeddings"), threshold = 0.4)),
-    // table-to-table kNN join: a 2% hash-carved probe table against the
-    // rest — annTopK's contract without the small-driver-list assumption
-    "sim_knn_join" -> ((s, dir) => {
-      val e = Tables(s, dir, "embeddings")
-      Similarity.knnJoin(e.filter(col("vec_id") % 50 === 0),
-        e.filter(col("vec_id") % 50 =!= 0), k = 3)
-    }),
-    // the kNN GRAPH of the whole table (every vector's top-2 neighbors)
-    "sim_knn_graph" -> ((s, dir) => {
-      val e = Tables(s, dir, "embeddings")
-      Similarity.knnJoin(e, e, k = 2, excludeSelf = true)
-    }),
-    // MMR diversified re-rank over the kNN shortlist: greedy
-    // relevance-minus-redundancy selection (λ=0.7, top-3 of an 8-deep
-    // shortlist) — the diversity stage between candidate generation
-    // and selection; every greedy argmax is engine-exact
-    "sim_mmr_rerank" -> ((s, dir) => {
-      val e = Tables(s, dir, "embeddings")
-      Similarity.mmrRerank(e.filter(col("vec_id") % 50 === 0),
-        e.filter(col("vec_id") % 50 =!= 0), k = 3, shortlist = 8)
-    }),
-    // radius retrieval (FAISS range_search): everything within a cosine
-    // radius of each probe — the data-dependent-output twin of the
-    // top-k join, same bucketed candidates + exact verify
-    "sim_range_search" -> ((s, dir) => {
-      val e = Tables(s, dir, "embeddings")
-      Similarity.rangeSearch(e.filter(col("vec_id") % 50 === 0),
-        e.filter(col("vec_id") % 50 =!= 0), threshold = 0.3)
-    }),
-    // the ANN measurement loop: bucketed kNN vs brute-force ground
-    // truth on the probe sample, per-probe recall@k — engine-exact
-    // because both rankings share the (rounded cosine DESC, id) order
-    "emb_recall_eval" -> ((s, dir) => {
-      val e = Tables(s, dir, "embeddings")
-      Similarity.recallEval(e.filter(col("vec_id") % 50 === 0),
-        e.filter(col("vec_id") % 50 =!= 0), k = 5)
-    }),
-    // recall of the PRODUCTION index (seeded IVFPQ) vs exact-L2 ground
-    // truth — the deployment tuning number for (kc, nprobe, m, k)
-    "emb_recall_ivfpq" -> ((s, dir) => {
-      val e = Tables(s, dir, "embeddings")
-      Similarity.recallIvfPq(e.filter(col("vec_id") % 50 === 0),
-        e.filter(col("vec_id") % 50 =!= 0), topK = 5)
-    }),
-    // recall of the TRAINED-AND-TUNED production index — the gated
-    // counterpart of emb_recall_ivfpq's untrained 0.18@5, closing the
-    // train-your-index loop the two recall gates motivate. Quantizers
-    // trained with the bounded-sample driver Lloyd (deterministic
-    // lowest-id sample, sequential loop → identical doubles every run),
-    // persisted and RELOADED through the save/load loop (what a
-    // deployment does — parquet doubles are exact), then replayed by the
-    // oracle as cast('<Double.toString>' as double) literals, the same
-    // string→double parse the Spark-side centroid literals use. Dials
-    // (m=16, nprobe=8) are what the recall sweep recommends at this
-    // corpus: training is what makes them WORK — untrained at the same
-    // dials is 0.20 (extra nprobe on a garbage coarse quantizer even
-    // HURTS: untrained m=8/nprobe=8 = 0.14), trained is 0.42 at sf0.01
-    "emb_recall_ivfpq_trained" -> ((s, dir) =>
-      trainedRecallGate(s, dir, "emb_recall_ivfpq_trained", m = 16)),
-    // the SAME trained loop at m=32 (2-dim subspaces, 32 B/vector) —
-    // the dial the recall sweep says a deployment actually ships with:
-    // +0.15-0.24 recall@5 over m=16 at identical (kc=16, nprobe=8) at
-    // every SF (0.56 vs 0.32 sf0.001, 0.60 vs 0.42 sf0.01, 0.45 vs
-    // 0.295 sf0.1) — affordable as a gate only because the fused
-    // pq_codes/pq_dt natives made m cost-flat (the r8 JIT-cliff fix)
-    "emb_recall_ivfpq_trained_m32" -> ((s, dir) =>
-      trainedRecallGate(s, dir, "emb_recall_ivfpq_trained_m32", m = 32)),
-    // the kc ∝ n point: trained kc=64/m=32/nprobe=8 — the sf0.1
-    // shipping COARSE dial (candidate fraction nprobe/kc falls 4× vs
-    // kc=16, bounding per-probe cost; the r8 dial study measured this
-    // structure probe-only — the gate reproduces its 0.340 at sf0.1
-    // oracle-backed). Gated so the tuning table's last cell
-    // is oracle-exact: recall vs kc=16/m=32 is the measurement's value
-    // either way (pruning 4× harder may cost recall; spec documents
-    // the bound)
-    "emb_recall_ivfpq_trained_kc64" -> ((s, dir) =>
-      trainedRecallGate(s, dir, "emb_recall_ivfpq_trained_kc64",
-        m = 32, kc = 64)),
-    // OPQ-lite (r14): the trained PCA rotation composed with PQ — the
-    // public FAISS OPQ-P idea (rotate into the decorrelated basis, then
-    // product-quantize; Ge et al. CVPR 2013). Identical dials to
-    // emb_recall_ivfpq_trained (m=16, kc=16, nprobe=8, recall@5 vs
-    // ORIGINAL-space exact L2), so the recall delta between the two
-    // gates IS the rotation's value — the tuning-table row §8 carries
-    "emb_recall_ivfpq_pca" -> ((s, dir) =>
-      trainedRecallGate(s, dir, "emb_recall_ivfpq_pca", m = 16,
-        pca = true)),
-    // kc = ⌈√n⌉ as code (r14): the coarse-quantizer size derived from
-    // the corpus (Similarity.kcSqrtN — the FAISS √n sizing guideline,
-    // bounded by the trainer's sample), gated at every SF so the
-    // artifact shows kc scaling with the corpus while recall holds;
-    // m=32/nprobe=8 = D64b's dials, so the recall column is directly
-    // comparable to the fixed kc=16 (m32) and kc=64 gates
-    "emb_recall_ivfpq_kc_sqrtn" -> ((s, dir) =>
-      trainedRecallGate(s, dir, "emb_recall_ivfpq_kc_sqrtn", m = 32,
-        kcSqrt = true)),
-    // the REFINE dial (exact-L2 rerank of the ADC top-4k shortlist,
-    // ivfPqSearchRefined): same trained m=16 index as
-    // emb_recall_ivfpq_trained, so the recall delta between the two
-    // gates IS the refine step's value. The sf1 measurement that
-    // motivates it: PQ cannot rank inside vector families tighter than
-    // its distortion (near-duplicate embeddings), so trained-m=16
-    // recall@5 collapses 0.295 → 0.049 at the staged 10× corpus while
-    // the exact-rerank LSH path holds 0.34 — refine restores the PQ
-    // path at |probes| × 4k exact distances (§8g table)
-    "emb_recall_ivfpq_refined" -> ((s, dir) =>
-      trainedRecallGate(s, dir, "emb_recall_ivfpq_refined",
-        m = 16, refine = 4)),
-    // PQ encode with the seeded codebook contract (same cross-engine
-    // discipline as sim_ann_ivf_seeded; trained codebooks are driver
-    // state behind the same save/load loop)
-    "emb_pq_encode" -> ((s, dir) =>
-      Similarity.pqEncode(Tables(s, dir, "embeddings"))),
-    // PQ distortion audit: per-vector squared reconstruction error under
-    // the seeded codebooks (the m/k-selection measurement)
-    "emb_pq_distortion" -> ((s, dir) =>
-      Similarity.pqDistortion(Tables(s, dir, "embeddings"))),
-    // PQ ADC search: the same probe/corpus hash carve as sim_knn_join,
-    // but the corpus scan reads only the 8-byte codes (asymmetric
-    // distance via per-probe lookup tables)
-    "sim_ann_pq" -> ((s, dir) => {
-      val e = Tables(s, dir, "embeddings")
-      Similarity.pqSearch(e.filter(col("vec_id") % 50 === 0),
-        e.filter(col("vec_id") % 50 =!= 0), topK = 3)
-    }),
-    // short-codebook edge gate (ADVICE r12): a corpus slice with FEWER
-    // than k non-null vectors seeds a short codebook (take(k) of a short
-    // sample). The oracle's ADC stride must be derived from the actual
-    // table length — the old fixed-k stride over-indexed into NULL
-    // adists here. SF-independent slice: 12 corpus < k=16, 28 probes.
-    "sim_ann_pq_short_cb" -> ((s, dir) => {
-      val e = Tables(s, dir, "embeddings")
-      Similarity.pqSearch(
-        e.filter(col("vec_id") >= 12 && col("vec_id") < 40),
-        e.filter(col("vec_id") < 12), topK = 3)
-    }),
-    // IVF-PQ: coarse cluster pruning + ADC ranking from codes — the
-    // two-level index that actually ships at corpus scale
-    "sim_ann_ivfpq" -> ((s, dir) => {
-      val e = Tables(s, dir, "embeddings")
-      Similarity.ivfPqSearch(e.filter(col("vec_id") % 50 === 0),
-        e.filter(col("vec_id") % 50 =!= 0), topK = 3)
-    }),
-    // refined-IVFPQ kNN JOIN (r12, VERDICT-r11 item 5): the deployment
-    // twin of sim_knn_join on the trained-index path — no probe-side
-    // broadcast assumption, ADC shortlist at topK×refine, exact-L2
-    // rerank. Seeded quantizers here so the oracle is static SQL; the
-    // trained path reuses the same dial through centroids/codebooks.
-    "sim_knn_join_pq" -> ((s, dir) => {
-      val e = Tables(s, dir, "embeddings")
-      Similarity.knnJoinPq(e.filter(col("vec_id") % 50 === 0),
-        e.filter(col("vec_id") % 50 =!= 0), topK = 3, refine = 4)
-    }),
-    // SemDeDup: cluster-then-dedup with the seeded quantizer (same
-    // cross-engine contract as sim_ann_ivf_seeded); threshold 0.4 for
-    // the same no-true-near-dups reason as sim_near_dup
-    "sim_semdedup" -> ((s, dir) =>
-      Similarity.semDedup(Tables(s, dir, "embeddings"))),
-    "text_quality" -> ((s, dir) =>
-      Text.quality(Tables(s, dir, "documents"))
-        .select("doc_id", "n_chars_calc", "word_count", "punct_count",
-          "stop_count", "punct_ratio", "stop_ratio", "quality_score")),
-    "text_token_count" -> ((s, dir) =>
-      Text.tokenCounts(Tables(s, dir, "documents"))
-        .select("doc_id", "ws_tokens", "bpe_tokens")),
-    // sliding-window chunking (context-window prep): 32-token windows
-    // advancing by 24 — the testdata's 10-99-token docs produce 1-4
-    // chunks each, covering the short-doc and multi-chunk regimes
-    "text_chunk" -> ((s, dir) =>
-      Text.chunk(Tables(s, dir, "documents"), chunkSize = 32, overlap = 8)),
-    "text_lang_id" -> ((s, dir) =>
-      Text.langId(Tables(s, dir, "documents"))
-        .select("doc_id", "lang", "hits_de", "hits_en", "hits_es", "hits_fr",
-          "hits_zh", "pred_lang")),
-    "text_fingerprint" -> ((s, dir) =>
-      Text.fingerprint(Tables(s, dir, "documents"))
-        .select("doc_id", "n_fingerprints", "min_fingerprint")),
-    "text_ngram_freq" -> ((s, dir) =>
-      Text.ngramFreq(Tables(s, dir, "documents"))),
-    // eval-set decontamination screen: every 50th doc plays the
-    // benchmark; output is a dense per-doc contaminated-shingle count
-    "text_contamination" -> ((s, dir) => {
-      val d = Tables(s, dir, "documents")
-      Text.contamination(d, d.filter(col("doc_id") % 50 === 0))
-    }),
-    "text_repetition" -> ((s, dir) =>
-      Text.repetition(Tables(s, dir, "documents"))),
-    // perplexity-proxy quality score: per-doc unigram logprob under the
-    // corpus's own distribution, integer micro-nat quantization
-    "text_unigram_logprob" -> ((s, dir) =>
-      Text.unigramLogProb(Tables(s, dir, "documents"))),
-    // interpolated bigram LM score (the actual CCNet filter shape):
-    // catches word-salad docs whose unigram profile looks normal
-    "text_bigram_logprob" -> ((s, dir) =>
-      Text.bigramLogProb(Tables(s, dir, "documents"))),
-    // corpus heavy hitters (>2% of tokens) via the fixed-memory
-    // Misra-Gries propose -> exact-verify composition; the tight
-    // 59-counter sketch still guarantees the candidate superset
-    // ((59+1)*20 >= 1000), and the output is exact counts
-    "text_heavy_hitters" -> ((s, dir) =>
-      Text.heavyHitters(Tables(s, dir, "documents"),
-        perMille = 20, sketchK = 59)),
-    // lexical-diversity signal: per-doc token Shannon entropy, same
-    // micro-nat integer reduction
-    "text_entropy" -> ((s, dir) =>
-      Text.tokenEntropy(Tables(s, dir, "documents"))),
-    // per-doc TF-IDF keywords: integer tf·idf_micro scores, total
-    // integer ranking order — the term-side counterpart of BM25
-    "text_tfidf_keywords" -> ((s, dir) =>
-      Text.tfidfKeywords(Tables(s, dir, "documents"))),
-    // corpus PMI collocations: decomposed per-factor micro-nat logs
-    // (no cross-product can overflow), min-count floor, global top-k
-    "text_collocations" -> ((s, dir) =>
-      Text.collocations(Tables(s, dir, "documents"))),
-    "text_bm25" -> ((s, dir) =>
-      Text.bm25(Tables(s, dir, "documents"), bm25Terms)),
-    "text_corpus_filter" -> ((s, dir) =>
-      Text.corpusFilter(Tables(s, dir, "documents"))),
-    "emb_group_centroids" -> ((s, dir) =>
-      Similarity.groupCentroids(Tables(s, dir, "embeddings"))),
-    // k-means clustering as a product operator (SemDeDup/DataComp's
-    // cluster-then-curate primitive): the IVF trainer's fit exposed as
-    // per-vector (cluster, l2) assignment under the trained-literal
-    // oracle contract — train on the bounded sample, persist, reload,
-    // replay the centroid matrix as literals in both engines
-    "emb_kmeans" -> ((s, dir) => {
-      val e = Tables(s, dir, "embeddings")
-      val trained = java.nio.file.Files
-        .createTempDirectory("graft_emb_kmeans").toString
-      Similarity.saveCentroids(s,
-        Similarity.ivfCentroids(e, k = 16, iters = 5), trained)
-      val cents = Similarity.loadCentroids(s, trained)
-      deleteRecursively(new java.io.File(trained))
-      stashTrainedOracle("emb_kmeans", dir,
-        Similarity.kmeansTrainedDuckdbSql(cents))
-      Similarity.kmeansAssign(e, centroids = Some(cents))
-    }),
-    // trained PCA projection (the third trained-quantizer family
-    // member): deterministic power-iteration fit on the bounded
-    // sample, persisted + reloaded (mean as a 1-row matrix, components
-    // as a p×dim matrix — parquet doubles are exact), replayed by the
-    // oracle as literals; emb_project's random signs are this
-    // operator's untrained baseline
-    "emb_pca" -> ((s, dir) => {
-      val e = Tables(s, dir, "embeddings")
-      val (mean, comps) = Similarity.pcaFit(e, p = 4)
-      val trained = java.nio.file.Files
-        .createTempDirectory("graft_emb_pca").toString
-      // mean stacked as row 0 over the component rows — ONE table, ONE
-      // write job + ONE read job instead of two of each (r15; the same
-      // row-0 layout the OPQ gate's PCA model uses)
-      Similarity.saveCentroids(s, mean +: comps, trained)
-      val pcaRows = Similarity.loadCentroids(s, trained)
-      val (mean2, comps2) = (pcaRows.head, pcaRows.tail)
-      deleteRecursively(new java.io.File(trained))
-      stashTrainedOracle("emb_pca", dir,
-        Similarity.pcaProjectDuckdbSql(mean2, comps2))
-      Similarity.pcaProject(e, mean2, comps2)
-    }),
-    // int8 scalar quantization (SQ8): the 4x-smaller candidate-scan
-    // copy of an IVF+SQ stack, long shape with per-row scale
-    "emb_quantize" -> ((s, dir) =>
-      Similarity.quantizeInt8(Tables(s, dir, "embeddings"))),
-    // embedding hygiene audit: dims + squared norm + dead/aberrant
-    // flags, one scan (the row-level QA gate before any similarity op)
-    "emb_norm_filter" -> ((s, dir) =>
-      Similarity.normFilter(Tables(s, dir, "embeddings"))),
-    // Achlioptas ±1 random projection to 8 dims: the cheap pre-ANN
-    // compression stage — deterministic driver-constant matrix, one
-    // scan, zero shuffle
-    "emb_project" -> ((s, dir) =>
-      Similarity.project(Tables(s, dir, "embeddings"))),
-    "mm_binary_meta" -> ((s, dir) =>
-      Multimodal.pipeline(s, Tables(s, dir, "documents"))),
-    // metadata layer of the multimodal pipeline (no decode) — the part
-    // that IS cross-engine checkable; the stub decode stays rows-only
-    "mm_meta_only" -> ((s, dir) =>
-      Multimodal.asMedia(Tables(s, dir, "documents"))
-        .select("doc_id", "mime", "payload_len")),
-    // the REAL decode path (r12): synthesize a conformant RIFF/WAVE PCM
-    // container per doc (chunk layout rotated so the corpus exercises
-    // the parser's chunk walk), parse it with a genuine WAV parser
-    // (Multimodal.parseWav), surface typed audio features. The oracle
-    // replays the features as byte arithmetic over `text` because the
-    // fixture is deterministic — the PARSER is format-general
-    // (spec-tested on 16-bit stereo and on malformed bytes).
-    "mm_decode_wav" -> ((s, dir) =>
-      Multimodal.wavPipeline(s, Tables(s, dir, "documents"))),
-    // the IMAGE twin (r13): a conformant BI_RGB BMP per doc (row order
-    // and pixel-data gap rotated so the corpus exercises bottom-up AND
-    // top-down storage plus the declared-offset contract), parsed with
-    // a genuine BMP parser (Multimodal.parseBmp) — first_px is
-    // order-sensitive, so the oracle proves the row-order handling,
-    // not just sums. Spec-tested on 24-bit and malformed bytes.
-    "mm_decode_bmp" -> ((s, dir) =>
-      Multimodal.bmpPipeline(s, Tables(s, dir, "documents"))),
-    // the COMPRESSED-container twin (r14): a conformant 8-bit grayscale
-    // PNG per doc — zlib IDAT via the JDK Inflater, per-row scanline
-    // filter rotated through None/Sub/Up/Average/Paeth by doc_id, an
-    // ancillary tEXt chunk on the skip path — parsed with a genuine
-    // chunk-walking inflate+unfilter decoder (Multimodal.parsePng).
-    // Same logical image as mm_decode_bmp, so a green row proves the
-    // filter reversal recovered the exact payload bytes through the
-    // compression round trip.
-    "mm_decode_png" -> ((s, dir) =>
-      Multimodal.pngPipeline(s, Tables(s, dir, "documents"))),
-    // the LZW twin (r15): a conformant GIF89a per doc — real
-    // variable-width LZW (Multimodal.lzwEncode/lzwDecode, no JDK
-    // assist), every 4th doc INTERLACED so the 4-pass walk is proven
-    // per-row (first_px is order-sensitive), extension blocks rotated
-    // onto the skip path. Same logical image as the BMP/PNG gates.
-    "mm_decode_gif" -> ((s, dir) =>
-      Multimodal.gifPipeline(s, Tables(s, dir, "documents"))),
-    // the TRANSFORM verb (r15): 2:1 audio decimation with a 2-tap mean
-    // anti-alias filter in INTEGER arithmetic — the resampled signal
-    // itself is engine-exact, the oracle replays it over text bytes
-    "mm_resample_wav" -> ((s, dir) =>
-      Multimodal.resamplePipeline(s, Tables(s, dir, "documents"))),
-    // the FRAME-SAMPLE verb (r15): a real AVI container walk (nested
-    // RIFF/LIST grammar, avih header, per-frame movi chunks) with the
-    // frame PAYLOAD kept opaque — exactly the codec boundary the
-    // multimodal stub mandates
-    "mm_parse_avi" -> ((s, dir) =>
-      Multimodal.aviPipeline(s, Tables(s, dir, "documents"))),
-    // the IMAGE-RESIZE verb (r15): 2x2 integer box-mean downsample of
-    // the decoded BMP grid — the resized image itself is engine-exact,
-    // the oracle replays it as indexed byte arithmetic over text
-    "mm_image_resize" -> ((s, dir) =>
-      Multimodal.resizeBmpPipeline(s, Tables(s, dir, "documents"))),
-    // KMV bottom-k distinct sketch per source: O(k) state per group,
-    // bounded-heap partial agg — the cardinality estimator whose
-    // estimate the oracle replays VALUE-EXACT (fp62 hashes + one IEEE
-    // division of driver-literal operands)
-    "sketch_distinct_kmv" -> ((s, dir) =>
-      Sketch.kmvSketch(Tables(s, dir, "documents"), "source", "text",
-        k = 64)),
-    // sketch MERGEABILITY gated: per-source sketches rolled up (k longs
-    // per source, never the raw rows) == the one-pass corpus sketch
-    "sketch_kmv_merge" -> ((s, dir) =>
-      Sketch.kmvMerge(Tables(s, dir, "documents"), "source", "text",
-        k = 64)),
-    // pairwise source overlap FROM the sketches (k smallest of A∪B,
-    // fraction in both kept sets) with the exact Jaccard as published
-    // self-validation — the cross-source overlap matrix whose pairwise
-    // stage touches k longs per source, never the corpus
-    "sketch_kmv_jaccard" -> ((s, dir) =>
-      Sketch.kmvJaccard(Tables(s, dir, "documents"), "source", "text",
-        k = 64)),
-    // the LIVE sketch: kept-set state folded per micro-batch over the
-    // documents replay (mergeStep == the kmvMerge algebra), gated
-    // against the BATCH sketch oracle — merge==rebuild, streamed
-    "stream_kmv_sketch" -> ((s, dir) =>
-      graft.streaming.Streams.kmvSketchAvailableNow(s, dir, k = 64)),
-    // live Benford audit: per-batch digit counts folded through the
-    // count monoid, gated on the BATCH oracle — merge==rebuild streamed
-    "stream_benford" -> ((s, dir) =>
-      graft.streaming.Streams.benfordAvailableNow(s, dir)),
-    // Benford first-digit audit of the price column: leading digit from
-    // the DECIMAL STRING of integer cents, shares in integer
-    // micro-units, expected shares as driver literals — one scan, one
-    // 9-group aggregate
-    "qa_benford" -> ((s, dir) =>
-      Qa.benford(Tables(s, dir, "lineitem"), "l_extendedprice")),
-    // temporal QA: lag-1 autocorrelation of the daily order volume —
-    // integer Pearson sums over the calendar-bounded daily frame, one
-    // rounded double at the end
-    "qa_autocorr" -> ((s, dir) =>
-      Qa.autocorrDaily(Tables(s, dir, "orders"), "o_orderdate")),
-    // seasonality: weekday volume profile in integer micro-shares, dow
-    // from pure day arithmetic (no engine dow() convention)
-    "qa_seasonality_dow" -> ((s, dir) =>
-      Qa.seasonalityDow(Tables(s, dir, "orders"), "o_orderdate")),
-    // iterative graph compute: 3 PageRank supersteps over the kNN graph
-    // (sim_knn_graph's edges), entirely in integer micro-units — order-
-    // free sums, so the rank of every vector is engine- and
-    // partitioning-exact; the curation "hubness" signal
-    "graph_pagerank" -> ((s, dir) => {
-      val e = Tables(s, dir, "embeddings")
-      val edges = Similarity.knnJoin(e, e, k = 2, excludeSelf = true)
-        .select(col("probe_id").as("src"), col("cand_id").as("dst"))
-      Graph.pageRank(e, edges, iters = 3)
-    }),
-    // exact triangles + local clustering coefficient over the same kNN
-    // edge set: degree-ordered compact-forward (wedge space bounded
-    // O(m^1.5) — the skew-proof enumeration), integer micro-unit lcc —
-    // the cohesion signal next to pagerank's hubness
-    "graph_triangles" -> ((s, dir) => {
-      val e = Tables(s, dir, "embeddings")
-      val edges = Similarity.knnJoin(e, e, k = 2, excludeSelf = true)
-        .select(col("probe_id").as("src"), col("cand_id").as("dst"))
-      Graph.triangles(edges)
-    }),
-    // bounded-round k-core peel over the same kNN edges: the dense-
-    // substructure extractor (k=2, 3 rounds) — filter-driven iteration
-    // next to pagerank's value propagation
-    "graph_kcore" -> ((s, dir) => {
-      val e = Tables(s, dir, "embeddings")
-      val edges = Similarity.knnJoin(e, e, k = 2, excludeSelf = true)
-        .select(col("probe_id").as("src"), col("cand_id").as("dst"))
-      Graph.kCore(edges, k = 2, rounds = 3)
-    }))
 
   private def probeList: String = (0 until 10).mkString(", ")
 
@@ -1917,94 +678,170 @@ object SparkEntry {
               round(sum(value), 4) AS sum_value
        FROM s GROUP BY user_id, session_id"""
 
-  def oracleSql: Map[String, String] = Map(
-    "etl_load_select" ->
+  /** The gate registry, one entry per key, in key order (the families
+    * below are in declaration order). Registering a key twice fails
+    * when the object loads.
+    */
+  val gates: SortedMap[String, Gate] = Gate.registry(
+    // ---- A. ETL core ----
+    gate("etl_load_select",
       """SELECT cast(l_orderkey as bigint) AS l_orderkey,
            cast(l_linenumber as int) AS l_linenumber,
            cast(l_quantity as double) AS l_quantity,
            cast(l_returnflag as varchar) AS l_returnflag,
            cast(cast(l_shipdate as date) as varchar) AS l_shipdate,
            cast(NULL as varchar) AS load_note
-         FROM lineitem""",
-
-    // identical semantics to etl_load_select minus the absent-column
-    // pad: the query's input went parquet → tab-CSV → loadDelimited,
-    // so hash equality certifies the delimited round trip
-    // value-lossless through the JDBC write+partitioned-read like A10
-    // through CSV — the oracle is the untouched parquet table
-    "etl_jdbc_roundtrip" ->
+         FROM lineitem""")((s, dir) =>
+      Etl.conform(Tables(s, dir, "lineitem"), lineitemVars)
+        .withColumn("l_shipdate", col("l_shipdate").cast("string"))),
+    // A10 oracle-visible end to end (was spec-only through r9): the
+    // lineitem table staged once per JVM as tab-separated CSV with a
+    // header row (the reference's BCP-style delimited ingest), loaded
+    // back through loadDelimited's config contract (vars schema,
+    // field_term, first_row=2), and hash-compared per row against the
+    // UNCHANGED parquet oracle — the delimited loader is value-lossless
+    // across the text round-trip (integral-double quantities, ISO
+    // dates, exact shortest-repr doubles)
+    gate("etl_load_csv_roundtrip",
       """SELECT cast(l_orderkey as bigint) AS l_orderkey,
            cast(l_linenumber as int) AS l_linenumber,
            cast(l_quantity as double) AS l_quantity,
            cast(l_returnflag as varchar) AS l_returnflag,
            cast(cast(l_shipdate as date) as varchar) AS l_shipdate
-         FROM lineitem""",
-
-    // same oracle as etl_jdbc_roundtrip on purpose: the date-range
-    // partitioning must be result-invariant vs the numeric split
-    "etl_jdbc_date_split" ->
-      """SELECT cast(l_orderkey as bigint) AS l_orderkey,
-           cast(l_linenumber as int) AS l_linenumber,
-           cast(l_quantity as double) AS l_quantity,
-           cast(l_returnflag as varchar) AS l_returnflag,
-           cast(cast(l_shipdate as date) as varchar) AS l_shipdate
-         FROM lineitem""",
-
-    "etl_load_csv_roundtrip" ->
-      """SELECT cast(l_orderkey as bigint) AS l_orderkey,
-           cast(l_linenumber as int) AS l_linenumber,
-           cast(l_quantity as double) AS l_quantity,
-           cast(l_returnflag as varchar) AS l_returnflag,
-           cast(cast(l_shipdate as date) as varchar) AS l_shipdate
-         FROM lineitem""",
-
-    "etl_combine_years" ->
+         FROM lineitem""")((s, dir) => {
+      val cfg = graft.config.TableConfig(
+        toTable = "lineitem_csv",
+        vars = Seq(
+          ColumnSpec("l_orderkey", "BIGINT"),
+          ColumnSpec("l_linenumber", "INTEGER"),
+          ColumnSpec("l_quantity", "FLOAT"),
+          ColumnSpec("l_returnflag", "VARCHAR(1)"),
+          ColumnSpec("l_shipdate", "DATE")),
+        filePath = Map("overall" -> csvLineitemDir(s, dir)),
+        fieldTerm = Map("overall" -> "\t"),
+        firstRow = 2)
+      graft.sources.Sources.loadDelimited(s, cfg)
+        .withColumn("l_shipdate", col("l_shipdate").cast("string"))
+    }),
+    gate("etl_combine_years",
       """SELECT l_orderkey, l_linenumber, l_quantity,
                 cast(NULL as varchar) AS l_returnflag
          FROM lineitem WHERE year(l_shipdate) <= 1997
          UNION ALL
          SELECT l_orderkey, l_linenumber, l_quantity, l_returnflag
-         FROM lineitem WHERE year(l_shipdate) > 1997""",
-
-    "etl_incremental_load" ->
+         FROM lineitem WHERE year(l_shipdate) > 1997""") { (s, dir) =>
+      val l = Tables(s, dir, "lineitem")
+      val early = l.filter(year(col("l_shipdate")) <= 1997)
+        .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
+      val late = l.filter(year(col("l_shipdate")) > 1997)
+        .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
+          col("l_returnflag"))
+      Etl.combineYears(Seq(early, late))
+    },
+    gate("etl_incremental_load",
       """SELECT o_orderkey, o_orderdate, o_totalprice, 'archive' AS src
          FROM orders WHERE o_orderdate < timestamp '1998-01-01'
          UNION ALL
          SELECT o_orderkey, o_orderdate, o_totalprice, 'fresh' AS src
-         FROM orders WHERE o_orderdate >= timestamp '1998-01-01'""",
-
-    "etl_create_table" ->
+         FROM orders WHERE o_orderdate >= timestamp '1998-01-01'""") { (s, dir) =>
+      val o = Tables(s, dir, "orders")
+      val archive = o.select(col("o_orderkey"), col("o_orderdate"),
+        col("o_totalprice"), lit("archive").as("src"))
+      val fresh = o.select(col("o_orderkey"), col("o_orderdate"),
+        col("o_totalprice"), lit("fresh").as("src"))
+      Etl.incrementalLoad(archive, fresh, "o_orderdate", lit("1998-01-01"))
+    },
+    gate("etl_create_table",
       """SELECT cast(c_custkey as bigint) AS c_custkey,
            cast(c_name as varchar) AS c_name,
            cast(c_acctbal as double) AS c_acctbal,
            cast(c_mktsegment as varchar) AS c_mktsegment
-         FROM customer""",
-
-    "etl_copy_into" ->
+         FROM customer""") { (s, dir) =>
+      val empty = Etl.createTable(s, customerVars)
+      empty.unionByName(Etl.conform(Tables(s, dir, "customer"), customerVars))
+    },
+    gate("etl_copy_into",
       s"""SELECT p_partkey, p_name, p_retailprice,
                 'batch_0001' AS etl_batch_id,
                 ${graft.dedup.MinHashSpec.duckFingerprint62Sql(
         "concat_ws('|', coalesce(cast(p_partkey as varchar), chr(1)), " +
           "coalesce(cast(p_name as varchar), chr(1)))")}
                   AS etl_load_row
-         FROM part""",
-
-    "etl_add_index" ->
-      "SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem",
-
-    "etl_zorder_key" -> {
+         FROM part""") { (s, dir) =>
+      Etl.copyInto(Tables(s, dir, "part"), "batch_0001",
+          idCols = Seq("p_partkey", "p_name"))
+        .select(col("p_partkey"), col("p_name"), col("p_retailprice"),
+          col("etl_batch_id"), col("etl_load_row"))
+    },
+    gate("etl_add_index",
+      "SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem") { (s, dir) =>
+      Etl.clusterBy(Tables(s, dir, "lineitem")
+          .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity")),
+        Seq("l_orderkey", "l_linenumber"))
+    },
+    // the multi-column clustering key: Morton interleave of the
+    // (bucketized) dimensions — clusterBy(zkey) then gives min/max
+    // locality on BOTH columns (layout evidence in EtlSpec)
+    gate("etl_zorder_key", {
       val a = "user_id % 1024"
       val b = "least(greatest(floor(value), 0), 1023)"
       s"""SELECT event_id, cast($a as bigint) AS za,
                 cast($b as bigint) AS zb,
                 cast(${Etl.zorderKeySql(Seq(a, b), 10)} as bigint) AS zkey
          FROM events"""
+    }) { (s, dir) =>
+      val a = expr("user_id % 1024")
+      val b = least(greatest(floor(col("value")), lit(0)), lit(1023))
+      Tables(s, dir, "events").select(col("event_id"),
+        a.cast("long").as("za"), b.cast("long").as("zb"),
+        Etl.zorderKey(Seq(a, b), 10).as("zkey"))
     },
-
-    "etl_table_duplicate" ->
-      """SELECT n.*, (SELECT count(*) FROM nation) AS row_cnt FROM nation n""",
-
-    "etl_table_diff" ->
+    gate("etl_table_duplicate",
+      """SELECT n.*, (SELECT count(*) FROM nation) AS row_cnt FROM nation n""") { (s, dir) =>
+      val (copy, qa) = Etl.tableDuplicate(Tables(s, dir, "nation"))
+      copy.crossJoin(broadcast(qa))
+    },
+    // the config-driven end-to-end flow gated as ONE query: parquet
+    // source → conform to the declared schema (props dropped by the
+    // config, pruned at the scan) → rule gate with quarantine (one
+    // dropping rule, one passing rule — both audit paths non-vacuous)
+    // → keep-latest dedup per (user, type). Proves the STAGES COMPOSE:
+    // quarantine runs before dedup, so an invalid row can never win
+    // keep-latest (the property the composed oracle encodes).
+    gate("etl_pipeline_run",
+      // conform → quarantine (coalesce(p, false), matching Pipeline.run's
+      // null-rejecting gate) → keep-latest; ts as epoch-µs for the compare
+      """WITH conformed AS (
+           SELECT event_id, user_id, cast(event_type as varchar) AS event_type,
+                  cast(value as double) AS value, cast(ts as timestamp) AS ts
+           FROM events),
+         gated AS (
+           SELECT * FROM conformed
+           WHERE coalesce(value <= 400.0, false)
+             AND coalesce(user_id IS NOT NULL, false))
+         SELECT user_id, event_type, event_id, epoch_us(ts) AS ts_us, value
+         FROM gated
+         QUALIFY row_number() OVER (PARTITION BY user_id, event_type
+           ORDER BY ts DESC, event_id DESC) = 1""") { (s, dir) =>
+      val cfg = graft.config.TableConfig(toTable = "events_curated",
+        vars = Seq(ColumnSpec("event_id", "bigint"),
+          ColumnSpec("user_id", "bigint"),
+          ColumnSpec("event_type", "varchar(20)"),
+          ColumnSpec("value", "float"),
+          ColumnSpec("ts", "datetime")))
+      graft.etl.Pipeline.run(s, cfg,
+        source = Some(Tables(s, dir, "events")),
+        dedupKeys = Seq("user_id", "event_type"),
+        dedupOrder = Seq("ts", "event_id"),
+        validationRules = Seq(
+          "value_in_range" -> (col("value") <= 400.0),
+          "user_present" -> col("user_id").isNotNull),
+        quarantineInvalid = true)
+        .table
+        .select(col("user_id"), col("event_type"), col("event_id"),
+          expr("unix_micros(ts)").as("ts_us"), col("value"))
+    },
+    gate("etl_table_diff",
       """WITH a AS (SELECT o_orderkey FROM orders WHERE o_totalprice > 100000),
             b AS (SELECT o_orderkey FROM orders
                   WHERE o_totalprice > 150000 AND o_orderstatus = 'O')
@@ -2012,9 +849,14 @@ object SparkEntry {
          WHERE o_orderkey NOT IN (SELECT o_orderkey FROM b)
          UNION ALL
          SELECT o_orderkey, 'right_only' AS diff_side FROM b
-         WHERE o_orderkey NOT IN (SELECT o_orderkey FROM a)""",
-
-    "etl_upsert" ->
+         WHERE o_orderkey NOT IN (SELECT o_orderkey FROM a)""") { (s, dir) =>
+      val o = Tables(s, dir, "orders")
+      val a = o.filter(col("o_totalprice") > 100000).select(col("o_orderkey"))
+      val b = o.filter(col("o_totalprice") > 150000 && col("o_orderstatus") === "O")
+        .select(col("o_orderkey"))
+      Etl.tableDiff(a, b)
+    },
+    gate("etl_upsert",
       """WITH t AS (
            SELECT o_orderkey, o_orderdate, o_totalprice, 'base' AS src, 0 AS r
            FROM orders),
@@ -2027,15 +869,44 @@ object SparkEntry {
                 o_totalprice, src
          FROM m
          QUALIFY row_number() OVER (PARTITION BY o_orderkey
-           ORDER BY o_orderdate DESC, r DESC) = 1""",
-
-    "etl_partitioned_load" ->
+           ORDER BY o_orderdate DESC, r DESC) = 1""") { (s, dir) =>
+      // load_table_from_sql replace-slice semantics: updates (here: a
+      // repriced slice of orders) replace target rows with the same key
+      val o = Tables(s, dir, "orders")
+      val target = o.select(col("o_orderkey"), col("o_orderdate"),
+        col("o_totalprice"), lit("base").as("src"))
+      // +1000.0, not round(×1.1, 2): a single IEEE add is bit-identical
+      // cross-engine; rounding a derived double is not (SURVEY §8a)
+      val updates = o.filter(col("o_totalprice") > 150000)
+        .select(col("o_orderkey"), col("o_orderdate"),
+          (col("o_totalprice") + 1000.0).as("o_totalprice"),
+          lit("update").as("src"))
+      Etl.upsert(target, updates, Seq("o_orderkey"), Seq("o_orderdate"))
+        .withColumn("o_orderdate", col("o_orderdate").cast("date").cast("string"))
+    },
+    // partitioned-layout round trip: events staged partitioned by
+    // event_type (directory-level layout, the warehouse's date/type
+    // partition scheme), read back through a partition filter — the
+    // scan prunes to ONE directory (spec-asserted on the executed
+    // plan), the 100 TB difference between a full scan and one slice
+    gate("etl_partitioned_load",
       """SELECT cast(cast(date_trunc('day', ts) as date) as varchar) AS day,
                 count(*) AS n, round(sum(value), 4) AS sum_value
          FROM events WHERE event_type = 'purchase'
-         GROUP BY 1""",
-
-    "etl_scd2_history" ->
+         GROUP BY 1""") { (s, dir) =>
+      val staged = graft.sources.Sources.stagePartitioned(
+        Tables(s, dir, "events"), dir, "events", "event_type")
+      s.read.parquet(staged)
+        .filter(col("event_type") === "purchase")
+        .groupBy(date_trunc("day", col("ts")).cast("date").cast("string")
+          .as("day"))
+        .agg(count(lit(1)).as("n"),
+          round(sum(col("value")), 4).as("sum_value"))
+    },
+    // SCD2 history build over the events change stream: each user's
+    // event_type runs collapsed to validity intervals (µs integer time
+    // per the integer-time rule)
+    gate("etl_scd2_history",
       """WITH e AS (
            SELECT user_id, event_type, event_id,
                   epoch_us(cast(ts as timestamp)) AS us
@@ -2053,36 +924,104 @@ object SparkEntry {
                   ORDER BY us, event_id) AS valid_to_us,
                 CASE WHEN lead(us) OVER (PARTITION BY user_id
                   ORDER BY us, event_id) IS NULL THEN 1 ELSE 0 END AS is_current
-         FROM s""",
-
-    "etl_dedup_keep_latest" ->
+         FROM s""") { (s, dir) =>
+      val e = Tables(s, dir, "events")
+        .select(col("user_id"), col("event_type"), col("event_id"),
+          expr("unix_micros(ts)").as("us"))
+      Etl.scd2(e, Seq("user_id"), Seq("event_type"), "us", Seq("event_id"))
+        .select(col("user_id"), col("event_type"),
+          col("valid_from").as("valid_from_us"),
+          col("valid_to").as("valid_to_us"), col("is_current"))
+    },
+    // point-in-time query over the SCD2 history: state as of Jan 15
+    // (epoch-µs literal shared with the oracle)
+    gate("etl_scd2_asof",
+      s"""WITH e AS (
+           SELECT user_id, event_type, event_id,
+                  epoch_us(cast(ts as timestamp)) AS us
+           FROM events),
+         l AS (
+           SELECT *, lag(event_type) OVER (PARTITION BY user_id
+             ORDER BY us, event_id) AS prev_et,
+                  row_number() OVER (PARTITION BY user_id
+             ORDER BY us, event_id) AS rn
+           FROM e),
+         s AS (
+           SELECT * FROM l WHERE rn = 1 OR prev_et IS DISTINCT FROM event_type),
+         h AS (
+           SELECT user_id, event_type, us AS valid_from_us,
+                  lead(us) OVER (PARTITION BY user_id
+                    ORDER BY us, event_id) AS valid_to_us
+           FROM s)
+         SELECT user_id, event_type, valid_from_us, valid_to_us
+         FROM h
+         WHERE valid_from_us <= $scd2AsOfUs
+           AND (valid_to_us IS NULL OR valid_to_us > $scd2AsOfUs)""") { (s, dir) =>
+      val e = Tables(s, dir, "events")
+        .select(col("user_id"), col("event_type"), col("event_id"),
+          expr("unix_micros(ts)").as("us"))
+      Etl.scd2AsOf(
+        Etl.scd2(e, Seq("user_id"), Seq("event_type"), "us", Seq("event_id")),
+        lit(scd2AsOfUs), fromCol = "valid_from", toCol = "valid_to")
+        .select(col("user_id"), col("event_type"),
+          col("valid_from").as("valid_from_us"),
+          col("valid_to").as("valid_to_us"))
+    },
+    // the CDC -> SCD2 pattern as a STREAMING stateful operator, driven
+    // end to end and gated against the same change-detection oracle as
+    // the batch twin (open intervals flushed by the harness sentinel)
+    streamGate("stream_scd2",
+      // the batch SCD2 change-detection SQL minus is_current — the
+      // streaming history build must reproduce every interval exactly
+      """WITH e AS (
+           SELECT user_id, event_type, event_id,
+                  epoch_us(cast(ts as timestamp)) AS us
+           FROM events),
+         l AS (
+           SELECT *, lag(event_type) OVER (PARTITION BY user_id
+             ORDER BY us, event_id) AS prev_et,
+                  row_number() OVER (PARTITION BY user_id
+             ORDER BY us, event_id) AS rn
+           FROM e),
+         s AS (
+           SELECT * FROM l WHERE rn = 1 OR prev_et IS DISTINCT FROM event_type)
+         SELECT user_id, event_type, us AS valid_from_us,
+                lead(us) OVER (PARTITION BY user_id
+                  ORDER BY us, event_id) AS valid_to_us
+         FROM s""")((s, dir) =>
+      Streams.scd2AvailableNow(s, dir).map(_
+        .select(col("user_id"), col("event_type"),
+          col("valid_from_us"), col("valid_to_us")))),
+    gate("etl_dedup_keep_latest",
       """SELECT l_orderkey, l_linenumber, cast(cast(l_shipdate as date) as varchar) AS l_shipdate,
                 l_quantity
          FROM lineitem
          QUALIFY row_number() OVER (PARTITION BY l_orderkey
-           ORDER BY l_shipdate DESC, l_linenumber DESC, l_quantity DESC) = 1""",
-
-    // conform → quarantine (coalesce(p, false), matching Pipeline.run's
-    // null-rejecting gate) → keep-latest; ts as epoch-µs for the compare
-    "etl_pipeline_run" ->
-      """WITH conformed AS (
-           SELECT event_id, user_id, cast(event_type as varchar) AS event_type,
-                  cast(value as double) AS value, cast(ts as timestamp) AS ts
-           FROM events),
-         gated AS (
-           SELECT * FROM conformed
-           WHERE coalesce(value <= 400.0, false)
-             AND coalesce(user_id IS NOT NULL, false))
-         SELECT user_id, event_type, event_id, epoch_us(ts) AS ts_us, value
-         FROM gated
-         QUALIFY row_number() OVER (PARTITION BY user_id, event_type
-           ORDER BY ts DESC, event_id DESC) = 1""",
-
-    "qa_missingness" -> qaMissingnessSql,
-
-    "qa_continuous" -> qaContinuousSql,
-
-    "qa_categorical" ->
+           ORDER BY l_shipdate DESC, l_linenumber DESC, l_quantity DESC) = 1""") { (s, dir) =>
+      // sort-free max_by variant; spec-proven equal to the window version
+      Etl.dedupKeepLatestByMax(
+        Tables(s, dir, "lineitem")
+          .select(col("l_orderkey"), col("l_linenumber"), col("l_shipdate"),
+            col("l_quantity")),
+        Seq("l_orderkey"),
+        Seq("l_shipdate", "l_linenumber", "l_quantity"))
+        .withColumn("l_shipdate", col("l_shipdate").cast("date").cast("string"))
+        .select("l_orderkey", "l_linenumber", "l_shipdate", "l_quantity")
+    },
+    // ---- B. QA pipeline ----
+    gate("qa_missingness", qaMissingnessSql) { (s, dir) =>
+      val e = Tables(s, dir, "events")
+        .withColumn("period", date_trunc("day", col("ts")).cast("date"))
+      Qa.missingness(e, "period", Seq("event_type", "value", "props"))
+        .withColumn("period", col("period").cast("string"))
+    },
+    gate("qa_continuous", qaContinuousSql) { (s, dir) =>
+      val e = Tables(s, dir, "events")
+        .withColumn("period", date_trunc("day", col("ts")).cast("date"))
+      Qa.continuous(e, "period", Seq("value"))
+        .withColumn("period", col("period").cast("string"))
+    },
+    gate("qa_categorical",
       """WITH c AS (
            SELECT cast(cast(date_trunc('day', ts) as date) as varchar) AS period,
                   'event_type' AS varname,
@@ -2092,30 +1031,87 @@ object SparkEntry {
          SELECT period, varname, value, n,
                 round(n / cast(sum(n) OVER (PARTITION BY period, varname) as double), 4)
                   AS proportion
-         FROM c""",
-
-    "qa_quantiles" ->
+         FROM c""") { (s, dir) =>
+      val e = Tables(s, dir, "events")
+        .withColumn("period", date_trunc("day", col("ts")).cast("date"))
+      Qa.categorical(e, "period", Seq("event_type"))
+        .withColumn("period", col("period").cast("string"))
+    },
+    gate("qa_quantiles",
       """SELECT cast(cast(date_trunc('day', ts) as date) as varchar) AS period,
                 'value' AS varname,
                 round(quantile_cont(value, 0.25), 4) AS p25,
                 round(quantile_cont(value, 0.5), 4) AS p50,
                 round(quantile_cont(value, 0.75), 4) AS p75,
                 round(quantile_cont(value, 0.95), 4) AS p95
-         FROM events GROUP BY 1""",
-
-    "etl_checksum" -> Etl.rowChecksumSql("nation",
-      Seq("n_nationkey", "n_name", "n_regionkey")),
-
-    "qa_dates" ->
+         FROM events GROUP BY 1""") { (s, dir) =>
+      val e = Tables(s, dir, "events")
+        .withColumn("period", date_trunc("day", col("ts")).cast("date"))
+      Qa.quantiles(e, "period", Seq("value"))
+        .withColumn("period", col("period").cast("string"))
+    },
+    // JDBC warehouse round trip (r14, VERDICT-r13 "missing" item 1):
+    // lineitem staged into embedded Derby, read back through the
+    // PARTITIONED spark.read.jdbc path (8 key ranges, one connection
+    // each — the shape a 100 TB warehouse pull needs; the reference's
+    // odbc read is the single-connection degenerate case). Oracle =
+    // the unchanged parquet table: the JDBC write+read is value-lossless.
+    gate("etl_jdbc_roundtrip",
+      // identical semantics to etl_load_select minus the absent-column
+      // pad: the query's input went parquet → tab-CSV → loadDelimited,
+      // so hash equality certifies the delimited round trip
+      // value-lossless through the JDBC write+partitioned-read like A10
+      // through CSV — the oracle is the untouched parquet table
+      """SELECT cast(l_orderkey as bigint) AS l_orderkey,
+           cast(l_linenumber as int) AS l_linenumber,
+           cast(l_quantity as double) AS l_quantity,
+           cast(l_returnflag as varchar) AS l_returnflag,
+           cast(cast(l_shipdate as date) as varchar) AS l_shipdate
+         FROM lineitem""")((s, dir) => {
+      val conn = graft.sources.Jdbc.createDbConnection(
+        s"jdbc:derby:${derbyDbDir(s, dir)}/db")
+      graft.sources.Jdbc.loadTableFromSql(s, conn, "lineitem_jdbc",
+        partitionCol = Some("l_orderkey"))
+        .withColumn("l_shipdate", col("l_shipdate").cast("string"))
+    }),
+    // The DATE-keyed variant (VERDICT-r14 item 3): same warehouse
+    // table, split on l_shipdate — a DATE column, no numeric surrogate
+    // key involved — through discovered date bounds. The reference's
+    // truncate_date incremental loads key on exactly this shape
+    // (R/load_table_from_sql.R). Oracle identical to the numeric split:
+    // the partitioning strategy must never change the result.
+    gate("etl_jdbc_date_split",
+      // same oracle as etl_jdbc_roundtrip on purpose: the date-range
+      // partitioning must be result-invariant vs the numeric split
+      """SELECT cast(l_orderkey as bigint) AS l_orderkey,
+           cast(l_linenumber as int) AS l_linenumber,
+           cast(l_quantity as double) AS l_quantity,
+           cast(l_returnflag as varchar) AS l_returnflag,
+           cast(cast(l_shipdate as date) as varchar) AS l_shipdate
+         FROM lineitem""")((s, dir) => {
+      val conn = graft.sources.Jdbc.createDbConnection(
+        s"jdbc:derby:${derbyDbDir(s, dir)}/db")
+      graft.sources.Jdbc.loadTableFromSqlByDate(s, conn, "lineitem_jdbc",
+        partitionCol = "l_shipdate", numPartitions = 8)
+        .withColumn("l_shipdate", col("l_shipdate").cast("string"))
+    }),
+    gate("etl_checksum", Etl.rowChecksumSql("nation",
+      Seq("n_nationkey", "n_name", "n_regionkey")))((s, dir) =>
+      Etl.rowChecksum(Tables(s, dir, "nation"),
+        Seq("n_nationkey", "n_name", "n_regionkey"))),
+    gate("qa_dates",
       """SELECT cast(year(o_orderdate) as int) AS period,
                 'o_orderdate' AS varname,
                 cast(min(o_orderdate) as varchar) AS min_val,
                 cast(floor(quantile_cont(epoch(o_orderdate) * 1000, 0.5)) as bigint)
                   AS median_epoch_ms,
                 cast(max(o_orderdate) as varchar) AS max_val
-         FROM orders GROUP BY 1""",
-
-    "qa_compare_periods" ->
+         FROM orders GROUP BY 1""") { (s, dir) =>
+      val o = Tables(s, dir, "orders")
+        .withColumn("period", year(col("o_orderdate")))
+      Qa.dates(o, "period", Seq("o_orderdate"))
+    },
+    gate("qa_compare_periods",
       """WITH c AS (
            SELECT cast(cast(date_trunc('day', ts) as date) as varchar) AS period,
                   'value' AS varname, round(avg(value), 4) AS mean
@@ -2128,16 +1124,58 @@ object SparkEntry {
                 round(abs(mean - prev_mean) / abs(prev_mean) * 100, 4) AS rel_change_mean,
                 cast(round(abs(mean - prev_mean) / abs(prev_mean) * 100, 4) > 2.0 as int)
                   AS flag_mean
-         FROM l WHERE prev_mean IS NOT NULL""",
-
-    "qa_compare_periods_full" -> qaComparePeriodsFullSql,
-
-    "qa_missingness_change" -> qaMissingnessChangeSql,
-
-    "qa_report" -> qaReportSql,
-    "qa_workbook_pivot" -> Qa.workbookPivotSql(qaReportSql),
-
-    "qa_categorical_change" ->
+         FROM l WHERE prev_mean IS NOT NULL""") { (s, dir) =>
+      val e = Tables(s, dir, "events")
+        .withColumn("period", date_trunc("day", col("ts")).cast("date"))
+      Qa.comparePeriods(Qa.continuous(e, "period", Seq("value")), "period")
+        .withColumn("period", col("period").cast("string"))
+    },
+    gate("qa_compare_periods_full", qaComparePeriodsFullSql) { (s, dir) =>
+      val e = Tables(s, dir, "events")
+        .withColumn("period", date_trunc("day", col("ts")).cast("date").cast("string"))
+      Qa.comparePeriodsFull(Qa.continuous(e, "period", Seq("value")), "period")
+    },
+    gate("qa_missingness_change", qaMissingnessChangeSql) { (s, dir) =>
+      val e = Tables(s, dir, "events")
+        .withColumn("period", date_trunc("day", col("ts")).cast("date").cast("string"))
+      Qa.missingnessChange(
+        Qa.missingness(e, "period", Seq("event_type", "value", "props")), "period")
+    },
+    gate("qa_categorical_top8",
+      """WITH base AS (
+           SELECT cast(year(l_shipdate) as int) AS period,
+                  'qty' AS varname,
+                  cast(cast(l_quantity as int) as varchar) AS value
+           FROM lineitem),
+         counted AS (
+           SELECT period, varname, value, count(*) AS n
+           FROM base GROUP BY 1, 2, 3),
+         ranked AS (
+           SELECT period, varname, value, n,
+                  dense_rank() OVER (PARTITION BY period, varname ORDER BY n DESC)
+                    AS rnk
+           FROM counted WHERE value IS NOT NULL
+           UNION ALL
+           SELECT period, varname, value, n, 0 AS rnk
+           FROM counted WHERE value IS NULL),
+         relab AS (
+           SELECT period, varname,
+                  CASE WHEN rnk <= 8 THEN value ELSE 'Other values' END AS value,
+                  n
+           FROM ranked),
+         re AS (
+           SELECT period, varname, value, cast(sum(n) as bigint) AS n
+           FROM relab GROUP BY 1, 2, 3)
+         SELECT period, varname, value, n,
+                round(n / cast(sum(n) OVER (PARTITION BY period, varname) as double), 4)
+                  AS proportion
+         FROM re""") { (s, dir) =>
+      val l = Tables(s, dir, "lineitem")
+        .withColumn("period", year(col("l_shipdate")))
+        .withColumn("qty", col("l_quantity").cast("int").cast("string"))
+      Qa.categoricalTop8(l, "period", Seq("qty"))
+    },
+    gate("qa_categorical_change",
       """WITH c AS (
            SELECT period, varname, value, n,
                   round(n / cast(sum(n) OVER (PARTITION BY period, varname) as double), 4)
@@ -2167,39 +1205,85 @@ object SparkEntry {
                 round((proportion - prev_proportion) * 100, 4) AS abs_change_pp,
                 cast(abs(round((proportion - prev_proportion) * 100, 4)) > 3.0 as int)
                   AS flag_categorical
-         FROM l WHERE prev_proportion IS NOT NULL""",
-
-    "qa_categorical_top8" ->
-      """WITH base AS (
-           SELECT cast(year(l_shipdate) as int) AS period,
-                  'qty' AS varname,
-                  cast(cast(l_quantity as int) as varchar) AS value
-           FROM lineitem),
-         counted AS (
-           SELECT period, varname, value, count(*) AS n
-           FROM base GROUP BY 1, 2, 3),
-         ranked AS (
-           SELECT period, varname, value, n,
-                  dense_rank() OVER (PARTITION BY period, varname ORDER BY n DESC)
-                    AS rnk
-           FROM counted WHERE value IS NOT NULL
-           UNION ALL
-           SELECT period, varname, value, n, 0 AS rnk
-           FROM counted WHERE value IS NULL),
-         relab AS (
-           SELECT period, varname,
-                  CASE WHEN rnk <= 8 THEN value ELSE 'Other values' END AS value,
-                  n
-           FROM ranked),
-         re AS (
-           SELECT period, varname, value, cast(sum(n) as bigint) AS n
-           FROM relab GROUP BY 1, 2, 3)
-         SELECT period, varname, value, n,
-                round(n / cast(sum(n) OVER (PARTITION BY period, varname) as double), 4)
-                  AS proportion
-         FROM re""",
-
-    "q1_agg" ->
+         FROM l WHERE prev_proportion IS NOT NULL""") { (s, dir) =>
+      val e = Tables(s, dir, "events")
+        .withColumn("period", date_trunc("day", col("ts")).cast("date").cast("string"))
+      Qa.categoricalChange(Qa.categorical(e, "period", Seq("event_type")), "period")
+    },
+    // the workbook bundle: every runPipeline family unioned into ONE
+    // long-format frame — gates the whole pipeline composition end-to-end
+    gate("qa_report", qaReportSql) { (s, dir) =>
+      val e = Tables(s, dir, "events")
+        .withColumn("period", date_trunc("day", col("ts")).cast("date").cast("string"))
+      Qa.report(Qa.runPipeline(e, "period", Seq("event_type", "value", "props")),
+        "period")
+    },
+    // the workbook SHEET view: one column per stat — built directly
+    // from the pipeline's family frames (workbookSheets; the r9
+    // collapse of the long→wide explode+pivot round trip, value-equal
+    // to workbookPivot(report(...)) by spec) — the presentation layer
+    // of the reference's xlsx workbook as a real gated operator
+    gate("qa_workbook_pivot", Qa.workbookPivotSql(qaReportSql)) { (s, dir) =>
+      val e = Tables(s, dir, "events")
+        .withColumn("period", date_trunc("day", col("ts")).cast("date").cast("string"))
+      Qa.workbookSheets(
+        Qa.runPipeline(e, "period", Seq("event_type", "value", "props")),
+        "period")
+    },
+    // per-source freshness/latency SLA: last event vs a pinned as-of
+    // instant; the 30-min SLA splits the five event types into both
+    // fresh and stale regimes at sf0.01
+    gate("qa_freshness", Qa.freshnessSql("events", "event_type", "ts",
+      asOfUs = freshnessAsOfUs, slaUs = 30L * 60 * 1000000))((s, dir) =>
+      Qa.freshness(Tables(s, dir, "events"), "event_type", "ts",
+        asOfUs = freshnessAsOfUs, slaUs = 30L * 60 * 1000000)),
+    // rolling volume-anomaly monitor: per-type daily counts vs the
+    // trailing 7 observed days, 3-sigma flag as a pure integer
+    // inequality (no sqrt, no float stats — decimal/HUGEINT
+    // cross-products per the drift_psi overflow rule)
+    gate("qa_volume_anomaly",
+      Qa.volumeAnomalySql("events", "event_type", "ts"))((s, dir) =>
+      Qa.volumeAnomaly(Tables(s, dir, "events"), "event_type", "ts")),
+    // Pearson correlation between business-column pairs: exact decimal
+    // moments (order-independent sums), one scan, formula in doubles
+    // cast once from the exact sums
+    gate("qa_correlation", Qa.correlationSql("lineitem", corrPairs))((s, dir) =>
+      Qa.correlation(Tables(s, dir, "lineitem"), corrPairs)),
+    // KS drift monitor: the continuous counterpart of qa_drift_psi —
+    // max ECDF distance per calendar-adjacent transition, argmax over
+    // exact cross-multiplied integers
+    gate("qa_drift_ks", Qa.driftKsSql("events",
+      "cast(date_trunc('day', ts) as date)", "value")) { (s, dir) =>
+      val e = Tables(s, dir, "events")
+        .withColumn("period", date_trunc("day", col("ts")).cast("date").cast("string"))
+      Qa.driftKs(e, "period", "value")
+    },
+    // PSI drift monitor: one summary number per (period, categorical
+    // col) transition over the dense grid; integer cross-products +
+    // micro-nat log quantization make the sum engine-exact
+    gate("qa_drift_psi", Qa.driftPsiSql("events",
+      "cast(cast(date_trunc('day', ts) as date) as varchar)", "event_type")) { (s, dir) =>
+      val e = Tables(s, dir, "events")
+        .withColumn("period", date_trunc("day", col("ts")).cast("date").cast("string"))
+      Qa.driftPsi(Qa.categorical(e, "period", Seq("event_type")), "period")
+    },
+    // Tukey-fence outlier screen: within-period tail test on the
+    // integer-quantized value scale (dyadic fence arithmetic — engine-
+    // exact counts; see Qa.outliers)
+    gate("qa_outliers", Qa.outliersSql("events",
+      "cast(cast(date_trunc('day', ts) as date) as varchar)", "value")) { (s, dir) =>
+      val e = Tables(s, dir, "events")
+        .withColumn("period", date_trunc("day", col("ts")).cast("date").cast("string"))
+      Qa.outliers(e, "period", Seq("value"))
+    },
+    // config-driven row validation (QA-on-load): per-row audit with the
+    // comma-joined failed-rule names in declared order; 'status_known'
+    // and 'date_in_range' catch real rows in this data
+    gate("etl_validate_rules", validationRulesSql)((s, dir) =>
+      Etl.validateRows(Tables(s, dir, "orders"), Seq("o_orderkey"),
+        validationRules)),
+    // ---- C. Analytics core ----
+    gate("q1_agg",
       """SELECT l_returnflag, l_linestatus,
                 round(sum(l_quantity), 2) AS sum_qty,
                 round(sum(l_extendedprice), 2) AS sum_base_price,
@@ -2209,9 +1293,9 @@ object SparkEntry {
                 count(*) AS count_order
          FROM lineitem
          WHERE l_shipdate <= timestamp '1998-09-01'
-         GROUP BY l_returnflag, l_linestatus""",
-
-    "q_join_star" ->
+         GROUP BY l_returnflag, l_linestatus""")((s, dir) =>
+      Queries.q1Agg(s, dir)),
+    gate("q_join_star",
       """SELECT r_name, n_name,
                 round(sum(o_totalprice), 2) AS revenue,
                 count(*) AS n_orders
@@ -2219,9 +1303,8 @@ object SparkEntry {
          JOIN customer ON o_custkey = c_custkey
          JOIN nation ON c_nationkey = n_nationkey
          JOIN region ON n_regionkey = r_regionkey
-         GROUP BY r_name, n_name""",
-
-    "q_join_large" ->
+         GROUP BY r_name, n_name""")((s, dir) => Queries.starJoin(s, dir)),
+    gate("q_join_large",
       """SELECT o_orderkey, cast(cast(o_orderdate as date) as varchar) AS o_orderdate,
                 round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
                 count(*) AS n_lines
@@ -2229,35 +1312,135 @@ object SparkEntry {
          WHERE o_orderstatus <> 'F'
          GROUP BY o_orderkey, o_orderdate
          ORDER BY revenue DESC, o_orderkey
-         LIMIT 10""",
-
-    // the PLAIN join: the salted path must be indistinguishable by value
-    "q_join_salted" ->
+         LIMIT 10""")((s, dir) => Queries.joinLarge(s, dir)
+      .withColumn("o_orderdate", col("o_orderdate").cast("date").cast("string"))),
+    // a fact-dim join (orders ⨝ customer per nation) through the
+    // SALTED path (Skew.saltedJoin), gated against the PLAIN join
+    // oracle: the skew lever is value-identical, end to end
+    gate("q_join_salted",
+      // the PLAIN join: the salted path must be indistinguishable by value
       """SELECT c_nationkey, round(sum(o_totalprice), 2) AS revenue,
                 cast(count(*) as bigint) AS n_orders
          FROM orders JOIN customer ON o_custkey = c_custkey
-         GROUP BY c_nationkey""",
-
-    "q_window_topn" ->
+         GROUP BY c_nationkey""")((s, dir) => Queries.joinSalted(s, dir)),
+    gate("q_window_topn",
       """SELECT p_brand, p_partkey, p_retailprice,
                 cast(row_number() OVER (PARTITION BY p_brand
                   ORDER BY p_retailprice DESC, p_partkey) as int) AS rnk
          FROM part
-         QUALIFY rnk <= 3""",
-
-    "q_rollup" ->
+         QUALIFY rnk <= 3""")((s, dir) => Queries.windowTopN(s, dir)),
+    gate("q_rollup",
       """SELECT o_orderstatus, o_orderpriority,
                 round(sum(o_totalprice), 2) AS total_price, count(*) AS n
          FROM orders
-         GROUP BY ROLLUP (o_orderstatus, o_orderpriority)""",
-
-    "q_cube" ->
+         GROUP BY ROLLUP (o_orderstatus, o_orderpriority)""")((s, dir) =>
+      Queries.rollupAgg(s, dir)),
+    gate("q_cube",
       """SELECT o_orderstatus, o_orderpriority,
                 round(sum(o_totalprice), 2) AS total_price, count(*) AS n
          FROM orders
-         GROUP BY CUBE (o_orderstatus, o_orderpriority)""",
-
-    "q_range_window" ->
+         GROUP BY CUBE (o_orderstatus, o_orderpriority)""")((s, dir) =>
+      Queries.cubeAgg(s, dir)),
+    gate("q_grouping_sets",
+      """WITH e AS (
+           SELECT event_type,
+                  cast(cast(date_trunc('day', ts) as date) as varchar) AS day,
+                  value
+           FROM events)
+         SELECT event_type, day,
+                round(sum(value), 4) AS sum_value, count(*) AS n
+         FROM e
+         GROUP BY GROUPING SETS ((event_type, day), (event_type), (day))""")((s, dir) =>
+      Queries.groupingSetsAgg(s, dir)),
+    gate("q_moving_avg",
+      """WITH daily AS (
+           SELECT cast(date_trunc('day', ts) as date) AS day, event_type,
+                  round(sum(value), 4) AS day_value
+           FROM events GROUP BY 1, 2)
+         SELECT cast(day as varchar) AS day, event_type, day_value,
+                round(avg(day_value) OVER (PARTITION BY event_type ORDER BY day
+                  ROWS BETWEEN 6 PRECEDING AND CURRENT ROW), 4) AS ma7
+         FROM daily""")((s, dir) => Queries.movingAvg(s, dir)),
+    gate("q_above_class_avg",
+      """SELECT o_orderkey, o_orderpriority, o_totalprice, class_avg
+         FROM (
+           SELECT o_orderkey, o_orderpriority, o_totalprice,
+                  round(avg(o_totalprice) OVER (PARTITION BY o_orderpriority), 4)
+                    AS class_avg
+           FROM orders)
+         WHERE o_totalprice > class_avg""")((s, dir) =>
+      Queries.aboveClassAvg(s, dir)),
+    gate("q_semi_anti",
+      """SELECT c_custkey AS entity_key, 'cust_open_order' AS tag FROM customer
+         WHERE EXISTS (SELECT 1 FROM orders
+                       WHERE o_custkey = c_custkey AND o_orderstatus = 'O')
+         UNION ALL
+         SELECT s_suppkey, 'supp_no_lineitem' FROM supplier
+         WHERE NOT EXISTS (SELECT 1 FROM lineitem WHERE l_suppkey = s_suppkey)""")((s, dir) =>
+      Queries.semiAnti(s, dir)),
+    gate("q_events_window",
+      """SELECT cast(cast(date_trunc('hour', ts) as timestamp) as varchar) AS window_start,
+                event_type, count(*) AS n_events,
+                round(sum(value), 4) AS sum_value
+         FROM events GROUP BY 1, 2""")((s, dir) => Queries.eventsWindow(s, dir)
+      .withColumn("window_start", col("window_start").cast("string"))),
+    // the STREAMING hourly rollup driven end-to-end (file source →
+    // watermark+window state → foreachBatch sink, AvailableNow) and
+    // gated against the SAME batch oracle as q_events_window — the
+    // stream path itself is hash-checked, not just its batch twin
+    streamGate("stream_hourly_rollup",
+      // identical oracle to q_events_window: the streaming path must land
+      // on exactly the batch answer
+      """SELECT cast(cast(date_trunc('hour', ts) as timestamp) as varchar) AS window_start,
+                event_type, count(*) AS n_events,
+                round(sum(value), 4) AS sum_value
+         FROM events GROUP BY 1, 2""")((s, dir) =>
+      Streams.hourlyRollupAvailableNow(s, dir).map(_
+        .withColumn("window_start", col("window_start").cast("string")))),
+    // the stateful sessionizer (flatMapGroupsWithState + event-time
+    // timeout) driven end-to-end, flushed by the watermark sentinel,
+    // gated against the SAME gaps-and-islands oracle as q_sessionize
+    streamGate("stream_sessionize",
+      // identical oracle: the streaming stateful path must land on exactly
+      // the batch answer
+      sessionizeOracle)((s, dir) =>
+      Streams.sessionizeAvailableNow(s, dir, 30).map(_
+        .select(col("user_id"), col("session_start"), col("session_end"),
+          col("n_events"), round(col("sum_value"), 4).as("sum_value")))),
+    // the streaming QA monitor driven end-to-end, gated against the
+    // batch per-hour missingness
+    streamGate("stream_qa_missingness",
+      // batch twin of the streaming QA monitor (HUGEINT-safe casts per the
+      // oracle pitfall rule)
+      """SELECT cast(cast(date_trunc('hour', ts) as timestamp) as varchar) AS window_start,
+                cast(sum(cast(value IS NULL as bigint)) as bigint) AS missing_value,
+                cast(sum(cast(props IS NULL as bigint)) as bigint) AS missing_props,
+                count(*) AS n_rows
+         FROM events GROUP BY 1""")((s, dir) =>
+      Streams.qaMissingnessAvailableNow(s, dir).map(_
+        .withColumn("window_start", col("window_start").cast("string")))),
+    // the watermarked stream-stream join driven end-to-end the same way,
+    // gated against the batch self-join; timestamps as epoch-µs bigints
+    // (the integer-time rule)
+    streamGate("stream_follow_within",
+      // batch self-join twin of the streaming time-bounded join
+      """WITH e AS (
+           SELECT event_id, user_id, event_type, value,
+                  epoch_us(cast(ts as timestamp)) AS us
+           FROM events)
+         SELECT t.user_id, t.event_id AS t_id, f.event_id AS f_id,
+                t.us AS t_us, f.us AS f_us, f.value AS f_value
+         FROM e t JOIN e f
+           ON t.user_id = f.user_id
+          AND f.us > t.us AND f.us <= t.us + 3600000000
+         WHERE t.event_type = 'click' AND f.event_type = 'purchase'""")((s, dir) =>
+      Streams.followWithinAvailableNow(s, dir).map(_
+        .select(col("user_id"), col("t_id"), col("f_id"),
+          expr("unix_micros(t_ts)").as("t_us"),
+          expr("unix_micros(f_ts)").as("f_us"), col("f_value")))),
+    // true RANGE frame (time-valued bounds, not row counts): trailing
+    // 1-hour per-user sums on epoch-µs integer time
+    gate("q_range_window",
       """WITH e AS (
            SELECT event_id, user_id, value,
                   epoch_us(cast(ts as timestamp)) AS us
@@ -2269,83 +1452,136 @@ object SparkEntry {
                 count(*) OVER (PARTITION BY user_id ORDER BY us
                   RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
                   AS hour_n
-         FROM e""",
-
-    "q_grouping_sets" ->
-      """WITH e AS (
+         FROM e""")((s, dir) => Queries.rangeWindow(s, dir)),
+    // DAU + trailing-7-day rolling distinct users (rolling COUNT
+    // DISTINCT doesn't decompose over a window frame — the bounded
+    // day-list range join is the relational shape)
+    gate("q_rolling_active_users",
+      """WITH du AS (
+           SELECT DISTINCT cast(date_trunc('day', ts) as date) AS d, user_id
+           FROM events),
+         days AS (SELECT DISTINCT d AS day FROM du),
+         dau AS (SELECT d AS day, cast(count(*) as bigint) AS dau
+                 FROM du GROUP BY d),
+         rolling AS (
+           SELECT days.day, cast(count(DISTINCT du.user_id) as bigint)
+                    AS active_7d
+           FROM days JOIN du
+             ON du.d > days.day - 7 AND du.d <= days.day
+           GROUP BY days.day)
+         SELECT cast(dau.day as varchar) AS day, dau.dau, rolling.active_7d
+         FROM dau JOIN rolling USING (day)""")((s, dir) =>
+      Queries.rollingActiveUsers(s, dir)),
+    // ordered funnel: view -> click -> purchase, each stage strictly
+    // after the user's earliest completion of the previous one
+    gate("q_funnel", Queries.funnelSql())((s, dir) => Queries.funnel(s, dir)),
+    // cohort retention triangle: first-activity week x weeks-since,
+    // integer-µs week offsets
+    gate("q_retention_cohorts",
+      Queries.retentionCohortsSql())((s, dir) =>
+      Queries.retentionCohorts(s, dir)),
+    // fixed-bin histogram over events.value: data-derived bounds,
+    // integer bin ids, empty bins zero-filled
+    gate("q_histogram",
+      """WITH b AS (
+           SELECT min(value) AS lo, max(value) AS hi FROM events),
+         binned AS (
+           SELECT CASE WHEN b.hi = b.lo THEN 0
+                  ELSE least(cast(floor((value - b.lo) / ((b.hi - b.lo) / 20))
+                    as bigint), 19) END AS bin,
+                  count(*) AS n
+           FROM events, b WHERE value IS NOT NULL GROUP BY 1),
+         template AS (SELECT unnest(range(0, 20)) AS bin)
+         SELECT cast(template.bin as int) AS bin,
+                cast(coalesce(binned.n, 0) as bigint) AS n
+         FROM template LEFT JOIN binned USING (bin)""")((s, dir) =>
+      Queries.histogram(s, dir)),
+    // schema-on-read JSON extraction: props parsed once to a typed
+    // struct, extracted value aggregated relationally
+    gate("q_json_extract",
+      // Oracle mirrors Spark's from_json NULL-tolerance: malformed props
+      // and non-integer k become NULL (json_valid guard + try_cast)
+      // instead of erroring, so the gate survives dirty future testdata.
+      """WITH k AS (
            SELECT event_type,
-                  cast(cast(date_trunc('day', ts) as date) as varchar) AS day,
-                  value
+                  CASE WHEN json_valid(props)
+                       THEN try_cast(props->>'k' as int) END AS kv
            FROM events)
-         SELECT event_type, day,
-                round(sum(value), 4) AS sum_value, count(*) AS n
-         FROM e
-         GROUP BY GROUPING SETS ((event_type, day), (event_type), (day))""",
-
-    "q_moving_avg" ->
-      """WITH daily AS (
-           SELECT cast(date_trunc('day', ts) as date) AS day, event_type,
-                  round(sum(value), 4) AS day_value
-           FROM events GROUP BY 1, 2)
-         SELECT cast(day as varchar) AS day, event_type, day_value,
-                round(avg(day_value) OVER (PARTITION BY event_type ORDER BY day
-                  ROWS BETWEEN 6 PRECEDING AND CURRENT ROW), 4) AS ma7
-         FROM daily""",
-
-    "q_above_class_avg" ->
-      """SELECT o_orderkey, o_orderpriority, o_totalprice, class_avg
-         FROM (
-           SELECT o_orderkey, o_orderpriority, o_totalprice,
-                  round(avg(o_totalprice) OVER (PARTITION BY o_orderpriority), 4)
-                    AS class_avg
-           FROM orders)
-         WHERE o_totalprice > class_avg""",
-
-    "q_semi_anti" ->
-      """SELECT c_custkey AS entity_key, 'cust_open_order' AS tag FROM customer
-         WHERE EXISTS (SELECT 1 FROM orders
-                       WHERE o_custkey = c_custkey AND o_orderstatus = 'O')
-         UNION ALL
-         SELECT s_suppkey, 'supp_no_lineitem' FROM supplier
-         WHERE NOT EXISTS (SELECT 1 FROM lineitem WHERE l_suppkey = s_suppkey)""",
-
-    "q_events_window" ->
-      """SELECT cast(cast(date_trunc('hour', ts) as timestamp) as varchar) AS window_start,
-                event_type, count(*) AS n_events,
-                round(sum(value), 4) AS sum_value
-         FROM events GROUP BY 1, 2""",
-
-    // identical oracle to q_events_window: the streaming path must land
-    // on exactly the batch answer
-    "stream_hourly_rollup" ->
-      """SELECT cast(cast(date_trunc('hour', ts) as timestamp) as varchar) AS window_start,
-                event_type, count(*) AS n_events,
-                round(sum(value), 4) AS sum_value
-         FROM events GROUP BY 1, 2""",
-
-    // batch twin of the streaming QA monitor (HUGEINT-safe casts per the
-    // oracle pitfall rule)
-    "stream_qa_missingness" ->
-      """SELECT cast(cast(date_trunc('hour', ts) as timestamp) as varchar) AS window_start,
-                cast(sum(cast(value IS NULL as bigint)) as bigint) AS missing_value,
-                cast(sum(cast(props IS NULL as bigint)) as bigint) AS missing_props,
-                count(*) AS n_rows
-         FROM events GROUP BY 1""",
-
-    // batch self-join twin of the streaming time-bounded join
-    "stream_follow_within" ->
-      """WITH e AS (
-           SELECT event_id, user_id, event_type, value,
-                  epoch_us(cast(ts as timestamp)) AS us
-           FROM events)
-         SELECT t.user_id, t.event_id AS t_id, f.event_id AS f_id,
-                t.us AS t_us, f.us AS f_us, f.value AS f_value
-         FROM e t JOIN e f
-           ON t.user_id = f.user_id
-          AND f.us > t.us AND f.us <= t.us + 3600000000
-         WHERE t.event_type = 'click' AND f.event_type = 'purchase'""",
-
-    "q_interval_join" ->
+         SELECT event_type,
+                count(*) AS n,
+                cast(count(kv) as bigint) AS n_with_k,
+                cast(sum(kv) as bigint) AS sum_k,
+                min(kv) AS min_k,
+                max(kv) AS max_k
+         FROM k GROUP BY event_type""")((s, dir) =>
+      Queries.jsonExtract(s, dir)),
+    // PK uniqueness audit over two candidate keys: the composite key
+    // is unique, the bare orderkey shows real multiplicity — both
+    // regimes of the classic load QA check in one gate
+    gate("etl_pk_check",
+      """WITH c1 AS (
+           SELECT count(*) AS c FROM lineitem
+           GROUP BY l_orderkey, l_linenumber),
+         c2 AS (
+           SELECT count(*) AS c FROM lineitem GROUP BY l_orderkey),
+         s1 AS (
+           SELECT 'lineitem(l_orderkey,l_linenumber)' AS pk,
+                  cast(sum(c) as bigint) AS n_rows,
+                  cast(count(*) as bigint) AS n_keys,
+                  cast(sum(CASE WHEN c > 1 THEN 1 ELSE 0 END) as bigint)
+                    AS n_dup_keys,
+                  cast(sum(CASE WHEN c > 1 THEN c ELSE 0 END) as bigint)
+                    AS n_rows_in_dups,
+                  cast(max(c) as bigint) AS max_multiplicity
+           FROM c1),
+         s2 AS (
+           SELECT 'lineitem(l_orderkey)' AS pk,
+                  cast(sum(c) as bigint) AS n_rows,
+                  cast(count(*) as bigint) AS n_keys,
+                  cast(sum(CASE WHEN c > 1 THEN 1 ELSE 0 END) as bigint)
+                    AS n_dup_keys,
+                  cast(sum(CASE WHEN c > 1 THEN c ELSE 0 END) as bigint)
+                    AS n_rows_in_dups,
+                  cast(max(c) as bigint) AS max_multiplicity
+           FROM c2)
+         SELECT * FROM s1 UNION ALL SELECT * FROM s2""") { (s, dir) =>
+      val l = Tables(s, dir, "lineitem")
+      Etl.pkCheck(l, Seq("l_orderkey", "l_linenumber"),
+          "lineitem(l_orderkey,l_linenumber)")
+        .unionByName(Etl.pkCheck(l, Seq("l_orderkey"),
+          "lineitem(l_orderkey)"))
+    },
+    // referential-integrity coverage report over two FKs: orphans one
+    // way, unreferenced dimension rows the other
+    gate("etl_fk_coverage",
+      """WITH one AS (
+           SELECT 'orders->customer' AS fk,
+                  (SELECT cast(count(*) as bigint) FROM orders) AS n_fact,
+                  (SELECT cast(count(*) as bigint) FROM orders o
+                   WHERE NOT EXISTS (SELECT 1 FROM customer c
+                     WHERE c.c_custkey = o.o_custkey)) AS n_orphans,
+                  (SELECT cast(count(*) as bigint) FROM customer) AS n_dim,
+                  (SELECT cast(count(*) as bigint) FROM customer c
+                   WHERE NOT EXISTS (SELECT 1 FROM orders o
+                     WHERE o.o_custkey = c.c_custkey)) AS n_dim_unreferenced),
+         two AS (
+           SELECT 'lineitem->orders' AS fk,
+                  (SELECT cast(count(*) as bigint) FROM lineitem) AS n_fact,
+                  (SELECT cast(count(*) as bigint) FROM lineitem l
+                   WHERE NOT EXISTS (SELECT 1 FROM orders o
+                     WHERE o.o_orderkey = l.l_orderkey)) AS n_orphans,
+                  (SELECT cast(count(*) as bigint) FROM orders) AS n_dim,
+                  (SELECT cast(count(*) as bigint) FROM orders o
+                   WHERE NOT EXISTS (SELECT 1 FROM lineitem l
+                     WHERE l.l_orderkey = o.o_orderkey)) AS n_dim_unreferenced)
+         SELECT * FROM one UNION ALL SELECT * FROM two""") { (s, dir) =>
+      Etl.fkCoverage(Tables(s, dir, "orders"), Tables(s, dir, "customer"),
+        "o_custkey", "c_custkey", "orders->customer")
+        .unionByName(Etl.fkCoverage(Tables(s, dir, "lineitem"),
+          Tables(s, dir, "orders"), "l_orderkey", "o_orderkey",
+          "lineitem->orders"))
+    },
+    gate("q_interval_join",
       """WITH e AS (
            SELECT event_id, epoch_us(cast(ts as timestamp)) // 1000 AS ms
            FROM events)
@@ -2353,17 +1589,18 @@ object SparkEntry {
          FROM e a JOIN e b
            ON b.ms BETWEEN a.ms - 60000 AND a.ms + 60000
           AND a.event_id <> b.event_id
-         GROUP BY 1""",
-
-    "q_asof_join" -> asofOracle,
-
-    // identical oracle: the fused physical operator must land on
-    // exactly the window form's answer
-    "q_asof_join_fused" -> asofOracle,
-
-    // DuckDB native ASOF with a carried build column (build side
-    // deduped per (user, ms) so the payload is engine-deterministic)
-    "q_asof_join_payload" ->
+         GROUP BY 1""")((s, dir) => Queries.intervalJoin(s, dir)),
+    gate("q_asof_join", asofOracle)((s, dir) => Queries.asofJoin(s, dir)),
+    // same query through the tier-(c) fused physical operator
+    // (graft.plans.AsofJoinExec), gated against the same ASOF oracle
+    gate("q_asof_join_fused",
+      // identical oracle: the fused physical operator must land on
+      // exactly the window form's answer
+      asofOracle)((s, dir) => Queries.asofJoinFused(s, dir)),
+    // the fused operator's carried-PAYLOAD path, tie-deduped build side
+    gate("q_asof_join_payload",
+      // DuckDB native ASOF with a carried build column (build side
+      // deduped per (user, ms) so the payload is engine-deterministic)
       """WITH p AS (
            SELECT event_id, user_id,
                   epoch_us(cast(ts as timestamp)) // 1000 AS ms
@@ -2375,22 +1612,62 @@ object SparkEntry {
            FROM events WHERE event_type = 'click'
            GROUP BY user_id, cms)
          SELECT p.event_id, p.ms - c.cms AS ms_since_click, c.click_id
-         FROM p ASOF JOIN c ON p.user_id = c.user_id AND p.ms >= c.cms""",
-
-    // identical oracle: the streaming as-of path must land on exactly
-    // the batch answer
-    "stream_asof_enrich" -> asofOracle,
-
-    "q_sessionize" -> sessionizeOracle,
-
-    // identical oracle: the streaming stateful path must land on exactly
-    // the batch answer
-    "stream_sessionize" -> sessionizeOracle,
-
-    // NULL-text contract (all exact-family oracles): each null-text doc
-    // is a singleton class via the 'N'||id surrogate — mirrors
-    // Dedup.exact exactly; 'N' cannot collide with 32-hex md5 output
-    "dedup_cluster_stats" ->
+         FROM p ASOF JOIN c ON p.user_id = c.user_id AND p.ms >= c.cms""")((s, dir) =>
+      Queries.asofJoinPayload(s, dir)),
+    // the O(1)-state streaming as-of enrichment driven end-to-end,
+    // gated against the SAME ASOF JOIN oracle as the batch twin
+    streamGate("stream_asof_enrich",
+      // identical oracle: the streaming as-of path must land on exactly
+      // the batch answer
+      asofOracle)((s, dir) =>
+      Streams.asofEnrichAvailableNow(s, dir).map(_
+        .select(col("event_id"), col("ms_since_click")))),
+    // session bounds gated as epoch-µs bigints: cross-engine timestamp
+    // STRING rendering of fractional seconds is not contract-stable,
+    // integer time is (SURVEY §8a integer-time rule)
+    gate("q_sessionize", sessionizeOracle)((s, dir) =>
+      Streams.sessionizeBatch(Tables(s, dir, "events"), 30)
+        .withColumn("session_start", expr("unix_micros(session_start)"))
+        .withColumn("session_end", expr("unix_micros(session_end)"))),
+    // ---- D. LLM-data-pipeline ----
+    gate("dedup_exact_docs",
+      """WITH h AS (SELECT doc_id, md5(text) AS text_hash,
+                           coalesce(md5(text), 'N' || doc_id) AS k
+                    FROM documents),
+            c AS (SELECT k, min(doc_id) AS keep_id, count(*) AS n_copies
+                  FROM h GROUP BY k)
+         SELECT doc_id, h.text_hash, keep_id, n_copies,
+                cast(doc_id <> keep_id as int) AS is_duplicate
+         FROM h JOIN c USING (k)""")((s, dir) =>
+      Dedup.exact(Tables(s, dir, "documents"))),
+    // F14 oracle-visible end to end: the sf documents staged once per
+    // JVM as .jsonl.zst shards (the crawl-dump ingest layout), read
+    // back through readJsonl + graft's ZstdCodec, exact dedup over the
+    // zst-read frame vs the UNCHANGED parquet oracle — equality proves
+    // the compressed ingest path is content-lossless
+    gate("dedup_exact_zst",
+      // the zst-ingest gate's oracle IS dedup_exact's, over the parquet
+      // table — the query's input went parquet → jsonl.zst → read-back,
+      // so hash equality certifies the compressed round trip
+      """WITH h AS (SELECT doc_id, md5(text) AS text_hash,
+                           coalesce(md5(text), 'N' || doc_id) AS k
+                    FROM documents),
+            c AS (SELECT k, min(doc_id) AS keep_id, count(*) AS n_copies
+                  FROM h GROUP BY k)
+         SELECT doc_id, h.text_hash, keep_id, n_copies,
+                cast(doc_id <> keep_id as int) AS is_duplicate
+         FROM h JOIN c USING (k)""")((s, dir) => {
+      import org.apache.spark.sql.types._
+      Dedup.exact(graft.sources.Sources.readJsonl(s, zstDocsDir(s, dir),
+        StructType(Seq(StructField("doc_id", LongType),
+          StructField("text", StringType)))))
+    }),
+    // cluster-size histogram: the distribution that prices every
+    // pair-emitting dedup stage (pair space is sigma cluster^2)
+    gate("dedup_cluster_stats",
+      // NULL-text contract (all exact-family oracles): each null-text doc
+      // is a singleton class via the 'N'||id surrogate — mirrors
+      // Dedup.exact exactly; 'N' cannot collide with 32-hex md5 output
       """WITH c AS (
            SELECT md5(text) AS text_hash, cast(count(*) as bigint) AS cnt
            FROM documents GROUP BY text_hash)
@@ -2400,32 +1677,158 @@ object SparkEntry {
                         AS cluster_size,
                       CASE WHEN text_hash IS NULL THEN cnt ELSE 1 END AS w
                FROM c)
-         GROUP BY cluster_size""",
-
-    "dedup_exact_docs" ->
-      """WITH h AS (SELECT doc_id, md5(text) AS text_hash,
-                           coalesce(md5(text), 'N' || doc_id) AS k
+         GROUP BY cluster_size""")((s, dir) =>
+      Dedup.clusterSizeStats(Tables(s, dir, "documents"))),
+    gate("dedup_exact_normalized",
+      s"""WITH h AS (SELECT doc_id, md5(${Text.normalizeSql("text")}) AS text_hash,
+                           coalesce(md5(${Text.normalizeSql("text")}),
+                                    'N' || doc_id) AS k
                     FROM documents),
             c AS (SELECT k, min(doc_id) AS keep_id, count(*) AS n_copies
                   FROM h GROUP BY k)
          SELECT doc_id, h.text_hash, keep_id, n_copies,
                 cast(doc_id <> keep_id as int) AS is_duplicate
-         FROM h JOIN c USING (k)""",
-
-    // the zst-ingest gate's oracle IS dedup_exact's, over the parquet
-    // table — the query's input went parquet → jsonl.zst → read-back,
-    // so hash equality certifies the compressed round trip
-    "dedup_exact_zst" ->
-      """WITH h AS (SELECT doc_id, md5(text) AS text_hash,
-                           coalesce(md5(text), 'N' || doc_id) AS k
-                    FROM documents),
-            c AS (SELECT k, min(doc_id) AS keep_id, count(*) AS n_copies
-                  FROM h GROUP BY k)
-         SELECT doc_id, h.text_hash, keep_id, n_copies,
-                cast(doc_id <> keep_id as int) AS is_duplicate
-         FROM h JOIN c USING (k)""",
-
-    "dedup_ngram_jaccard" ->
+         FROM h JOIN c USING (k)""")((s, dir) =>
+      Dedup.exactNormalized(Tables(s, dir, "documents"))),
+    gate("dedup_corpus_clean", corpusCleanOracle)((s, dir) =>
+      Dedup.cleanCorpus(Tables(s, dir, "documents")).select("doc_id", "lang")),
+    // the LLM-corpus pipeline gated as ONE composed query:
+    // clean (exact + near dedup, keep-min survivor) → decontaminate
+    // (drop docs sharing an 8-gram with the planted eval set) → quality
+    // screen (corpus_filter's keep rule). Every stage is separately
+    // gated; this proves they COMPOSE — column contracts line up and
+    // each stage's filter is applied to the previous stage's survivors.
+    // Output: the curated corpus manifest (id, source, token count).
+    gate("corpus_curate",
+      // stage oracles composed exactly as the Spark side composes the
+      // operators: every screen is per-doc, so computing each over the
+      // full table and intersecting equals computing over the previous
+      // stage's survivors
+      s"""WITH survivors AS ($corpusCleanOracle),
+         contam AS (
+           SELECT doc_id FROM (${Text.contaminationSql()})
+           WHERE contaminated = 1),
+         quality AS (
+           SELECT doc_id FROM ($corpusFilterOracle) WHERE keep = 1)
+         SELECT d.doc_id, d.source,
+                cast(len(string_split_regex(trim(lower(d.text)), '${Text.wsRe}')) as int)
+                  AS n_tokens
+         FROM documents d
+         JOIN survivors s ON d.doc_id = s.doc_id
+         JOIN quality q ON d.doc_id = q.doc_id
+         WHERE d.doc_id NOT IN (SELECT doc_id FROM contam)""")((s, dir) => {
+      val docs = Tables(s, dir, "documents")
+      val bench = docs.filter(expr("doc_id % 50 = 0"))
+      // materialize-once discipline between stages: each survivor frame
+      // has MULTIPLE consumers (the next stage's screens scan it 2-3
+      // times), and without the cut the clean stage's propose-verify
+      // dedup lineage re-runs per consumer (measured: 7 scans / 37
+      // exchanges / 5.2 s → the checkpointed shape below). A deployment
+      // writes each stage's survivor table; the cut is that table
+      // (§5 cluster-loss contract: staged parquet — class (c) — there).
+      val cleaned = Dedup.cleanCorpus(docs).cutLineage()
+      val decontam = cleaned.join(
+        Text.contamination(cleaned, bench)
+          .filter(col("contaminated") === 1).select(col("doc_id")),
+        Seq("doc_id"), "left_anti").cutLineage()
+      decontam.join(
+        Text.corpusFilter(decontam).filter(col("keep") === 1)
+          .select(col("doc_id")),
+        Seq("doc_id"), "left_semi")
+        .select(col("doc_id"), col("source"),
+          size(Text.tokens(col("text"))).as("n_tokens"))
+    }),
+    gate("text_pii_scrub", Text.piiScrubSql())((s, dir) =>
+      Text.piiScrub(Tables(s, dir, "documents"))
+        .select("doc_id", "n_emails", "n_urls", "n_phones",
+          "scrubbed_hash", "scrub_len")),
+    gate("sample_stratified",
+      s"""SELECT doc_id, lang FROM documents
+         WHERE ${graft.etl.Sampling.stratifiedSampleSql("lang", "doc_id",
+        Map("en" -> 0.25, "de" -> 1.0), defaultRate = 0.5)}""")((s, dir) =>
+      graft.etl.Sampling.stratifiedHashSample(
+        Tables(s, dir, "documents"), "lang", "doc_id",
+        Map("en" -> 0.25, "de" -> 1.0), defaultRate = 0.5)
+        .select("doc_id", "lang")),
+    gate("split_assign",
+      s"""SELECT doc_id,
+                ${graft.etl.Sampling.hashSplitSql("doc_id",
+        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))} AS split
+         FROM documents""")((s, dir) =>
+      graft.etl.Sampling.hashSplit(Tables(s, dir, "documents"), "doc_id",
+        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
+        .select("doc_id", "split")),
+    // exact-k per-group deterministic sample (25 docs per language) via
+    // the topk_by bounded-heap aggregate in content-hash order
+    gate("sample_group_topk",
+      graft.etl.Sampling.groupSampleSql("documents", "lang", "doc_id", 25))((s, dir) =>
+      graft.etl.Sampling.groupSample(Tables(s, dir, "documents"),
+        "lang", "doc_id", k = 25)),
+    // domain-mix rebalance: downsample sources to a 50/30/20 target mix
+    // (src0 is the bottleneck at rate 1.0; others thinned to match)
+    gate("sample_mix_rebalance", graft.etl.Sampling.mixRebalanceSql(
+      "documents", "source", "doc_id", mixTargets, "d.doc_id, d.source"))((s, dir) =>
+      graft.etl.Sampling.mixRebalance(Tables(s, dir, "documents"),
+        "source", "doc_id", mixTargets)
+        .select("doc_id", "source")),
+    // epochs-based upsampling: the complement of mix_rebalance's
+    // no-upsampling contract (repeat scarce sources N times)
+    // deterministic global shuffle: reproducible (shard, pos) training
+    // order from the content hash — stable under reruns and appends
+    gate("corpus_shuffle", graft.etl.Sampling.shuffleShardsSql(
+      "documents", "doc_id", nShards = 16, selectCols = "doc_id, source"))((s, dir) =>
+      graft.etl.Sampling.shuffleShards(
+        Tables(s, dir, "documents").select("doc_id", "source"), "doc_id",
+        nShards = 16)),
+    // source-interleaved training-stream order: sort keys (shard,
+    // rank, src_idx) cycle sources round-robin — no dense global
+    // position (that would be a total-order window at 100 TB)
+    gate("corpus_interleave", graft.etl.Sampling.interleaveSourcesSql(
+      "documents", "source", "doc_id", nShards = 16,
+      selectCols = "doc_id, source"))((s, dir) =>
+      graft.etl.Sampling.interleaveSources(
+        Tables(s, dir, "documents").select("doc_id", "source"), "source",
+        "doc_id", nShards = 16)),
+    gate("sample_mix_upsample", graft.etl.Sampling.upsampleEpochsSql(
+      "documents", "source", "doc_id", upsampleFactors,
+      selectCols = "doc_id, source"))((s, dir) =>
+      graft.etl.Sampling.upsampleEpochs(Tables(s, dir, "documents"),
+        "source", "doc_id", upsampleFactors)
+        .select("doc_id", "source", "epoch")),
+    // token-budget selection: each source contributes at most 800 ws
+    // tokens, docs taken in deterministic hash order
+    gate("corpus_token_budget", graft.etl.Sampling.tokenBudgetSql(
+      "documents", "source", "doc_id", "text", budget = 800L,
+      "doc_id, source"))((s, dir) =>
+      graft.etl.Sampling.tokenBudget(Tables(s, dir, "documents"),
+        "source", "doc_id", "text", budget = 800L)
+        .select("doc_id", "source", "n_tokens")),
+    // sequence packing (concat-and-chunk): each doc's place in the
+    // packed 256-token training stream, packed per hash shard
+    gate("corpus_pack_sequences", graft.etl.Sampling.packSequencesSql(
+      "documents", "doc_id", "text", seqLen = 256, shards = 8))((s, dir) =>
+      graft.etl.Sampling.packSequences(Tables(s, dir, "documents"),
+        "doc_id", "text", seqLen = 256, shards = 8)),
+    // per-source composition report (docs / tokens / chars / ppm
+    // shares) — the mixture table every selection stage starts from
+    gate("corpus_source_stats", graft.etl.Sampling.sourceStatsSql())((s, dir) =>
+      graft.etl.Sampling.sourceStats(Tables(s, dir, "documents"))),
+    // temperature mixing (α = 0.5 via the correctly-rounded sqrt) over
+    // the SKEWED language mix (en dominates): low-resource languages
+    // keep ~everything, en thins to ~0.54 — the mT5 balancing move
+    // (`source` is deliberately NOT the stratum: it is uniform in this
+    // data, which would make the gate a pass-through)
+    gate("sample_temperature", graft.etl.Sampling.temperatureMixSql(
+      "documents", "lang", "doc_id", sqrtApplications = 1,
+      "doc_id, lang"))((s, dir) =>
+      graft.etl.Sampling.temperatureMix(Tables(s, dir, "documents"),
+        "lang", "doc_id")
+        .select("doc_id", "lang")),
+    // asymmetric containment pairs over the df-capped shingle index —
+    // catches small-doc-inside-big-doc inclusion Jaccard dedup misses
+    gate("dedup_containment", Dedup.containmentSql())((s, dir) =>
+      Dedup.containment(Tables(s, dir, "documents"))),
+    gate("dedup_ngram_jaccard",
       s"""WITH words AS (
            SELECT doc_id AS id, lang AS blk,
                   unnest(${Text.shingleSql("text", 3)}) AS w
@@ -2441,61 +1844,627 @@ object SparkEntry {
          FROM inter
          JOIN sizes sa ON id_a = sa.id
          JOIN sizes sb ON id_b = sb.id
-         WHERE round(n_common / cast(sa.n_words + sb.n_words - n_common as double), 4) >= 0.5""",
-
-    "dedup_exact_normalized" ->
-      s"""WITH h AS (SELECT doc_id, md5(${Text.normalizeSql("text")}) AS text_hash,
-                           coalesce(md5(${Text.normalizeSql("text")}),
-                                    'N' || doc_id) AS k
-                    FROM documents),
-            c AS (SELECT k, min(doc_id) AS keep_id, count(*) AS n_copies
-                  FROM h GROUP BY k)
-         SELECT doc_id, h.text_hash, keep_id, n_copies,
-                cast(doc_id <> keep_id as int) AS is_duplicate
-         FROM h JOIN c USING (k)""",
-
-    "text_pii_scrub" -> Text.piiScrubSql(),
-
-    "dedup_corpus_clean" -> corpusCleanOracle,
-
-    // stage oracles composed exactly as the Spark side composes the
-    // operators: every screen is per-doc, so computing each over the
-    // full table and intersecting equals computing over the previous
-    // stage's survivors
-    "corpus_curate" ->
-      s"""WITH survivors AS ($corpusCleanOracle),
-         contam AS (
-           SELECT doc_id FROM (${Text.contaminationSql()})
-           WHERE contaminated = 1),
-         quality AS (
-           SELECT doc_id FROM ($corpusFilterOracle) WHERE keep = 1)
-         SELECT d.doc_id, d.source,
-                cast(len(string_split_regex(trim(lower(d.text)), '${Text.wsRe}')) as int)
-                  AS n_tokens
-         FROM documents d
-         JOIN survivors s ON d.doc_id = s.doc_id
-         JOIN quality q ON d.doc_id = q.doc_id
-         WHERE d.doc_id NOT IN (SELECT doc_id FROM contam)""",
-
-    "mm_meta_only" ->
-      """SELECT doc_id,
-                'application/x-fake-' || source AS mime,
-                cast(octet_length(encode(text)) as int) AS payload_len
-         FROM documents""",
-
-    // The decode STUB's features are deterministic byte arithmetic over
-    // the UTF-8 payload — expressible in DuckDB because the corpus is
-    // pure ASCII (asserted by the octet_length guard in the first CTE:
-    // a future non-ASCII doc makes ascii()≠byte and this oracle must
-    // fail loudly, not drift silently). The trip-wire is DuckDB's
-    // error() — division 1/0 does NOT raise in DuckDB (returns NULL),
-    // so an arithmetic guard would be dead code (ADVICE r11, verified
-    // empirically against the installed duckdb). The outer WHERE must
-    // REFERENCE guard.ok: an unreferenced cross-join column is pruned
-    // by DuckDB's optimizer and the CASE never evaluates (also
-    // verified — the bare cross join does not trip on a hostile doc).
-    // list_sum may return NULL for empty lists, hence the coalesce.
-    "mm_binary_meta" ->
+         WHERE round(n_common / cast(sa.n_words + sb.n_words - n_common as double), 4) >= 0.5""")((s, dir) =>
+      Dedup.ngramJaccard(Tables(s, dir, "documents"), threshold = 0.5)),
+    gate("dedup_minhash_lsh", MinHashSpec.duckdbSql())((s, dir) =>
+      MinHashSpec.candidatePairs(Tables(s, dir, "documents"))),
+    gate("dedup_lsh_jaccard", MinHashSpec.duckdbJaccardSql())((s, dir) =>
+      Dedup.jaccardOnCandidates(Tables(s, dir, "documents"), threshold = 0.5)),
+    // continuous-crawl dedup: a deterministic 20% "incoming" batch
+    // screened (exact + LSH-near) against the 80% "corpus" side only —
+    // the pair space is incoming-vs-corpus candidates, never corpus²
+    gate("dedup_incremental", MinHashSpec.duckdbIncrementalSql(
+      splitCaseSql = graft.etl.Sampling.hashSplitSql("doc_id", incrementalSplit)))((s, dir) => {
+      val split = graft.etl.Sampling.hashSplit(Tables(s, dir, "documents"),
+        "doc_id", incrementalSplit)
+      Dedup.incremental(
+        split.filter(col("split") === "corpus").drop("split"),
+        split.filter(col("split") === "incoming").drop("split"))
+    }),
+    // the SAME screen via the production BUCKETED-index layout: the
+    // persisted index is staged once per JVM as bucketed tables
+    // (hashes by content_hash, bands by (band, bsig) — the screens'
+    // join keys), re-attached in-session, and screened against — gated
+    // on the identical rebuild oracle as dedup_incremental, so a green
+    // row proves the layout changes the PLAN (no index-side Exchange;
+    // the TextDedupSpec plan test pins it), never the answer
+    gate("dedup_incremental_bucketed",
+      // same semantics as dedup_incremental — the bucketed layout may
+      // only change the plan, so the oracle is the identical rebuild SQL
+      MinHashSpec.duckdbIncrementalSql(
+      splitCaseSql = graft.etl.Sampling.hashSplitSql("doc_id", incrementalSplit)))((s, dir) => {
+      val split = graft.etl.Sampling.hashSplit(Tables(s, dir, "documents"),
+        "doc_id", incrementalSplit)
+      val idxDir = bucketedIndexDir(s, dir)
+      Dedup.incrementalFromIndex(
+        split.filter(col("split") === "corpus").drop("split"),
+        Dedup.loadIndexBucketed(s, idxDir,
+          tablePrefix = bucketedIndexPrefix(dir)),
+        split.filter(col("split") === "incoming").drop("split"))
+    }),
+    // the exact screen with a broadcast Bloom pre-filter: definite-new
+    // docs never reach the verification join; the oracle is plain
+    // membership, so the gate proves fp-verify restores exactness.
+    // Incoming = the 20% split RESUBMITTED against the full corpus with
+    // odd ids salted — the corpora hold no exact dups, so a disjoint
+    // split would gate a constant-zero flag (vacuous); this shape
+    // exercises both flag classes at every SF
+    gate("dedup_bloom_screen", Dedup.bloomScreenSql(
+      splitCaseSql = graft.etl.Sampling.hashSplitSql("doc_id", incrementalSplit)))((s, dir) => {
+      val docs = Tables(s, dir, "documents")
+      val incoming = graft.etl.Sampling.hashSplit(docs, "doc_id", incrementalSplit)
+        .filter(col("split") === "incoming")
+        .select(col("doc_id"),
+          when(col("doc_id") % 2 === 0, col("text"))
+            .otherwise(concat(col("text"), lit(" resubmission salt")))
+            .as("text"))
+      // nShards=4 drives the past-the-cap SHARDED screen end to end
+      // against the plain-membership oracle (production sizes shards as
+      // ⌈n/5e7⌉; the gate forces >1 so the per-row shard probe, not just
+      // the single-filter path, is what the oracle proves exact)
+      Dedup.exactScreenBloom(Dedup.corpusHashes(docs), incoming, nShards = 4)
+    }),
+    // the index-MAINTENANCE loop: batch 1 screened against the corpus
+    // index, kept docs merged in, batch 2 screened against the merged
+    // index — the oracle re-derives corpus 2 from scratch, so equality
+    // proves merge == rebuild
+    gate("dedup_incremental_loop", MinHashSpec.duckdbIncrementalLoopSql(
+      splitCaseSql = graft.etl.Sampling.hashSplitSql("doc_id", incrementalLoopSplit)))((s, dir) => {
+      val split = graft.etl.Sampling.hashSplit(Tables(s, dir, "documents"),
+        "doc_id", incrementalLoopSplit)
+      def part(p: String) = split.filter(col("split") === p).drop("split")
+      Dedup.incrementalLoop(part("corpus"),
+        Seq("b1" -> part("b1"), "b2" -> part("b2")))
+    }),
+    // the SAME loop via the production LOADED-index path: the corpus
+    // index is persisted to parquet out-of-band (once per JVM) and
+    // incrementalLoopFrom starts from the read-back frames — gated
+    // against the identical rebuild-from-scratch oracle, so a green
+    // row proves the loaded index, not just the in-query build, is
+    // oracle-exact (merge == rebuild through a parquet round-trip)
+    gate("dedup_incremental_prestaged",
+      // identical oracle: the prestaged gate differs ONLY in where the
+      // initial index comes from (parquet load vs in-query build), and
+      // the oracle rebuilds from scratch either way
+      MinHashSpec.duckdbIncrementalLoopSql(
+      splitCaseSql = graft.etl.Sampling.hashSplitSql("doc_id", incrementalLoopSplit)))((s, dir) => {
+      val split = graft.etl.Sampling.hashSplit(Tables(s, dir, "documents"),
+        "doc_id", incrementalLoopSplit)
+      def part(p: String) = split.filter(col("split") === p).drop("split")
+      val idxDir = prestagedLoopIndexDir(s, dir)
+      // load ONCE into resident blocks before looping — the
+      // incrementalLoopFrom contract ("pass per-call checkpoints"):
+      // raw parquet frames would sit as scan leaves in every index
+      // reference inside the loop, re-read and re-planned per use
+      // (measured 6.9-7.1 s both reps before this cut). With the cut,
+      // the healthy-box bench shows the load path's saving live:
+      // 4.77 s vs the in-query-build gate's 5.79 at sf0.1 — the
+      // ~1 s delta IS the corpus signature build the loaded index
+      // skips, and it grows with corpus size while load cost grows
+      // only with index size (~1/40th). The pure-loop floor with
+      // corpus prestaged too is the LoopVarianceProbe prestage arm
+      // (3.9-4.0 s ±2%; the probe is deleted, source at commit d5abd67).
+      Dedup.incrementalLoopFrom(part("corpus"),
+        // §5 cluster-loss contract: the index lives in parquet (class
+        // (c)); the cut only pins the loaded snapshot for this run
+        graft.dedup.DedupIndex(
+          s.read.parquet(s"$idxDir/hashes").cutLineage(),
+          s.read.parquet(s"$idxDir/bands").cutLineage()),
+        Seq("b1" -> part("b1"), "b2" -> part("b2")))
+    }),
+    // streaming MinHash-LSH candidate generation driven end-to-end over
+    // a synthesized-arrival-order documents replay, gated against the
+    // batch candidate pairs
+    streamGate("stream_lsh_candidates",
+      // pair set of the batch candidate proposer — the streaming bucket
+      // state must propose exactly these pairs
+      s"SELECT DISTINCT doc_a, doc_b FROM (${MinHashSpec.duckdbSql()})")((s, dir) =>
+      Streams.lshCandidatesAvailableNow(s, dir)),
+    // the index-MAINTENANCE loop as a STREAM (r14): the loop carve's b1
+    // and b2 arrive as micro-batches, each screened against the current
+    // index — initial version = the persisted BUCKETED layout, loaded —
+    // kept docs merged in foreachBatch before the next batch fires.
+    // Gated on dedup_incremental_loop's rebuild-from-scratch oracle
+    // VERBATIM: merge == rebuild through the streaming runtime.
+    streamGate("stream_incremental_dedup",
+      // identical oracle: the stream gate replays the SAME b1/b2 carve
+      // through foreachBatch with the same per-batch step — the rebuild
+      // contract does not care which runtime drove the merges
+      MinHashSpec.duckdbIncrementalLoopSql(
+      splitCaseSql = graft.etl.Sampling.hashSplitSql("doc_id", incrementalLoopSplit)))((s, dir) => {
+      val split = graft.etl.Sampling.hashSplit(Tables(s, dir, "documents"),
+        "doc_id", incrementalLoopSplit)
+      def part(p: String) = split.filter(col("split") === p).drop("split")
+        .select(col("doc_id"), col("text"))
+      val in = Streams.stageBatchesReplay(s, dir,
+        "v1_incdedup", Seq("b1" -> part("b1"), "b2" -> part("b2")))
+      val idxDir = bucketedLoopIndexDir(s, dir)
+      Streams.incrementalDedupAvailableNow(s, in,
+        part("corpus"),
+        Dedup.loadIndexBucketed(s, idxDir,
+          tablePrefix = bucketedLoopIndexPrefix(dir)),
+        chunks = 2)
+    }),
+    // streaming content dedup driven end-to-end: first-seen per
+    // normalized hash over the doc_id-ordered replay == batch keep-min
+    streamGate("stream_dedup_docs",
+      // batch keep-min-doc_id twin of the streaming first-seen dedup
+      streamDedupOracle)((s, dir) =>
+      Streams.dedupDocsAvailableNow(s, dir)),
+    // the same end-to-end run with the middle micro-batch's sink invoked
+    // TWICE (simulated post-failure retry): the idempotent sink's
+    // exactly-once property gated against the unchanged oracle — an
+    // append sink would double that batch's rows and fail the hash
+    streamGate("stream_sink_replay",
+      // the SAME oracle value by construction: the retried batch must
+      // change NOTHING in the sink
+      streamDedupOracle)((s, dir) =>
+      Streams.dedupDocsSinkReplayAvailableNow(s, dir)),
+    // stateless streaming decontamination: every arriving doc screened
+    // per-row against the broadcast eval-set fingerprints — zero
+    // streaming state (the suite's one statefulOps=0 gate)
+    streamGate("stream_contamination",
+      // stateless stream screen vs the batch SQL; distinct-fp count is the
+      // array_intersect semantics (see Text.contaminationSql)
+      Text.contaminationSql(distinctFps = true))((s, dir) =>
+      Streams.contaminationAvailableNow(s, dir)),
+    // stateless streaming MODEL INFERENCE: the k-means quantizer
+    // trained out-of-band on the batch corpus, every arriving vector
+    // labeled per-row (the embedding-pipeline twin of the
+    // contamination screen; second statefulOps=0 gate) — gated on the
+    // SAME trained-literal oracle as emb_kmeans, so batch and stream
+    // scoring provably agree
+    trainedGate("stream_kmeans")((s, dir) => {
+      val cents = Similarity.ivfCentroids(
+        Tables(s, dir, "embeddings"), k = 16, iters = 5)
+      val run = Streams.kmeansAssignAvailableNow(s, dir, cents)
+      GateRun(run.frame, stream = Some(run.stats),
+        oracle = Some(Similarity.kmeansTrainedDuckdbSql(cents)))
+    }),
+    // pairs → clusters: transitive closure of the verified near-dup pairs,
+    // every doc labeled with its cluster's min id (singletons label
+    // themselves)
+    gate("dedup_cc_clusters",
+      s"""WITH RECURSIVE pairs AS (
+           ${MinHashSpec.duckdbJaccardSql()}
+         ),
+         edges AS (
+           SELECT doc_a AS src, doc_b AS dst FROM pairs
+           UNION ALL
+           SELECT doc_b AS src, doc_a AS dst FROM pairs
+         ),
+         walk AS (
+           SELECT DISTINCT src AS id, src AS lbl FROM edges
+           UNION
+           SELECT e.dst AS id, w.lbl AS lbl
+           FROM walk w JOIN edges e ON e.src = w.id
+         ),
+         cc AS (SELECT id, min(lbl) AS cluster FROM walk GROUP BY 1)
+         SELECT d.doc_id, coalesce(cc.cluster, d.doc_id) AS cluster
+         FROM documents d LEFT JOIN cc ON d.doc_id = cc.id""")((s, dir) => {
+      val docs = Tables(s, dir, "documents")
+      val pairs = Dedup.jaccardOnCandidates(docs, threshold = 0.5)
+      val cc = Dedup.connectedComponents(pairs)
+      docs.join(cc, docs("doc_id") === cc("id"), "left")
+        .select(docs("doc_id"),
+          coalesce(cc("cluster"), docs("doc_id")).as("cluster"))
+    }),
+    // quality-aware survivor selection: keep the BEST-quality member of
+    // each near-dup cluster (cleanCorpus's keep-min-id is the baseline)
+    gate("dedup_keep_best",
+      // connected components as a recursive CTE: walk(id, lbl) enumerates
+      // every (node, reachable-label) pair over the undirected pair edges
+      // (UNION dedups states, so the recursion terminates); min(lbl) per id
+      // is the component minimum — exactly what the Spark label propagation
+      // converges to
+      Dedup.keepBestSql(threshold = 0.5))((s, dir) =>
+      Dedup.keepBest(Tables(s, dir, "documents"), threshold = 0.5)),
+    gate("dedup_simhash", SimHash.duckdbSql())((s, dir) =>
+      SimHash.fingerprints(Tables(s, dir, "documents"))),
+    // C4-style span-level dedup: every repeated 10-token span (exact,
+    // global first-occurrence keep) removed, docs re-assembled from the
+    // surviving spans
+    gate("dedup_spans", Dedup.spanDedupSql())((s, dir) =>
+      Dedup.spanDedup(Tables(s, dir, "documents"))),
+    // df-threshold boilerplate removal: spans occurring in >2 distinct
+    // docs are dropped EVERYWHERE (vs dedup_spans' first-occurrence
+    // keep) — the CCNet line-dedup recipe on token spans
+    gate("dedup_boilerplate", Dedup.boilerplateDedupSql())((s, dir) =>
+      Dedup.boilerplateDedup(Tables(s, dir, "documents"))),
+    gate("sim_cosine_topk",
+      s"""WITH p AS (SELECT vec_id AS probe_id, embedding AS pv
+                    FROM embeddings WHERE vec_id IN ($probeList)),
+            c AS (SELECT vec_id AS cand_id, embedding AS cv FROM embeddings),
+            s AS (
+              SELECT probe_id, cand_id,
+                     -- CAST to DOUBLE[]: float accumulation drifts vs the
+                     -- Spark double kernels (see Similarity.duckdbCosine)
+                     round(CASE WHEN list_dot_product(CAST(pv AS DOUBLE[]), CAST(pv AS DOUBLE[])) = 0
+                                  OR list_dot_product(CAST(cv AS DOUBLE[]), CAST(cv AS DOUBLE[])) = 0 THEN 0.0
+                           ELSE list_dot_product(CAST(pv AS DOUBLE[]), CAST(cv AS DOUBLE[])) /
+                             (sqrt(list_dot_product(CAST(pv AS DOUBLE[]), CAST(pv AS DOUBLE[]))) * sqrt(list_dot_product(CAST(cv AS DOUBLE[]), CAST(cv AS DOUBLE[]))))
+                           END, 4) AS cosine
+              FROM p, c WHERE probe_id <> cand_id)
+         SELECT probe_id, cand_id, cosine,
+                cast(row_number() OVER (PARTITION BY probe_id
+                  ORDER BY cosine DESC, cand_id) as int) AS rnk
+         FROM s
+         QUALIFY rnk <= 5""")((s, dir) =>
+      Similarity.cosineTopK(Tables(s, dir, "embeddings"), (0L until 10L), 5)),
+    gate("sim_ann_lsh",
+      Similarity.annTopKDuckdbSql((0L until 10L), 5))((s, dir) =>
+      Similarity.annTopK(Tables(s, dir, "embeddings"), (0L until 10L), 5)),
+    // the TRAINED IVF search path, oracle-gated (upgraded r8 from
+    // rows-only): the quantizer is trained with the bounded-sample
+    // driver Lloyd (deterministic), persisted + RELOADED through the
+    // save/load loop, and replayed by the oracle as
+    // cast('<Double.toString>' as double) literals — training is driver
+    // state, but its OUTPUT is a k×dim literal both engines replay
+    // bit-identically (the emb_recall_ivfpq_trained contract)
+    trainedGate("sim_ann_ivf")((s, dir) => {
+      val e = Tables(s, dir, "embeddings")
+      val trained = java.nio.file.Files
+        .createTempDirectory("graft_trained_ivf").toString
+      Similarity.saveCentroids(s,
+        Similarity.ivfCentroids(e, k = 16, iters = 5), trained)
+      val cents = Similarity.loadCentroids(s, trained)
+      deleteRecursively(new java.io.File(trained))
+      GateRun(Similarity.ivfTopK(e, (0L until 10L), 5,
+        centroids = Some(cents)), oracle = Some(
+        Similarity.ivfTrainedDuckdbSql((0L until 10L), 5, cents)))
+    }),
+    gate("sim_ann_ivf_seeded",
+      Similarity.ivfSeededDuckdbSql((0L until 10L), 5))((s, dir) =>
+      Similarity.ivfTopK(Tables(s, dir, "embeddings"), (0L until 10L), 5,
+        iters = 0)),
+    // threshold 0.4 (not the 0.95 production default): the synthetic
+    // embeddings have no true near-dups (max pairwise cosine ~0.51), and
+    // an empty result would gate nothing — 0.4 exercises blocking,
+    // pair-dedup, scoring and filtering on real output rows
+    gate("sim_near_dup",
+      Similarity.cosineNearDupDuckdbSql(threshold = 0.4))((s, dir) =>
+      Similarity.cosineNearDup(Tables(s, dir, "embeddings"), threshold = 0.4)),
+    // table-to-table kNN join: a 2% hash-carved probe table against the
+    // rest — annTopK's contract without the small-driver-list assumption
+    gate("sim_knn_join", Similarity.knnJoinDuckdbSql(
+      probeWhere = "vec_id % 50 = 0", corpusWhere = "vec_id % 50 <> 0", k = 3))((s, dir) => {
+      val e = Tables(s, dir, "embeddings")
+      Similarity.knnJoin(e.filter(col("vec_id") % 50 === 0),
+        e.filter(col("vec_id") % 50 =!= 0), k = 3)
+    }),
+    // the kNN GRAPH of the whole table (every vector's top-2 neighbors)
+    gate("sim_knn_graph", Similarity.knnJoinDuckdbSql(
+      probeWhere = "1 = 1", corpusWhere = "1 = 1", k = 2, excludeSelf = true))((s, dir) => {
+      val e = Tables(s, dir, "embeddings")
+      Similarity.knnJoin(e, e, k = 2, excludeSelf = true)
+    }),
+    // MMR diversified re-rank over the kNN shortlist: greedy
+    // relevance-minus-redundancy selection (λ=0.7, top-3 of an 8-deep
+    // shortlist) — the diversity stage between candidate generation
+    // and selection; every greedy argmax is engine-exact
+    gate("sim_mmr_rerank", Similarity.mmrRerankDuckdbSql(
+      probeWhere = "vec_id % 50 = 0", corpusWhere = "vec_id % 50 <> 0",
+      k = 3, shortlist = 8))((s, dir) => {
+      val e = Tables(s, dir, "embeddings")
+      Similarity.mmrRerank(e.filter(col("vec_id") % 50 === 0),
+        e.filter(col("vec_id") % 50 =!= 0), k = 3, shortlist = 8)
+    }),
+    // radius retrieval (FAISS range_search): everything within a cosine
+    // radius of each probe — the data-dependent-output twin of the
+    // top-k join, same bucketed candidates + exact verify
+    gate("sim_range_search", Similarity.rangeSearchDuckdbSql(
+      probeWhere = "vec_id % 50 = 0", corpusWhere = "vec_id % 50 <> 0",
+      threshold = 0.3))((s, dir) => {
+      val e = Tables(s, dir, "embeddings")
+      Similarity.rangeSearch(e.filter(col("vec_id") % 50 === 0),
+        e.filter(col("vec_id") % 50 =!= 0), threshold = 0.3)
+    }),
+    // the ANN measurement loop: bucketed kNN vs brute-force ground
+    // truth on the probe sample, per-probe recall@k — engine-exact
+    // because both rankings share the (rounded cosine DESC, id) order
+    gate("emb_recall_eval", Similarity.recallEvalDuckdbSql(
+      probeWhere = "vec_id % 50 = 0", corpusWhere = "vec_id % 50 <> 0",
+      k = 5))((s, dir) => {
+      val e = Tables(s, dir, "embeddings")
+      Similarity.recallEval(e.filter(col("vec_id") % 50 === 0),
+        e.filter(col("vec_id") % 50 =!= 0), k = 5)
+    }),
+    // recall of the PRODUCTION index (seeded IVFPQ) vs exact-L2 ground
+    // truth — the deployment tuning number for (kc, nprobe, m, k)
+    gate("emb_recall_ivfpq", Similarity.recallIvfPqDuckdbSql(
+      probeWhere = "vec_id % 50 = 0", corpusWhere = "vec_id % 50 <> 0",
+      topK = 5))((s, dir) => {
+      val e = Tables(s, dir, "embeddings")
+      Similarity.recallIvfPq(e.filter(col("vec_id") % 50 === 0),
+        e.filter(col("vec_id") % 50 =!= 0), topK = 5)
+    }),
+    // recall of the TRAINED-AND-TUNED production index — the gated
+    // counterpart of emb_recall_ivfpq's untrained 0.18@5, closing the
+    // train-your-index loop the two recall gates motivate. Quantizers
+    // trained with the bounded-sample driver Lloyd (deterministic
+    // lowest-id sample, sequential loop → identical doubles every run),
+    // persisted and RELOADED through the save/load loop (what a
+    // deployment does — parquet doubles are exact), then replayed by the
+    // oracle as cast('<Double.toString>' as double) literals, the same
+    // string→double parse the Spark-side centroid literals use. Dials
+    // (m=16, nprobe=8) are what the recall sweep recommends at this
+    // corpus: training is what makes them WORK — untrained at the same
+    // dials is 0.20 (extra nprobe on a garbage coarse quantizer even
+    // HURTS: untrained m=8/nprobe=8 = 0.14), trained is 0.42 at sf0.01
+    trainedGate("emb_recall_ivfpq_trained")((s, dir) =>
+      trainedRecallGate(s, dir, "emb_recall_ivfpq_trained", m = 16)),
+    // the SAME trained loop at m=32 (2-dim subspaces, 32 B/vector) —
+    // the dial the recall sweep says a deployment actually ships with:
+    // +0.15-0.24 recall@5 over m=16 at identical (kc=16, nprobe=8) at
+    // every SF (0.56 vs 0.32 sf0.001, 0.60 vs 0.42 sf0.01, 0.45 vs
+    // 0.295 sf0.1) — affordable as a gate only because the fused
+    // pq_codes/pq_dt natives made m cost-flat (the r8 JIT-cliff fix)
+    trainedGate("emb_recall_ivfpq_trained_m32")((s, dir) =>
+      trainedRecallGate(s, dir, "emb_recall_ivfpq_trained_m32", m = 32)),
+    // the kc ∝ n point: trained kc=64/m=32/nprobe=8 — the sf0.1
+    // shipping COARSE dial (candidate fraction nprobe/kc falls 4× vs
+    // kc=16, bounding per-probe cost; the r8 dial study measured this
+    // structure probe-only — the gate reproduces its 0.340 at sf0.1
+    // oracle-backed). Gated so the tuning table's last cell
+    // is oracle-exact: recall vs kc=16/m=32 is the measurement's value
+    // either way (pruning 4× harder may cost recall; spec documents
+    // the bound)
+    trainedGate("emb_recall_ivfpq_trained_kc64")((s, dir) =>
+      trainedRecallGate(s, dir, "emb_recall_ivfpq_trained_kc64",
+        m = 32, kc = 64)),
+    // OPQ-lite (r14): the trained PCA rotation composed with PQ — the
+    // public FAISS OPQ-P idea (rotate into the decorrelated basis, then
+    // product-quantize; Ge et al. CVPR 2013). Identical dials to
+    // emb_recall_ivfpq_trained (m=16, kc=16, nprobe=8, recall@5 vs
+    // ORIGINAL-space exact L2), so the recall delta between the two
+    // gates IS the rotation's value — the tuning-table row §8 carries
+    trainedGate("emb_recall_ivfpq_pca")((s, dir) =>
+      trainedRecallGate(s, dir, "emb_recall_ivfpq_pca", m = 16,
+        pca = true)),
+    // kc = ⌈√n⌉ as code (r14): the coarse-quantizer size derived from
+    // the corpus (Similarity.kcSqrtN — the FAISS √n sizing guideline,
+    // bounded by the trainer's sample), gated at every SF so the
+    // artifact shows kc scaling with the corpus while recall holds;
+    // m=32/nprobe=8 = D64b's dials, so the recall column is directly
+    // comparable to the fixed kc=16 (m32) and kc=64 gates
+    trainedGate("emb_recall_ivfpq_kc_sqrtn")((s, dir) =>
+      trainedRecallGate(s, dir, "emb_recall_ivfpq_kc_sqrtn", m = 32,
+        kcSqrt = true)),
+    // the REFINE dial (exact-L2 rerank of the ADC top-4k shortlist,
+    // ivfPqSearchRefined): same trained m=16 index as
+    // emb_recall_ivfpq_trained, so the recall delta between the two
+    // gates IS the refine step's value. The sf1 measurement that
+    // motivates it: PQ cannot rank inside vector families tighter than
+    // its distortion (near-duplicate embeddings), so trained-m=16
+    // recall@5 collapses 0.295 → 0.049 at the staged 10× corpus while
+    // the exact-rerank LSH path holds 0.34 — refine restores the PQ
+    // path at |probes| × 4k exact distances (§8g table)
+    trainedGate("emb_recall_ivfpq_refined")((s, dir) =>
+      trainedRecallGate(s, dir, "emb_recall_ivfpq_refined",
+        m = 16, refine = 4)),
+    // PQ encode with the seeded codebook contract (same cross-engine
+    // discipline as sim_ann_ivf_seeded; trained codebooks are driver
+    // state behind the same save/load loop)
+    gate("emb_pq_encode", Similarity.pqEncodeSeededDuckdbSql())((s, dir) =>
+      Similarity.pqEncode(Tables(s, dir, "embeddings"))),
+    // PQ distortion audit: per-vector squared reconstruction error under
+    // the seeded codebooks (the m/k-selection measurement)
+    gate("emb_pq_distortion",
+      Similarity.pqDistortionSeededDuckdbSql())((s, dir) =>
+      Similarity.pqDistortion(Tables(s, dir, "embeddings"))),
+    // PQ ADC search: the same probe/corpus hash carve as sim_knn_join,
+    // but the corpus scan reads only the 8-byte codes (asymmetric
+    // distance via per-probe lookup tables)
+    gate("sim_ann_pq", Similarity.pqSearchSeededDuckdbSql(
+      probeWhere = "vec_id % 50 = 0", corpusWhere = "vec_id % 50 <> 0",
+      topK = 3))((s, dir) => {
+      val e = Tables(s, dir, "embeddings")
+      Similarity.pqSearch(e.filter(col("vec_id") % 50 === 0),
+        e.filter(col("vec_id") % 50 =!= 0), topK = 3)
+    }),
+    // short-codebook edge gate (ADVICE r12): a corpus slice with FEWER
+    // than k non-null vectors seeds a short codebook (take(k) of a short
+    // sample). The oracle's ADC stride must be derived from the actual
+    // table length — the old fixed-k stride over-indexed into NULL
+    // adists here. SF-independent slice: 12 corpus < k=16, 28 probes.
+    gate("sim_ann_pq_short_cb", Similarity.pqSearchSeededDuckdbSql(
+      probeWhere = "vec_id >= 12 AND vec_id < 40",
+      corpusWhere = "vec_id < 12", topK = 3))((s, dir) => {
+      val e = Tables(s, dir, "embeddings")
+      Similarity.pqSearch(
+        e.filter(col("vec_id") >= 12 && col("vec_id") < 40),
+        e.filter(col("vec_id") < 12), topK = 3)
+    }),
+    // IVF-PQ: coarse cluster pruning + ADC ranking from codes — the
+    // two-level index that actually ships at corpus scale
+    gate("sim_ann_ivfpq", Similarity.ivfPqSeededDuckdbSql(
+      probeWhere = "vec_id % 50 = 0", corpusWhere = "vec_id % 50 <> 0",
+      topK = 3))((s, dir) => {
+      val e = Tables(s, dir, "embeddings")
+      Similarity.ivfPqSearch(e.filter(col("vec_id") % 50 === 0),
+        e.filter(col("vec_id") % 50 =!= 0), topK = 3)
+    }),
+    // refined-IVFPQ kNN JOIN (r12, VERDICT-r11 item 5): the deployment
+    // twin of sim_knn_join on the trained-index path — no probe-side
+    // broadcast assumption, ADC shortlist at topK×refine, exact-L2
+    // rerank. Seeded quantizers here so the oracle is static SQL; the
+    // trained path reuses the same dial through centroids/codebooks.
+    gate("sim_knn_join_pq", Similarity.knnJoinPqSeededDuckdbSql(
+      probeWhere = "vec_id % 50 = 0", corpusWhere = "vec_id % 50 <> 0",
+      topK = 3, refine = 4))((s, dir) => {
+      val e = Tables(s, dir, "embeddings")
+      Similarity.knnJoinPq(e.filter(col("vec_id") % 50 === 0),
+        e.filter(col("vec_id") % 50 =!= 0), topK = 3, refine = 4)
+    }),
+    // SemDeDup: cluster-then-dedup with the seeded quantizer (same
+    // cross-engine contract as sim_ann_ivf_seeded); threshold 0.4 for
+    // the same no-true-near-dups reason as sim_near_dup
+    gate("sim_semdedup", Similarity.semDedupDuckdbSql())((s, dir) =>
+      Similarity.semDedup(Tables(s, dir, "embeddings"))),
+    gate("text_quality",
+      s"""WITH t AS (
+           SELECT doc_id,
+                  cast(length(text) as int) AS n_chars_calc,
+                  string_split_regex(trim(lower(text)), '${Text.wsRe}') AS __toks,
+                  cast(length(regexp_replace(text, '[\\w${Text.WS}]', '', 'g')) as int)
+                    AS punct_count
+           FROM documents),
+         u AS (
+           SELECT doc_id, n_chars_calc,
+                  cast(len(__toks) as int) AS word_count, punct_count,
+                  cast(len(list_filter(__toks, x -> x IN ($stopList))) as int)
+                    AS stop_count
+           FROM t)
+         SELECT doc_id, n_chars_calc, word_count, punct_count, stop_count,
+                ${Text.halfUpSql("punct_count / cast(n_chars_calc as double)", 4)} AS punct_ratio,
+                ${Text.halfUpSql("stop_count / cast(word_count as double)", 4)} AS stop_ratio,
+                ${Text.halfUpSql(
+                  """least(word_count / 100.0, 1.0) * 0.5
+                      + (1.0 - punct_count / cast(n_chars_calc as double)) * 0.25
+                      + (stop_count / cast(word_count as double)) * 0.25""", 4)}
+                  AS quality_score
+         FROM u""")((s, dir) =>
+      Text.quality(Tables(s, dir, "documents"))
+        .select("doc_id", "n_chars_calc", "word_count", "punct_count",
+          "stop_count", "punct_ratio", "stop_ratio", "quality_score")),
+    gate("text_token_count",
+      s"""SELECT doc_id,
+                cast(len(string_split_regex(trim(lower(text)), '${Text.wsRe}')) as int)
+                  AS ws_tokens,
+                cast(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9${Text.WS}]')) as int)
+                  AS bpe_tokens
+         FROM documents""")((s, dir) =>
+      Text.tokenCounts(Tables(s, dir, "documents"))
+        .select("doc_id", "ws_tokens", "bpe_tokens")),
+    // sliding-window chunking (context-window prep): 32-token windows
+    // advancing by 24 — the testdata's 10-99-token docs produce 1-4
+    // chunks each, covering the short-doc and multi-chunk regimes
+    gate("text_chunk", Text.chunkSql(chunkSize = 32, overlap = 8))((s, dir) =>
+      Text.chunk(Tables(s, dir, "documents"), chunkSize = 32, overlap = 8)),
+    gate("text_lang_id",
+      s"""WITH t AS (
+           SELECT doc_id, lang,
+                  string_split_regex(trim(lower(text)), '${Text.wsRe}') AS __toks
+           FROM documents),
+         h AS (
+           SELECT doc_id, lang,
+      $langHitsSql
+           FROM t)
+         SELECT doc_id, lang, hits_de, hits_en, hits_es, hits_fr, hits_zh,
+                $langPredSql AS pred_lang
+         FROM h""")((s, dir) =>
+      Text.langId(Tables(s, dir, "documents"))
+        .select("doc_id", "lang", "hits_de", "hits_en", "hits_es", "hits_fr",
+          "hits_zh", "pred_lang")),
+    gate("text_fingerprint", Text.fingerprintSql())((s, dir) =>
+      Text.fingerprint(Tables(s, dir, "documents"))
+        .select("doc_id", "n_fingerprints", "min_fingerprint")),
+    gate("text_ngram_freq", Text.ngramFreqSql())((s, dir) =>
+      Text.ngramFreq(Tables(s, dir, "documents"))),
+    // eval-set decontamination screen: every 50th doc plays the
+    // benchmark; output is a dense per-doc contaminated-shingle count
+    gate("text_contamination", Text.contaminationSql())((s, dir) => {
+      val d = Tables(s, dir, "documents")
+      Text.contamination(d, d.filter(col("doc_id") % 50 === 0))
+    }),
+    gate("text_repetition", Text.repetitionSql())((s, dir) =>
+      Text.repetition(Tables(s, dir, "documents"))),
+    // perplexity-proxy quality score: per-doc unigram logprob under the
+    // corpus's own distribution, integer micro-nat quantization
+    gate("text_unigram_logprob", Text.unigramLogProbSql())((s, dir) =>
+      Text.unigramLogProb(Tables(s, dir, "documents"))),
+    // interpolated bigram LM score (the actual CCNet filter shape):
+    // catches word-salad docs whose unigram profile looks normal
+    gate("text_bigram_logprob", Text.bigramLogProbSql())((s, dir) =>
+      Text.bigramLogProb(Tables(s, dir, "documents"))),
+    // corpus heavy hitters (>2% of tokens) via the fixed-memory
+    // Misra-Gries propose -> exact-verify composition; the tight
+    // 59-counter sketch still guarantees the candidate superset
+    // ((59+1)*20 >= 1000), and the output is exact counts
+    gate("text_heavy_hitters", Text.heavyHittersSql(perMille = 20))((s, dir) =>
+      Text.heavyHitters(Tables(s, dir, "documents"),
+        perMille = 20, sketchK = 59)),
+    // lexical-diversity signal: per-doc token Shannon entropy, same
+    // micro-nat integer reduction
+    gate("text_entropy", Text.tokenEntropySql())((s, dir) =>
+      Text.tokenEntropy(Tables(s, dir, "documents"))),
+    // per-doc TF-IDF keywords: integer tf·idf_micro scores, total
+    // integer ranking order — the term-side counterpart of BM25
+    gate("text_tfidf_keywords", Text.tfidfKeywordsSql())((s, dir) =>
+      Text.tfidfKeywords(Tables(s, dir, "documents"))),
+    // corpus PMI collocations: decomposed per-factor micro-nat logs
+    // (no cross-product can overflow), min-count floor, global top-k
+    gate("text_collocations", Text.collocationsSql())((s, dir) =>
+      Text.collocations(Tables(s, dir, "documents"))),
+    gate("text_bm25", Text.bm25Sql(bm25Terms))((s, dir) =>
+      Text.bm25(Tables(s, dir, "documents"), bm25Terms)),
+    gate("text_corpus_filter", corpusFilterOracle)((s, dir) =>
+      Text.corpusFilter(Tables(s, dir, "documents"))),
+    gate("emb_group_centroids", Similarity.groupCentroidsSql())((s, dir) =>
+      Similarity.groupCentroids(Tables(s, dir, "embeddings"))),
+    // k-means clustering as a product operator (SemDeDup/DataComp's
+    // cluster-then-curate primitive): the IVF trainer's fit exposed as
+    // per-vector (cluster, l2) assignment under the trained-literal
+    // oracle contract — train on the bounded sample, persist, reload,
+    // replay the centroid matrix as literals in both engines
+    trainedGate("emb_kmeans")((s, dir) => {
+      val e = Tables(s, dir, "embeddings")
+      val trained = java.nio.file.Files
+        .createTempDirectory("graft_emb_kmeans").toString
+      Similarity.saveCentroids(s,
+        Similarity.ivfCentroids(e, k = 16, iters = 5), trained)
+      val cents = Similarity.loadCentroids(s, trained)
+      deleteRecursively(new java.io.File(trained))
+      GateRun(Similarity.kmeansAssign(e, centroids = Some(cents)),
+        oracle = Some(Similarity.kmeansTrainedDuckdbSql(cents)))
+    }),
+    // trained PCA projection (the third trained-quantizer family
+    // member): deterministic power-iteration fit on the bounded
+    // sample, persisted + reloaded (mean as a 1-row matrix, components
+    // as a p×dim matrix — parquet doubles are exact), replayed by the
+    // oracle as literals; emb_project's random signs are this
+    // operator's untrained baseline
+    trainedGate("emb_pca")((s, dir) => {
+      val e = Tables(s, dir, "embeddings")
+      val (mean, comps) = Similarity.pcaFit(e, p = 4)
+      val trained = java.nio.file.Files
+        .createTempDirectory("graft_emb_pca").toString
+      // mean stacked as row 0 over the component rows — ONE table, ONE
+      // write job + ONE read job instead of two of each (r15; the same
+      // row-0 layout the OPQ gate's PCA model uses)
+      Similarity.saveCentroids(s, mean +: comps, trained)
+      val pcaRows = Similarity.loadCentroids(s, trained)
+      val (mean2, comps2) = (pcaRows.head, pcaRows.tail)
+      deleteRecursively(new java.io.File(trained))
+      GateRun(Similarity.pcaProject(e, mean2, comps2),
+        oracle = Some(Similarity.pcaProjectDuckdbSql(mean2, comps2)))
+    }),
+    // int8 scalar quantization (SQ8): the 4x-smaller candidate-scan
+    // copy of an IVF+SQ stack, long shape with per-row scale
+    gate("emb_quantize", Similarity.quantizeInt8Sql())((s, dir) =>
+      Similarity.quantizeInt8(Tables(s, dir, "embeddings"))),
+    // embedding hygiene audit: dims + squared norm + dead/aberrant
+    // flags, one scan (the row-level QA gate before any similarity op)
+    gate("emb_norm_filter", Similarity.normFilterSql())((s, dir) =>
+      Similarity.normFilter(Tables(s, dir, "embeddings"))),
+    // Achlioptas ±1 random projection to 8 dims: the cheap pre-ANN
+    // compression stage — deterministic driver-constant matrix, one
+    // scan, zero shuffle
+    gate("emb_project", Similarity.projectDuckdbSql())((s, dir) =>
+      Similarity.project(Tables(s, dir, "embeddings"))),
+    gate("mm_binary_meta",
+      // The decode STUB's features are deterministic byte arithmetic over
+      // the UTF-8 payload — expressible in DuckDB because the corpus is
+      // pure ASCII (asserted by the octet_length guard in the first CTE:
+      // a future non-ASCII doc makes ascii()≠byte and this oracle must
+      // fail loudly, not drift silently). The trip-wire is DuckDB's
+      // error() — division 1/0 does NOT raise in DuckDB (returns NULL),
+      // so an arithmetic guard would be dead code (ADVICE r11, verified
+      // empirically against the installed duckdb). The outer WHERE must
+      // REFERENCE guard.ok: an unreferenced cross-join column is pruned
+      // by DuckDB's optimizer and the CASE never evaluates (also
+      // verified — the bare cross join does not trip on a hostile doc).
+      // list_sum may return NULL for empty lists, hence the coalesce.
       s"""WITH guard AS (
            SELECT CASE WHEN count(*) = 0 THEN 1
                        ELSE cast(error('mm_binary_meta oracle requires a pure-ASCII corpus: byte arithmetic != codepoint arithmetic on this data') AS int)
@@ -2521,14 +2490,31 @@ object SparkEntry {
                 cast(CASE WHEN text IS NULL OR length(text) = 0 THEN 0
                           ELSE ascii(substring(text, length(text), 1)) END
                   as int) AS last_byte
-         FROM documents, guard WHERE guard.ok = 1""",
-
-    // The WAV fixture is deterministic (8-bit mono PCM, samples = the
-    // UTF-8 payload bytes, rate keyed off doc_id), so every decoded
-    // feature reduces to byte arithmetic over `text` — same ASCII-guard
-    // discipline as mm_binary_meta (and the same error() trip-wire,
-    // referenced through the WHERE so DuckDB cannot prune it).
-    "mm_decode_wav" ->
+         FROM documents, guard WHERE guard.ok = 1""")((s, dir) =>
+      Multimodal.pipeline(s, Tables(s, dir, "documents"))),
+    // metadata layer of the multimodal pipeline (no decode) — the part
+    // that IS cross-engine checkable; the stub decode is checked by
+    // mm_binary_meta's byte-arithmetic oracle
+    gate("mm_meta_only",
+      """SELECT doc_id,
+                'application/x-fake-' || source AS mime,
+                cast(octet_length(encode(text)) as int) AS payload_len
+         FROM documents""")((s, dir) =>
+      Multimodal.asMedia(Tables(s, dir, "documents"))
+        .select("doc_id", "mime", "payload_len")),
+    // the REAL decode path (r12): synthesize a conformant RIFF/WAVE PCM
+    // container per doc (chunk layout rotated so the corpus exercises
+    // the parser's chunk walk), parse it with a genuine WAV parser
+    // (Multimodal.parseWav), surface typed audio features. The oracle
+    // replays the features as byte arithmetic over `text` because the
+    // fixture is deterministic — the PARSER is format-general
+    // (spec-tested on 16-bit stereo and on malformed bytes).
+    gate("mm_decode_wav",
+      // The WAV fixture is deterministic (8-bit mono PCM, samples = the
+      // UTF-8 payload bytes, rate keyed off doc_id), so every decoded
+      // feature reduces to byte arithmetic over `text` — same ASCII-guard
+      // discipline as mm_binary_meta (and the same error() trip-wire,
+      // referenced through the WHERE so DuckDB cannot prune it).
       s"""WITH guard AS (
            SELECT CASE WHEN count(*) = 0 THEN 1
                        ELSE cast(error('mm_decode_wav oracle requires a pure-ASCII corpus: byte arithmetic != codepoint arithmetic on this data') AS int)
@@ -2553,18 +2539,24 @@ object SparkEntry {
                 ${Text.halfUpSql(
         """cast(coalesce(octet_length(encode(text)), 0) as double) * 1000.0
            / (8000 + (doc_id % 8) * 1000)""", 4)} AS duration_ms
-         FROM documents, guard WHERE guard.ok = 1""",
-
-    // The BMP fixture is deterministic (8-bit grayscale, logical pixels
-    // = the UTF-8 payload bytes at width 1 + doc_id % 8, zero-filled to
-    // the last row), so the decoded features reduce to byte arithmetic
-    // over `text` — same ASCII-guard trip-wire as mm_decode_wav. The
-    // row order and data-offset gap the fixture rotates through are
-    // invisible here BY DESIGN: they change the container layout, and
-    // the parser must recover the same logical image from all of them
-    // (first_px = the top-left pixel = the first payload byte, wherever
-    // the header says row 0 lives).
-    "mm_decode_bmp" ->
+         FROM documents, guard WHERE guard.ok = 1""")((s, dir) =>
+      Multimodal.wavPipeline(s, Tables(s, dir, "documents"))),
+    // the IMAGE twin (r13): a conformant BI_RGB BMP per doc (row order
+    // and pixel-data gap rotated so the corpus exercises bottom-up AND
+    // top-down storage plus the declared-offset contract), parsed with
+    // a genuine BMP parser (Multimodal.parseBmp) — first_px is
+    // order-sensitive, so the oracle proves the row-order handling,
+    // not just sums. Spec-tested on 24-bit and malformed bytes.
+    gate("mm_decode_bmp",
+      // The BMP fixture is deterministic (8-bit grayscale, logical pixels
+      // = the UTF-8 payload bytes at width 1 + doc_id % 8, zero-filled to
+      // the last row), so the decoded features reduce to byte arithmetic
+      // over `text` — same ASCII-guard trip-wire as mm_decode_wav. The
+      // row order and data-offset gap the fixture rotates through are
+      // invisible here BY DESIGN: they change the container layout, and
+      // the parser must recover the same logical image from all of them
+      // (first_px = the top-left pixel = the first payload byte, wherever
+      // the header says row 0 lives).
       s"""WITH guard AS (
            SELECT CASE WHEN count(*) = 0 THEN 1
                        ELSE cast(error('mm_decode_bmp oracle requires a pure-ASCII corpus: byte arithmetic != codepoint arithmetic on this data') AS int)
@@ -2590,15 +2582,23 @@ object SparkEntry {
                 cast(CASE WHEN text IS NULL OR length(text) = 0 THEN 0
                           ELSE ascii(substring(text, 1, 1)) END as int)
                   AS first_px
-         FROM dims, guard WHERE guard.ok = 1""",
-
-    // same logical image as mm_decode_bmp (the fixtures share the
-    // payload→pixels mapping), so the oracle differs only in the typed
-    // header columns — the compression and the five rotated scanline
-    // filters are invisible here BY DESIGN: they change the container
-    // bytes, and the parser must recover the identical logical image
-    // from every (filter, deflate) encoding of it.
-    "mm_decode_png" ->
+         FROM dims, guard WHERE guard.ok = 1""")((s, dir) =>
+      Multimodal.bmpPipeline(s, Tables(s, dir, "documents"))),
+    // the COMPRESSED-container twin (r14): a conformant 8-bit grayscale
+    // PNG per doc — zlib IDAT via the JDK Inflater, per-row scanline
+    // filter rotated through None/Sub/Up/Average/Paeth by doc_id, an
+    // ancillary tEXt chunk on the skip path — parsed with a genuine
+    // chunk-walking inflate+unfilter decoder (Multimodal.parsePng).
+    // Same logical image as mm_decode_bmp, so a green row proves the
+    // filter reversal recovered the exact payload bytes through the
+    // compression round trip.
+    gate("mm_decode_png",
+      // same logical image as mm_decode_bmp (the fixtures share the
+      // payload→pixels mapping), so the oracle differs only in the typed
+      // header columns — the compression and the five rotated scanline
+      // filters are invisible here BY DESIGN: they change the container
+      // bytes, and the parser must recover the identical logical image
+      // from every (filter, deflate) encoding of it.
       s"""WITH guard AS (
            SELECT CASE WHEN count(*) = 0 THEN 1
                        ELSE cast(error('mm_decode_png oracle requires a pure-ASCII corpus: byte arithmetic != codepoint arithmetic on this data') AS int)
@@ -2625,16 +2625,21 @@ object SparkEntry {
                 cast(CASE WHEN text IS NULL OR length(text) = 0 THEN 0
                           ELSE ascii(substring(text, 1, 1)) END as int)
                   AS first_px
-         FROM dims, guard WHERE guard.ok = 1""",
-
-    // same logical image again — the LZW compression, the sub-block
-    // framing, the extension blocks AND the interlace reordering are
-    // all invisible BY DESIGN: a green row proves the decoder's
-    // variable-width LZW + 4-pass de-interlace recovered the exact
-    // payload bytes (first_px is row-order-sensitive under interlace).
-    // interlaced/n_ext replay the fixture's doc_id-keyed rotations, so
-    // the parser's flag/extension bookkeeping is pinned too.
-    "mm_decode_gif" ->
+         FROM dims, guard WHERE guard.ok = 1""")((s, dir) =>
+      Multimodal.pngPipeline(s, Tables(s, dir, "documents"))),
+    // the LZW twin (r15): a conformant GIF89a per doc — real
+    // variable-width LZW (Multimodal.lzwEncode/lzwDecode, no JDK
+    // assist), every 4th doc INTERLACED so the 4-pass walk is proven
+    // per-row (first_px is order-sensitive), extension blocks rotated
+    // onto the skip path. Same logical image as the BMP/PNG gates.
+    gate("mm_decode_gif",
+      // same logical image again — the LZW compression, the sub-block
+      // framing, the extension blocks AND the interlace reordering are
+      // all invisible BY DESIGN: a green row proves the decoder's
+      // variable-width LZW + 4-pass de-interlace recovered the exact
+      // payload bytes (first_px is row-order-sensitive under interlace).
+      // interlaced/n_ext replay the fixture's doc_id-keyed rotations, so
+      // the parser's flag/extension bookkeeping is pinned too.
       s"""WITH guard AS (
            SELECT CASE WHEN count(*) = 0 THEN 1
                        ELSE cast(error('mm_decode_gif oracle requires a pure-ASCII corpus: byte arithmetic != codepoint arithmetic on this data') AS int)
@@ -2664,12 +2669,15 @@ object SparkEntry {
                 cast((CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END)
                      + (CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END) as int)
                   AS n_ext
-         FROM dims, guard WHERE guard.ok = 1""",
-
-    // the resampled SIGNAL is integer-exact: out[i] = (s[2i]+s[2i+1])//2
-    // over the fixture's byte samples, so every feature reduces to byte
-    // arithmetic over text (pairs; odd tail drops)
-    "mm_resample_wav" ->
+         FROM dims, guard WHERE guard.ok = 1""")((s, dir) =>
+      Multimodal.gifPipeline(s, Tables(s, dir, "documents"))),
+    // the TRANSFORM verb (r15): 2:1 audio decimation with a 2-tap mean
+    // anti-alias filter in INTEGER arithmetic — the resampled signal
+    // itself is engine-exact, the oracle replays it over text bytes
+    gate("mm_resample_wav",
+      // the resampled SIGNAL is integer-exact: out[i] = (s[2i]+s[2i+1])//2
+      // over the fixture's byte samples, so every feature reduces to byte
+      // arithmetic over text (pairs; odd tail drops)
       s"""WITH guard AS (
            SELECT CASE WHEN count(*) = 0 THEN 1
                        ELSE cast(error('mm_resample_wav oracle requires a pure-ASCII corpus') AS int)
@@ -2697,13 +2705,17 @@ object SparkEntry {
                           ELSE (ascii(substring(text, 1, 1))
                                 + ascii(substring(text, 2, 1))) // 2
                      END as int) AS first_out
-         FROM dims, guard WHERE guard.ok = 1""",
-
-    // container features replay from the fixture spec: 16-byte frames
-    // (last zero-padded, ≥1), dims keyed off doc_id; the declared and
-    // walked frame counts must agree — the oracle proves the nested
-    // LIST walk found every movi chunk
-    "mm_parse_avi" ->
+         FROM dims, guard WHERE guard.ok = 1""")((s, dir) =>
+      Multimodal.resamplePipeline(s, Tables(s, dir, "documents"))),
+    // the FRAME-SAMPLE verb (r15): a real AVI container walk (nested
+    // RIFF/LIST grammar, avih header, per-frame movi chunks) with the
+    // frame PAYLOAD kept opaque — exactly the codec boundary the
+    // multimodal stub mandates
+    gate("mm_parse_avi",
+      // container features replay from the fixture spec: 16-byte frames
+      // (last zero-padded, ≥1), dims keyed off doc_id; the declared and
+      // walked frame counts must agree — the oracle proves the nested
+      // LIST walk found every movi chunk
       s"""WITH guard AS (
            SELECT CASE WHEN count(*) = 0 THEN 1
                        ELSE cast(error('mm_parse_avi oracle requires a pure-ASCII corpus') AS int)
@@ -2726,13 +2738,16 @@ object SparkEntry {
                        i -> ascii(substring(text, i, 1)))), 0) as bigint)
                   AS first_frame_sum,
                 cast(16 * greatest(1, (n + 15) // 16) as bigint) AS total_bytes
-         FROM dims, guard WHERE guard.ok = 1""",
-
-    // the resized GRID is integer-exact: out(r,c) = the 2x2 box mean
-    // over the BMP's logical image (text bytes row-major at width
-    // w = 1 + doc_id%8, zero-filled), odd tails dropped — every output
-    // pixel reduces to four indexed byte lookups and one floor-div
-    "mm_image_resize" ->
+         FROM dims, guard WHERE guard.ok = 1""")((s, dir) =>
+      Multimodal.aviPipeline(s, Tables(s, dir, "documents"))),
+    // the IMAGE-RESIZE verb (r15): 2x2 integer box-mean downsample of
+    // the decoded BMP grid — the resized image itself is engine-exact,
+    // the oracle replays it as indexed byte arithmetic over text
+    gate("mm_image_resize",
+      // the resized GRID is integer-exact: out(r,c) = the 2x2 box mean
+      // over the BMP's logical image (text bytes row-major at width
+      // w = 1 + doc_id%8, zero-filled), odd tails dropped — every output
+      // pixel reduces to four indexed byte lookups and one floor-div
       s"""WITH guard AS (
            SELECT CASE WHEN count(*) = 0 THEN 1
                        ELSE cast(error('mm_image_resize oracle requires a pure-ASCII corpus') AS int)
@@ -2763,470 +2778,129 @@ object SparkEntry {
                 cast(CASE WHEN wo * ho = 0 THEN 0
                           ELSE ${resizePxSql("0", "0")} END as int)
                   AS first_out
-         FROM d2, guard WHERE guard.ok = 1""",
-
-    // sketch family: the oracle replays the KMV estimate value-exact
-    // (fp62 hashes, exact BIGINT ordering, driver-literal numerator)
-    "sketch_distinct_kmv" ->
-      Sketch.kmvSketchDuckdbSql("documents", "source", "text", k = 64),
-    "sketch_kmv_merge" ->
-      Sketch.kmvMergeDuckdbSql("documents", "source", "text", k = 64),
-    "sketch_kmv_jaccard" ->
-      Sketch.kmvJaccardDuckdbSql("documents", "source", "text", k = 64),
-    // the stream replays the WHOLE documents table, so the batch sketch
-    // SQL (minus the unbounded-state n_hashes column) is the oracle —
-    // merge==rebuild is the property under test
-    "stream_kmv_sketch" ->
-      Sketch.kmvSketchStreamDuckdbSql("documents", "source", "text", k = 64),
-
-    // Benford first-digit audit: identical cents rendering, integer
-    // micro-division, driver-literal expected shares
-    "qa_benford" -> Qa.benfordSql("lineitem", "l_extendedprice"),
-
-    // the stream replays the WHOLE documents table and folds digit
-    // counts through a monoid, so the batch SQL over the same column
-    // is the oracle — merge==rebuild streamed
-    "stream_benford" -> Qa.benfordSql("documents", "n_chars"),
-
-    // lag-1 autocorrelation: identical integer Pearson sums, identical
-    // one-shot double coefficient
-    "qa_autocorr" -> Qa.autocorrDailySql("orders", "o_orderdate"),
-
-    // weekday profile: identical day arithmetic, micro-division lanes
-    "qa_seasonality_dow" -> Qa.seasonalityDowSql("orders", "o_orderdate"),
-
-    // integer-space PageRank over the kNN graph: the edge subquery IS
-    // the sim_knn_graph oracle; 3 supersteps unrolled as CTEs
-    "graph_pagerank" -> Graph.pageRankDuckdbSql(
+         FROM d2, guard WHERE guard.ok = 1""")((s, dir) =>
+      Multimodal.resizeBmpPipeline(s, Tables(s, dir, "documents"))),
+    // KMV bottom-k distinct sketch per source: O(k) state per group,
+    // bounded-heap partial agg — the cardinality estimator whose
+    // estimate the oracle replays VALUE-EXACT (fp62 hashes + one IEEE
+    // division of driver-literal operands)
+    gate("sketch_distinct_kmv",
+      // sketch family: the oracle replays the KMV estimate value-exact
+      // (fp62 hashes, exact BIGINT ordering, driver-literal numerator)
+      Sketch.kmvSketchDuckdbSql("documents", "source", "text", k = 64))((s, dir) =>
+      Sketch.kmvSketch(Tables(s, dir, "documents"), "source", "text",
+        k = 64)),
+    // sketch MERGEABILITY gated: per-source sketches rolled up (k longs
+    // per source, never the raw rows) == the one-pass corpus sketch
+    gate("sketch_kmv_merge",
+      Sketch.kmvMergeDuckdbSql("documents", "source", "text", k = 64))((s, dir) =>
+      Sketch.kmvMerge(Tables(s, dir, "documents"), "source", "text",
+        k = 64)),
+    // pairwise source overlap FROM the sketches (k smallest of A∪B,
+    // fraction in both kept sets) with the exact Jaccard as published
+    // self-validation — the cross-source overlap matrix whose pairwise
+    // stage touches k longs per source, never the corpus
+    gate("sketch_kmv_jaccard",
+      Sketch.kmvJaccardDuckdbSql("documents", "source", "text", k = 64))((s, dir) =>
+      Sketch.kmvJaccard(Tables(s, dir, "documents"), "source", "text",
+        k = 64)),
+    // the LIVE sketch: kept-set state folded per micro-batch over the
+    // documents replay (mergeStep == the kmvMerge algebra), gated
+    // against the BATCH sketch oracle — merge==rebuild, streamed
+    streamGate("stream_kmv_sketch",
+      // the stream replays the WHOLE documents table, so the batch sketch
+      // SQL (minus the unbounded-state n_hashes column) is the oracle —
+      // merge==rebuild is the property under test
+      Sketch.kmvSketchStreamDuckdbSql("documents", "source", "text", k = 64))((s, dir) =>
+      Streams.kmvSketchAvailableNow(s, dir, k = 64)),
+    // live Benford audit: per-batch digit counts folded through the
+    // count monoid, gated on the BATCH oracle — merge==rebuild streamed
+    streamGate("stream_benford",
+      // the stream replays the WHOLE documents table and folds digit
+      // counts through a monoid, so the batch SQL over the same column
+      // is the oracle — merge==rebuild streamed
+      Qa.benfordSql("documents", "n_chars"))((s, dir) =>
+      Streams.benfordAvailableNow(s, dir)),
+    // Benford first-digit audit of the price column: leading digit from
+    // the DECIMAL STRING of integer cents, shares in integer
+    // micro-units, expected shares as driver literals — one scan, one
+    // 9-group aggregate
+    gate("qa_benford",
+      // Benford first-digit audit: identical cents rendering, integer
+      // micro-division, driver-literal expected shares
+      Qa.benfordSql("lineitem", "l_extendedprice"))((s, dir) =>
+      Qa.benford(Tables(s, dir, "lineitem"), "l_extendedprice")),
+    // temporal QA: lag-1 autocorrelation of the daily order volume —
+    // integer Pearson sums over the calendar-bounded daily frame, one
+    // rounded double at the end
+    gate("qa_autocorr",
+      // lag-1 autocorrelation: identical integer Pearson sums, identical
+      // one-shot double coefficient
+      Qa.autocorrDailySql("orders", "o_orderdate"))((s, dir) =>
+      Qa.autocorrDaily(Tables(s, dir, "orders"), "o_orderdate")),
+    // seasonality: weekday volume profile in integer micro-shares, dow
+    // from pure day arithmetic (no engine dow() convention)
+    gate("qa_seasonality_dow",
+      // weekday profile: identical day arithmetic, micro-division lanes
+      Qa.seasonalityDowSql("orders", "o_orderdate"))((s, dir) =>
+      Qa.seasonalityDow(Tables(s, dir, "orders"), "o_orderdate")),
+    // iterative graph compute: 3 PageRank supersteps over the kNN graph
+    // (sim_knn_graph's edges), entirely in integer micro-units — order-
+    // free sums, so the rank of every vector is engine- and
+    // partitioning-exact; the curation "hubness" signal
+    gate("graph_pagerank",
+      // integer-space PageRank over the kNN graph: the edge subquery IS
+      // the sim_knn_graph oracle; 3 supersteps unrolled as CTEs
+      Graph.pageRankDuckdbSql(
       nodesSql = "SELECT vec_id FROM embeddings",
       edgesSql = "SELECT probe_id AS src, cand_id AS dst FROM (" +
         Similarity.knnJoinDuckdbSql(probeWhere = "1 = 1",
           corpusWhere = "1 = 1", k = 2, excludeSelf = true) + ")",
-      iters = 3),
-
-    // triangles/lcc: the edge subquery IS the sim_knn_graph oracle;
-    // identical degree-ordered orientation, exact integer counts
-    "graph_triangles" -> Graph.trianglesDuckdbSql(
+      iters = 3))((s, dir) => {
+      val e = Tables(s, dir, "embeddings")
+      val edges = Similarity.knnJoin(e, e, k = 2, excludeSelf = true)
+        .select(col("probe_id").as("src"), col("cand_id").as("dst"))
+      Graph.pageRank(e, edges, iters = 3)
+    }),
+    // exact triangles + local clustering coefficient over the same kNN
+    // edge set: degree-ordered compact-forward (wedge space bounded
+    // O(m^1.5) — the skew-proof enumeration), integer micro-unit lcc —
+    // the cohesion signal next to pagerank's hubness
+    gate("graph_triangles",
+      // triangles/lcc: the edge subquery IS the sim_knn_graph oracle;
+      // identical degree-ordered orientation, exact integer counts
+      Graph.trianglesDuckdbSql(
       edgesSql = "SELECT probe_id AS src, cand_id AS dst FROM (" +
         Similarity.knnJoinDuckdbSql(probeWhere = "1 = 1",
-          corpusWhere = "1 = 1", k = 2, excludeSelf = true) + ")"),
-
-    // k-core: identical unrolled peel rounds over the same edge oracle
-    "graph_kcore" -> Graph.kCoreDuckdbSql(
+          corpusWhere = "1 = 1", k = 2, excludeSelf = true) + ")"))((s, dir) => {
+      val e = Tables(s, dir, "embeddings")
+      val edges = Similarity.knnJoin(e, e, k = 2, excludeSelf = true)
+        .select(col("probe_id").as("src"), col("cand_id").as("dst"))
+      Graph.triangles(edges)
+    }),
+    // bounded-round k-core peel over the same kNN edges: the dense-
+    // substructure extractor (k=2, 3 rounds) — filter-driven iteration
+    // next to pagerank's value propagation
+    gate("graph_kcore",
+      // k-core: identical unrolled peel rounds over the same edge oracle
+      Graph.kCoreDuckdbSql(
       edgesSql = "SELECT probe_id AS src, cand_id AS dst FROM (" +
         Similarity.knnJoinDuckdbSql(probeWhere = "1 = 1",
           corpusWhere = "1 = 1", k = 2, excludeSelf = true) + ")",
-      k = 2, rounds = 3),
+      k = 2, rounds = 3))((s, dir) => {
+      val e = Tables(s, dir, "embeddings")
+      val edges = Similarity.knnJoin(e, e, k = 2, excludeSelf = true)
+        .select(col("probe_id").as("src"), col("cand_id").as("dst"))
+      Graph.kCore(edges, k = 2, rounds = 3)
+    }))
 
-    "sample_stratified" ->
-      s"""SELECT doc_id, lang FROM documents
-         WHERE ${graft.etl.Sampling.stratifiedSampleSql("lang", "doc_id",
-        Map("en" -> 0.25, "de" -> 1.0), defaultRate = 0.5)}""",
-
-    "split_assign" ->
-      s"""SELECT doc_id,
-                ${graft.etl.Sampling.hashSplitSql("doc_id",
-        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))} AS split
-         FROM documents""",
-
-    "sample_group_topk" ->
-      graft.etl.Sampling.groupSampleSql("documents", "lang", "doc_id", 25),
-
-    "sample_mix_rebalance" -> graft.etl.Sampling.mixRebalanceSql(
-      "documents", "source", "doc_id", mixTargets, "d.doc_id, d.source"),
-
-    "corpus_shuffle" -> graft.etl.Sampling.shuffleShardsSql(
-      "documents", "doc_id", nShards = 16, selectCols = "doc_id, source"),
-
-    "corpus_interleave" -> graft.etl.Sampling.interleaveSourcesSql(
-      "documents", "source", "doc_id", nShards = 16,
-      selectCols = "doc_id, source"),
-
-    "sample_mix_upsample" -> graft.etl.Sampling.upsampleEpochsSql(
-      "documents", "source", "doc_id", upsampleFactors,
-      selectCols = "doc_id, source"),
-
-    "corpus_token_budget" -> graft.etl.Sampling.tokenBudgetSql(
-      "documents", "source", "doc_id", "text", budget = 800L,
-      "doc_id, source"),
-
-    "corpus_pack_sequences" -> graft.etl.Sampling.packSequencesSql(
-      "documents", "doc_id", "text", seqLen = 256, shards = 8),
-
-    "corpus_source_stats" -> graft.etl.Sampling.sourceStatsSql(),
-
-    "sample_temperature" -> graft.etl.Sampling.temperatureMixSql(
-      "documents", "lang", "doc_id", sqrtApplications = 1,
-      "doc_id, lang"),
-
-    "dedup_containment" -> Dedup.containmentSql(),
-
-    "etl_scd2_asof" ->
-      s"""WITH e AS (
-           SELECT user_id, event_type, event_id,
-                  epoch_us(cast(ts as timestamp)) AS us
-           FROM events),
-         l AS (
-           SELECT *, lag(event_type) OVER (PARTITION BY user_id
-             ORDER BY us, event_id) AS prev_et,
-                  row_number() OVER (PARTITION BY user_id
-             ORDER BY us, event_id) AS rn
-           FROM e),
-         s AS (
-           SELECT * FROM l WHERE rn = 1 OR prev_et IS DISTINCT FROM event_type),
-         h AS (
-           SELECT user_id, event_type, us AS valid_from_us,
-                  lead(us) OVER (PARTITION BY user_id
-                    ORDER BY us, event_id) AS valid_to_us
-           FROM s)
-         SELECT user_id, event_type, valid_from_us, valid_to_us
-         FROM h
-         WHERE valid_from_us <= $scd2AsOfUs
-           AND (valid_to_us IS NULL OR valid_to_us > $scd2AsOfUs)""",
-
-    // the batch SCD2 change-detection SQL minus is_current — the
-    // streaming history build must reproduce every interval exactly
-    "stream_scd2" ->
-      """WITH e AS (
-           SELECT user_id, event_type, event_id,
-                  epoch_us(cast(ts as timestamp)) AS us
-           FROM events),
-         l AS (
-           SELECT *, lag(event_type) OVER (PARTITION BY user_id
-             ORDER BY us, event_id) AS prev_et,
-                  row_number() OVER (PARTITION BY user_id
-             ORDER BY us, event_id) AS rn
-           FROM e),
-         s AS (
-           SELECT * FROM l WHERE rn = 1 OR prev_et IS DISTINCT FROM event_type)
-         SELECT user_id, event_type, us AS valid_from_us,
-                lead(us) OVER (PARTITION BY user_id
-                  ORDER BY us, event_id) AS valid_to_us
-         FROM s""",
-
-    "etl_validate_rules" -> validationRulesSql,
-
-    "qa_outliers" -> Qa.outliersSql("events",
-      "cast(cast(date_trunc('day', ts) as date) as varchar)", "value"),
-
-    "qa_drift_psi" -> Qa.driftPsiSql("events",
-      "cast(cast(date_trunc('day', ts) as date) as varchar)", "event_type"),
-
-    "qa_drift_ks" -> Qa.driftKsSql("events",
-      "cast(date_trunc('day', ts) as date)", "value"),
-
-    "qa_correlation" -> Qa.correlationSql("lineitem", corrPairs),
-
-    "qa_volume_anomaly" -> Qa.volumeAnomalySql("events", "event_type", "ts"),
-
-    "qa_freshness" -> Qa.freshnessSql("events", "event_type", "ts",
-      asOfUs = freshnessAsOfUs, slaUs = 30L * 60 * 1000000),
-
-    "text_entropy" -> Text.tokenEntropySql(),
-
-    "text_tfidf_keywords" -> Text.tfidfKeywordsSql(),
-
-    "text_collocations" -> Text.collocationsSql(),
-
-    // Oracle mirrors Spark's from_json NULL-tolerance: malformed props
-    // and non-integer k become NULL (json_valid guard + try_cast)
-    // instead of erroring, so the gate survives dirty future testdata.
-    "q_json_extract" ->
-      """WITH k AS (
-           SELECT event_type,
-                  CASE WHEN json_valid(props)
-                       THEN try_cast(props->>'k' as int) END AS kv
-           FROM events)
-         SELECT event_type,
-                count(*) AS n,
-                cast(count(kv) as bigint) AS n_with_k,
-                cast(sum(kv) as bigint) AS sum_k,
-                min(kv) AS min_k,
-                max(kv) AS max_k
-         FROM k GROUP BY event_type""",
-
-    "q_histogram" ->
-      """WITH b AS (
-           SELECT min(value) AS lo, max(value) AS hi FROM events),
-         binned AS (
-           SELECT CASE WHEN b.hi = b.lo THEN 0
-                  ELSE least(cast(floor((value - b.lo) / ((b.hi - b.lo) / 20))
-                    as bigint), 19) END AS bin,
-                  count(*) AS n
-           FROM events, b WHERE value IS NOT NULL GROUP BY 1),
-         template AS (SELECT unnest(range(0, 20)) AS bin)
-         SELECT cast(template.bin as int) AS bin,
-                cast(coalesce(binned.n, 0) as bigint) AS n
-         FROM template LEFT JOIN binned USING (bin)""",
-
-    "q_funnel" -> Queries.funnelSql(),
-    "q_retention_cohorts" -> Queries.retentionCohortsSql(),
-
-    "q_rolling_active_users" ->
-      """WITH du AS (
-           SELECT DISTINCT cast(date_trunc('day', ts) as date) AS d, user_id
-           FROM events),
-         days AS (SELECT DISTINCT d AS day FROM du),
-         dau AS (SELECT d AS day, cast(count(*) as bigint) AS dau
-                 FROM du GROUP BY d),
-         rolling AS (
-           SELECT days.day, cast(count(DISTINCT du.user_id) as bigint)
-                    AS active_7d
-           FROM days JOIN du
-             ON du.d > days.day - 7 AND du.d <= days.day
-           GROUP BY days.day)
-         SELECT cast(dau.day as varchar) AS day, dau.dau, rolling.active_7d
-         FROM dau JOIN rolling USING (day)""",
-
-    "etl_pk_check" ->
-      """WITH c1 AS (
-           SELECT count(*) AS c FROM lineitem
-           GROUP BY l_orderkey, l_linenumber),
-         c2 AS (
-           SELECT count(*) AS c FROM lineitem GROUP BY l_orderkey),
-         s1 AS (
-           SELECT 'lineitem(l_orderkey,l_linenumber)' AS pk,
-                  cast(sum(c) as bigint) AS n_rows,
-                  cast(count(*) as bigint) AS n_keys,
-                  cast(sum(CASE WHEN c > 1 THEN 1 ELSE 0 END) as bigint)
-                    AS n_dup_keys,
-                  cast(sum(CASE WHEN c > 1 THEN c ELSE 0 END) as bigint)
-                    AS n_rows_in_dups,
-                  cast(max(c) as bigint) AS max_multiplicity
-           FROM c1),
-         s2 AS (
-           SELECT 'lineitem(l_orderkey)' AS pk,
-                  cast(sum(c) as bigint) AS n_rows,
-                  cast(count(*) as bigint) AS n_keys,
-                  cast(sum(CASE WHEN c > 1 THEN 1 ELSE 0 END) as bigint)
-                    AS n_dup_keys,
-                  cast(sum(CASE WHEN c > 1 THEN c ELSE 0 END) as bigint)
-                    AS n_rows_in_dups,
-                  cast(max(c) as bigint) AS max_multiplicity
-           FROM c2)
-         SELECT * FROM s1 UNION ALL SELECT * FROM s2""",
-
-    "etl_fk_coverage" ->
-      """WITH one AS (
-           SELECT 'orders->customer' AS fk,
-                  (SELECT cast(count(*) as bigint) FROM orders) AS n_fact,
-                  (SELECT cast(count(*) as bigint) FROM orders o
-                   WHERE NOT EXISTS (SELECT 1 FROM customer c
-                     WHERE c.c_custkey = o.o_custkey)) AS n_orphans,
-                  (SELECT cast(count(*) as bigint) FROM customer) AS n_dim,
-                  (SELECT cast(count(*) as bigint) FROM customer c
-                   WHERE NOT EXISTS (SELECT 1 FROM orders o
-                     WHERE o.o_custkey = c.c_custkey)) AS n_dim_unreferenced),
-         two AS (
-           SELECT 'lineitem->orders' AS fk,
-                  (SELECT cast(count(*) as bigint) FROM lineitem) AS n_fact,
-                  (SELECT cast(count(*) as bigint) FROM lineitem l
-                   WHERE NOT EXISTS (SELECT 1 FROM orders o
-                     WHERE o.o_orderkey = l.l_orderkey)) AS n_orphans,
-                  (SELECT cast(count(*) as bigint) FROM orders) AS n_dim,
-                  (SELECT cast(count(*) as bigint) FROM orders o
-                   WHERE NOT EXISTS (SELECT 1 FROM lineitem l
-                     WHERE l.l_orderkey = o.o_orderkey)) AS n_dim_unreferenced)
-         SELECT * FROM one UNION ALL SELECT * FROM two""",
-
-    "sim_semdedup" -> Similarity.semDedupDuckdbSql(),
-
-    "dedup_minhash_lsh" -> MinHashSpec.duckdbSql(),
-    // pair set of the batch candidate proposer — the streaming bucket
-    // state must propose exactly these pairs
-    "stream_lsh_candidates" ->
-      s"SELECT DISTINCT doc_a, doc_b FROM (${MinHashSpec.duckdbSql()})",
-
-    // batch keep-min-doc_id twin of the streaming first-seen dedup
-    "stream_dedup_docs" -> streamDedupOracle,
-    // the SAME oracle value by construction: the retried batch must
-    // change NOTHING in the sink
-    "stream_sink_replay" -> streamDedupOracle,
-    // stateless stream screen vs the batch SQL; distinct-fp count is the
-    // array_intersect semantics (see Text.contaminationSql)
-    "stream_contamination" -> Text.contaminationSql(distinctFps = true),
-    "stream_kmeans" -> trainedOracleSql("stream_kmeans"),
-    "sim_ann_lsh" -> Similarity.annTopKDuckdbSql((0L until 10L), 5),
-    "sim_ann_ivf_seeded" -> Similarity.ivfSeededDuckdbSql((0L until 10L), 5),
-    "sim_near_dup" -> Similarity.cosineNearDupDuckdbSql(threshold = 0.4),
-    "sim_knn_join" -> Similarity.knnJoinDuckdbSql(
-      probeWhere = "vec_id % 50 = 0", corpusWhere = "vec_id % 50 <> 0", k = 3),
-    "sim_knn_graph" -> Similarity.knnJoinDuckdbSql(
-      probeWhere = "1 = 1", corpusWhere = "1 = 1", k = 2, excludeSelf = true),
-    "sim_range_search" -> Similarity.rangeSearchDuckdbSql(
-      probeWhere = "vec_id % 50 = 0", corpusWhere = "vec_id % 50 <> 0",
-      threshold = 0.3),
-    "sim_mmr_rerank" -> Similarity.mmrRerankDuckdbSql(
-      probeWhere = "vec_id % 50 = 0", corpusWhere = "vec_id % 50 <> 0",
-      k = 3, shortlist = 8),
-    "emb_recall_eval" -> Similarity.recallEvalDuckdbSql(
-      probeWhere = "vec_id % 50 = 0", corpusWhere = "vec_id % 50 <> 0",
-      k = 5),
-    "emb_recall_ivfpq" -> Similarity.recallIvfPqDuckdbSql(
-      probeWhere = "vec_id % 50 = 0", corpusWhere = "vec_id % 50 <> 0",
-      topK = 5),
-    // trained-literal oracle, stashed by the query run (Verify dumps
-    // oracles after all queries — see trainedOracleSql)
-    "emb_recall_ivfpq_trained" ->
-      trainedOracleSql("emb_recall_ivfpq_trained"),
-    "emb_recall_ivfpq_trained_m32" ->
-      trainedOracleSql("emb_recall_ivfpq_trained_m32"),
-    "emb_recall_ivfpq_trained_kc64" ->
-      trainedOracleSql("emb_recall_ivfpq_trained_kc64"),
-    "emb_recall_ivfpq_pca" ->
-      trainedOracleSql("emb_recall_ivfpq_pca"),
-    "emb_recall_ivfpq_kc_sqrtn" ->
-      trainedOracleSql("emb_recall_ivfpq_kc_sqrtn"),
-    "emb_recall_ivfpq_refined" ->
-      trainedOracleSql("emb_recall_ivfpq_refined"),
-    "sim_ann_ivf" -> trainedOracleSql("sim_ann_ivf"),
-    "emb_pq_encode" -> Similarity.pqEncodeSeededDuckdbSql(),
-    "emb_pq_distortion" -> Similarity.pqDistortionSeededDuckdbSql(),
-    "sim_ann_pq" -> Similarity.pqSearchSeededDuckdbSql(
-      probeWhere = "vec_id % 50 = 0", corpusWhere = "vec_id % 50 <> 0",
-      topK = 3),
-    "sim_ann_pq_short_cb" -> Similarity.pqSearchSeededDuckdbSql(
-      probeWhere = "vec_id >= 12 AND vec_id < 40",
-      corpusWhere = "vec_id < 12", topK = 3),
-    "sim_ann_ivfpq" -> Similarity.ivfPqSeededDuckdbSql(
-      probeWhere = "vec_id % 50 = 0", corpusWhere = "vec_id % 50 <> 0",
-      topK = 3),
-    "sim_knn_join_pq" -> Similarity.knnJoinPqSeededDuckdbSql(
-      probeWhere = "vec_id % 50 = 0", corpusWhere = "vec_id % 50 <> 0",
-      topK = 3, refine = 4),
-    "dedup_lsh_jaccard" -> MinHashSpec.duckdbJaccardSql(),
-    "dedup_incremental" -> MinHashSpec.duckdbIncrementalSql(
-      splitCaseSql = graft.etl.Sampling.hashSplitSql("doc_id", incrementalSplit)),
-    // same semantics as dedup_incremental — the bucketed layout may
-    // only change the plan, so the oracle is the identical rebuild SQL
-    "dedup_incremental_bucketed" -> MinHashSpec.duckdbIncrementalSql(
-      splitCaseSql = graft.etl.Sampling.hashSplitSql("doc_id", incrementalSplit)),
-    "dedup_incremental_loop" -> MinHashSpec.duckdbIncrementalLoopSql(
-      splitCaseSql = graft.etl.Sampling.hashSplitSql("doc_id", incrementalLoopSplit)),
-    // identical oracle: the stream gate replays the SAME b1/b2 carve
-    // through foreachBatch with the same per-batch step — the rebuild
-    // contract does not care which runtime drove the merges
-    "stream_incremental_dedup" -> MinHashSpec.duckdbIncrementalLoopSql(
-      splitCaseSql = graft.etl.Sampling.hashSplitSql("doc_id", incrementalLoopSplit)),
-    // identical oracle: the prestaged gate differs ONLY in where the
-    // initial index comes from (parquet load vs in-query build), and
-    // the oracle rebuilds from scratch either way
-    "dedup_incremental_prestaged" -> MinHashSpec.duckdbIncrementalLoopSql(
-      splitCaseSql = graft.etl.Sampling.hashSplitSql("doc_id", incrementalLoopSplit)),
-    "dedup_bloom_screen" -> Dedup.bloomScreenSql(
-      splitCaseSql = graft.etl.Sampling.hashSplitSql("doc_id", incrementalSplit)),
-    "dedup_simhash" -> SimHash.duckdbSql(),
-    "dedup_spans" -> Dedup.spanDedupSql(),
-    "dedup_boilerplate" -> Dedup.boilerplateDedupSql(),
-    "text_fingerprint" -> Text.fingerprintSql(),
-    "text_ngram_freq" -> Text.ngramFreqSql(),
-    "text_contamination" -> Text.contaminationSql(),
-    "text_unigram_logprob" -> Text.unigramLogProbSql(),
-    "text_bigram_logprob" -> Text.bigramLogProbSql(),
-
-    "text_heavy_hitters" -> Text.heavyHittersSql(perMille = 20),
-    "text_repetition" -> Text.repetitionSql(),
-    "text_bm25" -> Text.bm25Sql(bm25Terms),
-    "emb_group_centroids" -> Similarity.groupCentroidsSql(),
-    "emb_kmeans" -> trainedOracleSql("emb_kmeans"),
-    "emb_pca" -> trainedOracleSql("emb_pca"),
-    "emb_quantize" -> Similarity.quantizeInt8Sql(),
-
-    "emb_norm_filter" -> Similarity.normFilterSql(),
-    "emb_project" -> Similarity.projectDuckdbSql(),
-
-    "text_corpus_filter" -> corpusFilterOracle,
-
-    // connected components as a recursive CTE: walk(id, lbl) enumerates
-    // every (node, reachable-label) pair over the undirected pair edges
-    // (UNION dedups states, so the recursion terminates); min(lbl) per id
-    // is the component minimum — exactly what the Spark label propagation
-    // converges to
-    "dedup_keep_best" -> Dedup.keepBestSql(threshold = 0.5),
-
-    "dedup_cc_clusters" ->
-      s"""WITH RECURSIVE pairs AS (
-           ${MinHashSpec.duckdbJaccardSql()}
-         ),
-         edges AS (
-           SELECT doc_a AS src, doc_b AS dst FROM pairs
-           UNION ALL
-           SELECT doc_b AS src, doc_a AS dst FROM pairs
-         ),
-         walk AS (
-           SELECT DISTINCT src AS id, src AS lbl FROM edges
-           UNION
-           SELECT e.dst AS id, w.lbl AS lbl
-           FROM walk w JOIN edges e ON e.src = w.id
-         ),
-         cc AS (SELECT id, min(lbl) AS cluster FROM walk GROUP BY 1)
-         SELECT d.doc_id, coalesce(cc.cluster, d.doc_id) AS cluster
-         FROM documents d LEFT JOIN cc ON d.doc_id = cc.id""",
-
-    "sim_cosine_topk" ->
-      s"""WITH p AS (SELECT vec_id AS probe_id, embedding AS pv
-                    FROM embeddings WHERE vec_id IN ($probeList)),
-            c AS (SELECT vec_id AS cand_id, embedding AS cv FROM embeddings),
-            s AS (
-              SELECT probe_id, cand_id,
-                     -- CAST to DOUBLE[]: float accumulation drifts vs the
-                     -- Spark double kernels (see Similarity.duckdbCosine)
-                     round(CASE WHEN list_dot_product(CAST(pv AS DOUBLE[]), CAST(pv AS DOUBLE[])) = 0
-                                  OR list_dot_product(CAST(cv AS DOUBLE[]), CAST(cv AS DOUBLE[])) = 0 THEN 0.0
-                           ELSE list_dot_product(CAST(pv AS DOUBLE[]), CAST(cv AS DOUBLE[])) /
-                             (sqrt(list_dot_product(CAST(pv AS DOUBLE[]), CAST(pv AS DOUBLE[]))) * sqrt(list_dot_product(CAST(cv AS DOUBLE[]), CAST(cv AS DOUBLE[]))))
-                           END, 4) AS cosine
-              FROM p, c WHERE probe_id <> cand_id)
-         SELECT probe_id, cand_id, cosine,
-                cast(row_number() OVER (PARTITION BY probe_id
-                  ORDER BY cosine DESC, cand_id) as int) AS rnk
-         FROM s
-         QUALIFY rnk <= 5""",
-
-    "text_quality" ->
-      s"""WITH t AS (
-           SELECT doc_id,
-                  cast(length(text) as int) AS n_chars_calc,
-                  string_split_regex(trim(lower(text)), '${Text.wsRe}') AS __toks,
-                  cast(length(regexp_replace(text, '[\\w${Text.WS}]', '', 'g')) as int)
-                    AS punct_count
-           FROM documents),
-         u AS (
-           SELECT doc_id, n_chars_calc,
-                  cast(len(__toks) as int) AS word_count, punct_count,
-                  cast(len(list_filter(__toks, x -> x IN ($stopList))) as int)
-                    AS stop_count
-           FROM t)
-         SELECT doc_id, n_chars_calc, word_count, punct_count, stop_count,
-                ${Text.halfUpSql("punct_count / cast(n_chars_calc as double)", 4)} AS punct_ratio,
-                ${Text.halfUpSql("stop_count / cast(word_count as double)", 4)} AS stop_ratio,
-                ${Text.halfUpSql(
-                  """least(word_count / 100.0, 1.0) * 0.5
-                      + (1.0 - punct_count / cast(n_chars_calc as double)) * 0.25
-                      + (stop_count / cast(word_count as double)) * 0.25""", 4)}
-                  AS quality_score
-         FROM u""",
-
-    "text_chunk" -> Text.chunkSql(chunkSize = 32, overlap = 8),
-
-    "text_token_count" ->
-      s"""SELECT doc_id,
-                cast(len(string_split_regex(trim(lower(text)), '${Text.wsRe}')) as int)
-                  AS ws_tokens,
-                cast(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9${Text.WS}]')) as int)
-                  AS bpe_tokens
-         FROM documents""",
-
-    "text_lang_id" ->
-      s"""WITH t AS (
-           SELECT doc_id, lang,
-                  string_split_regex(trim(lower(text)), '${Text.wsRe}') AS __toks
-           FROM documents),
-         h AS (
-           SELECT doc_id, lang,
-      $langHitsSql
-           FROM t)
-         SELECT doc_id, lang, hits_de, hits_en, hits_es, hits_fr, hits_zh,
-                $langPredSql AS pred_lang
-         FROM h""")
+  /** Views derived from `gates`, for callers that take a key → frame
+    * builder or a key → oracle SQL map. `oracleSql` has no entry for a
+    * trained gate: that oracle exists only once the gate has run.
+    */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    gates.map { case (k, g) =>
+      k -> ((s: SparkSession, dir: String) => g.build(s, dir).frame) }
+  lazy val oracleSql: Map[String, String] =
+    gates.flatMap { case (k, g) => g.oracle.map(k -> _) }
 }

@@ -51,18 +51,17 @@ object StreamAudit {
       .getOrElse("/root/testdata/sf0.001")
     val spark = Tables.session("graft-stream-audit", cores = 4)
     spark.sparkContext.setLogLevel("ERROR")
-    val names = SparkEntry.queries.keys.filter(_.startsWith("stream_"))
-      .toSeq.sorted
-    val stats = names.map { n =>
-      graft.streaming.Streams.lastRunStats = None
+    val streams = SparkEntry.gates.values.toSeq
+      .filter(_.key.startsWith("stream_"))
+    val stats = streams.map { g =>
       // building the frame drives the full AvailableNow run; the noop
       // write then materializes the sink read (symmetry with Bench)
-      SparkEntry.queries(n)(spark, sfDir).write
-        .format("noop").mode("overwrite").save()
-      val s = graft.streaming.Streams.lastRunStats.getOrElse(
-        sys.error(s"$n left no RunStats — did it bypass the harness?"))
+      val run = g.build(spark, sfDir)
+      run.frame.write.format("noop").mode("overwrite").save()
+      val s = run.stream.getOrElse(
+        sys.error(s"${g.key} returned no RunStats — did it bypass the runner?"))
       Tables.release(spark)
-      (n, s)
+      (g.key, s)
     }
     val status = Baseline.run(audit, record, stats)
     spark.stop()

@@ -1,14 +1,13 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Driver-run correctness dump: each gate's frame → parquet, plus
+  * oracle_sql.json, for the driver's DuckDB compare. A gate's oracle is
+  * the one its run returned (a trained gate's) or else its registered
+  * one; a gate that yields neither fails the run.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    // bind the trained-oracle stash to this run's dir: a side file left
-    // by a run against another corpus must yield the fail sentinel,
-    // not a stale contract
-    SparkEntry.noteRunDir(sfDir)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Tables.session("graft-verify", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
@@ -27,14 +26,21 @@ object Verify {
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
     var failures = List.empty[String]
-    SparkEntry.queries
+    // a gate that does not run keeps its registered oracle, if any
+    var oracles = SparkEntry.gates.flatMap { case (k, g) => g.oracle.map(k -> _) }
+    SparkEntry.gates
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+      .foreach { case (name, gate) =>
       val dest = new java.io.File(s"$outDir/$name")
       if (dest.exists()) deleteRecursively(dest)
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      try {
+        val run = gate.build(spark, sfDir)
+        val sql = (run.oracle orElse gate.oracle)
+          .getOrElse(sys.error("the run returned no oracle"))
+        run.frame.coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        oracles += name -> sql
+      } catch { case e: Throwable =>
         failures ::= name
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
@@ -59,7 +65,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = oracles
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

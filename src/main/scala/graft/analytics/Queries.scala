@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.config.Checkpoints.CutSyntax
 
 /** Relational analytics core — proves the engine runs full star-schema
   * workloads with plans that survive scale-up:
@@ -336,7 +337,7 @@ object Queries {
       .select(date_trunc("day", col("ts")).cast("date").as("d"),
         col("user_id"))
       .distinct()
-      .localCheckpoint() // consumed three times (days, dau, the window join)
+      .cutLineage() // consumed three times (days, dau, the window join)
     val days = du.select(col("d").as("day")).distinct()
     val dau = du.groupBy(col("d").as("day")).agg(count(lit(1)).as("dau"))
     // each (day, user) row contributes to the windowDays days it stays
@@ -377,7 +378,7 @@ object Queries {
     val ev = Tables(spark, dir, "events")
       .select(col("user_id"), col("event_type"),
         expr("unix_micros(ts)").as("us"))
-      .localCheckpoint() // consumed once per stage
+      .cutLineage() // consumed once per stage
     // reached(i): per-user earliest completion time of stage i
     val reached = stages.zipWithIndex.scanLeft(Option.empty[DataFrame]) {
       case (prev, (stage, _)) =>
@@ -389,7 +390,7 @@ object Queries {
         }
         Some(gated.groupBy(col("user_id"))
           .agg(min(col("us")).as("t_prev"))
-          .localCheckpoint()) // each stage feeds the next AND its count
+          .cutLineage()) // each stage feeds the next AND its count
     }.flatten
     val counts = reached.zip(stages).zipWithIndex.map {
       case ((df, stage), i) =>
@@ -455,7 +456,7 @@ object Queries {
       .select(col("user_id"),
         expr("unix_micros(date_trunc('week', ts))").as("wk"))
       .distinct()
-      .localCheckpoint() // consumed twice (cohort min + activity join)
+      .cutLineage() // consumed twice (cohort min + activity join)
     val cohorts = uw.groupBy(col("user_id")).agg(min(col("wk")).as("c0"))
     val cells = uw.join(cohorts, Seq("user_id"))
       .groupBy(col("c0"),

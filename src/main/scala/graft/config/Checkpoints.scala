@@ -31,7 +31,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   * small frames (1-row fingerprints, vocab counts collected into
   * literals) and class-(c) staged-parquet state (incremental dedup
   * index) keep their own §5 paths — this knob is exactly the middle
-  * class.
+  * class. No library or gate code calls `localCheckpoint` directly:
+  * every cut goes through `cut` / `cutLazy`, so one conf moves them all.
   */
 object Checkpoints {
   /** The session conf key. Unknown keys are legal custom SQLConf

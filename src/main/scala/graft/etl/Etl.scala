@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.config.{ColumnSpec, TableConfig}
+import graft.config.Checkpoints.CutSyntax
 
 /** Config-driven ETL core: the Spark-first re-expression of the reference's
   * table load / create / copy / index / diff / dedup surface.
@@ -441,7 +442,7 @@ object Etl {
     // job for no reuse. coalesce: sum over zero rows is NULL, the
     // oracle's count form gives 0 — empty inputs must agree.
     val factKeys = fact.select(col(factKey).as("__k")).distinct()
-    val dimKeys = dim.select(col(dimKey).as("__k")).localCheckpoint()
+    val dimKeys = dim.select(col(dimKey).as("__k")).cutLineage()
     val factSide = fact.select(col(factKey).as("__k"))
       .join(dimKeys.withColumn("__hit", lit(1)), Seq("__k"), "left")
       .agg(count(lit(1)).as("n_fact"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.config.Checkpoints.CutSyntax
 import graft.dedup.MinHashSpec
 
 /** Deterministic, cross-engine-reproducible sampling and dataset splits —
@@ -252,7 +253,7 @@ object Sampling {
     */
   private def weightedCutFilter(df: DataFrame, sourceCol: String,
                                 keyCol: String, counts: DataFrame): DataFrame = {
-    val cp = counts.localCheckpoint()
+    val cp = counts.cutLineage()
     val m = cp.agg(min(col("__n") / col("__w")).as("__m"))
     val cuts = cp.crossJoin(m)
       .select(col(sourceCol),

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.config.Checkpoints.CutSyntax
+
 /** QA pipeline: Spark-first re-expression of the reference's
   * `etl_qa_run_pipeline` (R/etl_qa_run_pipeline.R:697-808): per-time-period
   * missingness, continuous / date distributions, categorical value counts,
@@ -201,12 +203,13 @@ object Qa {
     // column subset of it — without materialization Catalyst's column
     // pruning specializes each reference into its own agg-over-scan
     // subtree (no ReuseExchange fires, the source is scanned once per
-    // family). `localCheckpoint` (not `persist`) so the source is scanned
-    // exactly once AND nothing is left registered in the CacheManager:
-    // checkpoint blocks are freed by the ContextCleaner when the frame is
-    // GC'd, so a long-lived session doesn't leak cache entries.
+    // family). A lineage cut (not `persist`, per the `Checkpoints` policy)
+    // so the source is scanned exactly once AND nothing is left registered
+    // in the CacheManager: checkpoint blocks are freed by the
+    // ContextCleaner when the frame is GC'd, so a long-lived session
+    // doesn't leak cache entries.
     val wide = df.groupBy(col(timeVar)).agg(aggs.head, aggs.tail: _*)
-      .localCheckpoint()
+      .cutLineage()
     val missStack = cols.map(c => s"'$c', __m_$c").mkString(", ")
     val miss = wide.select(col(timeVar),
         expr(s"stack(${cols.size}, $missStack) as (varname, n_missing)"),
@@ -320,9 +323,9 @@ object Qa {
       fusedStats(df, timeVar, cols, numeric, dates)
     // Same materialization argument: the top-8 frame is bounded at
     // (topN+2) × periods × columns rows and is referenced by two families.
-    // localCheckpoint, not persist — see fusedStats' cache-hygiene note.
+    // A lineage cut, not persist — see fusedStats' cache-hygiene note.
     val top8 = if (categorical.nonEmpty)
-      Some(categoricalTop8(df, timeVar, categorical).localCheckpoint())
+      Some(categoricalTop8(df, timeVar, categorical).cutLineage())
     else None
     val results = Seq(
       "missing_data" -> Some(missFused),
@@ -549,7 +552,7 @@ object Qa {
     * but its lineage is a full scan + shuffle of the source — left
     * unmaterialized, Spark recomputes that lineage per reference
     * (3 parquet scans, measured 6.74 s vs 0.5 s at sf0.1). Materialize
-    * once with localCheckpoint (house policy — nothing left in the
+    * once with a lineage cut (house policy — nothing left in the
     * CacheManager), unless the caller already did: runPipeline hands in
     * its checkpointed top-8 frame, which arrives as a LogicalRDD leaf.
     */
@@ -557,7 +560,7 @@ object Qa {
                            withProportion: Boolean = true): DataFrame = {
     val bounded = catLong.queryExecution.analyzed match {
       case _: org.apache.spark.sql.execution.LogicalRDD => catLong
-      case _ => catLong.localCheckpoint()
+      case _ => catLong.cutLineage()
     }
     val periods = bounded.select(col(timeVar)).distinct()
     val vals = bounded.select(col("varname"), col("value")).distinct()
@@ -575,10 +578,21 @@ object Qa {
     val keep = Seq(timeVar, "varname", "value", "n") ++
       (if (withProportion) Seq("proportion") else Nil)
     val c = bounded.select(keep.map(col): _*).alias("c")
+    // ONE long join key, with the exact match as the join's residual
+    // condition. Equi-keys on the three strings would build an
+    // UnsafeHashedRelation, whose map takes a whole Tungsten page
+    // (16 MiB on a 3 GiB driver) for this small relation, held until
+    // the ContextCleaner drops the broadcast; a long key builds a
+    // LongHashedRelation sized to its rows. The residual is written with
+    // range comparisons so that no equality is lifted back into the key.
+    def key(t: String) =
+      xxhash64(col(s"$t.$timeVar"), col(s"$t.varname"), col(s"$t.value"))
+    def same(c1: String) = col(s"g.$c1") >= col(s"c.$c1") &&
+      col(s"g.$c1") <= col(s"c.$c1")
     val joined = grid.join(broadcast(c),
-        col(s"g.$timeVar") === col(s"c.$timeVar") &&
-          col("g.varname") === col("c.varname") &&
-          (col("g.value") <=> col("c.value")), "left")
+        key("g") === key("c") && same(timeVar) && same("varname") &&
+          ((col("g.value").isNull && col("c.value").isNull) || same("value")),
+        "left")
       .select(Seq(col(s"g.$timeVar").as(timeVar),
         col("g.varname").as("varname"), col("g.value").as("value"),
         coalesce(col("c.n"), lit(0L)).as("n")) ++

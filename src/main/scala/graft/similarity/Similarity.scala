@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.config.Checkpoints.CutSyntax
+
 /** Similarity search over an embedding column (`array<float>`).
   *
   * Brute-force cosine top-k is the correctness baseline; the
@@ -2632,7 +2634,7 @@ object Similarity {
           .cast("int") - 1).as("cluster"))
       // §5 cluster-loss contract (executor-local cut; reliable
       // checkpoint() — class (b) — on preemptible clusters)
-      .localCheckpoint()
+      .cutLineage()
     val a = assigned.select(col("cluster"), col(idCol).as("id_a"),
       col(vecCol).as("vec_a"))
     val b = assigned.select(col("cluster"), col(idCol).as("id_b"),

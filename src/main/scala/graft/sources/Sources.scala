@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 import graft.config.{ColumnSpec, TableConfig}
+import graft.config.Checkpoints.CutSyntax
 import graft.etl.Etl
 
 /** File sources/sinks honoring the reference's load contract
@@ -52,12 +53,12 @@ object Sources {
     * lines survive the load with their raw text in `_corrupt_record`
     * (typed columns NULL) instead of being silently nulled — callers
     * split the frame on `_corrupt_record IS NULL` into clean rows and a
-    * quarantine table. The quarantined frame is returned MATERIALIZED via
-    * `localCheckpoint`: Spark refuses queries that reference only the
-    * internal corrupt-record column on a raw scan ("referencing internal
-    * corrupt record column is not allowed"), so the frame must be
-    * materialized before the split queries are legal. localCheckpoint
-    * (the house policy for multi-consumer intermediates) reads the file
+    * quarantine table. The quarantined frame is returned MATERIALIZED by a
+    * lineage cut (`Checkpoints`): Spark refuses queries that reference
+    * only the internal corrupt-record column on a raw scan ("referencing
+    * internal corrupt record column is not allowed"), so the frame must
+    * be materialized before the split queries are legal. The cut (the
+    * house policy for multi-consumer intermediates) reads the file
     * once and leaves NOTHING registered in the CacheManager — the
     * `.cache()` this replaces was never unpersisted, so every quarantine
     * load leaked a cache entry for the session's lifetime.
@@ -67,7 +68,7 @@ object Sources {
     val df = delimitedReader(spark, cfg, "overall", quarantine)
       .csv(cfg.filePath.getOrElse("overall",
         sys.error(s"config ${cfg.toTable}: no overall file_path")))
-    if (quarantine) df.localCheckpoint() else df
+    if (quarantine) df.cutLineage() else df
   }
 
   /** `load_table_from_file(ind_yr=TRUE, combine_yr=TRUE)`: per-year files
@@ -220,7 +221,7 @@ object Sources {
       .json(path)
     // same materialization rule as loadDelimited: queries touching only
     // the internal corrupt-record column are illegal on a raw scan
-    if (quarantine) df.localCheckpoint() else df
+    if (quarantine) df.cutLineage() else df
   }
 
   /** The write side: one zstd-compressed JSON-lines shard per partition

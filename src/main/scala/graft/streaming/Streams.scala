@@ -159,28 +159,35 @@ object Streams {
     } else tempDir(prefix)
   }
 
-  /** Structural stats of the last [[runStagedAvailableNow]] run, captured
+  /** Structural stats of one [[runStagedAvailableNow]] run, captured
     * from the query's progress events: how many micro-batches actually
     * carried data, and how many stateful operators the streaming plan
     * held. `StreamAudit` pins these per gate — the oracle hash alone
     * cannot tell an incremental replay from a degenerate one-batch run
     * (both produce the same rows), so a harness regression that
     * collapses the replay would silently stop exercising streaming
-    * state without this gate. `None` while a run is in flight or after
-    * one threw.
+    * state without this gate.
     */
   case class RunStats(batches: Int, dataBatches: Int, statefulOps: Int,
                       stateRowsTotal: Long)
-  @volatile var lastRunStats: Option[RunStats] = None
+
+  /** What an AvailableNow run returns: the sink read back, and the stats
+    * of the run that wrote it. A run that throws returns nothing, so no
+    * stats outlive it.
+    */
+  case class StreamRun(frame: DataFrame, stats: RunStats) {
+    def map(f: DataFrame => DataFrame): StreamRun = copy(frame = f(frame))
+  }
 
   /** The ONE AvailableNow runner behind every streaming gate: file
     * source over the staged replay dir `in` (`maxFilesPerTrigger=1`, so
     * each staged chunk is one real incremental micro-batch) →
     * `transform`'s streaming state → `foreachBatch` → parquet sink under
-    * `Trigger.AvailableNow`, returning the sink read back. This is the
-    * production deployment shape (a bounded catch-up run of the
-    * always-on pipeline) driven to completion in one call, which makes
-    * the STREAMING path itself checkable against a batch SQL oracle.
+    * `Trigger.AvailableNow`, returning the sink read back with the run's
+    * [[RunStats]]. This is the production deployment shape (a bounded
+    * catch-up run of the always-on pipeline) driven to completion in one
+    * call, which makes the STREAMING path itself checkable against a
+    * batch SQL oracle.
     *
     * `complete` mode overwrites the sink each batch (the last batch is
     * the full aggregate — itself idempotent); `append` mode writes each
@@ -211,10 +218,7 @@ object Streams {
       refireBatchId: Option[Long] = None, lastBatchOnly: Boolean = false)(
       transform: DataFrame => DataFrame = identity,
       body: (DataFrame, Long, (DataFrame, Long) => Unit) => Unit =
-        (batch, id, sink) => sink(batch, id)): DataFrame = {
-    // reset BEFORE the run: a run that throws must not leave the
-    // previous gate's stats behind for a caller to misattribute
-    lastRunStats = None
+        (batch, id, sink) => sink(batch, id)): StreamRun = {
     val out = tempDir("graft_stream_out")
     val ckpt = ckptDir("graft_stream_ckpt")
     // Session confs for the run, restored afterwards. Stateful streaming
@@ -234,7 +238,7 @@ object Streams {
     var outSchema: StructType = null
     var sinkSchema: StructType = null
     var lastWritten = -1L
-    try {
+    val stats = try {
       val built = transform(spark.readStream
         .schema(stagedSchema(in).getOrElse(spark.read.parquet(in).schema))
         .option("maxFilesPerTrigger", 1)
@@ -261,13 +265,13 @@ object Streams {
         .start()
       q.awaitTermination()
       val prog = q.recentProgress
-      lastRunStats = Some(RunStats(
+      RunStats(
         batches = prog.length,
         dataBatches = prog.count(_.numInputRows > 0),
         statefulOps = prog.map(_.stateOperators.length)
           .foldLeft(0)(math.max),
         stateRowsTotal = prog.lastOption
-          .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(0L)))
+          .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(0L))
     } finally {
       saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
       // the checkpoint is garbage whether the stream succeeded or threw;
@@ -288,8 +292,9 @@ object Streams {
       else spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         Option(sinkSchema).getOrElse(outSchema))
-    (if (lastBatchOnly && hasData) all.filter(col("batch_id") === lastWritten)
-     else all).drop("batch_id")
+    StreamRun((if (lastBatchOnly && hasData)
+      all.filter(col("batch_id") === lastWritten) else all).drop("batch_id"),
+      stats)
   }
 
   /** Drive a streaming transform of the events table end to end through
@@ -303,7 +308,7 @@ object Streams {
   private def runEventsAvailableNow(spark: SparkSession, sfDir: String,
                                     mode: String, chunks: Int = 4,
                                     flushHorizonMs: Option[Long] = None)
-                                   (build: DataFrame => DataFrame): DataFrame = {
+                                   (build: DataFrame => DataFrame): StreamRun = {
     val flushTag = flushHorizonMs.map(h => s"_flush$h").getOrElse("")
     val in = stageReplay(spark, sfDir, "events", "v2", s"$chunks$flushTag") {
       val e = graft.Tables(spark, sfDir, "events")
@@ -403,7 +408,7 @@ object Streams {
     * batch-equivalence regime the operator documents).
     */
   def dedupDocsAvailableNow(spark: SparkSession, sfDir: String,
-                            chunks: Int = 3): DataFrame = {
+                            chunks: Int = 3): StreamRun = {
     // chunks=3 default: the replay is in strict doc_id order at ANY
     // chunking, so "first seen per hash" = min(doc_id) holds unchanged;
     // dedup state still spans batch boundaries with 3 batches.
@@ -422,7 +427,7 @@ object Streams {
     * spec-asserted. Oracle-gated as `stream_sink_replay`.
     */
   def dedupDocsSinkReplayAvailableNow(spark: SparkSession, sfDir: String,
-                                      chunks: Int = 3): DataFrame = {
+                                      chunks: Int = 3): StreamRun = {
     // chunks=3 default (see dedupDocsAvailableNow); the refired batch
     // id chunks/2 = 1 is still an interior batch of the replay.
     val in = stageDocsReplay(spark, sfDir, chunks)
@@ -475,7 +480,7 @@ object Streams {
                                    index: graft.dedup.DedupIndex,
                                    chunks: Int,
                                    idCol: String = "doc_id",
-                                   textCol: String = "text"): DataFrame = {
+                                   textCol: String = "text"): StreamRun = {
     import graft.dedup.Dedup
     var corp = corpus.select(col(idCol), col(textCol))
     var idx = index
@@ -538,7 +543,7 @@ object Streams {
     * exactly like the incremental-dedup loop's corpus/index pair.
     */
   def kmvSketchAvailableNow(spark: SparkSession, sfDir: String,
-                            k: Int = 64, chunks: Int = 4): DataFrame = {
+                            k: Int = 64, chunks: Int = 4): StreamRun = {
     import graft.analytics.Sketch
     import spark.implicits._
     // Kept-set state is ≤ k longs PER GROUP (the sketch's whole
@@ -590,7 +595,7 @@ object Streams {
     * State is a driver-side map, not runtime state: statefulOps = 0.
     */
   def benfordAvailableNow(spark: SparkSession, sfDir: String,
-                          chunks: Int = 4): DataFrame = {
+                          chunks: Int = 4): StreamRun = {
     import graft.qa.Qa
     import spark.implicits._
     // Digit-count state is ≤ 10 (digit, n) longs — the class-(a)
@@ -640,7 +645,7 @@ object Streams {
     * batch composition does.
     */
   def lshCandidatesAvailableNow(spark: SparkSession, sfDir: String,
-                                chunks: Int = 4): DataFrame = {
+                                chunks: Int = 4): StreamRun = {
     val in = stageDocsReplay(spark, sfDir, chunks)
     // One staged file per micro-batch = ONE read task, and the MinHash
     // signature expressions are the heavy part — repartition ahead of
@@ -649,13 +654,13 @@ object Streams {
     val cores = spark.sparkContext.defaultParallelism
     runStagedAvailableNow(spark, in, "append", chunks)(df =>
       lshCandidatesStream(df.repartition(cores), horizonMinutes = 60).toDF())
-      .distinct()
+      .map(_.distinct())
   }
 
   /** [[hourlyRollup]] through [[runEventsAvailableNow]] — oracle-gated
     * as `stream_hourly_rollup` (same DuckDB SQL as the batch twin).
     */
-  def hourlyRollupAvailableNow(spark: SparkSession, sfDir: String): DataFrame =
+  def hourlyRollupAvailableNow(spark: SparkSession, sfDir: String): StreamRun =
     // chunks=3 (not the default 4): a complete-mode window agg proves
     // incrementality with ANY multi-batch replay — its answer is
     // recomputed-from-state each batch and no tie/boundary rule spans
@@ -676,7 +681,7 @@ object Streams {
     * purchase, and same-ms groups stay in one micro-batch where the
     * click-first tie rule orders them.
     */
-  def asofEnrichAvailableNow(spark: SparkSession, sfDir: String): DataFrame = {
+  def asofEnrichAvailableNow(spark: SparkSession, sfDir: String): StreamRun = {
     import spark.implicits._
     runEventsAvailableNow(spark, sfDir, "append")(df =>
       asofEnrich(df.as[Event]).toDF())
@@ -689,7 +694,7 @@ object Streams {
     */
   def qaMissingnessAvailableNow(spark: SparkSession, sfDir: String,
                                 cols: Seq[String] = Seq("value", "props"))
-      : DataFrame =
+      : StreamRun =
     // chunks=3: complete-mode, no cross-batch rule (see hourlyRollup)
     runEventsAvailableNow(spark, sfDir, "complete", chunks = 3)(
       qaMissingnessStream(_, cols))
@@ -707,7 +712,7 @@ object Streams {
     * still-open session is filtered by user_id.
     */
   def sessionizeAvailableNow(spark: SparkSession, sfDir: String,
-                             gapMinutes: Int = 30): DataFrame = {
+                             gapMinutes: Int = 30): StreamRun = {
     import spark.implicits._
     val gapMs = gapMinutes * 60L * 1000L
     runEventsAvailableNow(spark, sfDir, "append",
@@ -730,7 +735,7 @@ object Streams {
   def followWithinAvailableNow(spark: SparkSession, sfDir: String,
                                triggerType: String = "click",
                                followType: String = "purchase",
-                               withinMinutes: Int = 60): DataFrame =
+                               withinMinutes: Int = 60): StreamRun =
     runEventsAvailableNow(spark, sfDir, "append")(
       followWithin(_, triggerType, followType, withinMinutes))
 
@@ -880,7 +885,7 @@ object Streams {
     val fp = graft.dedup.MinHashSpec.fingerprint62Expr(spark, "g")
     // §5 cluster-loss contract (executor-local cut; a 1-row aggregate —
     // broadcast-class (a) on preemptible clusters)
-    val fpsRows = benchFps.localCheckpoint()
+    val fpsRows = benchFps.cutLineage()
     val benchRow = fpsRows
       .agg(sort_array(collect_set(col("gram_fp"))).as("__bench"))
     val withFps = docs
@@ -943,7 +948,7 @@ object Streams {
     * a deployment loads its eval-set fingerprints the same way.
     */
   def contaminationAvailableNow(spark: SparkSession, sfDir: String,
-                                chunks: Int = 3): DataFrame = {
+                                chunks: Int = 3): StreamRun = {
     val in = stageDocsReplay(spark, sfDir, chunks)
     val bench = graft.Tables(spark, sfDir, "documents")
       .filter(expr("doc_id % 50 = 0"))
@@ -981,7 +986,7 @@ object Streams {
     */
   def kmeansAssignAvailableNow(spark: SparkSession, sfDir: String,
                                centroids: Array[Array[Double]],
-                               chunks: Int = 3): DataFrame = {
+                               chunks: Int = 3): StreamRun = {
     val in = stageEmbReplay(spark, sfDir, chunks)
     // one staged file per micro-batch = ONE read task; the k×dim
     // distance projection is the heavy part — repartition ahead of it
@@ -1304,7 +1309,7 @@ object Streams {
     * closing no-data micro-batch and never before.
     */
   def scd2AvailableNow(spark: SparkSession, sfDir: String,
-                       horizonDays: Int = 40): DataFrame = {
+                       horizonDays: Int = 40): StreamRun = {
     import spark.implicits._
     // ONE horizon feeds both the state timeout and the flush sentinel:
     // maintained separately, a raised state horizon would strand every

@@ -60,13 +60,13 @@ class NullCorpusSpec extends SparkSpec {
   private def sweep(dir: String, table: String,
                     alwaysRun: String => Boolean = _ => false)
       : (Int, Seq[String]) = {
-    val names = SparkEntry.queries.keys.toSeq.sorted
+    val names = SparkEntry.gates.keys.toSeq
       .filterNot(_.startsWith("stream_"))
     val failures = scala.collection.mutable.ArrayBuffer.empty[String]
     var swept = 0
     for (name <- names) {
       try {
-        val df = SparkEntry.queries(name)(spark, dir)
+        val df = SparkEntry.gates(name).build(spark, dir).frame
         if (readsStaged(df, dir, table) || alwaysRun(name)) {
           swept += 1
           df.queryExecution.toRdd.count(): Unit

@@ -262,10 +262,11 @@ class StreamingSpec extends SparkSpec {
     val cents = Similarity.ivfCentroids(e, k = 8, iters = 3)
     val batch = Similarity.kmeansAssign(e, centroids = Some(cents))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSet
-    val streamed = Streams.kmeansAssignAvailableNow(spark, sfDir, cents)
+    val run = Streams.kmeansAssignAvailableNow(spark, sfDir, cents)
+    val streamed = run.frame
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSet
     assert(streamed == batch)
-    val stats = Streams.lastRunStats.get
+    val stats = run.stats
     assert(stats.statefulOps == 0,
       s"per-row scoring must hold no streaming state: $stats")
     assert(stats.dataBatches >= 2,
@@ -437,9 +438,9 @@ class StreamingSpec extends SparkSpec {
   test("live Benford audit: folded digit-count state equals the " +
     "one-pass batch audit, with zero streaming state operators") {
     import graft.qa.Qa
-    val streamed = Streams.benfordAvailableNow(spark, sfDir)
-      .collect().map(_.toSeq).toSet
-    val stats = Streams.lastRunStats.get
+    val run = Streams.benfordAvailableNow(spark, sfDir)
+    val streamed = run.frame.collect().map(_.toSeq).toSet
+    val stats = run.stats
     val batch = Qa.benford(Tables(spark, sfDir, "documents"), "n_chars")
       .collect().map(_.toSeq).toSet
     assert(streamed == batch,
@@ -469,9 +470,9 @@ class StreamingSpec extends SparkSpec {
   test("live KMV sketch: streamed kept-set state equals the one-pass " +
     "batch sketch, with zero streaming state operators") {
     import graft.analytics.Sketch
-    val streamed = Streams.kmvSketchAvailableNow(spark, sfDir, k = 16)
-      .collect().map(_.toSeq).toSet
-    val stats = Streams.lastRunStats.get
+    val run = Streams.kmvSketchAvailableNow(spark, sfDir, k = 16)
+    val streamed = run.frame.collect().map(_.toSeq).toSet
+    val stats = run.stats
     // merge==rebuild: the folded state publishes the batch sketch
     val batch = Sketch.kmvSketch(Tables(spark, sfDir, "documents"),
       "source", "text", k = 16)
@@ -490,7 +491,7 @@ class StreamingSpec extends SparkSpec {
     // flush sentinel, foreachBatch sink) backs five oracle-gated
     // queries; bind it into the suite by asserting the hardest one —
     // the stateful sessionizer — lands exactly on sessionizeBatch.
-    val streamed = Streams.sessionizeAvailableNow(spark, sfDir, 30)
+    val streamed = Streams.sessionizeAvailableNow(spark, sfDir, 30).frame
       .select("user_id", "session_start", "session_end", "n_events")
       .collect().map(_.toSeq).toSet
     val batch = Streams.sessionizeBatch(Tables(spark, sfDir, "events"), 30)
@@ -615,7 +616,6 @@ class StreamingSpec extends SparkSpec {
     try {
       val before = confs.map(spark.conf.getOption)
       assert(before.last.isEmpty)
-      Streams.lastRunStats = Some(Streams.RunStats(1, 1, 1, 1L))
       spark.streams.addListener(listener)
       intercept[StreamingQueryException] {
         Streams.benfordAvailableNow(spark, badSf)
@@ -623,7 +623,6 @@ class StreamingSpec extends SparkSpec {
       assert(confs.map(spark.conf.getOption) == before)
       assert(queryId.nonEmpty && ownCkpts.isEmpty,
         s"query $queryId left ${ownCkpts.toSeq}")
-      assert(Streams.lastRunStats.isEmpty)
     } finally {
       spark.streams.removeListener(listener)
       prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
