@@ -42,10 +42,10 @@ object Bench {
     // timed reps, and an exception here would lose the whole artifact.
     // -1.0 = "sentinel unavailable"; the audit ignores negatives.
     try {
-      import java.nio.file.{Files, StandardOpenOption}
+      import java.nio.file.{Paths, StandardOpenOption}
       (1 to reps).map { _ =>
-        val dir = Files.createTempDirectory("graft_iocalib")
-        try {
+        Scratch.withDir("graft_iocalib") { d =>
+          val dir = Paths.get(d)
           val t0 = System.nanoTime()
           (0 until 24).foreach { i =>
             val ch = java.nio.channels.FileChannel.open(
@@ -62,9 +62,6 @@ object Bench {
             } finally ch.close()
           }
           (System.nanoTime() - t0) / 1e9
-        } finally {
-          (0 until 24).foreach(i => Files.deleteIfExists(dir.resolve(s"f$i")))
-          Files.deleteIfExists(dir): Unit
         }
       }.min
     } catch { case e: java.io.IOException =>

@@ -23,11 +23,13 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   *  - stream_* gates ARE included: their micro-batch stages run in this
   *    JVM and the listener sums them like any other — the recorded
   *    number is the state-exchange volume of the whole replay.
-  *  - Per-JVM staged inputs (streaming chunk dirs, zst shards, the
-  *    prestaged dedup index) are built by the FIRST query that needs
-  *    them, and that build is attributed to that query. A full sorted
-  *    sweep stages deterministically, so record/check are comparable;
-  *    a partial sweep (explicit query args would go here if added) is
+  *  - Staged inputs (streaming chunk dirs, zst shards, the prestaged
+  *    dedup index, the partitioned events copy) live for one JVM under
+  *    [[Scratch]]: the FIRST query that needs one builds it, and that
+  *    build is attributed to that query in every run, because nothing
+  *    staged by an earlier process is ever reused. A full sorted sweep
+  *    stages deterministically, so record/check are comparable; a
+  *    partial sweep (explicit query args would go here if added) is
   *    not, and the tool only runs full sweeps for exactly that reason.
   *  - Baselines are per-SF files (`shuffle_baseline_<sf>.tsv`); the
   *    committed artifact is sf0.1, the bench SF.

@@ -69,49 +69,36 @@ object SparkEntry {
                          (build: (SparkSession, String) => GateRun): Gate =
     new Gate(key, build, None)
 
-  // the trained-quantizer gates persist + reload through a temp dir to
-  // prove the production save/load loop; the artifacts are per-run
-  // scratch — delete after the load-back so bench/verify loops don't
-  // accumulate tmp litter
-  private def deleteRecursively(f: java.io.File): Unit = {
-    // listFiles() returns null (not empty) on an I/O or permission
-    // failure — best-effort scratch cleanup must not NPE the query run
-    if (f.isDirectory)
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete(): Unit
-  }
+  // The trained-quantizer gates persist + reload their models through a
+  // scratch dir to prove the production save/load loop; the dir is
+  // removed as soon as the models are back, or when the round trip
+  // throws.
+  private def centroidsRoundTrip(s: SparkSession, cents: Array[Array[Double]])
+      : Array[Array[Double]] =
+    Scratch.withDir("graft_trained") { d =>
+      Similarity.saveCentroids(s, cents, d)
+      Similarity.loadCentroids(s, d)
+    }
+  private def bundleRoundTrip(s: SparkSession,
+                              models: Seq[(String, Array[Array[Array[Double]]])])
+      : Map[String, Array[Array[Array[Double]]]] =
+    Scratch.withDir("graft_trained") { d =>
+      Similarity.saveModelBundle(s, models, d)
+      Similarity.loadModelBundle(s, d)
+    }
 
-  // Per-JVM staged artifacts keyed by sfDir, for the gates that model
-  // "built OUT-OF-BAND, loaded in-query" production state (the zst
-  // crawl-dump shards, the persisted dedup index). Within one JVM the
-  // testdata dir is immutable so staging runs once; a fresh JVM
-  // restages (no cross-run staleness). In a bench run the first timed
-  // rep pays the staging and min-of-2 reports the loaded path — the
-  // shape being measured.
-  private val stagedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  // staged dirs are per-JVM scratch — delete on JVM exit so repeated
-  // local runs don't accumulate /tmp litter (the r8 tmp-litter rule;
-  // the trained gates delete eagerly, these can't: bench reps re-read)
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      stagedDirs.values().forEach(d =>
-        deleteRecursively(new java.io.File(d)))))
-  }
-  private def stagedOnce(kind: String, dir: String)
-                        (build: String => Unit): String =
-    stagedDirs.computeIfAbsent(s"$kind|$dir", _ => {
-      val out = java.nio.file.Files
-        .createTempDirectory(s"graft_$kind").toString
-      build(out)
-      out
-    })
-
+  // Staged inputs for the gates that model "built OUT-OF-BAND, loaded
+  // in-query" production state (the zst crawl-dump shards, the
+  // persisted dedup index): built once per JVM and sf dir through
+  // Scratch, deleted at JVM exit. In a bench run the first timed rep
+  // pays the staging and min-of-2 reports the loaded path — the shape
+  // being measured.
+  //
   // The sf documents as .jsonl.zst shards — the non-splittable ingest
   // layout (parallelism = shard count, so >1 shard keeps the read
   // distributed).
   private def zstDocsDir(s: SparkSession, dir: String): String =
-    stagedOnce("zst_docs", dir) { out =>
+    Scratch.staged("zst_docs", dir) { out =>
       graft.sources.Sources.writeJsonlZst(
         Tables(s, dir, "documents").select(col("doc_id"), col("text"))
           .repartition(8), out)
@@ -121,7 +108,7 @@ object SparkEntry {
   // OWN ingest format (BCP-style delimited load), staged once per JVM
   // so the A10 loader is oracle-visible end to end.
   private def csvLineitemDir(s: SparkSession, dir: String): String =
-    stagedOnce("csv_lineitem", dir) { out =>
+    Scratch.staged("csv_lineitem", dir) { out =>
       Tables(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
           col("l_returnflag"), col("l_shipdate").cast("date").as("l_shipdate"))
@@ -137,7 +124,7 @@ object SparkEntry {
   // CLOB), read back PARTITIONED on l_orderkey, value-lossless vs the
   // parquet oracle.
   private def derbyDbDir(s: SparkSession, dir: String): String =
-    stagedOnce("jdbc_derby", dir) { out =>
+    Scratch.staged("jdbc_derby", dir) { out =>
       val conn = graft.sources.Jdbc.createDbConnection(
         s"jdbc:derby:$out/db;create=true")
       graft.sources.Jdbc.writeTable(
@@ -156,21 +143,21 @@ object SparkEntry {
   // crawl batch with no index-side shuffle). Table names are
   // dir-unique so two SFs staged in one JVM never collide in the
   // session catalog.
-  private def bucketedIndexPrefix(dir: String): String =
-    "graft_bidx_" + java.security.MessageDigest.getInstance("MD5")
+  private def dirTablePrefix(base: String, dir: String): String =
+    s"${base}_" + java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
   private def bucketedIndexDir(s: SparkSession, dir: String): String =
-    stagedOnce("bucketed_idx", dir) { out =>
+    Scratch.staged("bucketed_idx", dir) { out =>
       val corpus = graft.etl.Sampling
         .hashSplit(Tables(s, dir, "documents"), "doc_id", incrementalSplit)
         .filter(col("split") === "corpus")
         .select(col("doc_id"), col("text"))
       Dedup.saveIndexBucketed(s, Dedup.buildIndex(corpus), out,
-        tablePrefix = bucketedIndexPrefix(dir))
+        tablePrefix = dirTablePrefix("graft_bidx", dir))
     }
 
   private def prestagedLoopIndexDir(s: SparkSession, dir: String): String =
-    stagedOnce("loop_idx", dir) { out =>
+    Scratch.staged("loop_idx", dir) { out =>
       val corpus = graft.etl.Sampling
         .hashSplit(Tables(s, dir, "documents"), "doc_id",
           incrementalLoopSplit)
@@ -184,18 +171,15 @@ object SparkEntry {
   // The LOOP carve's corpus index in the BUCKETED layout (the D66
   // tables, but over incrementalLoopSplit's 70% corpus) — what the
   // streaming crawl-ingest gate loads as its initial index version.
-  private def bucketedLoopIndexPrefix(dir: String): String =
-    "graft_blidx_" + java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
   private def bucketedLoopIndexDir(s: SparkSession, dir: String): String =
-    stagedOnce("bucketed_loop_idx", dir) { out =>
+    Scratch.staged("bucketed_loop_idx", dir) { out =>
       val corpus = graft.etl.Sampling
         .hashSplit(Tables(s, dir, "documents"), "doc_id",
           incrementalLoopSplit)
         .filter(col("split") === "corpus")
         .select(col("doc_id"), col("text"))
       Dedup.saveIndexBucketed(s, Dedup.buildIndex(corpus), out,
-        tablePrefix = bucketedLoopIndexPrefix(dir))
+        tablePrefix = dirTablePrefix("graft_blidx", dir))
     }
 
   // The trained-IVFPQ recall gate body, shared by the m=16 / m=32 /
@@ -205,8 +189,7 @@ object SparkEntry {
   // train-once/load-per-job shape; parquet doubles are exact), score
   // with the reloaded quantizers, and return THIS run's trained-literal
   // oracle with the frame.
-  private def trainedRecallGate(s: SparkSession, dir: String,
-                                key: String, m: Int,
+  private def trainedRecallGate(s: SparkSession, dir: String, m: Int,
                                 kc: Int = 16, nprobe: Int = 8,
                                 refine: Int = 0,
                                 pca: Boolean = false,
@@ -214,37 +197,39 @@ object SparkEntry {
     val e = Tables(s, dir, "embeddings")
     val probes = e.filter(col("vec_id") % 50 === 0)
     val corpus = e.filter(col("vec_id") % 50 =!= 0)
-    val trained = java.nio.file.Files
-      .createTempDirectory(s"graft_$key").toString
+    // kc = ⌈√n⌉ as code (VERDICT-r13 item 5): the index builder derives
+    // its cluster count from the corpus instead of a caller literal, so
+    // the SAME gate trains kc=23 at sf0.001/0.01 (490 corpus vectors)
+    // and kc=45 at sf0.1 (1960) — the artifact carries kc as an output
+    // column so the scaling is visible in CORRECTNESS, not just this
+    // comment.
+    val kcUsed = if (kcSqrt) Similarity.kcSqrtN(corpus) else kc
+    // OPQ-lite (VERDICT-r13 item 4): fit the full-rank PCA rotation on
+    // the corpus sample, train IVF+PQ in the ROTATED space, score
+    // recall against ORIGINAL-space exact L2.
+    val fit = if (pca) Some(Similarity.pcaFit(corpus, p = 64)) else None
+    val trainOn = fit.fold(corpus) { case (mean, comps) =>
+      Similarity.pcaRotate(corpus, mean, comps) }
     // ONE bounded-sample collect feeds both trainers (r15): the IVF and
     // PQ Lloyd loops train on the identical deterministic sample, so the
     // second TakeOrdered+collect job per gate was pure overhead
-    def sampleOf(df: DataFrame) =
-      Similarity.trainSample(df, "vec_id", "embedding", dim = 64,
-        maxTrainSamples = 4096)
-    if (kcSqrt) {
-      // kc = ⌈√n⌉ as code (VERDICT-r13 item 5): the index builder
-      // derives its cluster count from the corpus instead of a caller
-      // literal, so the SAME gate trains kc=23 at sf0.001/0.01 (490
-      // corpus vectors) and kc=45 at sf0.1 (1960) — the artifact
-      // carries kc as an output column so the scaling is visible in
-      // CORRECTNESS, not just this comment. Dials otherwise D64b's
-      // (m=32, nprobe=8).
-      val kcUsed = Similarity.kcSqrtN(corpus)
-      val smp = sampleOf(corpus)
-      // both models persist + reload through ONE parquet round trip
-      // (saveModelBundle, r15) — the per-model write/read jobs were the
-      // measured bulk of this gate's frame-construction time
-      Similarity.saveModelBundle(s, Seq(
+    val smp = Similarity.trainSample(trainOn, "vec_id", "embedding",
+      dim = 64, maxTrainSamples = 4096)
+    // every model persists + reloads through ONE bundle round trip
+    // (r15) — the per-model write/read jobs were the measured bulk of
+    // these gates' frame construction. The PCA model rides the centroid
+    // layout: mean as row 0, components as rows 1..p.
+    val bundle = bundleRoundTrip(s,
+      fit.map { case (mean, comps) => "pca" -> Array(mean +: comps) }.toSeq ++
+      Seq(
         "ivf" -> Array(
           Similarity.ivfCentroidsFrom(smp, k = kcUsed, iters = 5, dim = 64)),
         "pq" -> Similarity.pqCodebooksFrom(smp, m = m, k = 16, iters = 5,
-          dim = 64)), trained)
-      val bundle = Similarity.loadModelBundle(s, trained)
-      val cents = bundle("ivf")(0)
-      val cbs = bundle("pq")
-      deleteRecursively(new java.io.File(trained))
-      return GateRun(Similarity.recallIvfPq(probes, corpus, topK = 5,
+          dim = 64)))
+    val cents = bundle("ivf")(0)
+    val cbs = bundle("pq")
+    if (kcSqrt)
+      GateRun(Similarity.recallIvfPq(probes, corpus, topK = 5,
         nprobe = nprobe, m = m,
         centroids = Some(cents), codebooks = Some(cbs))
         .withColumn("kc", lit(kcUsed)), oracle = Some(
@@ -254,50 +239,16 @@ object SparkEntry {
               corpusWhere = "vec_id % 50 <> 0",
               topK = 5, cents, cbs, nprobe = nprobe)}
            )"""))
-    }
-    if (pca) {
-      // OPQ-lite (VERDICT-r13 item 4): fit the full-rank PCA rotation on
-      // the corpus sample, train IVF+PQ in the ROTATED space, persist +
-      // reload ALL THREE models through the save/load loop (the PCA
-      // model rides the centroid layout: mean as row 0, components as
-      // rows 1..p), score recall against ORIGINAL-space exact L2.
-      val (meanT, compsT) = Similarity.pcaFit(corpus, p = 64)
-      val rotT = Similarity.pcaRotate(corpus, meanT, compsT)
-      val smp = sampleOf(rotT)
-      // all three models through ONE bundle round trip (r15): the
-      // former three save jobs + three read+collect jobs were the
-      // measured bulk of this gate's 1.6-1.9 s frame construction
-      Similarity.saveModelBundle(s, Seq(
-        "pca" -> Array(meanT +: compsT),
-        "ivf" -> Array(
-          Similarity.ivfCentroidsFrom(smp, k = kc, iters = 5, dim = 64)),
-        "pq" -> Similarity.pqCodebooksFrom(smp, m = m, k = 16, iters = 5,
-          dim = 64)), trained)
-      val bundle = Similarity.loadModelBundle(s, trained)
+    else if (pca) {
       val pcaRows = bundle("pca")(0)
       val (mean, comps) = (pcaRows.head, pcaRows.tail)
-      val cents = bundle("ivf")(0)
-      val cbs = bundle("pq")
-      deleteRecursively(new java.io.File(trained))
-      return GateRun(Similarity.recallIvfPqPca(probes, corpus, topK = 5,
+      GateRun(Similarity.recallIvfPqPca(probes, corpus, topK = 5,
         mean, comps, nprobe = nprobe, m = m,
         centroids = Some(cents), codebooks = Some(cbs)), oracle = Some(
         Similarity.recallIvfPqPcaTrainedDuckdbSql(
           probeWhere = "vec_id % 50 = 0", corpusWhere = "vec_id % 50 <> 0",
           topK = 5, mean, comps, cents, cbs, nprobe = nprobe)))
-    }
-    val smp = sampleOf(corpus)
-    // ONE bundle round trip for both models (r15, see the kcSqrt branch)
-    Similarity.saveModelBundle(s, Seq(
-      "ivf" -> Array(
-        Similarity.ivfCentroidsFrom(smp, k = kc, iters = 5, dim = 64)),
-      "pq" -> Similarity.pqCodebooksFrom(smp, m = m, k = 16, iters = 5,
-        dim = 64)), trained)
-    val bundle = Similarity.loadModelBundle(s, trained)
-    val cents = bundle("ivf")(0)
-    val cbs = bundle("pq")
-    deleteRecursively(new java.io.File(trained))
-    if (refine > 0)
+    } else if (refine > 0)
       GateRun(Similarity.recallIvfPqRefined(probes, corpus, topK = 5, refine,
         nprobe = nprobe, m = m,
         centroids = Some(cents), codebooks = Some(cbs)), oracle = Some(
@@ -1879,7 +1830,7 @@ object SparkEntry {
       Dedup.incrementalFromIndex(
         split.filter(col("split") === "corpus").drop("split"),
         Dedup.loadIndexBucketed(s, idxDir,
-          tablePrefix = bucketedIndexPrefix(dir)),
+          tablePrefix = dirTablePrefix("graft_bidx", dir)),
         split.filter(col("split") === "incoming").drop("split"))
     }),
     // the exact screen with a broadcast Bloom pre-filter: definite-new
@@ -1977,12 +1928,12 @@ object SparkEntry {
       def part(p: String) = split.filter(col("split") === p).drop("split")
         .select(col("doc_id"), col("text"))
       val in = Streams.stageBatchesReplay(s, dir,
-        "v1_incdedup", Seq("b1" -> part("b1"), "b2" -> part("b2")))
+        "incdedup", Seq("b1" -> part("b1"), "b2" -> part("b2")))
       val idxDir = bucketedLoopIndexDir(s, dir)
       Streams.incrementalDedupAvailableNow(s, in,
         part("corpus"),
         Dedup.loadIndexBucketed(s, idxDir,
-          tablePrefix = bucketedLoopIndexPrefix(dir)),
+          tablePrefix = dirTablePrefix("graft_blidx", dir)),
         chunks = 2)
     }),
     // streaming content dedup driven end-to-end: first-seen per
@@ -2103,12 +2054,8 @@ object SparkEntry {
     // bit-identically (the emb_recall_ivfpq_trained contract)
     trainedGate("sim_ann_ivf")((s, dir) => {
       val e = Tables(s, dir, "embeddings")
-      val trained = java.nio.file.Files
-        .createTempDirectory("graft_trained_ivf").toString
-      Similarity.saveCentroids(s,
-        Similarity.ivfCentroids(e, k = 16, iters = 5), trained)
-      val cents = Similarity.loadCentroids(s, trained)
-      deleteRecursively(new java.io.File(trained))
+      val cents = centroidsRoundTrip(s,
+        Similarity.ivfCentroids(e, k = 16, iters = 5))
       GateRun(Similarity.ivfTopK(e, (0L until 10L), 5,
         centroids = Some(cents)), oracle = Some(
         Similarity.ivfTrainedDuckdbSql((0L until 10L), 5, cents)))
@@ -2192,7 +2139,7 @@ object SparkEntry {
     // dials is 0.20 (extra nprobe on a garbage coarse quantizer even
     // HURTS: untrained m=8/nprobe=8 = 0.14), trained is 0.42 at sf0.01
     trainedGate("emb_recall_ivfpq_trained")((s, dir) =>
-      trainedRecallGate(s, dir, "emb_recall_ivfpq_trained", m = 16)),
+      trainedRecallGate(s, dir, m = 16)),
     // the SAME trained loop at m=32 (2-dim subspaces, 32 B/vector) —
     // the dial the recall sweep says a deployment actually ships with:
     // +0.15-0.24 recall@5 over m=16 at identical (kc=16, nprobe=8) at
@@ -2200,7 +2147,7 @@ object SparkEntry {
     // 0.295 sf0.1) — affordable as a gate only because the fused
     // pq_codes/pq_dt natives made m cost-flat (the r8 JIT-cliff fix)
     trainedGate("emb_recall_ivfpq_trained_m32")((s, dir) =>
-      trainedRecallGate(s, dir, "emb_recall_ivfpq_trained_m32", m = 32)),
+      trainedRecallGate(s, dir, m = 32)),
     // the kc ∝ n point: trained kc=64/m=32/nprobe=8 — the sf0.1
     // shipping COARSE dial (candidate fraction nprobe/kc falls 4× vs
     // kc=16, bounding per-probe cost; the r8 dial study measured this
@@ -2210,8 +2157,7 @@ object SparkEntry {
     // either way (pruning 4× harder may cost recall; spec documents
     // the bound)
     trainedGate("emb_recall_ivfpq_trained_kc64")((s, dir) =>
-      trainedRecallGate(s, dir, "emb_recall_ivfpq_trained_kc64",
-        m = 32, kc = 64)),
+      trainedRecallGate(s, dir, m = 32, kc = 64)),
     // OPQ-lite (r14): the trained PCA rotation composed with PQ — the
     // public FAISS OPQ-P idea (rotate into the decorrelated basis, then
     // product-quantize; Ge et al. CVPR 2013). Identical dials to
@@ -2219,7 +2165,7 @@ object SparkEntry {
     // ORIGINAL-space exact L2), so the recall delta between the two
     // gates IS the rotation's value — the tuning-table row §8 carries
     trainedGate("emb_recall_ivfpq_pca")((s, dir) =>
-      trainedRecallGate(s, dir, "emb_recall_ivfpq_pca", m = 16,
+      trainedRecallGate(s, dir, m = 16,
         pca = true)),
     // kc = ⌈√n⌉ as code (r14): the coarse-quantizer size derived from
     // the corpus (Similarity.kcSqrtN — the FAISS √n sizing guideline,
@@ -2228,7 +2174,7 @@ object SparkEntry {
     // m=32/nprobe=8 = D64b's dials, so the recall column is directly
     // comparable to the fixed kc=16 (m32) and kc=64 gates
     trainedGate("emb_recall_ivfpq_kc_sqrtn")((s, dir) =>
-      trainedRecallGate(s, dir, "emb_recall_ivfpq_kc_sqrtn", m = 32,
+      trainedRecallGate(s, dir, m = 32,
         kcSqrt = true)),
     // the REFINE dial (exact-L2 rerank of the ADC top-4k shortlist,
     // ivfPqSearchRefined): same trained m=16 index as
@@ -2240,8 +2186,7 @@ object SparkEntry {
     // the exact-rerank LSH path holds 0.34 — refine restores the PQ
     // path at |probes| × 4k exact distances (§8g table)
     trainedGate("emb_recall_ivfpq_refined")((s, dir) =>
-      trainedRecallGate(s, dir, "emb_recall_ivfpq_refined",
-        m = 16, refine = 4)),
+      trainedRecallGate(s, dir, m = 16, refine = 4)),
     // PQ encode with the seeded codebook contract (same cross-engine
     // discipline as sim_ann_ivf_seeded; trained codebooks are driver
     // state behind the same save/load loop)
@@ -2409,12 +2354,8 @@ object SparkEntry {
     // replay the centroid matrix as literals in both engines
     trainedGate("emb_kmeans")((s, dir) => {
       val e = Tables(s, dir, "embeddings")
-      val trained = java.nio.file.Files
-        .createTempDirectory("graft_emb_kmeans").toString
-      Similarity.saveCentroids(s,
-        Similarity.ivfCentroids(e, k = 16, iters = 5), trained)
-      val cents = Similarity.loadCentroids(s, trained)
-      deleteRecursively(new java.io.File(trained))
+      val cents = centroidsRoundTrip(s,
+        Similarity.ivfCentroids(e, k = 16, iters = 5))
       GateRun(Similarity.kmeansAssign(e, centroids = Some(cents)),
         oracle = Some(Similarity.kmeansTrainedDuckdbSql(cents)))
     }),
@@ -2427,15 +2368,11 @@ object SparkEntry {
     trainedGate("emb_pca")((s, dir) => {
       val e = Tables(s, dir, "embeddings")
       val (mean, comps) = Similarity.pcaFit(e, p = 4)
-      val trained = java.nio.file.Files
-        .createTempDirectory("graft_emb_pca").toString
       // mean stacked as row 0 over the component rows — ONE table, ONE
       // write job + ONE read job instead of two of each (r15; the same
       // row-0 layout the OPQ gate's PCA model uses)
-      Similarity.saveCentroids(s, mean +: comps, trained)
-      val pcaRows = Similarity.loadCentroids(s, trained)
+      val pcaRows = centroidsRoundTrip(s, mean +: comps)
       val (mean2, comps2) = (pcaRows.head, pcaRows.tail)
-      deleteRecursively(new java.io.File(trained))
       GateRun(Similarity.pcaProject(e, mean2, comps2),
         oracle = Some(Similarity.pcaProjectDuckdbSql(mean2, comps2)))
     }),

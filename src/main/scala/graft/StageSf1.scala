@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Stage a deterministic sf1 dataset (10× sf0.1) for REAL-DATA scale
@@ -74,20 +74,10 @@ object StageSf1 {
 
     def write(df: DataFrame, name: String): Unit = {
       // the driver layout is one plain FILE per table (`name.parquet`),
-      // and the DuckDB side of the oracle sweep reads exactly that path
-      // — write a single part and move it over the directory Spark made.
+      // and the DuckDB side of the oracle sweep reads exactly that path.
       // Row-group splitting keeps a single 60 MB file scan parallel.
-      val tmp = s"$outDir/.stage_$name"
-      df.drop("__r").coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
-      val dir = new java.io.File(tmp)
-      val partFile = dir.listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no part file written for $name"))
-      val dest = new java.io.File(s"$outDir/$name.parquet")
-      if (dest.exists()) dest.delete(): Unit
-      require(partFile.renameTo(dest), s"rename failed for $name")
-      dir.listFiles().foreach(_.delete())
-      dir.delete(): Unit
+      graft.sources.Sources.writeParquetFile(df.drop("__r"),
+        new java.io.File(s"$outDir/$name.parquet"))
       println(s"[stage-sf1] $name staged")
     }
 

@@ -12,15 +12,6 @@ object Verify {
     val spark = Tables.session("graft-verify", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Remove any previous output for the query BEFORE running it: a query
-    // that fails this run must not leave a stale parquet dir behind for
-    // the driver to compare as if it were fresh.
-    def deleteRecursively(f: java.io.File): Unit = {
-      // null (not empty) on I/O/permission failure — don't NPE the run
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-      f.delete(): Unit
-    }
     // Optional comma-separated filter for iterating on single gates
     // locally (SPARK_GRAFT_ONLY=a,b). The driver sets nothing → full run.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -31,8 +22,10 @@ object Verify {
     SparkEntry.gates
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, gate) =>
-      val dest = new java.io.File(s"$outDir/$name")
-      if (dest.exists()) deleteRecursively(dest)
+      // Remove any previous output for the query BEFORE running it: a
+      // query that fails this run must not leave a stale parquet dir
+      // behind for the oracle check to compare as if it were fresh.
+      Scratch.delete(new java.io.File(s"$outDir/$name"))
       try {
         val run = gate.build(spark, sfDir)
         val sql = (run.oracle orElse gate.oracle)

@@ -111,29 +111,35 @@ object Sources {
       .save(path)
   }
 
-  /** Stage a partition-layout copy of a test table (written once per
-    * source fingerprint, reused across runs — same staleness rule as the
-    * streaming replay staging): the write side of [[writeTable]]'s
-    * `partitionCols` path, materialized so the READ side's directory
-    * pruning is drivable end to end. Returns the staged path.
+  /** Write `df` as ONE plain parquet file at `dest`: the frame coalesced
+    * to a single part in a hidden sibling dir, whose part file is then
+    * moved over `dest` (same directory, so the move is a rename). A
+    * file-per-table layout is what a DuckDB view or a file stream
+    * source that replays one file per trigger reads.
+    */
+  def writeParquetFile(df: DataFrame, dest: java.io.File): Unit = {
+    val tmp = new java.io.File(dest.getParentFile, s".stage_${dest.getName}")
+    try {
+      df.coalesce(1).write.mode("overwrite").parquet(tmp.getPath)
+      val part = Option(tmp.listFiles()).getOrElse(Array.empty[java.io.File])
+        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+        .getOrElse(sys.error(s"no part file written for $dest"))
+      java.nio.file.Files.move(part.toPath, dest.toPath,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
+    } finally graft.Scratch.delete(tmp)
+  }
+
+  /** Stage a partition-layout copy of a test table through
+    * [[graft.Scratch]] (built once per JVM, deleted at its exit): the
+    * write side of [[writeTable]]'s `partitionCols` path, materialized
+    * so the READ side's directory pruning is drivable end to end.
+    * Returns the staged path.
     */
   def stagePartitioned(df: DataFrame, sfDir: String, table: String,
-                       partitionCol: String): String = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-    val src = new java.io.File(s"$sfDir/$table.parquet")
-    val fp = walk(src).map(f => f.lastModified ^ f.length).sum
-    val key = s"${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}_" +
-      java.lang.Long.toHexString(fp)
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_part_${key}_" +
-      s"$table-by-$partitionCol"
-    val marker = new java.io.File(s"$dir/_GRAFT_STAGED")
-    if (!marker.exists()) {
+                       partitionCol: String): String =
+    graft.Scratch.staged("part", sfDir, s"$table-by-$partitionCol") { dir =>
       writeTable(df, dir, partitionCols = Seq(partitionCol))
-      marker.createNewFile(): Unit
     }
-    dir
-  }
 
   /** `copy_into` read side (reference: copy_into.R — `file_format`
     * parquet/csv/orc, `compression`, auto-`create_table` from config):

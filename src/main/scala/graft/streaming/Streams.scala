@@ -44,66 +44,33 @@ object Streams {
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n_events"), col("sum_value"))
 
-  /** Staging-dir key for a source table: path PLUS the source parquet's
-    * (mtime, size) fingerprint, so a regenerated test dataset at the
-    * same path can never be served a stale staged replay (staging is
-    * reused only while the source is byte-identical-enough; a stale
-    * replay would silently diverge from the oracle).
-    */
-  private def stageKey(sfDir: String, table: String): String = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-    val src = new java.io.File(s"$sfDir/$table.parquet")
-    val fp = walk(src).map(f => f.lastModified ^ f.length).sum
-    s"${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}_${java.lang.Long.toHexString(fp)}"
-  }
-
-  private def rmTree(p: String): Unit = {
-    def loop(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(loop)
-      f.delete(): Unit
-    }
-    loop(new java.io.File(p))
-  }
-
   /** The ONE replay stager behind every streaming gate: writes each
-    * `(name, frame)` chunk as a single parquet file in
-    * `target/stream_stage/<dirTag>_<stageKey>_x<shape>` with a strictly
-    * ascending pinned modification time, then marks the dir `_STAGED`.
-    * The file stream source replays files in modtime order, and a plain
-    * write leaves modtimes in task-FINISH order — which can replay a
-    * later time range first, making whole earlier ranges arrive behind
-    * the watermark and be dropped as late (observed: 12 of 33 join
-    * matches lost). Explicit modtimes pin the replay to chunk order.
-    * Staging is a pure function of the key, so a staged dir is reused
-    * across calls and `chunks` (which may run Spark jobs) is only
-    * evaluated when the dir is not yet staged. The marker's content is
-    * the staged files' schema, inferred once here so that no replay of
-    * the dir runs a schema-inference job; a marker without one means
-    * the dir is not staged.
+    * `(name, frame)` chunk as a single parquet file in a dir that
+    * [[graft.Scratch]] stages once per JVM for `(kind, sfDir, shape)`,
+    * with a strictly ascending pinned modification time, then marks the
+    * dir `_STAGED`. The file stream source replays files in modtime
+    * order, and a plain write leaves modtimes in task-FINISH order —
+    * which can replay a later time range first, making whole earlier
+    * ranges arrive behind the watermark and be dropped as late
+    * (observed: 12 of 33 join matches lost). Explicit modtimes pin the
+    * replay to chunk order. `chunks` (which may run Spark jobs) is only
+    * evaluated by the first call for a key. The marker's content is the
+    * staged files' schema, inferred once here so that no replay of the
+    * dir runs a schema-inference job.
     */
-  private def stageReplay(spark: SparkSession, sfDir: String, table: String,
-                          dirTag: String, shape: String)
-                         (chunks: => Seq[(String, DataFrame)]): String = {
-    val in = s"target/stream_stage/${dirTag}_${stageKey(sfDir, table)}_x$shape"
-    if (stagedSchema(in).isEmpty) {
-      rmTree(in); new java.io.File(in).mkdirs(): Unit
+  private def stageReplay(spark: SparkSession, sfDir: String, kind: String,
+                          shape: String)
+                         (chunks: => Seq[(String, DataFrame)]): String =
+    graft.Scratch.staged(s"replay_$kind", sfDir, shape) { in =>
       val base = System.currentTimeMillis() - 3600L * 1000
       chunks.zipWithIndex.foreach { case ((name, df), i) =>
-        val tmp = Files.createTempDirectory("graft_chunk").toString
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.endsWith(".parquet")).get
         val dest = new java.io.File(in, name)
-        Files.move(part.toPath, dest.toPath)
+        graft.sources.Sources.writeParquetFile(df, dest)
         dest.setLastModified(base + i * 60000L): Unit
-        rmTree(tmp)
       }
       Files.writeString(Paths.get(s"$in/_STAGED"),
         spark.read.parquet(in).schema.json): Unit
     }
-    in
-  }
 
   /** The schema a staged dir's `_STAGED` marker records, if any. */
   private def stagedSchema(in: String): Option[StructType] = {
@@ -111,22 +78,6 @@ object Streams {
     if (!Files.isRegularFile(marker)) None
     else scala.util.Try(DataType.fromJson(Files.readString(marker)))
       .toOption.collect { case s: StructType => s }
-  }
-
-  /** Sink/checkpoint temp dirs created by [[runStagedAvailableNow]],
-    * removed by a JVM shutdown hook: the sink must outlive the call (it
-    * backs the returned frame), so per-call deletion is impossible, but
-    * a long-lived process must not leak one dir per streaming run.
-    */
-  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      tempDirs.forEach(rmTree(_))))
-  }
-  private def tempDir(prefix: String): String = {
-    val d = Files.createTempDirectory(prefix).toString
-    tempDirs.add(d): Unit
-    d
   }
 
   /** Scratch dir for the streaming CHECKPOINT, preferring fast local
@@ -152,11 +103,8 @@ object Streams {
     */
   private def ckptDir(prefix: String): String = {
     val shm = new java.io.File("/dev/shm")
-    if (shm.isDirectory && shm.canWrite) {
-      val d = Files.createTempDirectory(shm.toPath, prefix).toString
-      tempDirs.add(d): Unit
-      d
-    } else tempDir(prefix)
+    graft.Scratch.dir(prefix,
+      Option.when(shm.isDirectory && shm.canWrite)(shm.toPath))
   }
 
   /** Structural stats of one [[runStagedAvailableNow]] run, captured
@@ -219,7 +167,8 @@ object Streams {
       transform: DataFrame => DataFrame = identity,
       body: (DataFrame, Long, (DataFrame, Long) => Unit) => Unit =
         (batch, id, sink) => sink(batch, id)): StreamRun = {
-    val out = tempDir("graft_stream_out")
+    // the sink backs the returned frame, so it lives until JVM exit
+    val out = graft.Scratch.dir("graft_stream_out")
     val ckpt = ckptDir("graft_stream_ckpt")
     // Session confs for the run, restored afterwards. Stateful streaming
     // operators allocate one state store per shuffle partition PER SIDE
@@ -272,18 +221,23 @@ object Streams {
           .foldLeft(0)(math.max),
         stateRowsTotal = prog.lastOption
           .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(0L))
+    } catch { case e: Throwable =>
+      // a run that throws returns no frame, so nothing reads its sink
+      graft.Scratch.delete(out)
+      throw e
     } finally {
       saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
       // the checkpoint is garbage whether the stream succeeded or threw;
-      // the staged input is keyed for reuse, and only `out` (shutdown-
-      // hook-cleaned) backs the returned frame
-      rmTree(ckpt)
+      // the staged input is kept for reuse, and only `out` backs the
+      // returned frame
+      graft.Scratch.delete(ckpt)
     }
     // A partitioned sink with zero emitted rows writes no data files at
     // all — return a typed empty frame rather than failing the read.
     val hasData = {
       def walk(f: java.io.File): Boolean =
-        if (f.isDirectory) f.listFiles().exists(walk)
+        if (f.isDirectory)
+          Option(f.listFiles()).exists(_.exists(walk))
         else f.getName.endsWith(".parquet")
       walk(new java.io.File(out))
     }
@@ -310,7 +264,7 @@ object Streams {
                                     flushHorizonMs: Option[Long] = None)
                                    (build: DataFrame => DataFrame): StreamRun = {
     val flushTag = flushHorizonMs.map(h => s"_flush$h").getOrElse("")
-    val in = stageReplay(spark, sfDir, "events", "v2", s"$chunks$flushTag") {
+    val in = stageReplay(spark, sfDir, "events", s"$chunks$flushTag") {
       val e = graft.Tables(spark, sfDir, "events")
       val probs = (1 until chunks).map(_.toDouble / chunks).toArray
       // Boundaries are ms-ALIGNED ((us div 1000)*1000 - 1, i.e. between
@@ -362,8 +316,7 @@ object Streams {
     // and a doc_id-0 row AT exactly epoch 0 would be "older than the
     // watermark" and silently dropped as late by stateful operators
     // (observed: 499/500 docs through the dedup gate).
-    stageTableReplay(spark, sfDir, "documents", "doc_id", chunks,
-      dirTag = "v3_docs")(
+    stageTableReplay(spark, sfDir, "documents", "doc_id", chunks)(
       _.withColumn("ts",
         expr("timestamp_micros(86400000000 + doc_id * 1000)")))
 
@@ -379,10 +332,9 @@ object Streams {
     * to be written.
     */
   private def stageTableReplay(spark: SparkSession, sfDir: String,
-                               table: String, idCol: String, chunks: Int,
-                               dirTag: String)
+                               table: String, idCol: String, chunks: Int)
                               (prep: DataFrame => DataFrame): String =
-    stageReplay(spark, sfDir, table, dirTag, chunks.toString) {
+    stageReplay(spark, sfDir, table, chunks.toString) {
       val d = prep(graft.Tables(spark, sfDir, table))
       val maxIdRow = d.agg(max(col(idCol))).first()
       // legible failure, not an NPE from getLong(null): an empty table
@@ -443,11 +395,11 @@ object Streams {
     * streaming gate share a batch pipeline's rebuild-from-scratch
     * oracle verbatim.
     */
-  def stageBatchesReplay(spark: SparkSession, sfDir: String, dirTag: String,
+  def stageBatchesReplay(spark: SparkSession, sfDir: String, kind: String,
                          batches: Seq[(String, DataFrame)],
                          idCol: String = "doc_id",
                          textCol: String = "text"): String =
-    stageReplay(spark, sfDir, "documents", dirTag, batches.size.toString) {
+    stageReplay(spark, sfDir, kind, batches.size.toString) {
       batches.zipWithIndex.map { case ((tag, df), i) =>
         f"chunk-$i%02d.parquet" -> df.select(col(idCol), col(textCol))
           .withColumn("batch", lit(tag)).orderBy(col(idCol))
@@ -969,8 +921,7 @@ object Streams {
     */
   def stageEmbReplay(spark: SparkSession, sfDir: String,
                      chunks: Int = 3): String =
-    stageTableReplay(spark, sfDir, "embeddings", "vec_id", chunks,
-      dirTag = "v1_emb")(identity)
+    stageTableReplay(spark, sfDir, "embeddings", "vec_id", chunks)(identity)
 
   /** STREAMING K-MEANS SCORING — the trained-offline / score-in-stream
     * inference pattern (the embedding-pipeline shape of

@@ -34,17 +34,13 @@ class BaselineSpec extends AnyFunSuite {
   }
 
   test("run: --record writes what the check reads back; exit status") {
-    val dir = Files.createTempDirectory("graft_baseline")
-    val a = toy(dir.resolve("toy.tsv").toString)
-    try {
+    Scratch.withDir("graft_baseline") { dir =>
+      val a = toy(Paths.get(dir, "toy.tsv").toString)
       assert(Baseline.run(a, record = true, Seq("a" -> 1, "b" -> 2)) == 0)
       assert(Files.readString(Paths.get(a.path)) == "a\t1\nb\t2\n")
       assert(Baseline.run(a, record = false, Seq("a" -> 1, "b" -> 2)) == 0)
       assert(Baseline.run(a, record = false, Seq("a" -> 1, "b" -> 3)) == 1)
       assert(Baseline.run(a, record = false, Seq("a" -> 1)) == 1)
-    } finally {
-      Files.deleteIfExists(Paths.get(a.path))
-      Files.delete(dir)
     }
   }
 

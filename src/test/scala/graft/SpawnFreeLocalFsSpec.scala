@@ -3,7 +3,7 @@ package graft
 import java.io.FileNotFoundException
 import java.net.URI
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path => JPath}
+import java.nio.file.{Files, Paths, Path => JPath}
 import java.nio.file.attribute.PosixFilePermissions
 
 import scala.jdk.CollectionConverters._
@@ -30,17 +30,8 @@ class SpawnFreeLocalFsSpec extends AnyFunSuite {
     FileContext.getFileContext(conf)
   }
 
-  private def withTemp[T](f: JPath => T): T = {
-    val dir = Files.createTempDirectory("graft_fs_spec")
-    try f(dir) finally {
-      def rm(p: JPath): Unit = {
-        if (Files.isDirectory(p) && !Files.isSymbolicLink(p))
-          Files.list(p).iterator().asScala.toList.foreach(rm)
-        Files.deleteIfExists(p): Unit
-      }
-      rm(dir)
-    }
-  }
+  private def withTemp[T](f: JPath => T): T =
+    Scratch.withDir("graft_fs_spec")(d => f(Paths.get(d)))
 
   private def write(fc: FileContext, p: Path, text: String,
                     perm: Option[FsPermission] = None): Unit = {

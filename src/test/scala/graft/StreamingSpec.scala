@@ -601,9 +601,7 @@ class StreamingSpec extends SparkSpec {
         val m = new java.io.File(d, "metadata")
         m.isFile && java.nio.file.Files.readString(m.toPath).contains(queryId)
       }
-    val stage = new java.io.File("target/stream_stage")
-    def staged: Set[String] = Option(stage.list()).map(_.toSet).getOrElse(Set.empty)
-    val stagedBefore = staged
+    val liveBefore = Scratch.liveDirs.toSet
     // the checkpoint file system's key is unset by default, so every
     // conf is read as an Option
     val confs = Seq("spark.sql.shuffle.partitions",
@@ -623,10 +621,15 @@ class StreamingSpec extends SparkSpec {
       assert(confs.map(spark.conf.getOption) == before)
       assert(queryId.nonEmpty && ownCkpts.isEmpty,
         s"query $queryId left ${ownCkpts.toSeq}")
+      // what the run leaves behind is Scratch's to remove at JVM exit:
+      // the staged replay and nothing else (a run that throws deletes
+      // its checkpoint and its sink)
+      val left = (Scratch.liveDirs.toSet -- liveBefore).toSeq
+      assert(left.map(d => new java.io.File(d).getName.takeWhile(!_.isDigit))
+        == Seq("graft_replay_documents"), s"left $left")
     } finally {
       spark.streams.removeListener(listener)
       prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-      (staged -- stagedBefore).foreach(d => rmTree(new java.io.File(stage, d)))
     }
   }
 }
